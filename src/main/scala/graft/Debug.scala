@@ -1,21 +1,12 @@
 package graft
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 
 /** Scratch profiling entry (dev-only, not part of the driver contract). */
 object Debug {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.functions.GraftFunctions.ensureRegistered(spark)
+    val spark = Session.local(cpus)
     // Per-run counters: job/stage counts and summed task CPU are
     // steal-immune proxies for "how much work did this run launch" on a
     // noisy shared box — wall times swing 2x between repeats, these don't.
@@ -52,31 +43,6 @@ object Debug {
       val now = counters()
       println(f"$tag $name jobs=${now._1 - before._1} stages=${now._2 - before._2} " +
         f"cpu=${now._3 - before._3}%.1fs taskrun=${now._4 - before._4}%.1fs")
-    }
-    if (sys.env.contains("GRAFT_KEYS_BENCH")) {
-      import graft.engine.Keys
-      val big = Tables.lineitem(spark, sfDir)
-        .withColumn("uid", org.apache.spark.sql.functions.expr("l_orderkey * 10 + l_linenumber"))
-      def time(tag: String)(body: => Unit): Unit = {
-        val t0 = System.nanoTime(); body
-        println(s"KEYS $tag ${(System.nanoTime() - t0) / 1e9}")
-      }
-      // warm both paths once
-      Keys.surrogateKeysScalable(big, "uid", "sk").write.format("noop").mode("overwrite").save()
-      Keys.surrogateKeysScalableCatalyst(big, "uid", "sk").write.format("noop").mode("overwrite").save()
-      (1 to 3).foreach { _ =>
-        time("zipWithIndex") {
-          Keys.surrogateKeysScalable(big, "uid", "sk").write.format("noop").mode("overwrite").save()
-        }
-        time("catalyst") {
-          Keys.surrogateKeysScalableCatalyst(big, "uid", "sk").write.format("noop").mode("overwrite").save()
-        }
-      }
-      // equality check vs the faithful single-task window form
-      val a = Keys.surrogateKeys(big, "uid", "sk").select("uid", "sk")
-      val b = Keys.surrogateKeysScalableCatalyst(big, "uid", "sk").select("uid", "sk")
-      val c = Keys.surrogateKeysScalable(big, "uid", "sk").select("uid", "sk")
-      println(s"KEYS diff catalyst=${a.except(b).count()} zip=${a.except(c).count()}")
     }
     // GRAFT_SCALE_FACTOR=k: run the named queries against a ScaleData-derived
     // k-x dataset (the Bench rehearsal's derivation) instead of sfDir —

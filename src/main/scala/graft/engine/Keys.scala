@@ -5,6 +5,8 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
 
+import scala.reflect.ClassTag
+
 /** Deterministic dense surrogate-key assignment (SURVEY.md section 2.5 W1 +
   * section 4 hazard 1).
   *
@@ -29,9 +31,9 @@ object Keys {
   /** Scale-safe equivalent: range partition by the order key (so partition i
     * holds strictly smaller keys than partition i+1), sort locally, then
     * zipWithIndex assigns global ranks with only a per-partition-count pass.
-    * Drops to the RDD API (deserializes rows, exits codegen) — kept as the
-    * measured-faster default; see [[surrogateKeysScalableCatalyst]] for the
-    * pure-Catalyst form and the bench notes on both.
+    * Drops to the RDD API (deserializes rows, exits codegen): the RDD
+    * shuffle is materialized once, so every pass sees the same sampled
+    * range boundaries.
     */
   def surrogateKeysScalable(df: DataFrame, orderCol: String, keyName: String,
       offset: Long = 0L, partitions: Int = 0): DataFrame =
@@ -74,46 +76,6 @@ object Keys {
       .otherwise(r + floor((rank - r * (q + 1) - 1) / q)) + 1).cast("int")
   }
 
-  /** Pure-Catalyst two-phase form (same output, given a unique order key):
-    * range-partition, materialize the partition id, rank locally with a
-    * PARTITIONED window (no single-task funnel), and add per-partition
-    * offsets computed from a tiny count-by-pid aggregate joined back by
-    * broadcast. Costs one extra hash shuffle (the window re-clusters by pid)
-    * but never leaves Catalyst/codegen and needs no row deserialization —
-    * preferable when downstream operators benefit from staying in Tungsten.
-    *
-    * CORRECTNESS CAVEAT: both branches reference `repartitionByRange`,
-    * whose boundaries are SAMPLED per execution — the form is only correct
-    * when AQE reuses the exchange across the two branches (it does for
-    * simple scans; observed NOT to for a union-of-windows input, which is
-    * why [[globalRunningSum]] uses the RDD shuffle-reuse shape). Keep
-    * inputs to this form simple, or prefer [[surrogateKeysScalable]].
-    */
-  def surrogateKeysScalableCatalyst(df: DataFrame, orderCol: String,
-      keyName: String, offset: Long = 0L, partitions: Int = 0): DataFrame = {
-    val n = if (partitions > 0) partitions
-      else df.sparkSession.sessionState.conf.numShufflePartitions
-    // pid materialized via Project (nondeterministic exprs are legal there);
-    // both consumers below share ONE range exchange via ReuseExchange.
-    val ranged = df.repartitionByRange(n, col(orderCol))
-      .withColumn("__pid", spark_partition_id())
-    val offsets = ranged.groupBy(col("__pid")).agg(count(lit(1)).as("__cnt"))
-      .withColumn("__poff",
-        coalesce(
-          sum(col("__cnt")).over(
-            Window.orderBy(col("__pid"))
-              .rowsBetween(Window.unboundedPreceding, -1)),
-          lit(0L)))
-      .select(col("__pid"), col("__poff"))
-    val localRank = row_number().over(
-      Window.partitionBy(col("__pid")).orderBy(col(orderCol)))
-    ranged
-      .join(broadcast(offsets), Seq("__pid"))
-      .withColumn(keyName,
-        (localRank.cast(LongType) + col("__poff") + lit(offset)).cast(LongType))
-      .drop("__pid", "__poff")
-  }
-
   /** Scalable global prefix sum: `sumName` = running total of `valueCol`
     * (LongType) in `orderCol` order, INCLUDING the current row. The naive
     * form is an unpartitioned running-sum window (single-task funnel, same
@@ -143,76 +105,59 @@ object Keys {
     * exact and overflow-safe to ~9e16 cents.
     */
   def globalRunningSumBy(df: DataFrame, order: Seq[Column], valueCol: String,
-      sumName: String, partitions: Int = 0): DataFrame = {
-    val spark = df.sparkSession
-    // Input-proportional count (see rankByScalable): n == 1 needs neither
-    // the range-boundary sampling job nor the per-partition-sum collect.
-    val n = if (partitions > 0) partitions else Partitions.sortSpreadCount(df)
-    require(df.schema(valueCol).dataType == LongType,
-      s"globalRunningSum needs a LongType $valueCol")
-    val sorted = df.repartitionByRange(n, order: _*).sortWithinPartitions(order: _*)
-    val schema = sorted.schema.add(sumName, LongType, nullable = false)
-    val vIdx = sorted.schema.fieldIndex(valueCol)
-    val rdd = sorted.rdd
-    val offsets =
-      if (n == 1) Array(0L)
-      else {
-        val partSums = rdd.mapPartitionsWithIndex { (i, it) =>
-          var s = 0L; it.foreach(r => s += r.getLong(vIdx)); Iterator((i, s))
-        }.collect().sortBy(_._1).map(_._2)
-        partSums.scanLeft(0L)(_ + _)
-      }
-    val out = rdd.mapPartitionsWithIndex { (i, it) =>
-      var acc = offsets(i)
-      it.map { r => acc += r.getLong(vIdx); Row.fromSeq(r.toSeq :+ acc) }
-    }
-    spark.createDataFrame(out, schema)
-  }
+      sumName: String, partitions: Int = 0): DataFrame =
+    globalScan(df, order, valueCol, sumName, nullable = false, partitions)(0L)(
+      _ + _, _ + _, (_, after) => after)
 
   /** Two-phase EXCLUSIVE global prefix max: `maxName` = max of `valueCol`
     * (LongType, non-null) over all rows STRICTLY BEFORE the current row in
     * `order` — null for the global first row. The scale-safe replacement
     * for `max(...).over(Window.orderBy(...).rowsBetween(unboundedPreceding,
-    * -1))`, which funnels the whole frame through one task. Same RDD
-    * shuffle-reuse shape as [[globalRunningSum]]: range-partition + local
-    * sort once, a per-partition-max pass, then exclusive per-partition
-    * prefix offsets. The order must be total for determinism.
+    * -1))`, which funnels the whole frame through one task. Same two-phase
+    * scan as [[globalRunningSum]]; the order must be total for determinism.
     */
   def globalPrefixMaxBy(df: DataFrame, order: Seq[Column], valueCol: String,
-      maxName: String, partitions: Int = 0): DataFrame = {
-    val spark = df.sparkSession
-    // Input-proportional count (see rankByScalable): n == 1 needs neither
-    // the range-boundary sampling job nor the per-partition-max collect.
-    val n = if (partitions > 0) partitions else Partitions.sortSpreadCount(df)
+      maxName: String, partitions: Int = 0): DataFrame =
+    globalScan(df, order, valueCol, maxName, nullable = true, partitions)(
+      Option.empty[Long])(
+      (acc, v) => Some(acc.fold(v)(math.max(_, v))),
+      (a, b) => (a ++ b).maxOption,
+      (before, _) => before.map(Long.box).orNull)
+
+  /** The two-phase scan behind the prefix operators: range-partition +
+    * local sort ONCE, a per-partition summary pass (the fold of `step`
+    * from `zero` over the partition's values), the summaries' exclusive
+    * `combine`-scan into per-partition offsets, then a map that carries
+    * each partition's offset through its rows and appends
+    * `emit(state before the row, state after it)`. Both passes run over
+    * the SAME materialized RDD shuffle, so the sampled range boundaries
+    * cannot differ between them. Input-proportional partition count (see
+    * [[rankByScalable]]): n == 1 needs neither the range-boundary sampling
+    * job nor the summary collect.
+    */
+  private def globalScan[S: ClassTag](df: DataFrame, order: Seq[Column],
+      valueCol: String, outName: String, nullable: Boolean, partitions: Int)(
+      zero: S)(step: (S, Long) => S, combine: (S, S) => S,
+      emit: (S, S) => Any): DataFrame = {
     require(df.schema(valueCol).dataType == LongType,
-      s"globalPrefixMaxBy needs a LongType $valueCol")
+      s"$outName needs a LongType $valueCol")
+    val n = if (partitions > 0) partitions else Partitions.sortSpreadCount(df)
     val sorted = df.repartitionByRange(n, order: _*).sortWithinPartitions(order: _*)
-    val schema = sorted.schema.add(maxName, LongType, nullable = true)
     val vIdx = sorted.schema.fieldIndex(valueCol)
     val rdd = sorted.rdd
-    // offsets(i) = max over partitions < i (None when no prior rows exist)
-    val offsets: Array[Option[Long]] =
-      if (n == 1) Array(Option.empty[Long])
-      else {
-        val partMaxes: Array[Option[Long]] = rdd.mapPartitionsWithIndex { (i, it) =>
-          var m = Long.MinValue; var any = false
-          it.foreach { r => any = true; val v = r.getLong(vIdx); if (v > m) m = v }
-          Iterator((i, if (any) Some(m) else None))
-        }.collect().sortBy(_._1).map(_._2)
-        partMaxes.scanLeft(Option.empty[Long]) {
-          case (Some(a), Some(c)) => Some(math.max(a, c))
-          case (a, c)             => a.orElse(c)
-        }.init
-      }
+    val offsets =
+      if (n == 1) Array(zero)
+      else rdd.mapPartitionsWithIndex { (i, it) =>
+          Iterator(i -> it.foldLeft(zero)((s, r) => step(s, r.getLong(vIdx))))
+        }.collect().sortBy(_._1).map(_._2).scanLeft(zero)(combine)
     val out = rdd.mapPartitionsWithIndex { (i, it) =>
       var acc = offsets(i)
       it.map { r =>
-        val emit: Any = acc.map(Long.box).orNull
-        val v = r.getLong(vIdx)
-        acc = Some(acc.fold(v)(a => math.max(a, v)))
-        Row.fromSeq(r.toSeq :+ emit)
+        val before = acc
+        acc = step(acc, r.getLong(vIdx))
+        Row.fromSeq(r.toSeq :+ emit(before, acc))
       }
     }
-    spark.createDataFrame(out, schema)
+    df.sparkSession.createDataFrame(out, sorted.schema.add(outName, LongType, nullable))
   }
 }

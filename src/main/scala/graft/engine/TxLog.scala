@@ -233,8 +233,11 @@ object TxLog {
           .collectFirst { case (k, Some(es)) => k -> es }
           .getOrElse(-1L -> Seq.empty[FileEntry])
         val (baseV, baseEntries) = base
-        val replay = versions.filter(x => x > baseV && x < v).sorted
-          .flatMap(x => readDelta(fs, table, x)) :+ lastDelta
+        // a checkpoint at v already holds v's own delta
+        val replay =
+          if (baseV == v) Nil
+          else versions.filter(x => x > baseV && x < v).sorted
+            .flatMap(x => readDelta(fs, table, x)) :+ lastDelta
         val entries = replay.foldLeft(baseEntries) { case (cur, (add, rm)) =>
           val dead = rm.toSet
           cur.filterNot(e => dead.contains(e.path)) ++ add

@@ -215,8 +215,8 @@ object NearDup {
   def prefixJaccardPairsFromShingles(sh: DataFrame, idCol: String,
       tNum: Int, tDen: Int): DataFrame = {
     require(tNum > 0 && tNum <= tDen, s"threshold $tNum/$tDen must be in (0,1]")
-    verifyJaccard(sh, idCol, prefixCandidates(sh, idCol, tNum, tDen),
-      tNum.toDouble / tDen)
+    verifyJaccard(prefixCandidates(sh, idCol, tNum, tDen), "id_a", "id_b",
+      sh, sh, idCol, tNum.toDouble / tDen)
   }
 
   /** Prefix-filter candidate core over a [[withShingles]] frame: the
@@ -240,30 +240,52 @@ object NearDup {
       tNum: Int, tDen: Int): DataFrame = {
     val sz = size(col("__shingles"))
     val prefixLen = (sz - floor((sz * tNum + (tDen - 1)) / tDen) + 1).cast("int")
-    val prefixes = sh.select(col(idCol),
+    selfJoinPairs(sh.select(col(idCol),
       explode(slice(sort_array(transform(col("__shingles"), s => xxhash64(s))),
-        lit(1), prefixLen)).as("__p"))
-    prefixes.as("a")
-      .join(prefixes.as("b").hint("shuffle_hash"),
-        col("a.__p") === col("b.__p") && col(s"a.$idCol") < col(s"b.$idCol"))
-      .select(col(s"a.$idCol").as("id_a"), col(s"b.$idCol").as("id_b"))
-      .distinct()
+        lit(1), prefixLen)).as("__p")), idCol, Seq("__p"))
   }
 
-  /** Exact-verify step shared by every exact-pairs plan: join the candidate
-    * (id_a, id_b) pairs back to the full shingle sets and keep those whose
-    * true Jaccard clears the threshold. SHUFFLE_HASH: doc-linear shingle
-    * frame — same broadcast-build reasoning as the MinHash verify joins.
+  /** Candidate core shared by the prefix, MinHash and SimHash plans: the
+    * distinct (id_a, id_b), id_a < id_b, of every two rows of `keyed` that
+    * agree on all `keys` (a prefix hash, a band bucket). SHUFFLE_HASH: the
+    * keyed frame is doc-linear, never a broadcast build at scale.
     */
-  private def verifyJaccard(sh: DataFrame, idCol: String, cand: DataFrame,
+  private[ext] def selfJoinPairs(keyed: DataFrame, idCol: String,
+      keys: Seq[String]): DataFrame =
+    keyed.as("a")
+      .join(keyed.as("b").hint("shuffle_hash"),
+        keys.map(k => col(s"a.$k") === col(s"b.$k")).reduce(_ && _) &&
+          col(s"a.$idCol") < col(s"b.$idCol"))
+      .select(col(s"a.$idCol").as("id_a"), col(s"b.$idCol").as("id_b"))
+      .distinct()
+
+  /** Exact-verify core shared by every Jaccard pair plan: join the
+    * candidate (`aCol`, `bCol`) pairs back to each side's full shingle sets
+    * (`shA`, `shB`: (idCol, __shingles)) and keep those whose true Jaccard
+    * clears the threshold. SHUFFLE_HASH: the shingle frames are doc-linear,
+    * and a broadcast build would serially re-evaluate the tokenize+shingle
+    * pipeline in one thread.
+    */
+  private def verifyJaccard(cand: DataFrame, aCol: String, bCol: String,
+      shA: DataFrame, shB: DataFrame, idCol: String,
       threshold: Double): DataFrame =
     cand
-      .join(sh.select(col(idCol).as("id_a"), col("__shingles").as("__sa")).hint("shuffle_hash"),
-        Seq("id_a"))
-      .join(sh.select(col(idCol).as("id_b"), col("__shingles").as("__sb")).hint("shuffle_hash"),
-        Seq("id_b"))
-      .select(col("id_a"), col("id_b"), jaccard(col("__sa"), col("__sb")).as("jaccard"))
+      .join(shA.select(col(idCol).as(aCol), col("__shingles").as("__sa")).hint("shuffle_hash"),
+        Seq(aCol))
+      .join(shB.select(col(idCol).as(bCol), col("__shingles").as("__sb")).hint("shuffle_hash"),
+        Seq(bCol))
+      .select(col(aCol), col(bCol), jaccard(col("__sa"), col("__sb")).as("jaccard"))
       .filter(col("jaccard") >= threshold)
+
+  /** Band-explode core: one (idCol, __band, __bucket) row per LSH band of
+    * each MinHash signature in `sigs` (idCol, __sig).
+    */
+  private def banded(sigs: DataFrame, idCol: String, k: Int, bands: Int): DataFrame = {
+    require(k % bands == 0, s"k=$k must divide into bands=$bands")
+    sigs
+      .select(col(idCol), explode(bandBuckets(col("__sig"), bands, k / bands)).as("__bb"))
+      .select(col(idCol), col("__bb.band").as("__band"), col("__bb.bucket").as("__bucket"))
+  }
 
   /** Per-document duplicate-n-gram coverage: the fraction of a document's
     * distinct n-grams that occur in at least one OTHER document — the
@@ -347,7 +369,8 @@ object NearDup {
     require(threshold > 0.0 && threshold <= 1.0, s"threshold $threshold must be in (0,1]")
     val tDen = 1000000
     val tNum = math.floor(threshold * tDen).toInt.max(1)
-    verifyJaccard(sh, idCol, prefixCandidates(sh, idCol, tNum, tDen), threshold)
+    verifyJaccard(prefixCandidates(sh, idCol, tNum, tDen), "id_a", "id_b",
+      sh, sh, idCol, threshold)
   }
 
   /** Containment near-dup pairs: |A∩B|/|A| and |A∩B|/|B| — the ASYMMETRIC
@@ -392,17 +415,11 @@ object NearDup {
     */
   def containmentPairsFromShingles(sh: DataFrame, idCol: String,
       threshold: Double, dfCap: Int = 128): DataFrame = {
-    require(dfCap >= 2, s"dfCap=$dfCap must be >= 2 (a df-1 shingle pairs nothing)")
-    val inv = sh.select(col(idCol), explode(col("__shingles")).as("__s"))
-    val rare = inv.groupBy("__s").agg(count(lit(1)).as("__df"))
-      .filter(col("__df") <= dfCap).select(col("__s"))
-    // SHUFFLE_HASH everywhere: inv/rare/sizes are corpus-linear — never
-    // broadcastable at scale, and a broadcast build would serially
-    // re-evaluate the tokenize+shingle pipeline in one thread (parquet
-    // stats make the doc side look tiny, so the planner would pick it).
-    // capped ends in the __s-keyed join, so the pair self-join below reuses
-    // that partitioning; only the size aggregate re-keys (by doc id).
-    val capped = inv.join(rare.hint("shuffle_hash"), Seq("__s"))
+    // SHUFFLE_HASH everywhere: capped/sizes are corpus-linear (see
+    // cappedPostings). capped ends in the __s-keyed join, so the pair
+    // self-join below reuses that partitioning; only the size aggregate
+    // re-keys (by doc id).
+    val capped = cappedPostings(sh, idCol, dfCap)
     val sizes = capped.groupBy(col(idCol)).agg(count(lit(1)).as("__n"))
     val inter = capped.as("a")
       .join(capped.as("b").hint("shuffle_hash"),
@@ -420,58 +437,35 @@ object NearDup {
       .filter(greatest(col("containment_a"), col("containment_b")) >= threshold)
   }
 
-  /** df-capped inverted-index candidates over a [[withShingles]] frame:
-    * (id_a, id_b) for every pair sharing >= 1 shingle whose document
-    * frequency is <= dfCap. The df aggregate and the semi-join both shuffle
-    * on the shingle hash — bounded keys, and the surviving self-join
-    * contributes at most dfCap^2 rows per shingle.
+  /** df-capped postings (idCol, __s) of a [[withShingles]] frame: every
+    * (doc, shingle) whose shingle occurs in at most `dfCap` documents, so a
+    * self-join on __s contributes at most dfCap^2 rows per shingle. The df
+    * aggregate and the semi-join both shuffle on the shingle — bounded
+    * keys. SHUFFLE_HASH: the postings are corpus-linear — never
+    * broadcastable at scale, and a broadcast build would serially
+    * re-evaluate the tokenize+shingle pipeline in one thread (parquet stats
+    * make the doc side look tiny, so the planner would pick it).
     */
-  private[ext] def cappedIndexCandidates(sh: DataFrame, idCol: String,
-      dfCap: Int): DataFrame = {
+  private[ext] def cappedPostings(sh: DataFrame, idCol: String, dfCap: Int): DataFrame = {
     require(dfCap >= 2, s"dfCap=$dfCap must be >= 2 (a df-1 shingle pairs nothing)")
     val inv = sh.select(col(idCol), explode(col("__shingles")).as("__s"))
     val rare = inv.groupBy("__s").agg(count(lit(1)).as("__df"))
       .filter(col("__df") <= dfCap).select(col("__s"))
-    // SHUFFLE_HASH everywhere: inv and rare are corpus-linear — never
-    // broadcastable at scale, and a broadcast build would serially
-    // re-evaluate the tokenize+shingle pipeline in one thread (parquet
-    // stats make the doc side look tiny, so the planner would pick it).
-    val capped = inv.join(rare.hint("shuffle_hash"), Seq("__s"))
-    capped.as("a")
-      .join(capped.as("b").hint("shuffle_hash"),
-        col("a.__s") === col("b.__s") && col(s"a.$idCol") < col(s"b.$idCol"))
-      .select(col(s"a.$idCol").as("id_a"), col(s"b.$idCol").as("id_b"))
-      .distinct()
+    inv.join(rare.hint("shuffle_hash"), Seq("__s"))
   }
 
   /** MinHash + banded-LSH near-dup pairs, exact-verified: generate candidate
     * pairs from band-bucket collisions, then keep those whose true shingle
-    * Jaccard clears the threshold. Output: (id_a, id_b, jaccard), id_a < id_b.
+    * Jaccard clears the threshold. The doc-level form of
+    * [[minHashNearDupPairsFromParts]] over live [[withShingles]] and
+    * [[minHashSignatureFrame]] frames. Output: (id_a, id_b, jaccard),
+    * id_a < id_b.
     */
   def minHashNearDupPairs(docs: DataFrame, idCol: String, textCol: String,
       n: Int, k: Int, bands: Int, threshold: Double): DataFrame = {
-    require(k % bands == 0, s"k=$k must divide into bands=$bands")
-    val rowsPerBand = k / bands
     val sh = withShingles(docs, idCol, textCol, n)
-    val banded = minHashSignatureFrame(sh, idCol, k)
-      .select(col(idCol),
-        explode(bandBuckets(col("__sig"), bands, rowsPerBand)).as("__bb"))
-      .select(col(idCol), col("__bb.band").as("__band"), col("__bb.bucket").as("__bucket"))
-    val candidates = banded.as("a")
-      .join(banded.as("b").hint("shuffle_hash"),
-        col("a.__band") === col("b.__band") && col("a.__bucket") === col("b.__bucket") &&
-          col(s"a.$idCol") < col(s"b.$idCol"))
-      .select(col(s"a.$idCol").as("id_a"), col(s"b.$idCol").as("id_b"))
-      .distinct()
-    // SHUFFLE_HASH: same reasoning as exactJaccardPairs — keep the doc-linear
-    // shingle frame out of broadcast builds.
-    candidates
-      .join(sh.select(col(idCol).as("id_a"), col("__shingles").as("__sa")).hint("shuffle_hash"),
-        Seq("id_a"))
-      .join(sh.select(col(idCol).as("id_b"), col("__shingles").as("__sb")).hint("shuffle_hash"),
-        Seq("id_b"))
-      .select(col("id_a"), col("id_b"), jaccard(col("__sa"), col("__sb")).as("jaccard"))
-      .filter(col("jaccard") >= threshold)
+    minHashNearDupPairsFromParts(sh, minHashSignatureFrame(sh, idCol, k),
+      idCol, k, bands, threshold)
   }
 
   /** [[minHashNearDupPairs]] over PRECOMPUTED shingle and signature frames
@@ -484,27 +478,10 @@ object NearDup {
     * construction stays value-gated in q24.
     */
   def minHashNearDupPairsFromParts(sh: DataFrame, sigs: DataFrame,
-      idCol: String, k: Int, bands: Int, threshold: Double): DataFrame = {
-    require(k % bands == 0, s"k=$k must divide into bands=$bands")
-    val rowsPerBand = k / bands
-    val banded = sigs
-      .select(col(idCol),
-        explode(bandBuckets(col("__sig"), bands, rowsPerBand)).as("__bb"))
-      .select(col(idCol), col("__bb.band").as("__band"), col("__bb.bucket").as("__bucket"))
-    val candidates = banded.as("a")
-      .join(banded.as("b").hint("shuffle_hash"),
-        col("a.__band") === col("b.__band") && col("a.__bucket") === col("b.__bucket") &&
-          col(s"a.$idCol") < col(s"b.$idCol"))
-      .select(col(s"a.$idCol").as("id_a"), col(s"b.$idCol").as("id_b"))
-      .distinct()
-    candidates
-      .join(sh.select(col(idCol).as("id_a"), col("__shingles").as("__sa")).hint("shuffle_hash"),
-        Seq("id_a"))
-      .join(sh.select(col(idCol).as("id_b"), col("__shingles").as("__sb")).hint("shuffle_hash"),
-        Seq("id_b"))
-      .select(col("id_a"), col("id_b"), jaccard(col("__sa"), col("__sb")).as("jaccard"))
-      .filter(col("jaccard") >= threshold)
-  }
+      idCol: String, k: Int, bands: Int, threshold: Double): DataFrame =
+    verifyJaccard(
+      selfJoinPairs(banded(sigs, idCol, k, bands), idCol, Seq("__band", "__bucket")),
+      "id_a", "id_b", sh, sh, idCol, threshold)
 
   /** Incremental dedup: near-dup pairs between a NEW delta batch and the
     * existing base corpus ONLY — the production shape when a crawl lands a
@@ -517,24 +494,17 @@ object NearDup {
     * pipeline's restricted to mixed pairs: bucket collision is a pairwise
     * criterion, indifferent to which side a doc arrives on. Within-delta
     * duplicates are intentionally NOT emitted (that is a separate
-    * [[minHashNearDupPairs]] pass over the delta alone).
+    * [[minHashNearDupPairs]] pass over the delta alone). The doc-level
+    * form of [[deltaNearDupPairsFromParts]] over each side's live shingle
+    * and signature frames.
     * Output: (new_id, base_id, jaccard) at or above `threshold`.
     */
   def deltaNearDupPairs(base: DataFrame, delta: DataFrame, idCol: String,
       textCol: String, n: Int, k: Int, bands: Int, threshold: Double): DataFrame = {
-    require(k % bands == 0, s"k=$k must divide into bands=$bands")
-    val rowsPerBand = k / bands
-    def bandedOf(docs: DataFrame): (DataFrame, DataFrame) = {
-      val sh = withShingles(docs, idCol, textCol, n)
-      val banded = minHashSignatureFrame(sh, idCol, k)
-        .select(col(idCol),
-          explode(bandBuckets(col("__sig"), bands, rowsPerBand)).as("__bb"))
-        .select(col(idCol), col("__bb.band").as("__band"), col("__bb.bucket").as("__bucket"))
-      (sh, banded)
-    }
-    val (shNew, bNew) = bandedOf(delta)
-    val (shBase, bBase) = bandedOf(base)
-    deltaPairsCore(shNew, bNew, shBase, bBase, idCol, threshold)
+    val shNew = withShingles(delta, idCol, textCol, n)
+    val shBase = withShingles(base, idCol, textCol, n)
+    deltaNearDupPairsFromParts(shNew, minHashSignatureFrame(shNew, idCol, k),
+      shBase, minHashSignatureFrame(shBase, idCol, k), idCol, k, bands, threshold)
   }
 
   /** [[deltaNearDupPairs]] over PRECOMPUTED shingle and signature frames
@@ -547,31 +517,12 @@ object NearDup {
   def deltaNearDupPairsFromParts(shNew: DataFrame, sigsNew: DataFrame,
       shBase: DataFrame, sigsBase: DataFrame, idCol: String,
       k: Int, bands: Int, threshold: Double): DataFrame = {
-    require(k % bands == 0, s"k=$k must divide into bands=$bands")
-    val rowsPerBand = k / bands
-    def bandedOf(sigs: DataFrame): DataFrame = sigs
-      .select(col(idCol),
-        explode(bandBuckets(col("__sig"), bands, rowsPerBand)).as("__bb"))
-      .select(col(idCol), col("__bb.band").as("__band"), col("__bb.bucket").as("__bucket"))
-    deltaPairsCore(shNew, bandedOf(sigsNew), shBase, bandedOf(sigsBase),
-      idCol, threshold)
-  }
-
-  private def deltaPairsCore(shNew: DataFrame, bNew: DataFrame,
-      shBase: DataFrame, bBase: DataFrame, idCol: String,
-      threshold: Double): DataFrame = {
-    val candidates = bNew.as("a")
-      .join(bBase.as("b").hint("shuffle_hash"),
+    val candidates = banded(sigsNew, idCol, k, bands).as("a")
+      .join(banded(sigsBase, idCol, k, bands).as("b").hint("shuffle_hash"),
         col("a.__band") === col("b.__band") && col("a.__bucket") === col("b.__bucket"))
       .select(col(s"a.$idCol").as("new_id"), col(s"b.$idCol").as("base_id"))
       .distinct()
-    candidates
-      .join(shNew.select(col(idCol).as("new_id"), col("__shingles").as("__sa"))
-        .hint("shuffle_hash"), Seq("new_id"))
-      .join(shBase.select(col(idCol).as("base_id"), col("__shingles").as("__sb"))
-        .hint("shuffle_hash"), Seq("base_id"))
-      .select(col("new_id"), col("base_id"), jaccard(col("__sa"), col("__sb")).as("jaccard"))
-      .filter(col("jaccard") >= threshold)
+    verifyJaccard(candidates, "new_id", "base_id", shNew, shBase, idCol, threshold)
   }
 
   /** INCREMENTAL near-dup pair maintenance — the state-vs-delta step a
@@ -627,25 +578,19 @@ object NearDup {
       oldShingles: DataFrame, gone: DataFrame, freshSh: DataFrame,
       freshSigs: DataFrame, idCol: String, k: Int, bands: Int,
       threshold: Double): DataFrame = {
-    require(k % bands == 0, s"k=$k must divide into bands=$bands")
-    val rowsPerBand = k / bands
     val kept = oldPairs
       .join(gone.select(col(idCol).as("id_a")), Seq("id_a"), "left_anti")
       .join(gone.select(col(idCol).as("id_b")), Seq("id_b"), "left_anti")
       .select("id_a", "id_b", "jaccard")
     val unchangedSigs = oldSigs.join(gone, Seq(idCol), "left_anti")
-    def buckets(sigs: DataFrame): DataFrame = sigs
-      .select(col(idCol),
-        explode(bandBuckets(col("__sig"), bands, rowsPerBand)).as("__bb"))
-      .select(col(idCol), col("__bb.band").as("__band"),
-        col("__bb.bucket").as("__bucket"))
-    val allBuckets = buckets(unchangedSigs).unionByName(buckets(freshSigs))
+    val allBuckets = banded(unchangedSigs, idCol, k, bands)
+      .unionByName(banded(freshSigs, idCol, k, bands))
     // the candidate set feeds two consumers (the shingle prune below and
     // the verify join) — localCheckpoint so the bucket self-join runs
     // once; LAZY (round 15): the first consumer (the candIds broadcast
     // inside allSh's eager job) folds the materialization in, and the
     // consumers are strictly sequential
-    val cand = buckets(freshSigs).as("a")
+    val cand = banded(freshSigs, idCol, k, bands).as("a")
       .join(allBuckets.as("b").hint("shuffle_hash"),
         col("a.__band") === col("b.__band") &&
           col("a.__bucket") === col("b.__bucket") &&
@@ -668,15 +613,8 @@ object NearDup {
       .unionByName(freshSh)
       .join(broadcast(candIds), Seq(idCol), "left_semi")
       .localCheckpoint()
-    val regenerated = cand
-      .join(allSh.select(col(idCol).as("id_a"), col("__shingles").as("__sa"))
-        .hint("shuffle_hash"), Seq("id_a"))
-      .join(allSh.select(col(idCol).as("id_b"), col("__shingles").as("__sb"))
-        .hint("shuffle_hash"), Seq("id_b"))
-      .select(col("id_a"), col("id_b"),
-        jaccard(col("__sa"), col("__sb")).as("jaccard"))
-      .filter(col("jaccard") >= threshold)
-    kept.unionByName(regenerated)
+    kept.unionByName(
+      verifyJaccard(cand, "id_a", "id_b", allSh, allSh, idCol, threshold))
   }
 
   /** Near-dup DEDUP resolution: greedy keep-lowest-id — a document survives
@@ -1002,13 +940,9 @@ object NearDup {
     val smallBuckets = allBanded.groupBy("__band", "__bucket")
       .agg(count(lit(1)).as("__bn"))
       .filter(col("__bn") <= maxBucket).drop("__bn")
-    val banded = allBanded.join(smallBuckets.hint("shuffle_hash"), Seq("__band", "__bucket"))
-    val cand = banded.as("a")
-      .join(banded.as("b").hint("shuffle_hash"),
-        col("a.__band") === col("b.__band") && col("a.__bucket") === col("b.__bucket") &&
-          col(s"a.$idCol") < col(s"b.$idCol"))
-      .select(col(s"a.$idCol").as("id_a"), col(s"b.$idCol").as("id_b"))
-      .distinct()
+    val cand = selfJoinPairs(
+      allBanded.join(smallBuckets.hint("shuffle_hash"), Seq("__band", "__bucket")),
+      idCol, Seq("__band", "__bucket"))
     // SHUFFLE_HASH: the signature frame is doc-linear — same broadcast-build
     // reasoning as the MinHash verify joins.
     cand

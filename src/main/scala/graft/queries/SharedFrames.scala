@@ -44,6 +44,25 @@ object SharedFrames {
     Scratch.dir(s, dir, s"${prefix}_$pathTag")
   }
 
+  /** Whether the artifact at `path` finished writing. Existence goes
+    * through the session's Hadoop FileSystem — the same abstraction the
+    * write uses — so the build-once check stays correct if the scratch
+    * root ever moves off the local filesystem (a raw java.io probe would
+    * silently rebuild, or worse, mis-detect).
+    */
+  private def built(s: SparkSession, path: String): Boolean = {
+    val marker = new org.apache.hadoop.fs.Path(path, "_SUCCESS")
+    marker.getFileSystem(s.sparkContext.hadoopConfiguration).exists(marker)
+  }
+
+  /** Build-once parquet artifact: write `build` to `path` unless a
+    * finished write is already there, then read it back.
+    */
+  private def memo(s: SparkSession, path: String)(build: => DataFrame): DataFrame = {
+    if (!built(s, path)) build.write.mode("overwrite").parquet(path)
+    s.read.parquet(path)
+  }
+
   /** The standard verified near-dup edge set (id_a, id_b, jaccard) over
     * `documents`, materialize-once per session+dir. Thread-safe: Verify and
     * Bench drive queries sequentially, but the lock makes concurrent
@@ -53,19 +72,10 @@ object SharedFrames {
     taggedDir(s, dir, s"mh_pairs_n3_k64_b16_t080")
 
   def verifiedDocPairs(s: SparkSession, dir: String): DataFrame = synchronized {
-    val path = pairFramePath(s, dir)
-    // Existence goes through the session's Hadoop FileSystem — the same
-    // abstraction the write uses — so the build-once check stays correct if
-    // the scratch root ever moves off the local filesystem (a raw java.io
-    // probe would silently rebuild, or worse, mis-detect).
-    val marker = new org.apache.hadoop.fs.Path(path, "_SUCCESS")
-    val fs = marker.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (!fs.exists(marker)) {
+    memo(s, pairFramePath(s, dir)) {
       NearDup.minHashNearDupPairs(Tables.documents(s, dir), "doc_id", "text",
           n = 3, k = 64, bands = 16, threshold = 0.8)
-        .write.mode("overwrite").parquet(path)
     }
-    s.read.parquet(path)
   }
 
   /** The materialized mutual-kNN edge set over `embeddings` (round 9 —
@@ -85,15 +95,10 @@ object SharedFrames {
     taggedDir(s, dir, s"mknn_cell_k3")
 
   def mutualKnnEdges(s: SparkSession, dir: String): DataFrame = synchronized {
-    val path = mutualKnnPath(s, dir)
-    val marker = new org.apache.hadoop.fs.Path(path, "_SUCCESS")
-    val fs = marker.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (!fs.exists(marker)) {
+    memo(s, mutualKnnPath(s, dir)) {
       graft.ext.Similarity.mutualKnnGraph(
           Tables.embeddings(s, dir), "vec_id", "embedding", "label", k = 3)
-        .write.mode("overwrite").parquet(path)
     }
-    s.read.parquet(path)
   }
 
   /** The DENSE navigable-graph edge artifact (id_a, id_b): mutual-kNN
@@ -108,18 +113,13 @@ object SharedFrames {
     taggedDir(s, dir, "nav_dense_k3_f3")
 
   def denseNavEdges(s: SparkSession, dir: String): DataFrame = synchronized {
-    val path = denseNavEdgesPath(s, dir)
-    val marker = new org.apache.hadoop.fs.Path(path, "_SUCCESS")
-    val fs = marker.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (!fs.exists(marker)) {
+    memo(s, denseNavEdgesPath(s, dir)) {
       mutualKnnEdges(s, dir).select("id_a", "id_b")
         .union(graft.ext.Similarity.crossCellLongRangeEdges(
           Tables.embeddings(s, dir), "vec_id", "embedding", "label",
           nForeign = 3))
         .distinct()
-        .write.mode("overwrite").parquet(path)
     }
-    s.read.parquet(path)
   }
 
   /** The CELL-TAGGED mutual-kNN edge artifact (cell, id_a, id_b),
@@ -137,9 +137,7 @@ object SharedFrames {
 
   def cellTaggedMutualKnn(s: SparkSession, dir: String): DataFrame = synchronized {
     val path = mutualKnnCellTaggedPath(s, dir)
-    val marker = new org.apache.hadoop.fs.Path(path, "_SUCCESS")
-    val fs = marker.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (!fs.exists(marker)) {
+    if (!built(s, path)) {
       val e = Tables.embeddings(s, dir)
       graft.engine.Sinks.writePartitioned(
         mutualKnnEdges(s, dir)
@@ -168,18 +166,13 @@ object SharedFrames {
     taggedDir(s, dir, s"lre_pickbest_nf2")
 
   def longRangePickBest(s: SparkSession, dir: String): DataFrame = synchronized {
-    val path = longRangePickBestPath(s, dir)
-    val marker = new org.apache.hadoop.fs.Path(path, "_SUCCESS")
-    val fs = marker.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (!fs.exists(marker)) {
+    memo(s, longRangePickBestPath(s, dir)) {
       val e = Tables.embeddings(s, dir)
       graft.ext.Similarity.bestInPickedCells(
           graft.ext.Similarity.foreignCellPicks(
             e, "vec_id", "embedding", "label", nForeign = 2),
           e, "vec_id", "embedding", "label")
-        .write.mode("overwrite").parquet(path)
     }
-    s.read.parquet(path)
   }
 
   /** The materialized NAVIGABLE proximity graph over `embeddings` (round
@@ -197,18 +190,13 @@ object SharedFrames {
     taggedDir(s, dir, s"nav_mknn3_lre2")
 
   def navEdges(s: SparkSession, dir: String): DataFrame = synchronized {
-    val path = navEdgesPath(s, dir)
-    val marker = new org.apache.hadoop.fs.Path(path, "_SUCCESS")
-    val fs = marker.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (!fs.exists(marker)) {
+    memo(s, navEdgesPath(s, dir)) {
       mutualKnnEdges(s, dir).select("id_a", "id_b")
         .union(longRangePickBest(s, dir)
           .select(least(col("query_id"), col("neighbor_id")).as("id_a"),
             greatest(col("query_id"), col("neighbor_id")).as("id_b")))
         .distinct()
-        .write.mode("overwrite").parquet(path)
     }
-    s.read.parquet(path)
   }
 
   /** The materialized per-document shingle frame (doc_id, __shingles) over
@@ -229,14 +217,9 @@ object SharedFrames {
     taggedDir(s, dir, s"doc_shingles_n${n}")
 
   def docShingles(s: SparkSession, dir: String, n: Int): DataFrame = synchronized {
-    val path = docShinglesPath(s, dir, n)
-    val marker = new org.apache.hadoop.fs.Path(path, "_SUCCESS")
-    val fs = marker.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (!fs.exists(marker)) {
+    memo(s, docShinglesPath(s, dir, n)) {
       NearDup.shingleFrame(Tables.documents(s, dir), "doc_id", "text", n)
-        .write.mode("overwrite").parquet(path)
     }
-    s.read.parquet(path)
   }
 
   /** The corpus MinHash signature frame (doc_id, __sig: array<long>) at the
@@ -256,14 +239,9 @@ object SharedFrames {
     taggedDir(s, dir, s"minhash_sigs_n3_k64")
 
   def minhashSigs(s: SparkSession, dir: String): DataFrame = synchronized {
-    val path = minhashSigsPath(s, dir)
-    val marker = new org.apache.hadoop.fs.Path(path, "_SUCCESS")
-    val fs = marker.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (!fs.exists(marker)) {
+    memo(s, minhashSigsPath(s, dir)) {
       NearDup.minHashSignatureFrame(docShingles(s, dir, 3), "doc_id", k = 64)
-        .write.mode("overwrite").parquet(path)
     }
-    s.read.parquet(path)
   }
 
   /** The verified containment edge set (id_a, id_b) over `documents` at
@@ -279,16 +257,11 @@ object SharedFrames {
     taggedDir(s, dir, s"cont_pairs_n3_t080_df128")
 
   def containmentDocPairs(s: SparkSession, dir: String): DataFrame = synchronized {
-    val path = containmentPairsPath(s, dir)
-    val marker = new org.apache.hadoop.fs.Path(path, "_SUCCESS")
-    val fs = marker.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (!fs.exists(marker)) {
+    memo(s, containmentPairsPath(s, dir)) {
       NearDup.containmentPairsFromShingles(docShingles(s, dir, 3), "doc_id",
           threshold = 0.8, dfCap = 128)
         .select("id_a", "id_b")
-        .write.mode("overwrite").parquet(path)
     }
-    s.read.parquet(path)
   }
 
   /** The corpus SimHash signature frame (doc_id, simhash: long) at the
@@ -303,14 +276,9 @@ object SharedFrames {
     taggedDir(s, dir, s"simhash_sigs_b60")
 
   def simhashSigs(s: SparkSession, dir: String): DataFrame = synchronized {
-    val path = simhashSigsPath(s, dir)
-    val marker = new org.apache.hadoop.fs.Path(path, "_SUCCESS")
-    val fs = marker.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (!fs.exists(marker)) {
+    memo(s, simhashSigsPath(s, dir)) {
       NearDup.simHashFrame(Tables.documents(s, dir), "doc_id", "text")
-        .write.mode("overwrite").parquet(path)
     }
-    s.read.parquet(path)
   }
 
   /** The materialized version-B PINNED SPLIT TABLE (doc_id, component,
@@ -329,14 +297,9 @@ object SharedFrames {
     taggedDir(s, dir, s"pinned_splits_b")
 
   def pinnedSplitsB(s: SparkSession, dir: String): DataFrame = synchronized {
-    val path = pinnedSplitsBPath(s, dir)
-    val marker = new org.apache.hadoop.fs.Path(path, "_SUCCESS")
-    val fs = marker.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (!fs.exists(marker)) {
+    memo(s, pinnedSplitsBPath(s, dir)) {
       Round12Queries.splitStateB(s, dir).assigned
-        .write.mode("overwrite").parquet(path)
     }
-    s.read.parquet(path)
   }
 
   /** Version-B maintained near-dup STATE — verified pairs, MinHash
@@ -356,40 +319,27 @@ object SharedFrames {
     taggedDir(s, dir, s"b_pairs_n3_k64_b16_t080")
 
   def bPairs(s: SparkSession, dir: String): DataFrame = synchronized {
-    val path = bPairsPath(s, dir)
-    val marker = new org.apache.hadoop.fs.Path(path, "_SUCCESS")
-    val fs = marker.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (!fs.exists(marker)) {
+    memo(s, bPairsPath(s, dir)) {
       Round11Queries.incrementalBPairs(s, dir)
-        .write.mode("overwrite").parquet(path)
     }
-    s.read.parquet(path)
   }
 
   private[queries] def bSigsPath(s: SparkSession, dir: String): String =
     taggedDir(s, dir, s"b_sigs_n3_k64")
 
   def bSigs(s: SparkSession, dir: String): DataFrame = synchronized {
-    val path = bSigsPath(s, dir)
-    val marker = new org.apache.hadoop.fs.Path(path, "_SUCCESS")
-    val fs = marker.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (!fs.exists(marker)) {
-      Round11Queries.bSigsLive(s, dir).write.mode("overwrite").parquet(path)
+    memo(s, bSigsPath(s, dir)) {
+      Round11Queries.bSigsLive(s, dir)
     }
-    s.read.parquet(path)
   }
 
   private[queries] def bShinglesPath(s: SparkSession, dir: String): String =
     taggedDir(s, dir, s"b_shingles_n3")
 
   def bShingles(s: SparkSession, dir: String): DataFrame = synchronized {
-    val path = bShinglesPath(s, dir)
-    val marker = new org.apache.hadoop.fs.Path(path, "_SUCCESS")
-    val fs = marker.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (!fs.exists(marker)) {
-      Round11Queries.bShinglesLive(s, dir).write.mode("overwrite").parquet(path)
+    memo(s, bShinglesPath(s, dir)) {
+      Round11Queries.bShinglesLive(s, dir)
     }
-    s.read.parquet(path)
   }
 
   /** The MAINTAINED version-B navigable edge set (round 13 — VERDICT_r12
@@ -404,14 +354,9 @@ object SharedFrames {
     taggedDir(s, dir, s"nav_b_mknn3_lre2")
 
   def navEdgesB(s: SparkSession, dir: String): DataFrame = synchronized {
-    val path = navEdgesBPath(s, dir)
-    val marker = new org.apache.hadoop.fs.Path(path, "_SUCCESS")
-    val fs = marker.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (!fs.exists(marker)) {
+    memo(s, navEdgesBPath(s, dir)) {
       Round12Queries.maintainedNavEdgesB(s, dir)
-        .write.mode("overwrite").parquet(path)
     }
-    s.read.parquet(path)
   }
 
   /** The materialized IVF-PQ index over `embeddings` (VERDICT_r08 #1 —
@@ -459,11 +404,7 @@ object SharedFrames {
     */
   def staleIvf(s: SparkSession, dir: String): IvfPq.Index = synchronized {
     val base = staleIvfPath(s, dir)
-    val conf = s.sparkContext.hadoopConfiguration
-    def ready(part: String): Boolean = {
-      val marker = new org.apache.hadoop.fs.Path(s"$base/$part", "_SUCCESS")
-      marker.getFileSystem(conf).exists(marker)
-    }
+    def ready(part: String): Boolean = built(s, s"$base/$part")
     if (!(ready("pl") && ready("cents") && ready("cw") && ready("codes"))) {
       import s.implicits._
       // cpuSpread (round 15): the base slice arrives as O(files) splits;
@@ -508,10 +449,7 @@ object SharedFrames {
     taggedDir(s, dir, s"ivfpq_stale_delta8_codes")
 
   def staleDeltaCodes(s: SparkSession, dir: String): DataFrame = synchronized {
-    val path = staleDeltaCodesPath(s, dir)
-    val marker = new org.apache.hadoop.fs.Path(path, "_SUCCESS")
-    val fs = marker.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (!fs.exists(marker)) {
+    memo(s, staleDeltaCodesPath(s, dir)) {
       val ix = staleIvf(s, dir)
       val planes = staleIvfPlanes(s, dir)
       val delta = IvfPq.withDerivedCells(
@@ -519,18 +457,12 @@ object SharedFrames {
       IvfPq.assignCodes(
           IvfPq.residualParts(delta, ix.cents, "vec_id", "embedding", "cell"),
           ix.cw)
-        .write.mode("overwrite").parquet(path)
     }
-    s.read.parquet(path)
   }
 
   def ivfPqIndex(s: SparkSession, dir: String): IvfPq.Index = synchronized {
     val base = ivfPqIndexPath(s, dir)
-    val conf = s.sparkContext.hadoopConfiguration
-    def ready(part: String): Boolean = {
-      val marker = new org.apache.hadoop.fs.Path(s"$base/$part", "_SUCCESS")
-      marker.getFileSystem(conf).exists(marker)
-    }
+    def ready(part: String): Boolean = built(s, s"$base/$part")
     if (!(ready("cents") && ready("cw") && ready("codes"))) {
       // DERIVED cells (round 14 — the q524 rule across the index
       // lifecycle): the coarse quantizer is the SRP bucket at

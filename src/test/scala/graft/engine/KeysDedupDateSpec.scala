@@ -15,13 +15,6 @@ class KeysDedupDateSpec extends SparkSpec {
       .orderBy("k").collect().map(r => (r.getLong(0), r.getLong(1)))
     assert(faithful.toSeq == scalable.toSeq)
     assert(scalable.map(_._2).toSeq == (43L until 43L + 997L))
-    // pure-Catalyst two-phase form: same output again (measured slightly
-    // slower than zipWithIndex at sf0.1 — 1.1-1.3s vs 0.9-1.1s on 600k rows —
-    // because the partitioned window re-clusters by pid; kept as the
-    // codegen-preserving alternative)
-    val catalyst = Keys.surrogateKeysScalableCatalyst(df, "k", "sk", offset = 42L, partitions = 5)
-      .orderBy("k").collect().map(r => (r.getLong(0), r.getLong(1)))
-    assert(faithful.toSeq == catalyst.toSeq)
   }
 
   test("globalRunningSum equals the single-task running-sum window") {
@@ -36,6 +29,18 @@ class KeysDedupDateSpec extends SparkSpec {
     val scalable = Keys.globalRunningSum(df, "k", "v", "cum", partitions = 5)
       .orderBy("k").collect().map(r => (r.getLong(0), r.getLong(2)))
     assert(naive.toSeq == scalable.toSeq)
+    // the exclusive prefix max rides the same two-phase scan; the global
+    // first row has no prior row, so its max is null
+    def maxes(out: org.apache.spark.sql.DataFrame): Seq[(Long, Option[Long])] =
+      out.orderBy("k").collect().toSeq
+        .map(r => (r.getLong(0), Option(r.get(2)).map(_.asInstanceOf[Long])))
+    val naiveMax = maxes(df.withColumn("pmax",
+      max(col("v")).over(Window.orderBy("k")
+        .rowsBetween(Window.unboundedPreceding, -1))))
+    val scalableMax = maxes(
+      Keys.globalPrefixMaxBy(df, Seq(col("k")), "v", "pmax", partitions = 5))
+    assert(naiveMax.head._2.isEmpty && naiveMax.tail.forall(_._2.nonEmpty))
+    assert(naiveMax == scalableMax)
   }
 
   test("two-phase ntile formula matches the window ntile on a non-divisible n") {
@@ -46,13 +51,9 @@ class KeysDedupDateSpec extends SparkSpec {
     val viaNtile = df.withColumn("b", ntile(10).over(Window.orderBy("v")))
       .groupBy("b").count().orderBy("b")
       .collect().map(r => (r.getInt(0), r.getLong(1)))
-    val ranked = Keys.surrogateKeysScalableCatalyst(df, "v", "rank", partitions = 3)
-    val n = lit(23L)
-    val q = floor(n / 10)
-    val r = n % 10
-    val b0 = when(col("rank") <= r * (q + 1), floor((col("rank") - 1) / (q + 1)))
-      .otherwise(r + floor((col("rank") - r * (q + 1) - 1) / q))
-    val viaFormula = ranked.select((b0 + 1).cast("int").as("b"))
+    val ranked = Keys.surrogateKeysScalable(df, "v", "rank", partitions = 3)
+    val viaFormula = ranked
+      .select(Keys.ntileFromRank(col("rank"), lit(23L), 10).as("b"))
       .groupBy("b").count().orderBy("b")
       .collect().map(r2 => (r2.getInt(0), r2.getLong(1)))
     assert(viaFormula.toSeq == viaNtile.toSeq)

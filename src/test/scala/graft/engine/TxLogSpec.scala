@@ -243,6 +243,13 @@ class TxLogSpec extends graft.SparkSpec {
     (0 until 25).foreach { i =>
       assert(TxLog.append(Seq((i.toLong, s"v$i", (i % 3).toString))
         .toDF("k", "v", "p"), t, Some("p")) === i.toLong)
+      if (i == 20) {
+        // the read lands exactly on the checkpoint version: the checkpoint
+        // already holds v20's files, so its delta must not apply again
+        assert(TxLog.read(spark, t).count() === 21L)
+        assert(TxLog.snapshot(spark, t).entries.map(_.path).sorted
+          === TxLog.fullReplaySnapshot(spark, t).entries.map(_.path).sorted)
+      }
     }
     assert(TxLog.latestCheckpointVersion(spark, t) === 20L)
     val resolved = TxLog.snapshot(spark, t)

@@ -581,8 +581,10 @@ class ExtSpec extends SparkSpec {
       (21L, s"$hot alpha beta gamma delta epsilon zeta extra trailing tokens appended here now"))
     val df = rows.toDF("doc_id", "text")
     val sh = NearDup.shingleFrame(df, "doc_id", "text", 3)
-    val capped = NearDup.cappedIndexCandidates(sh, "doc_id", dfCap = 5).count()
-    val uncapped = NearDup.cappedIndexCandidates(sh, "doc_id", dfCap = 100).count()
+    def candidates(dfCap: Int): Long = NearDup.selfJoinPairs(
+      NearDup.cappedPostings(sh, "doc_id", dfCap), "doc_id", Seq("__s")).count()
+    val capped = candidates(dfCap = 5)
+    val uncapped = candidates(dfCap = 100)
     assert(capped === 1L, "only the rare-overlap pair may survive the cap")
     assert(uncapped === (14L * 13L) / 2, "hot shingle alone pairs all 14 docs uncapped")
     val out = NearDup.containmentPairs(df, "doc_id", "text", 3, 0.8, dfCap = 5)
