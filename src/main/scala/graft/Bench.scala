@@ -40,7 +40,8 @@ object Bench {
     // back-to-back runs of the SAME query 4x). Interleaving puts each
     // query's timed runs a whole pass apart, so a steal window shorter than
     // a pass can inflate at most one of them; the min is the reproducible
-    // cost of the plan. Failures are reported, not silently timed.
+    // cost of the plan. A query that throws in either pass is not timed: it
+    // is listed under `failed`, out of the total, and the run exits non-zero.
     //
     // Calibration samples SPREAD across both passes. BOTH the median and
     // the min ship (ADVICE_r11): the median tracks the speed the run
@@ -56,6 +57,7 @@ object Bench {
     // round. Raw samples ship in the artifact either way.
     val names = SparkEntry.queries.keys.toSeq.sorted
     val best = scala.collection.mutable.Map.empty[String, Double]
+    val failed = scala.collection.mutable.SortedSet.empty[String]
     val calibSamples = scala.collection.mutable.ArrayBuffer.empty[Double]
     // Sample positions computed explicitly (ADVICE_r12: the floor-division
     // step yielded 4-7 intra-pass samples depending on registry size,
@@ -67,11 +69,10 @@ object Bench {
       calibSamples += calibrate()
       names.zipWithIndex.foreach { case (name, i) =>
         val t0 = System.nanoTime()
-        try materialize(name) catch {
-          case e: Throwable => System.err.println(s"BENCH-FAIL $name: $e")
-        }
-        val sec = (System.nanoTime() - t0) / 1e9
-        best(name) = math.min(best.getOrElse(name, Double.MaxValue), sec)
+        try {
+          materialize(name)
+          best(name) = math.min(best.getOrElse(name, Double.MaxValue), (System.nanoTime() - t0) / 1e9)
+        } catch { case e: Throwable => System.err.println(s"BENCH-FAIL $name: $e"); failed += name }
         if (calibPositions.contains(i + 1)) calibSamples += calibrate()
       }
     }
@@ -87,7 +88,9 @@ object Bench {
       }
     val calibrationMin =
       if (calibSamples.isEmpty) Double.MaxValue else calibSamples.min
-    val results = names.map(n => n -> best(n))
+    best --= failed
+    val results = names.filter(best.contains).map(n => n -> best(n))
+    val failedJson = failed.map(jstr).mkString(""","failed":[""", ",", "]")
     val qs = results.map { case (k, v) => s"\"" + k + "\":" + v }
       .mkString("{", ",", "}")
     val total = results.map(_._2).sum
@@ -255,7 +258,7 @@ object Bench {
       }
     }
     val fullJson =
-      s"""{"metric":"total","value":$total,"unit":"sec","n_queries":${results.size},"code_fingerprint":"$codeFingerprint","queries":$qs,"sf":"$sfDir"$calib$minOfRuns$scaleup}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","n_queries":${results.size}$failedJson,"code_fingerprint":"$codeFingerprint","queries":$qs,"sf":"$sfDir"$calib$minOfRuns$scaleup}"""
     val detailPath = sys.env.getOrElse("GRAFT_BENCH_DETAIL", "BENCH_detail_latest.json")
     try {
       val w = new java.io.PrintWriter(detailPath, "UTF-8")
@@ -269,10 +272,11 @@ object Bench {
     // BOTH before and — decisively — AFTER the huge per-query line, so the
     // tail always ends with a parseable total no matter how much the map
     // truncates.
-    println(s"""{"metric":"total","value":$total,"unit":"sec","n_queries":${results.size},"sf":"$sfDir"$calib}""")
+    println(s"""{"metric":"total","value":$total,"unit":"sec","n_queries":${results.size}$failedJson,"sf":"$sfDir"$calib}""")
     println(fullJson)
-    println(s"""{"metric":"total","value":$total,"unit":"sec","n_queries":${results.size},"sf":"$sfDir"$calib$scaleup}""")
+    println(s"""{"metric":"total","value":$total,"unit":"sec","n_queries":${results.size}$failedJson,"sf":"$sfDir"$calib$scaleup}""")
     spark.stop()
+    if (failed.nonEmpty) sys.exit(1)
   }
 
   /** JSON string literal with control/quote/backslash escaping — paths from

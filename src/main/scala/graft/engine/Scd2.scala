@@ -1,8 +1,9 @@
 package graft.engine
 
-import scala.util.{Failure, Success, Try}
+import scala.util.{Failure, Try}
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.TimestampType
 
@@ -23,10 +24,9 @@ import org.apache.spark.sql.types.TimestampType
   *    first version; surrogate keys continue from the existing maximum
   *    (the reference's `agg(max)` watermark, final_dim_load.py:103-104).
   *
-  * Scale notes (100 TB design point): the merge is three shuffles on the
-  * natural key (change-detect join, expire semi-join, keep anti-join) plus the
-  * key assignment. The changed-key set is usually tiny relative to the
-  * dimension, so AQE converts the semi/anti joins to broadcasts at runtime.
+  * Scale notes (100 TB design point): the merge is one key-partitioned pass
+  * (current ∪ incoming rows under one window on the natural key: a single
+  * shuffle classifies every row) plus the driver watermark and the keying.
   * Key assignment is pluggable: pass `Keys.surrogateKeys` for the reference's
   * single-task window or `Keys.surrogateKeysScalable` (default) for the
   * range-partitioned two-phase form with identical output.
@@ -83,13 +83,9 @@ object Scd2 {
       sentinel: String = "2099-12-31 00:00:00"): DataFrame = {
     val p = new org.apache.hadoop.fs.Path(dimPath)
     val exists = p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
-    val existing = if (exists) Try(spark.read.parquet(dimPath)) else Failure(new Exception)
-    existing match {
-      case Success(e) =>
-        merge(e, incoming, naturalKey, scdCols, skCol, runTs, sentinel)
-      case Failure(_) =>
-        bootstrap(incoming, naturalKey, skCol, runTs, sentinel)
-    }
+    val existing = if (exists) Try(Sources.parquet(spark, dimPath)) else Failure(new Exception)
+    existing.fold(_ => bootstrap(incoming, naturalKey, skCol, runTs, sentinel),
+      merge(_, incoming, naturalKey, scdCols, skCol, runTs, sentinel))
   }
 
   /** Incremental SCD2 merge. `existing` must carry `skCol`, `start_dt`,
@@ -97,95 +93,76 @@ object Scd2 {
     * carries the natural key and the SCD columns. Returns the full new
     * dimension state (history preserved) with `existing`'s column order.
     */
-  def merge(
-      existing: DataFrame,
-      incoming: DataFrame,
-      naturalKey: String,
-      scdCols: Seq[String],
-      skCol: String,
-      runTs: String,
+  def merge(existing: DataFrame, incoming: DataFrame, naturalKey: String,
+      scdCols: Seq[String], skCol: String, runTs: String,
       sentinel: String = "2099-12-31 00:00:00",
       keying: (DataFrame, String, String, Long) => DataFrame =
-        Keys.surrogateKeysScalable(_, _, _, _)): DataFrame = {
-
-    val curr = existing.filter(col("is_valid"))
-
-    // Driver-side watermark, exactly the reference's agg(max).collect()
-    // round-trip (final_dim_load.py:103-104). One scalar — not a collect loop.
-    val maxRow = existing.agg(max(col(skCol)).cast("long")).head
-    val maxSk = if (maxRow.isNullAt(0)) 0L else maxRow.getLong(0)
-
-    val currHashed = curr
-      .select(col(naturalKey), rowHash(scdCols).as("__curr_hash"))
-    val changed = incoming
-      .withColumn("__hash", rowHash(scdCols))
-      .join(currHashed, Seq(naturalKey))
-      .filter(col("__hash") =!= col("__curr_hash"))
-      .drop("__hash", "__curr_hash")
-    val brandNew = incoming
-      .join(curr.select(naturalKey), Seq(naturalKey), "left_anti")
-
-    // Changed keys drive both the expire and the keep branches; at scale the
-    // set is small, so AQE broadcasts these joins.
-    val changedKeys = changed.select(naturalKey).distinct()
-
-    val expired = curr
-      .join(changedKeys, Seq(naturalKey), "left_semi")
-      .withColumn("end_dt", lit(runTs).cast(TimestampType))
-      .withColumn("is_valid", lit(false))
-    val keptCurrent = curr.join(changedKeys, Seq(naturalKey), "left_anti")
-    val history = existing.filter(!col("is_valid"))
-
-    // One deterministic keying pass over (new versions ∪ brand-new keys),
-    // ordered by the natural key, continuing from the watermark. The
-    // reference chains two windows with a count() round-trip in between
-    // (final_dim_load.py:153+160); a single ordered window over the union is
-    // the same dense, collision-free id space without the extra job.
-    val fresh = keying(changed.unionByName(brandNew), naturalKey, skCol, maxSk)
-      .withColumn("start_dt", lit(runTs).cast(TimestampType))
-      .withColumn("end_dt", lit(sentinel).cast(TimestampType))
-      .withColumn("is_valid", lit(true))
-
-    val cols = existing.columns.map(col).toSeq
-    history.select(cols: _*)
-      .unionByName(keptCurrent.select(cols: _*))
-      .unionByName(expired.select(cols: _*))
-      .unionByName(fresh.select(cols: _*))
-  }
+        Keys.surrogateKeysScalable(_, _, _, _)): DataFrame =
+    classify(existing, incoming, naturalKey, scdCols, skCol, runTs, sentinel,
+      keying, fullSnapshot = false)
 
   /** Full-snapshot SCD2 merge: `incoming` is the COMPLETE current key
     * universe, so a currently-valid key ABSENT from it is a logical delete —
     * its current version is expired at runTs with no successor. Everything
     * else behaves exactly like [[merge]]. (The incremental merge cannot
     * detect deletes: a changes-only feed can't distinguish "unchanged"
-    * from "gone".) The missing-key set is small relative to the dimension,
-    * so AQE broadcasts the marker join.
+    * from "gone".)
     */
-  def mergeFullSnapshot(
-      existing: DataFrame,
-      incoming: DataFrame,
-      naturalKey: String,
-      scdCols: Seq[String],
-      skCol: String,
-      runTs: String,
+  def mergeFullSnapshot(existing: DataFrame, incoming: DataFrame, naturalKey: String,
+      scdCols: Seq[String], skCol: String, runTs: String,
       sentinel: String = "2099-12-31 00:00:00",
       keying: (DataFrame, String, String, Long) => DataFrame =
-        Keys.surrogateKeysScalable(_, _, _, _)): DataFrame = {
-    val merged = merge(existing, incoming, naturalKey, scdCols, skCol, runTs,
-      sentinel, keying)
-    val missing = existing.filter(col("is_valid")).select(col(naturalKey))
-      .join(incoming.select(col(naturalKey)).distinct(), Seq(naturalKey), "left_anti")
-      .distinct()
-      .withColumn("__gone", lit(true))
-    merged.join(missing, Seq(naturalKey), "left")
-      // end_dt first (guarded by the still-unmodified is_valid), then the
-      // validity flip — history rows of a gone key keep their end_dt.
-      .withColumn("end_dt",
-        when(col("__gone").isNotNull && col("is_valid"),
-          lit(runTs).cast(TimestampType)).otherwise(col("end_dt")))
-      .withColumn("is_valid",
-        when(col("__gone").isNotNull, lit(false)).otherwise(col("is_valid")))
-      .drop("__gone")
-      .select(existing.columns.map(col).toSeq: _*)
+        Keys.surrogateKeysScalable(_, _, _, _)): DataFrame =
+    classify(existing, incoming, naturalKey, scdCols, skCol, runTs, sentinel,
+      keying, fullSnapshot = true)
+
+  /** The one pass behind both merges: current and incoming rows, each
+    * hashed on its own side (the union widens column types, as the output
+    * union does), unioned under one window on the natural key. A current
+    * row expires when an incoming row of its key differs from it (full
+    * snapshot: or none exists); an incoming row is a fresh version when its
+    * key has no current row or it differs. Null keys never match.
+    */
+  private def classify(existing: DataFrame, incoming: DataFrame, naturalKey: String,
+      scdCols: Seq[String], skCol: String, runTs: String, sentinel: String,
+      keying: (DataFrame, String, String, Long) => DataFrame, fullSnapshot: Boolean) = {
+    // Driver-side watermark, exactly the reference's agg(max).collect()
+    // round-trip (final_dim_load.py:103-104). One scalar — not a collect loop.
+    val maxRow = existing.agg(max(col(skCol)).cast("long")).head
+    val maxSk = if (maxRow.isNullAt(0)) 0L else maxRow.getLong(0)
+
+    // Columns pass through unaliased: an alias of an SCD column next to the
+    // hash over it doubles the optimizer's constraint set per column.
+    def tagged(df: DataFrame, current: Boolean) =
+      df.withColumn("__curr", lit(current)).withColumn("__hash", rowHash(scdCols))
+    val (isCurr, hash, keyed) = (col("__curr"), col("__hash"), col(naturalKey).isNotNull)
+    val byKey = Window.partitionBy(naturalKey)
+    val rows = tagged(existing.filter(col("is_valid")), current = true)
+      .unionByName(tagged(incoming, current = false), allowMissingColumns = true)
+      .select(col("*"), max(when(isCurr, hash)).over(byKey).as("__curr_hash"),
+        min(when(!isCurr, hash)).over(byKey).as("__lo"),
+        max(when(!isCurr, hash)).over(byKey).as("__hi"))
+    val differs = !(col("__lo") <=> hash && col("__hi") <=> hash)
+    val expire = keyed && (if (fullSnapshot) differs else col("__lo").isNotNull && differs)
+    val current = rows.filter(isCurr)
+      .withColumn("end_dt", when(expire, lit(runTs).cast(TimestampType)).otherwise(col("end_dt")))
+      .withColumn("is_valid", !expire)
+
+    // One deterministic keying pass over (new versions ∪ brand-new keys),
+    // ordered by the natural key, continuing from the watermark. The
+    // reference chains two windows with a count() round-trip in between
+    // (final_dim_load.py:153+160); a single ordered window over the union is
+    // the same dense, collision-free id space without the extra job.
+    val changedOrNew = rows.filter(!isCurr && !(keyed && col("__curr_hash") <=> hash))
+    val fresh = keying(changedOrNew.select(incoming.columns.map(col).toSeq: _*),
+        naturalKey, skCol, maxSk)
+      .withColumn("start_dt", lit(runTs).cast(TimestampType))
+      .withColumn("end_dt", lit(sentinel).cast(TimestampType))
+      .withColumn("is_valid", lit(true))
+
+    val cols = existing.columns.map(col).toSeq
+    existing.filter(!col("is_valid")).select(cols: _*)
+      .unionByName(current.select(cols: _*))
+      .unionByName(fresh.select(cols: _*))
   }
 }

@@ -1,6 +1,13 @@
 package graft.engine
 
+import scala.util.{Try, Using}
+
+import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.parquet.hadoop.{Footer, ParquetFileReader}
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat,
+  ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.types.StructType
 
 /** Source readers (SURVEY.md section 2.1, S1-S2).
@@ -57,8 +64,36 @@ object Sources {
       .schema(schema.add(CorruptCol, org.apache.spark.sql.types.StringType))
       .csv(path)
 
+  /** Parquet read with no schema-inference job: Spark (without mergeSchema)
+    * takes the schema of the first data file by path but reads its footer in
+    * a job; here the driver reads it, by Spark's rule (stored row schema, else
+    * type conversion). Partition columns still come from the paths. Anything
+    * else (no data file, summary files, an error) falls back to plain
+    * `spark.read.parquet`, so errors stay Spark's own. Directories of mixed
+    * schemas need [[parquetMergedSchema]]. */
   def parquet(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(path)
+    Try(footerSchema(spark, path)).fold(_ => spark.read.parquet(path),
+      spark.read.schema(_).parquet(path))
+
+  private def footerSchema(spark: SparkSession, path: String): StructType = {
+    val conf = spark.sessionState.newHadoopConf()
+    val fs = new Path(path).getFileSystem(conf)
+    // Depth-first in full-path order over what Spark lists as data (no
+    // `_`/`.` names but partition directories, no in-flight copies).
+    def first(s: FileStatus): Option[FileStatus] = if (!s.isDirectory) Some(s) else {
+      val kids = fs.listStatus(s.getPath).map(k => k.getPath.getName -> k)
+      require(!kids.exists(k => k._1 == "_metadata" || k._1 == "_common_metadata"))
+      kids.filterNot { case (n, _) => (n.startsWith("_") && !n.contains("=")) ||
+          n.startsWith(".") || n.endsWith("._COPYING_") }
+        .sortBy { case (n, k) => if (k.isDirectory) n + "/" else n }
+        .iterator.flatMap(k => first(k._2)).nextOption()
+    }
+    val file = first(fs.getFileStatus(new Path(path))).get
+    val footer = Using.resource(
+      ParquetFileReader.open(HadoopInputFile.fromStatus(file, conf)))(_.getFooter)
+    ParquetFileFormat.readSchemaFromFooter(new Footer(file.getPath, footer),
+      new ParquetToSparkSchemaConverter(spark.sessionState.conf))
+  }
 
   /** JSON-lines read with a declared schema. Schema-first for the same
     * reasons as [[csvWithSchema]] — inference costs a full extra pass over

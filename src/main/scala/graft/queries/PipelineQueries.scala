@@ -1,5 +1,6 @@
 package graft.queries
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.engine._
@@ -16,6 +17,33 @@ object PipelineQueries {
   private val TsRun = "2021-07-01 00:00:00"
   private val Sentinel = "2099-12-31 00:00:00"
 
+  /** The q17/q166 prior state of the customer dimension over `base`.
+    * Materialized once: Scd2.merge reads it in three subtrees (watermark,
+    * its classify pass — run twice, once inside the RDD-backed keying —
+    * and history), so without the barrier both zipWithIndex chains below
+    * re-run per reference. Dimension-sized, so bounded at any scale.
+    */
+  private def seededCustomerDim(base: DataFrame): DataFrame = {
+    val cur = Keys.surrogateKeysScalable(
+        base.filter(col("c_custkey") % 4 =!= 1), "c_custkey", "customer_sk")
+      .withColumn("bal",
+        when(col("c_custkey") % 5 === 0, col("bal") + 100).otherwise(col("bal")))
+      .withColumn("start_dt", lit(Ts0).cast("timestamp"))
+      .withColumn("end_dt", lit(Sentinel).cast("timestamp"))
+      .withColumn("is_valid", lit(true))
+    val hist = Keys.surrogateKeysScalable(
+        base.filter(col("c_custkey") % 4 =!= 1 && col("c_custkey") % 7 === 3),
+        "c_custkey", "customer_sk", offset = 100000L)
+      .withColumn("bal", col("bal") - 50)
+      .withColumn("start_dt", lit(TsHist).cast("timestamp"))
+      .withColumn("end_dt", lit(Ts0).cast("timestamp"))
+      .withColumn("is_valid", lit(false))
+    cur.unionByName(hist).select(
+      "customer_sk", "c_custkey", "c_name", "c_mktsegment", "bal",
+      "start_dt", "end_dt", "is_valid")
+      .localCheckpoint()
+  }
+
   val qs: Seq[Q] = Seq(
 
     // M5 SCD2 merge end-to-end. The "existing" dimension is derived from
@@ -31,30 +59,8 @@ object PipelineQueries {
         val base = Tables.customer(s, dir).select(
           col("c_custkey"), col("c_name"), col("c_mktsegment"),
           col("c_acctbal").cast("decimal(12,2)").as("bal"))
-        val cur = Keys.surrogateKeysScalable(
-            base.filter(col("c_custkey") % 4 =!= 1), "c_custkey", "customer_sk")
-          .withColumn("bal",
-            when(col("c_custkey") % 5 === 0, col("bal") + 100).otherwise(col("bal")))
-          .withColumn("start_dt", lit(Ts0).cast("timestamp"))
-          .withColumn("end_dt", lit(Sentinel).cast("timestamp"))
-          .withColumn("is_valid", lit(true))
-        val hist = Keys.surrogateKeysScalable(
-            base.filter(col("c_custkey") % 4 =!= 1 && col("c_custkey") % 7 === 3),
-            "c_custkey", "customer_sk", offset = 100000L)
-          .withColumn("bal", col("bal") - 50)
-          .withColumn("start_dt", lit(TsHist).cast("timestamp"))
-          .withColumn("end_dt", lit(Ts0).cast("timestamp"))
-          .withColumn("is_valid", lit(false))
-        // Materialized once: Scd2.merge references `existing` from five
-        // subtrees and the RDD-backed keying pipelines get no exchange
-        // reuse — without the barrier both zipWithIndex chains re-run per
-        // reference. Dimension-sized, so bounded at any corpus scale.
-        val existing = cur.unionByName(hist).select(
-          "customer_sk", "c_custkey", "c_name", "c_mktsegment", "bal",
-          "start_dt", "end_dt", "is_valid")
-          .localCheckpoint()
         Scd2.withAuditTs(
-            Scd2.merge(existing, base,
+            Scd2.merge(seededCustomerDim(base), base,
               naturalKey = "c_custkey",
               scdCols = Seq("c_name", "c_mktsegment", "bal"),
               skCol = "customer_sk", runTs = TsRun, sentinel = Sentinel),
@@ -881,7 +887,8 @@ object PipelineQueries {
           .select("customer_sk", "c_custkey", "c_name", "bal",
             "start_dt", "end_dt", "is_valid")
           // Materialized once: mergeFullSnapshot references `existing` from
-          // six subtrees and the RDD-backed keying gets no exchange reuse.
+          // three subtrees (watermark, its one classify pass, history) and
+          // the RDD-backed keying gets no exchange reuse.
           .localCheckpoint()
         val snapshot = base.filter(col("c_custkey") % 10 =!= 3)
         Scd2.mergeFullSnapshot(existing, snapshot,
@@ -3005,36 +3012,12 @@ object PipelineQueries {
           Map("o_orderkey" -> LongType, "o_custkey" -> LongType,
             "o_orderdate" -> TimestampType))
         // Gold dims: SCD2 merge over the q17 seeded prior state, built from
-        // the SILVER frame so the whole dim derives from the CSV leg.
-        // base/existing are materialized once (localCheckpoint): Scd2.merge
-        // references `existing` from five subtrees (watermark agg, curr,
-        // history, expired, keptCurrent) and `base` from two, and the
-        // RDD-backed zipWithIndex keying below gets no exchange reuse —
-        // without the barrier the CSV parse + both keying pipelines re-run
-        // per reference. Dimension-sized frames, so the checkpoint is
-        // bounded at any corpus scale.
+        // the SILVER frame so the whole dim derives from the CSV leg; `base`
+        // is materialized once so the CSV parse does not re-run per use.
         val base = custSilver.select(col("c_custkey"), col("c_name"),
           col("c_mktsegment"), col("c_acctbal").cast("decimal(12,2)").as("bal"))
           .localCheckpoint()
-        val cur = Keys.surrogateKeysScalable(
-            base.filter(col("c_custkey") % 4 =!= 1), "c_custkey", "customer_sk")
-          .withColumn("bal",
-            when(col("c_custkey") % 5 === 0, col("bal") + 100).otherwise(col("bal")))
-          .withColumn("start_dt", lit(Ts0).cast("timestamp"))
-          .withColumn("end_dt", lit(Sentinel).cast("timestamp"))
-          .withColumn("is_valid", lit(true))
-        val hist = Keys.surrogateKeysScalable(
-            base.filter(col("c_custkey") % 4 =!= 1 && col("c_custkey") % 7 === 3),
-            "c_custkey", "customer_sk", offset = 100000L)
-          .withColumn("bal", col("bal") - 50)
-          .withColumn("start_dt", lit(TsHist).cast("timestamp"))
-          .withColumn("end_dt", lit(Ts0).cast("timestamp"))
-          .withColumn("is_valid", lit(false))
-        val existing = cur.unionByName(hist).select(
-          "customer_sk", "c_custkey", "c_name", "c_mktsegment", "bal",
-          "start_dt", "end_dt", "is_valid")
-          .localCheckpoint()
-        val dim = Scd2.merge(existing, base,
+        val dim = Scd2.merge(seededCustomerDim(base), base,
           naturalKey = "c_custkey", scdCols = Seq("c_name", "c_mktsegment", "bal"),
           skCol = "customer_sk", runTs = TsRun, sentinel = Sentinel)
         val dimCur = dim.filter(col("is_valid"))

@@ -1,0 +1,134 @@
+package graft.engine
+
+import java.nio.file.Files
+import java.util.concurrent.{CountDownLatch, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions._
+import graft.SparkSpec
+
+/** Job budgets for the paper pipeline's hot operators: Spark job launches,
+  * not compute, dominate a nightly load at this size, so the counts are
+  * pinned here and a change that restores an extra job fails loudly.
+  */
+class JobBudgetSpec extends SparkSpec {
+  import spark.implicits._
+
+  /** Spark jobs started while `body` runs. Listener events arrive
+    * asynchronously but in order, so a marker job run after `body` closes
+    * the window: every job seen before the marker's start is counted.
+    */
+  private def jobsIn(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val marker = s"job-budget-marker-${System.nanoTime()}"
+    val count = new AtomicInteger
+    val closed = new CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == marker))
+          closed.countDown()
+        else if (closed.getCount > 0) count.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    try {
+      body
+      sc.setJobGroup(marker, "job budget marker")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      assert(closed.await(60, TimeUnit.SECONDS), "marker job never reached the listener")
+      count.get
+    } finally sc.removeSparkListener(listener)
+  }
+
+  private def tmp(name: String) = Files.createTempDirectory(name).resolve("t").toString
+
+  private def sample = Seq(
+      (1L, "a", BigDecimal("1.25"), java.sql.Timestamp.valueOf("2021-01-01 00:00:00")),
+      (2L, null, BigDecimal("2.50"), null))
+    .toDF("id", "s", "d", "ts")
+    .withColumn("d", col("d").cast("decimal(12,2)"))
+    .withColumn("arr", array(col("id"), col("id") + 1))
+    .withColumn("st", struct(col("id").as("x"), col("s").as("y")))
+
+  test("Sources.parquet builds an unpartitioned read with no job and Spark's schema") {
+    val path = tmp("budget_flat")
+    sample.repartition(3).write.parquet(path)
+    var df: DataFrame = null
+    assert(jobsIn { df = Sources.parquet(spark, path) } == 0)
+    // The counter sees schema inference when it happens.
+    var plain: DataFrame = null
+    assert(jobsIn { plain = spark.read.parquet(path) } >= 1)
+    assert(df.schema == plain.schema)
+    assert(df.collect().toSet == plain.collect().toSet)
+  }
+
+  test("Sources.parquet infers Hive partition columns from the paths, with no job") {
+    val path = tmp("budget_parted")
+    sample.withColumn("bucket", col("id") % 2).write.partitionBy("bucket").parquet(path)
+    var df: DataFrame = null
+    assert(jobsIn { df = Sources.parquet(spark, path) } == 0)
+    val plain = spark.read.parquet(path)
+    assert(df.schema == plain.schema)
+    assert(df.schema.fieldNames.last == "bucket")
+    assert(df.collect().toSet == plain.collect().toSet)
+  }
+
+  test("Sources.parquet on a missing path throws Spark's own error") {
+    val path = tmp("budget_missing")
+    val ours = intercept[Exception](Sources.parquet(spark, path))
+    val spark0 = intercept[Exception](spark.read.parquet(path))
+    assert(ours.getClass == spark0.getClass)
+    assert(ours.getMessage == spark0.getMessage)
+  }
+
+  // Small dimension: 40 keys bootstrapped with one history row each for
+  // every fifth key, then a day with 10 changed, 5 new and (full snapshot)
+  // 5 deleted keys.
+  private def mergeJobs(full: Boolean): Int = {
+    val path = tmp(s"budget_dim_$full")
+    val base = (1L to 40L).map(k => (k, s"n$k", s"t${k % 3}")).toDF("id", "name", "tier")
+    val current = Scd2.bootstrap(base, "id", "sk", "2021-01-01 00:00:00")
+    val history = current.filter(col("id") % 5 === 0)
+      .withColumn("sk", col("sk") + 100)
+      .withColumn("start_dt", lit("2020-01-01 00:00:00").cast("timestamp"))
+      .withColumn("end_dt", lit("2021-01-01 00:00:00").cast("timestamp"))
+      .withColumn("is_valid", lit(false))
+    current.unionByName(history).write.parquet(path)
+    val incoming = (6L to 45L).map(k => (k, s"n$k", if (k <= 15) "changed" else s"t${k % 3}"))
+      .toDF("id", "name", "tier")
+    jobsIn {
+      val existing = Sources.parquet(spark, path)
+      val merge = if (full) Scd2.mergeFullSnapshot _ else Scd2.merge _
+      merge(existing, incoming, "id", Seq("name", "tier"), "sk", "2022-01-01 00:00:00",
+        "2099-12-31 00:00:00", Keys.surrogateKeysScalable(_, _, _, _))
+        .write.parquet(tmp(s"budget_out_$full"))
+    }
+  }
+
+  // Measured: 6 jobs in either mode — the watermark aggregate's two, the
+  // classify shuffle once inside the keying's plan and once in the write's,
+  // and the write's own two.
+  // Catalyst's constraint propagation doubles its constraint set for every
+  // column aliased next to an alias of an expression over that column (the
+  // row hash over the SCD columns), so a merge that renames or packs its
+  // SCD columns takes exponential planning time in their number.
+  test("planning an SCD2 merge over 20 SCD columns stays fast") {
+    val scd = (0 until 20).map(i => s"c$i")
+    val rows = spark.range(50).select(col("id") +: scd.map(c => (col("id") % 7).as(c)): _*)
+    val existing = Scd2.bootstrap(rows, "id", "sk", "2021-01-01 00:00:00")
+    val incoming = rows.withColumn("c0", col("c0") + 1)
+    Seq(Scd2.merge _, Scd2.mergeFullSnapshot _).foreach { merge =>
+      val out = merge(existing, incoming, "id", scd, "sk", "2022-01-01 00:00:00",
+        "2099-12-31 00:00:00", Keys.surrogateKeysScalable(_, _, _, _))
+      val t0 = System.nanoTime()
+      out.queryExecution.optimizedPlan
+      assert((System.nanoTime() - t0) / 1e9 < 10.0)
+    }
+  }
+
+  test("writing an SCD2 merge of a small dimension stays within its job budget") {
+    assert(mergeJobs(full = false) <= 6)
+    assert(mergeJobs(full = true) <= 6)
+  }
+}

@@ -1,6 +1,8 @@
 package graft.engine
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.DecimalType
 import graft.SparkSpec
 
 /** SCD2 merge invariants (SURVEY.md section 5.3): exactly one valid row per
@@ -101,5 +103,127 @@ class Scd2Spec extends SparkSpec {
       runTs = run2, sentinel = sentinel)
     // alice -> null name counts as a change: expired + new version.
     assert(out.filter(col("id") === 10L).count() == 2)
+  }
+
+  // ---- Exact output pins for both merge modes ------------------------------
+
+  private val run0 = "2020-03-01 00:00:00"
+
+  /** A dimension with explicit surrogate keys: (sk, id, name, tier, start,
+    * end, is_valid); `None` ids are null natural keys.
+    */
+  private def dim(rows: (Long, Option[Long], String, String, String, String, Boolean)*) =
+    rows.map { case (sk, id, n, t, st, en, v) => (sk, id.map(Long.box).orNull, n, t, st, en, v) }
+      .toDF("sk", "id", "name", "tier", "start_dt", "end_dt", "is_valid")
+      .withColumn("id", col("id").cast("long"))
+      .withColumn("start_dt", col("start_dt").cast("timestamp"))
+      .withColumn("end_dt", col("end_dt").cast("timestamp"))
+
+  private def feed(rows: (Option[Long], String, String)*) =
+    rows.map { case (id, n, t) => (id.map(Long.box).orNull, n, t) }
+      .toDF("id", "name", "tier").withColumn("id", col("id").cast("long"))
+
+  /** Current rows plus one history row (a prior version of bob). */
+  private def withHistory = dim(
+    (1L, Some(10L), "alice", "gold", run1, sentinel, true),
+    (2L, Some(20L), "bob", "silver", run1, sentinel, true),
+    (3L, Some(30L), "carol", "gold", run1, sentinel, true),
+    (4L, Some(20L), "bob", "bronze", run0, run1, false))
+
+  /** Rows as `|`-joined strings, cast in SQL (session time zone). */
+  private def render(df: DataFrame): Set[String] =
+    df.select(df.columns.map(c => col(c).cast("string")): _*).collect()
+      .map(_.toSeq.map(String.valueOf).mkString("|")).toSet
+
+  private def both(existing: DataFrame, incoming: DataFrame)(
+      check: (Boolean, DataFrame) => Unit): Unit =
+    Seq(false, true).foreach { full =>
+      val merge = if (full) Scd2.mergeFullSnapshot _ else Scd2.merge _
+      val out = merge(existing, incoming, "id", Seq("name", "tier"), "sk", run2,
+        sentinel, Keys.surrogateKeysScalable(_, _, _, _))
+      assert(out.columns.toSeq == existing.columns.toSeq)
+      check(full, out)
+    }
+
+  test("one key with a changed and an unchanged incoming row: one fresh version, one expiry") {
+    val incoming = feed((Some(20L), "bob", "silver"), (Some(20L), "bob", "gold"),
+      (Some(10L), "alice", "gold"))
+    both(withHistory, incoming) { (full, out) =>
+      val carol =
+        if (full) s"3|30|carol|gold|$run1|$run2|false" else s"3|30|carol|gold|$run1|$sentinel|true"
+      assert(render(out) == Set(
+        s"1|10|alice|gold|$run1|$sentinel|true",
+        s"2|20|bob|silver|$run1|$run2|false",
+        carol,
+        s"4|20|bob|bronze|$run0|$run1|false",
+        s"5|20|bob|gold|$run2|$sentinel|true"), s"full=$full")
+    }
+  }
+
+  test("null natural keys never match: incoming ones are fresh, current ones kept") {
+    val existing = dim(
+      (1L, Some(10L), "alice", "gold", run1, sentinel, true),
+      (2L, None, "nobody", "x", run1, sentinel, true))
+    val incoming = feed((None, "nobody", "x"), (None, "ghost", "y"),
+      (Some(10L), "alice", "gold"))
+    both(existing, incoming) { (full, out) =>
+      assert(render(out) == Set(
+        s"1|10|alice|gold|$run1|$sentinel|true",
+        s"2|null|nobody|x|$run1|$sentinel|true",
+        s"3|null|nobody|x|$run2|$sentinel|true",
+        s"4|null|ghost|y|$run2|$sentinel|true"), s"full=$full")
+    }
+  }
+
+  test("SCD columns hash per side: a decimal scale change is a change") {
+    // existing holds amt at scale 2, incoming at scale 3 with equal values:
+    // the string forms differ ("1.50" vs "1.500"), so every key changes.
+    val existing = dim(
+      (1L, Some(10L), "alice", "gold", run1, sentinel, true),
+      (2L, Some(20L), "bob", "gold", run1, sentinel, true))
+      .withColumn("amt", (col("sk") + 0.5).cast(DecimalType(10, 2)))
+    val incoming = feed((Some(10L), "alice", "gold"), (Some(20L), "bob", "gold"))
+      .withColumn("amt", (col("id") / 10 + 0.5).cast(DecimalType(10, 3)))
+    Seq(false, true).foreach { full =>
+      val merge = if (full) Scd2.mergeFullSnapshot _ else Scd2.merge _
+      val out = merge(existing, incoming, "id", Seq("name", "tier", "amt"), "sk", run2,
+        sentinel, Keys.surrogateKeysScalable(_, _, _, _))
+      assert(out.schema("amt").dataType == DecimalType(11, 3))
+      assert(render(out.select("sk", "id", "amt", "end_dt", "is_valid")) == Set(
+        s"1|10|1.500|$run2|false", s"2|20|2.500|$run2|false",
+        s"3|10|1.500|$sentinel|true", s"4|20|2.500|$sentinel|true"), s"full=$full")
+    }
+  }
+
+  test("empty incoming: merge is a no-op, full snapshot expires every current row") {
+    both(withHistory, feed()) { (full, out) =>
+      val end = if (full) s"$run2|false" else s"$sentinel|true"
+      assert(render(out) == Set(
+        s"1|10|alice|gold|$run1|$end",
+        s"2|20|bob|silver|$run1|$end",
+        s"3|30|carol|gold|$run1|$end",
+        s"4|20|bob|bronze|$run0|$run1|false"), s"full=$full")
+    }
+  }
+
+  test("empty history: current rows only, and an empty dimension keys from 1") {
+    val incoming = feed((Some(10L), "alice", "gold"), (Some(20L), "bob", "gold"),
+      (Some(40L), "dave", "bronze"))
+    both(withHistory.filter(col("is_valid")), incoming) { (full, out) =>
+      val carol =
+        if (full) s"3|30|carol|gold|$run1|$run2|false" else s"3|30|carol|gold|$run1|$sentinel|true"
+      assert(render(out) == Set(
+        s"1|10|alice|gold|$run1|$sentinel|true",
+        s"2|20|bob|silver|$run1|$run2|false",
+        carol,
+        s"4|20|bob|gold|$run2|$sentinel|true",
+        s"5|40|dave|bronze|$run2|$sentinel|true"), s"full=$full")
+    }
+    both(withHistory.filter(lit(false)), incoming) { (full, out) =>
+      assert(render(out) == Set(
+        s"1|10|alice|gold|$run2|$sentinel|true",
+        s"2|20|bob|gold|$run2|$sentinel|true",
+        s"3|40|dave|bronze|$run2|$sentinel|true"), s"full=$full")
+    }
   }
 }
