@@ -1,5 +1,7 @@
 package graft.engine
 
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.{Column, DataFrame}
 
 /** Scale-adaptive partition sizing for the explicit "spread" exchanges
@@ -68,7 +70,7 @@ object Partitions {
   private def count(df: DataFrame, t: Long): Int = {
     val cap = df.sparkSession.sessionState.conf.numShufflePartitions
     val bytes = try df.queryExecution.optimizedPlan.stats.sizeInBytes
-      catch { case _: Throwable => BigInt(Long.MaxValue) }
+      catch { case NonFatal(_) => BigInt(Long.MaxValue) }
     val n0 = (bytes + t - 1) / t
     val n = if (n0 >= cap) cap else math.max(1, n0.toInt)
     if (sys.env.contains("SPARK_GRAFT_SPREAD_DEBUG"))
@@ -89,10 +91,11 @@ object Partitions {
     * and the zip/offset machinery pays 1-2 extra driver-synchronous jobs
     * whenever n > 1 (range-boundary sampling + a per-partition count/offset
     * collect), so the target is large — one task comfortably sorts tens of
-    * MB. At n == 1 those jobs vanish entirely (RangePartitioner does not
-    * sample for a single partition; zipWithIndex needs no count pass), and
-    * at production scale bytes/32MB exceeds any session parallelism, so
-    * the count clamps back to the constant the session always used.
+    * MB. At n == 1 the operators leave the RDD API altogether: one sorted
+    * pass over a `coalesce(1)` in the caller's plan (no exchange), which
+    * launches no job of its own and lets the caller's action run the whole
+    * plan. At production scale bytes/32MB exceeds any session parallelism,
+    * so the count clamps back to the constant the session always used.
     */
   private def sortTargetBytes: Long =
     envKb("SPARK_GRAFT_SORT_TARGET_KB", 32L * 1024L)

@@ -5,7 +5,7 @@ import scala.util.{Failure, Try}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.TimestampType
+import org.apache.spark.sql.types.{LongType, TimestampType}
 
 /** Slowly-changing-dimension Type-2 merge (SURVEY.md section 7 M5; reference
   * behavior: final_dim_load.py:94-180 for dim_host, :329-451 for dim_listing).
@@ -26,10 +26,13 @@ import org.apache.spark.sql.types.TimestampType
   *
   * Scale notes (100 TB design point): the merge is one key-partitioned pass
   * (current ∪ incoming rows under one window on the natural key: a single
-  * shuffle classifies every row) plus the driver watermark and the keying.
-  * Key assignment is pluggable: pass `Keys.surrogateKeys` for the reference's
-  * single-task window or `Keys.surrogateKeysScalable` (default) for the
-  * range-partitioned two-phase form with identical output.
+  * shuffle classifies every row) plus the driver watermark (one job over the
+  * existing keys, no exchange) and the keying. Key assignment is pluggable:
+  * pass `Keys.surrogateKeys` for the reference's single-task window or
+  * `Keys.surrogateKeysScalable` (default), whose output is identical: for a
+  * dimension small enough for one range-sort partition it is one sorted
+  * pass in the write's own plan (no job of its own), above that the
+  * range-partitioned two-phase form.
   */
 object Scd2 {
 
@@ -126,10 +129,12 @@ object Scd2 {
   private def classify(existing: DataFrame, incoming: DataFrame, naturalKey: String,
       scdCols: Seq[String], skCol: String, runTs: String, sentinel: String,
       keying: (DataFrame, String, String, Long) => DataFrame, fullSnapshot: Boolean) = {
-    // Driver-side watermark, exactly the reference's agg(max).collect()
-    // round-trip (final_dim_load.py:103-104). One scalar — not a collect loop.
-    val maxRow = existing.agg(max(col(skCol)).cast("long")).head
-    val maxSk = if (maxRow.isNullAt(0)) 0L else maxRow.getLong(0)
+    // Driver-side watermark, the reference's agg(max).collect() round-trip
+    // (final_dim_load.py:103-104) as one job with no exchange: each
+    // partition's max, combined here. No key (empty or all null) is 0.
+    val maxSk = existing.select(col(skCol).cast(LongType)).rdd
+      .mapPartitions(it => it.filterNot(_.isNullAt(0)).map(_.getLong(0)).maxOption.iterator)
+      .collect().maxOption.getOrElse(0L)
 
     // Columns pass through unaliased: an alias of an SCD column next to the
     // hash over it doubles the optimizer's constraint set per column.

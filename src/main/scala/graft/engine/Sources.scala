@@ -2,21 +2,26 @@ package graft.engine
 
 import scala.util.{Try, Using}
 
+import com.univocity.parsers.csv.CsvParser
+import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.parquet.hadoop.{Footer, ParquetFileReader}
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.csv.CSVOptions
+import org.apache.spark.sql.execution.datasources.CodecStreams
+import org.apache.spark.sql.execution.datasources.csv.CSVUtils
 import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat,
   ParquetToSparkSchemaConverter}
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
 /** Source readers (SURVEY.md section 2.1, S1-S2).
   *
   * The reference ingests CSV header-aware, multi-line, RFC-4180 quote-escaped
   * (csv_to_parquet.py:22-27) with every column landing as string, then asserts
-  * types via cast (Cleaning.castNormalize). `csv` reproduces that read; at
-  * scale prefer `csvWithSchema` — an explicit StructType skips the
-  * header-probe job AND lets the reader parse directly into typed columns
+  * types via cast (Cleaning.castNormalize). `csv` reproduces that read,
+  * reading the header on the driver; at scale prefer `csvWithSchema` — an
+  * explicit StructType lets the reader parse directly into typed columns
   * (one less projection; malformed rows surface at scan time).
   */
 object Sources {
@@ -28,13 +33,36 @@ object Sources {
     "escape" -> "\"")
 
   /** Reference-faithful read: all columns StringType (no inferSchema).
+    * Spark takes the header from the first record of the first non-empty
+    * file, read in a job; here the driver reads it, with Spark's own parser
+    * settings and header clean-up (empty names become `_cN`, duplicates get
+    * their index appended), from the first non-empty data file in full-path
+    * order — the files of one table share one header. Any error falls back
+    * to plain `spark.read`, so errors stay Spark's own.
     * SCALE CAVEAT: `multiLine=true` makes each CSV file non-splittable (a
     * record may span a newline, so Spark assigns one task per FILE). Fine for
     * many modest files; for few huge files use [[csvSplittable]] and
     * pre-clean embedded newlines upstream.
     */
   def csv(spark: SparkSession, path: String): DataFrame =
-    spark.read.options(csvOptions).csv(path)
+    Try(headerSchema(spark, path)).fold(_ => spark.read.options(csvOptions).csv(path),
+      spark.read.options(csvOptions).schema(_).csv(path))
+
+  private def headerSchema(spark: SparkSession, path: String): StructType = {
+    val conf = spark.sessionState.conf
+    val options = new CSVOptions(csvOptions, conf.csvColumnPruning,
+      conf.sessionLocalTimeZone, conf.columnNameOfCorruptRecord)
+    val hadoopConf = spark.sessionState.newHadoopConfWithOptions(csvOptions)
+    def firstRecord(file: FileStatus) = Using.resource(
+        CodecStreams.createInputStream(hadoopConf, file.getPath)) { in =>
+      val parser = new CsvParser(options.asParserSettings)
+      parser.beginParsing(in, options.charset)
+      try Option(parser.parseNext()) finally parser.stopParsing()
+    }
+    val header = dataFiles(hadoopConf, path).flatMap(firstRecord).next()
+    StructType(CSVUtils.makeSafeHeader(header, conf.caseSensitiveAnalysis, options)
+      .map(StructField(_, StringType)))
+  }
 
   /** Scale-preferred read: parse straight into the declared schema. */
   def csvWithSchema(spark: SparkSession, path: String, schema: StructType): DataFrame =
@@ -77,22 +105,28 @@ object Sources {
 
   private def footerSchema(spark: SparkSession, path: String): StructType = {
     val conf = spark.sessionState.newHadoopConf()
+    val file = dataFiles(conf, path).next()
+    val footer = Using.resource(
+      ParquetFileReader.open(HadoopInputFile.fromStatus(file, conf)))(_.getFooter)
+    ParquetFileFormat.readSchemaFromFooter(new Footer(file.getPath, footer),
+      new ParquetToSparkSchemaConverter(spark.sessionState.conf))
+  }
+
+  /** The data files under `path`, lazily, depth-first in full-path order,
+    * over what Spark lists as data (no `_`/`.` names but partition
+    * directories, no in-flight copies). Summary files throw: their reader
+    * rules are Spark's to apply. */
+  private def dataFiles(conf: Configuration, path: String): Iterator[FileStatus] = {
     val fs = new Path(path).getFileSystem(conf)
-    // Depth-first in full-path order over what Spark lists as data (no
-    // `_`/`.` names but partition directories, no in-flight copies).
-    def first(s: FileStatus): Option[FileStatus] = if (!s.isDirectory) Some(s) else {
+    def walk(s: FileStatus): Iterator[FileStatus] = if (!s.isDirectory) Iterator(s) else {
       val kids = fs.listStatus(s.getPath).map(k => k.getPath.getName -> k)
       require(!kids.exists(k => k._1 == "_metadata" || k._1 == "_common_metadata"))
       kids.filterNot { case (n, _) => (n.startsWith("_") && !n.contains("=")) ||
           n.startsWith(".") || n.endsWith("._COPYING_") }
         .sortBy { case (n, k) => if (k.isDirectory) n + "/" else n }
-        .iterator.flatMap(k => first(k._2)).nextOption()
+        .iterator.flatMap(k => walk(k._2))
     }
-    val file = first(fs.getFileStatus(new Path(path))).get
-    val footer = Using.resource(
-      ParquetFileReader.open(HadoopInputFile.fromStatus(file, conf)))(_.getFooter)
-    ParquetFileFormat.readSchemaFromFooter(new Footer(file.getPath, footer),
-      new ParquetToSparkSchemaConverter(spark.sessionState.conf))
+    walk(fs.getFileStatus(new Path(path)))
   }
 
   /** JSON-lines read with a declared schema. Schema-first for the same

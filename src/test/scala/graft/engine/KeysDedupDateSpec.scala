@@ -11,10 +11,13 @@ class KeysDedupDateSpec extends SparkSpec {
     val df = spark.range(0, 997).select((col("id") * 7919 % 10007).as("k")).repartition(8)
     val faithful = Keys.surrogateKeys(df, "k", "sk", offset = 42L)
       .orderBy("k").collect().map(r => (r.getLong(0), r.getLong(1)))
-    val scalable = Keys.surrogateKeysScalable(df, "k", "sk", offset = 42L, partitions = 5)
-      .orderBy("k").collect().map(r => (r.getLong(0), r.getLong(1)))
-    assert(faithful.toSeq == scalable.toSeq)
-    assert(scalable.map(_._2).toSeq == (43L until 43L + 997L))
+    // 5: the two-phase RDD scan; 1: the in-plan pass
+    for (n <- Seq(5, 1)) {
+      val scalable = Keys.surrogateKeysScalable(df, "k", "sk", offset = 42L, partitions = n)
+        .orderBy("k").collect().map(r => (r.getLong(0), r.getLong(1)))
+      assert(faithful.toSeq == scalable.toSeq)
+      assert(scalable.map(_._2).toSeq == (43L until 43L + 997L))
+    }
   }
 
   test("globalRunningSum equals the single-task running-sum window") {
@@ -26,9 +29,13 @@ class KeysDedupDateSpec extends SparkSpec {
         sum(col("v")).over(Window.orderBy("k")
           .rowsBetween(Window.unboundedPreceding, Window.currentRow)))
       .orderBy("k").collect().map(r => (r.getLong(0), r.getLong(2)))
-    val scalable = Keys.globalRunningSum(df, "k", "v", "cum", partitions = 5)
-      .orderBy("k").collect().map(r => (r.getLong(0), r.getLong(2)))
-    assert(naive.toSeq == scalable.toSeq)
+    // 5: the two-phase RDD scan; 1: the in-plan pass
+    val ns = Seq(5, 1)
+    for (n <- ns) {
+      val scalable = Keys.globalRunningSum(df, "k", "v", "cum", partitions = n)
+        .orderBy("k").collect().map(r => (r.getLong(0), r.getLong(2)))
+      assert(naive.toSeq == scalable.toSeq)
+    }
     // the exclusive prefix max rides the same two-phase scan; the global
     // first row has no prior row, so its max is null
     def maxes(out: org.apache.spark.sql.DataFrame): Seq[(Long, Option[Long])] =
@@ -37,10 +44,9 @@ class KeysDedupDateSpec extends SparkSpec {
     val naiveMax = maxes(df.withColumn("pmax",
       max(col("v")).over(Window.orderBy("k")
         .rowsBetween(Window.unboundedPreceding, -1))))
-    val scalableMax = maxes(
-      Keys.globalPrefixMaxBy(df, Seq(col("k")), "v", "pmax", partitions = 5))
     assert(naiveMax.head._2.isEmpty && naiveMax.tail.forall(_._2.nonEmpty))
-    assert(naiveMax == scalableMax)
+    for (n <- ns)
+      assert(naiveMax == maxes(Keys.globalPrefixMaxBy(df, Seq(col("k")), "v", "pmax", partitions = n)))
   }
 
   test("two-phase ntile formula matches the window ntile on a non-divisible n") {
