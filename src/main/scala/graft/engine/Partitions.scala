@@ -21,11 +21,10 @@ import org.apache.spark.sql.{Column, DataFrame}
   * than 32-core for exactly this reason (BENCH_r14_c8: q24 0.84x,
   * q36 0.80x, q533 0.84x of the 32-core time).
   *
-  * The count here scales with the INPUT: one partition per
-  * `SPARK_GRAFT_SPREAD_TARGET_KB` (default 64 KB) of optimizer-estimated
-  * input bytes, clamped to [1, session shuffle parallelism]. The estimate
-  * is plan-time metadata (file sizes for scans, scaled through projections
-  * and filters) — no job runs to decide. 64 KB of compressed corpus is
+  * The count here scales with the INPUT: one partition per 64 KB of
+  * optimizer-estimated input bytes, clamped to [1, session shuffle
+  * parallelism]. The estimate is plan-time metadata (file sizes for scans,
+  * scaled through projections and filters) — no job runs to decide. 64 KB of compressed corpus is
   * roughly 100-300 documents/vectors — a few hundred ms of signature or
   * dot-product CPU, well above the per-task overhead it buys. Behavior by
   * scale:
@@ -46,15 +45,11 @@ import org.apache.spark.sql.{Column, DataFrame}
   */
 object Partitions {
 
-  private def envKb(name: String, defaultKb: Long): Long =
-    sys.env.get(name).flatMap(v =>
-      scala.util.Try(v.toLong).toOption).getOrElse(defaultKb) * 1024L
-
   /** Per-partition byte target for CHEAP-PER-ROW spreads (keyed join/agg
     * frames: edge sets, label frames) — 64 KB holds thousands of long-pair
     * rows, far more than one task's overhead is worth.
     */
-  private def targetBytes: Long = envKb("SPARK_GRAFT_SPREAD_TARGET_KB", 64L)
+  private val targetBytes: Long = 64L * 1024L
 
   /** Per-partition byte target for CPU-HEAVY spreads (md5 per shingle,
     * per-pair dot products): per-byte cost is orders of magnitude above a
@@ -64,8 +59,7 @@ object Partitions {
     * cores), while a truly tiny corpus (sf0.01 correctness runs) stops
     * paying a 32-task launch per KB.
     */
-  private def cpuTargetBytes: Long =
-    envKb("SPARK_GRAFT_SPREAD_CPU_TARGET_KB", 4L)
+  private val cpuTargetBytes: Long = 4L * 1024L
 
   private def count(df: DataFrame, t: Long): Int = {
     val cap = df.sparkSession.sessionState.conf.numShufflePartitions
@@ -84,7 +78,7 @@ object Partitions {
   def spreadCount(df: DataFrame): Int = count(df, targetBytes)
 
   /** [[spreadCount]] at the CPU-heavy target. */
-  def cpuSpreadCount(df: DataFrame): Int = count(df, cpuTargetBytes)
+  private def cpuSpreadCount(df: DataFrame): Int = count(df, cpuTargetBytes)
 
   /** Per-partition byte target for RANGE-SORT spreads (Keys.rankByScalable
     * and the global prefix-sum/max passes): sort work is cheap per byte,
@@ -97,8 +91,7 @@ object Partitions {
     * plan. At production scale bytes/32MB exceeds any session parallelism,
     * so the count clamps back to the constant the session always used.
     */
-  private def sortTargetBytes: Long =
-    envKb("SPARK_GRAFT_SORT_TARGET_KB", 32L * 1024L)
+  private val sortTargetBytes: Long = 32L * 1024L * 1024L
 
   /** [[spreadCount]] at the range-sort target. */
   def sortSpreadCount(df: DataFrame): Int = count(df, sortTargetBytes)
@@ -117,14 +110,4 @@ object Partitions {
   def cpuSpread(df: DataFrame, cols: Column*): DataFrame =
     if (cols.isEmpty) df.repartition(cpuSpreadCount(df))
     else df.repartition(cpuSpreadCount(df), cols: _*)
-
-  /** Curried form for `.transform(Partitions.spreadBy(col("doc_id")))` —
-    * the drop-in replacement of the inline
-    * `.repartition(conf.numShufflePartitions, col(...))` idiom.
-    */
-  def spreadBy(cols: Column*)(df: DataFrame): DataFrame = spread(df, cols: _*)
-
-  /** Curried CPU-heavy form. */
-  def cpuSpreadBy(cols: Column*)(df: DataFrame): DataFrame =
-    cpuSpread(df, cols: _*)
 }

@@ -24,13 +24,15 @@ object Sinks {
   }
 
   /** C5 write-then-readback: truncates lineage and returns post-write state
-    * (final_dim_load.py:208-210). `clearCache` first mirrors the reference's
-    * stale-FileIndex workaround (final_dim_load.py:455).
+    * (final_dim_load.py:208-210). The reference clears every cache to dodge
+    * a stale FileIndex (final_dim_load.py:455); `refreshByPath` re-lists
+    * and re-caches only the frames that read `path`, so a caller's caches
+    * over other paths survive.
     */
   def writeAndReadBack(spark: SparkSession, df: DataFrame, path: String,
       maxRecordsPerFile: Long = 0L): DataFrame = {
     writeParquet(df, path, maxRecordsPerFile)
-    spark.catalog.clearCache()
+    spark.catalog.refreshByPath(path)
     spark.read.parquet(path)
   }
 
@@ -189,9 +191,9 @@ object Sinks {
     * non-splittable readers) dominates scans — periodic compaction is the
     * standard lake-maintenance op. Writes to a sibling temp directory first:
     * overwriting the path being lazily read would destroy the input mid-job;
-    * the swap is two filesystem renames, and `clearCache` drops any stale
-    * FileIndex for the old file set (same workaround the reference needs
-    * after overwrite, final_dim_load.py:455).
+    * the swap is two filesystem renames, and `refreshByPath` re-lists any
+    * cached frame over the old file set (the stale-FileIndex hazard the
+    * reference clears every cache for, final_dim_load.py:455).
     */
   def compactParquet(spark: SparkSession, path: String, targetFiles: Int): Unit = {
     require(targetFiles > 0, "targetFiles must be positive")
@@ -203,15 +205,13 @@ object Sinks {
     val dest = new Path(path)
     fs.delete(dest, true)
     require(fs.rename(tmp, dest), s"compaction swap failed for $path")
-    spark.catalog.clearCache()
+    spark.catalog.refreshByPath(path)
   }
 
-  /** Partition-scoped compaction (round 11 — the maintenance op the
-    * partition-scoped upsert creates a need for): every micro-batch upsert
-    * rewrites its touched partitions as fresh files, so HOT partitions
-    * fragment over time; [[compactParquet]] heals that by rewriting the
-    * WHOLE table, which at 100 TB is the same full-table IO the scoped
-    * upsert exists to avoid. This walks the partition directories (a
+  /** Partition-scoped compaction (round 11): repeated dynamic partition
+    * overwrites and capped writes fragment HOT partitions over time;
+    * [[compactParquet]] heals that by rewriting the WHOLE table, which at
+    * 100 TB is full-table IO for a few hot directories. This walks the partition directories (a
     * bounded listing — partition count, never row count), finds the leaves
     * holding more than `minFiles` parquet files, and rewrites ONLY those,
     * each with [[compactParquet]]'s read -> repartition -> temp-swap (the
@@ -276,7 +276,7 @@ object Sinks {
         import scala.concurrent.duration.Duration
         done.foreach(scala.concurrent.Await.result(_, Duration.Inf))
       } finally pool.shutdown()
-      spark.catalog.clearCache()
+      spark.catalog.refreshByPath(path)
     }
     fragmented.size
   }
@@ -310,11 +310,11 @@ object Sinks {
     * Concurrency contract: the per-call staging only isolates the STAGING
     * step. Two concurrent whole-table upserts of the same path still race
     * read-merge-swap (both merge from v0; the second swap silently drops
-    * the first's batch) — the whole-table form is single-writer by design;
-    * concurrent writers need the partitioned variant on disjoint
-    * partitions, or a transactional table format —
-    * [[TxLog.applyChanges]] is the log-coordinated MERGE here (round 14):
-    * optimistic concurrency for writers, snapshot isolation for readers.
+    * the first's batch) — the whole-table form is single-writer by design.
+    * Partitioned tables and concurrent writers merge through the commit
+    * log instead: [[TxLog.applyChanges]] / [[TxLog.upsertPartitioned]]
+    * touch only the named partitions, with optimistic concurrency for
+    * writers and snapshot isolation for readers.
     */
   def upsertParquet(batch: DataFrame, path: String, key: String): Unit = {
     val spark = batch.sparkSession
@@ -337,232 +337,14 @@ object Sinks {
     fs.delete(dest, true)
     require(fs.rename(tmp, dest),
       s"upsert swap failed for $path — merged data preserved at $tmp")
-    spark.catalog.clearCache()
+    spark.catalog.refreshByPath(path)
   }
 
-  /** Partition-scoped keyed upsert (VERDICT_r10 weak #1): rows of `batch`
-    * replace same-key rows of a PARTITIONED parquet target, touching ONLY
-    * the partitions the batch lands in. [[upsertParquet]] reads and
-    * rewrites the whole table per call — correct, but at 100 TB a
-    * full-table rewrite per streaming micro-batch is a scale-killer in
-    * exactly the operator whose point is incremental maintenance. Here the
-    * batch's partition values are collected once (bounded by the table's
-    * partition count — cells/dates — never by row count), the existing
-    * table is read under a partition-PRUNED filter (only the touched
-    * directories are listed and scanned), the merge is the same
-    * left_anti + unionByName shape as [[upsertParquet]] (reference anchor:
-    * the SCD2 anti-join/union, final_dim_load.py:125-150), and the result
-    * rides [[overwritePartitionsDynamic]] — untouched sibling partitions
-    * keep their files byte-for-byte (spec-pinned by file-list equality).
-    * The merged rows are staged to a temp directory first: the dynamic
-    * overwrite must never scan the very partitions it is replacing, and
-    * the staging's extra IO is bounded by the TOUCHED partitions (delta-
-    * sized), the price of never reading and replacing the same files
-    * inside one job.
-    * Requires key-unique `batch` rows whose partition-column values are
-    * final (a row MOVING partitions would leave its old copy behind — the
-    * IVF codes table assigns each vector id to exactly one frozen cell, and
-    * any key-repartitioning change is a rebuild, not an upsert).
-    */
-  def upsertParquetPartitioned(batch: DataFrame, path: String, key: String,
-      partitionCols: Seq[String]): Unit = {
-    require(partitionCols.nonEmpty, "upsertParquetPartitioned needs partition columns")
-    val spark = batch.sparkSession
-    import org.apache.spark.sql.functions.{col, lit}
-    import org.apache.hadoop.fs.Path
-    val dest = new Path(path)
-    val fs = dest.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(dest)) { writePartitioned(batch, path, partitionCols); return }
-    // the batch plan feeds three consumers (touched-value collect, the
-    // anti-join key side, the union arm) — persist it across the call so
-    // an expensive upstream (e.g. the streaming ingest's residual-encode
-    // pipeline) computes once per micro-batch, not three times
-    val b = batch.persist()
-    try {
-      val touched = b.select(partitionCols.map(col): _*).distinct().collect()
-      if (touched.isEmpty) return
-      // single-column, null-free touched sets take the compact
-      // isInCollection form (one set-membership node however many
-      // partitions the batch spans — at 100 TB a batch can touch thousands
-      // of cells, and an OR-of-equalities tree that size bloats planning);
-      // multi-column or null-bearing sets fall back to OR-of-null-safe-ANDs
-      // (IN never matches NULL, <=> does — the Hive default partition must
-      // stay replaceable). Both forms prune at planning time.
-      val touchedPred =
-        if (partitionCols.size == 1 && !touched.exists(_.isNullAt(0)))
-          col(partitionCols.head).isInCollection(touched.map(_.get(0)).toSeq)
-        else touched.map(row =>
-            partitionCols.zipWithIndex.map { case (c, i) => col(c) <=> lit(row.get(i)) }
-              .reduce(_ && _))
-          .reduce(_ || _)
-      val existing = spark.read.parquet(path).filter(touchedPred)
-      val merged = existing
-        .join(b.select(key), Seq(key), "left_anti")
-        .unionByName(b)
-      val tmp = new Path(stagingDir(path, "upsert", spark))
-      // the staging write sits INSIDE the cleanup scope: a failed merge
-      // write must not orphan the per-call directory
-      try {
-        merged.write.mode(SaveMode.Overwrite).parquet(tmp.toString)
-        overwritePartitionsDynamic(
-          spark.read.parquet(tmp.toString), path, partitionCols)
-      } finally fs.delete(tmp, true)
-      spark.catalog.clearCache()
-    } finally batch.unpersist()
-  }
-
-  /** Partition-scoped CHANGE-SET application — [[upsertParquetPartitioned]]
-    * generalized with deletions, the shape a snapshot diff (Snapshot.diff)
-    * produces: `deletes` keys are REMOVED from the table and `upserts`
-    * rows inserted or replaced by key, touching only affected partition
-    * directories. Deletions are what the keyed upsert cannot express (a
-    * key absent from the batch is left alone there, by design), and they
-    * carry one extra contract: each delete row must NAME the partition its
-    * key currently lives in (the caller knows the old row — a diff has
-    * both sides) — locating deleted keys by table scan would be the full
-    * read the partition scoping exists to avoid. A partition whose rows
-    * are ALL deleted is removed at the directory level: the dynamic
-    * overwrite only replaces partitions it writes, so an emptied partition
-    * would otherwise keep its stale files silently. Single partition
-    * column (the bucketed-membership layout); the touched-value collect is
-    * bounded by the partition count, the merge reads only touched
-    * directories, and untouched siblings keep their files byte-for-byte.
-    *
-    * The delete contract is audited ON the staged write's own job
-    * (VERDICT_r12 next #7 — no separate per-batch count): the merge is a
-    * full-outer join against the marked change keys, an `observe()` metric
-    * counts delete keys with no existing row in the touched read, and the
-    * check runs after staging but BEFORE anything publishes. Two miss
-    * cases are distinguished (ADVICE_r12): a missed key found elsewhere in
-    * the table means the delete named a WRONG partition — proceeding would
-    * silently leave the old row in place, so the call fails with the table
-    * untouched; a missed key absent from the table ENTIRELY is a REPLAYED
-    * change batch (foreachBatch delivers at-least-once — a crash between
-    * the overwrite and checkpoint commit re-delivers the batch), and the
-    * call converges as an idempotent no-op for it. The disambiguation is
-    * one column-pruned key scan of the table and runs ONLY when the cheap
-    * in-job metric trips — never on the happy path. Delete rows with a NULL
-    * key are REJECTED outright (ADVICE_r13): every equality in the merge and
-    * in the disambiguation probe is null-dropping, so a NULL key would
-    * otherwise read as "absent from the table" and converge silently as a
-    * presumed replay — a malformed change batch must fail loudly instead.
-    * For MULTI-WRITER deployments the same semantics run through the
-    * commit log as [[TxLog.applyChanges]] (round 14): lost claims
-    * re-merge against the new snapshot, so concurrent writers compose
-    * instead of racing this sink's read-merge-swap.
-    */
-  def applyChangesPartitioned(spark: SparkSession, path: String,
-      deletes: DataFrame, upserts: DataFrame, key: String,
-      partitionCol: String): Unit = {
-    import org.apache.spark.sql.functions.col
-    import org.apache.hadoop.fs.Path
-    val dest = new Path(path)
-    val fs = dest.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(dest)) { writePartitioned(upserts, path, Seq(partitionCol)); return }
-    val del = deletes.persist(); val up = upserts.persist()
-    try {
-      val touched = (del.select(col(partitionCol)) unionByName
-          up.select(col(partitionCol))).distinct().collect().map(_.get(0)).toSeq
-      if (touched.isEmpty) return
-      // NULL-safe touched predicate, same contract as the sibling upsert:
-      // IN never matches NULL, so a null partition value (Hive default
-      // partition) needs its own isNull arm or its rows silently survive
-      // the delete
-      val nonNull = touched.filter(_ != null)
-      val touchedPred = {
-        val in =
-          if (nonNull.isEmpty) org.apache.spark.sql.functions.lit(false)
-          else col(partitionCol).isInCollection(nonNull)
-        if (nonNull.size == touched.size) in else in || col(partitionCol).isNull
-      }
-      val existing = spark.read.parquet(path).filter(touchedPred)
-      // Merge via a MARKED full-outer join (content-identical to the
-      // left_anti + unionByName shape): change keys not matching any
-      // existing row surface as null-marker rows, so the delete-contract
-      // audit rides the staged write's own job as an observe() metric
-      // instead of a separate per-batch count. Keys hit by any change
-      // (delete or upsert) drop out of the existing side; upsert rows come
-      // back through the union arm.
-      import org.apache.spark.sql.functions.{coalesce, lit, max, sum, when}
-      val changeKeys = del.select(col(key)).withColumn("__is_del", lit(1))
-        .unionByName(up.select(col(key)).withColumn("__is_del", lit(0)))
-        .groupBy(key).agg(max(col("__is_del")).as("__del"))
-      val obs = org.apache.spark.sql.Observation(
-        s"graft_changes_${java.util.UUID.randomUUID()}")
-      // NULL delete keys are counted separately and REJECTED (ADVICE_r13):
-      // the full_outer join and the wrong-partition probe below both use
-      // null-dropping equality, so a malformed delete row with a NULL key
-      // would otherwise read as "absent from the table entirely" and slip
-      // through as a presumed replay no-op. (groupBy collapses all NULL
-      // keys into one row, so any count >= 1 means the batch is malformed.)
-      val joined = existing.withColumn("__ex", lit(1))
-        .join(changeKeys, Seq(key), "full_outer")
-        .observe(obs,
-          coalesce(sum(when(col("__del") === 1
-            && col("__ex").isNull && col(key).isNotNull, 1L)), lit(0L))
-            .as("missed_deletes"),
-          coalesce(sum(when(col("__del") === 1
-            && col(key).isNull, 1L)), lit(0L)).as("null_delete_keys"))
-      val merged = joined.filter(col("__del").isNull)
-        .drop("__ex", "__del").unionByName(up)
-      val tmp = new Path(stagingDir(path, "changes", spark))
-      try {
-        merged.write.mode(SaveMode.Overwrite).parquet(tmp.toString)
-        val nullDels = obs.get("null_delete_keys").asInstanceOf[Long]
-        require(nullDels == 0L,
-          s"applyChangesPartitioned: the change batch for $path carries " +
-            "delete row(s) with a NULL key — a NULL key can never match an " +
-            "existing row (null-dropping join equality), so it would slip " +
-            "through as a presumed replay no-op; fix the upstream diff. " +
-            "Table untouched.")
-        val missed = obs.get("missed_deletes").asInstanceOf[Long]
-        if (missed > 0L) {
-          // miss path only: split wrong-partition (dangerous) from replay
-          // (idempotent). One column-pruned key scan of the whole table.
-          val wrongPartition = del.select(col(key)).distinct()
-            .join(existing.select(col(key)), Seq(key), "left_anti")
-            .join(spark.read.parquet(path).select(col(key)), Seq(key),
-              "left_semi")
-            .count()
-          require(wrongPartition == 0L,
-            s"applyChangesPartitioned: $wrongPartition delete key(s) live in " +
-              s"partitions of $path their delete rows do not name — each " +
-              "delete must carry the partition value its key currently " +
-              "lives in (a wrong partition value would silently leave the " +
-              "old row in place). The remaining " +
-              s"${missed - wrongPartition} missed key(s) are absent from " +
-              "the table entirely (an already-applied or never-existing " +
-              "delete) and would have converged as a no-op.")
-        }
-        val staged = spark.read.parquet(tmp.toString)
-        // directories the change set EMPTIES: touched but absent from the
-        // merged result — must be deleted explicitly, the dynamic overwrite
-        // never visits them. Directory names go through the same Hive path
-        // escaping the write side uses (a raw "$col=$v" misses both the
-        // __HIVE_DEFAULT_PARTITION__ null encoding and URL-escaped values
-        // like "2024/01")
-        import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-        def dirName(v: Any): String =
-          ExternalCatalogUtils.getPartitionPathString(
-            partitionCol, if (v == null) null else v.toString)
-        val remaining = staged.select(col(partitionCol)).distinct()
-          .collect().map(_.get(0)).toSet
-        touched.filterNot(remaining).foreach { v =>
-          fs.delete(new Path(dest, dirName(v)), true): Unit
-        }
-        if (remaining.nonEmpty)
-          overwritePartitionsDynamic(staged, path, Seq(partitionCol))
-      } finally fs.delete(tmp, true)
-      spark.catalog.clearCache()
-    } finally { del.unpersist(); up.unpersist(): Unit }
-  }
-
-  /** Per-call staging directory for the merge sinks (VERDICT_r11 next #8):
-    * the fixed `path + "__upsert_tmp"` sibling was a CONCURRENT-WRITER race
-    * — two drivers upserting disjoint partitions of the SAME table would
-    * stage into one shared directory and clobber each other's merge before
-    * the dynamic overwrite. The applicationId scopes staging per driver,
-    * the UUID per call (two in-flight upserts of one table inside a single
+  /** Per-call staging directory for the swap sinks ([[upsertParquet]],
+    * the ANN serving log): a fixed `path + "__upsert_tmp"` sibling lets two
+    * writers of the SAME path stage into one shared directory and clobber
+    * each other's data. The applicationId scopes staging per driver, the
+    * UUID per call (two in-flight writers of one path inside a single
     * app — e.g. two streaming queries — stay disjoint too). Each call
     * renames its staging into place or deletes it before returning, so
     * orphans only survive a crashed JVM; they are sibling directories

@@ -5,9 +5,11 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
 
 /** Minimal optimistic-concurrency COMMIT LOG over parquet — the
-  * multi-writer table format the round-12 frontier named (#5): the merge
-  * sinks' single-writer contracts are honest but a real lake coordinates
-  * concurrent writers through a transactional log, not external locks.
+  * multi-writer table format the round-12 frontier named (#5), and the
+  * engine's one partitioned keyed-merge protocol ([[applyChanges]]): the
+  * file-swap sink [[Sinks.upsertParquet]] is single-writer by contract,
+  * while a real lake coordinates concurrent writers through a
+  * transactional log, not external locks.
   * This is the standard public protocol shape (a Delta-style ordered log
   * of commits; an Iceberg-style files-list manifest):
   *
@@ -609,27 +611,42 @@ object TxLog {
     }
   }
 
-  /** Partition-scoped keyed MERGE through the commit log — the round-13
-    * frontier's #1 (the merge sinks and the log were two coordination
-    * stories): the delete+upsert semantics of
-    * [[Sinks.applyChangesPartitioned]], but COORDINATED — concurrent
-    * writers get optimistic concurrency and readers snapshot isolation,
-    * where the filesystem sink's read-merge-swap is single-writer by
-    * documented contract.
+  /** Partition-scoped keyed MERGE through the commit log — the one
+    * partitioned keyed-merge protocol of the engine (the streaming upsert
+    * sinks, the incremental maintenance gates and [[upsertPartitioned]]
+    * all commit through it): `deletes` keys are removed, `upserts` rows
+    * inserted or replaced by key, and only the partitions the change set
+    * names are read and rewritten. Concurrent writers get optimistic
+    * concurrency and readers snapshot isolation.
     *
     * Each attempt: read ONLY the touched partitions of the OBSERVED
     * snapshot, drop every row whose key appears in the change set, union
     * the upserts, stage, and claim the next version with a manifest =
-    * untouched entries + staged. A LOST claim deletes its staging and
+    * untouched entries + staged. Untouched entries — and their files —
+    * are carried over as they are. A LOST claim deletes its staging and
     * re-runs the whole merge against the new snapshot — true serializable
     * MERGE (the loser's result includes the winner's rows), not
     * last-writer-wins; disjoint-partition writers both land whatever the
     * interleaving, same-partition writers compose. A partition the change
     * set empties simply drops out of the manifest — no directory surgery,
-    * the advantage of log-resident layout. Same batch contracts as the
-    * sink: key-unique upserts, each delete naming the partition its key
-    * currently lives in (a cell-move is delete-at-old + insert-at-new),
-    * NULL delete keys rejected loudly.
+    * the advantage of log-resident layout.
+    *
+    * Batch contracts: key-unique upserts, and each delete row NAMES the
+    * partition its key currently lives in (a cell-move is delete-at-old +
+    * insert-at-new; the caller knows the old row — a diff has both
+    * sides), since locating deleted keys by table scan would be the full
+    * read the partition scoping exists to avoid. The delete contract is
+    * audited on the staged write's own job: an `observe()` metric counts
+    * delete keys with no existing row in the touched read, and a miss is
+    * disambiguated by one key scan of the snapshot, on the miss path
+    * only. A missed key found elsewhere in the table means the delete
+    * named a WRONG partition — proceeding would silently leave the old
+    * row in place, so the call fails with nothing committed; a missed key
+    * absent from the table entirely is a REPLAYED change batch
+    * (foreachBatch delivers at-least-once) and converges as a no-op.
+    * Delete rows with a NULL key are rejected before any IO: every
+    * equality in the merge and the probe is null-dropping, so a NULL key
+    * would otherwise read as absent and pass as a replay.
     *
     * 100 TB: per-commit IO is the touched partitions' files plus the
     * staged delta; the claim is one atomic create; contention cost is
@@ -638,21 +655,27 @@ object TxLog {
   def applyChanges(spark: SparkSession, table: String,
       deletes: DataFrame, upserts: DataFrame, key: String,
       partitionCol: String, maxRetries: Int = 20): Long = {
-    import org.apache.spark.sql.functions.lit
+    import org.apache.spark.sql.functions.{coalesce, lit, max, sum, when}
     val fs = fsOf(spark, table)
     fs.mkdirs(logDir(table))
-    val del = deletes.persist(); val up = upserts.persist()
+    val del = pinned(deletes); val up = pinned(upserts)
     try {
-      require(del.filter(col(key).isNull).isEmpty,
+      // ONE collect, bounded by the partition count: the touched values,
+      // and per value its delete rows and NULL-key delete rows
+      val touched = del.select(col(partitionCol), lit(1L).as("__d"),
+          when(col(key).isNull, 1L).otherwise(0L).as("__n"))
+        .unionByName(up.select(col(partitionCol), lit(0L).as("__d"),
+          lit(0L).as("__n")))
+        .groupBy(partitionCol).agg(sum("__d"), sum("__n")).collect()
+      if (touched.isEmpty) return snapshot(spark, table).version
+      require(touched.forall(_.getLong(2) == 0L),
         s"TxLog.applyChanges: delete rows with a NULL key can never match " +
           s"an existing row of $table — fix the upstream diff")
-      val touched = (del.select(col(partitionCol)) unionByName
-          up.select(col(partitionCol))).distinct().collect().map(_.get(0))
-      val tokens = touched.map(v =>
+      val nDeletes = touched.map(_.getLong(1)).sum
+      val tokens = touched.map(r =>
         org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
           .getPartitionPathString(partitionCol,
-            if (v == null) null else v.toString)).toSet
-      import org.apache.spark.sql.functions.{coalesce, max, sum, when}
+            if (r.isNullAt(0)) null else r.get(0).toString)).toSet
       val changeKeys = del.select(col(key)).withColumn("__is_del", lit(1))
         .unionByName(up.select(col(key)).withColumn("__is_del", lit(0)))
         .groupBy(key).agg(max(col("__is_del")).as("__del"))
@@ -666,40 +689,33 @@ object TxLog {
         val snap = snapshotFrom(fs, table, versions, checkpoints)
         val target = (versions :+ snap.version :+ -1L).max + 1
         val touchedEntries = snap.entries.filter(_.partition.exists(tokens))
-        // The delete-contract audit rides the staged write's own job (the
-        // Sinks.applyChangesPartitioned shape): the marked full_outer
-        // surfaces delete keys with no existing row in the touched read;
-        // the disambiguating full-snapshot key scan runs on the miss path
-        // only, and a wrong-partition delete aborts with nothing committed
-        // (the staging is referenced by no manifest — delete and throw).
         val obs = org.apache.spark.sql.Observation(
           s"graft_txmerge_${java.util.UUID.randomUUID()}")
-        val (merged, audit) = readEntries(spark, touchedEntries) match {
-          case None => (up.filter(lit(true)), None)
-          case Some(existing) =>
-            val joined = existing.withColumn("__ex", lit(1))
-              .join(changeKeys, Seq(key), "full_outer")
-              .observe(obs, coalesce(sum(when(col("__del") === 1
-                && col("__ex").isNull, 1L)), lit(0L)).as("missed_deletes"))
-            (joined.filter(col("__del").isNull).drop("__ex", "__del")
-              .unionByName(up), Some(obs))
+        val existing = readEntries(spark, touchedEntries)
+        val merged = existing.fold(up.filter(lit(true))) { ex =>
+          ex.withColumn("__ex", lit(1))
+            .join(changeKeys, Seq(key), "full_outer")
+            .observe(obs, coalesce(sum(when(col("__del") === 1
+              && col("__ex").isNull, 1L)), lit(0L)).as("missed_deletes"))
+            .filter(col("__del").isNull).drop("__ex", "__del")
+            .unionByName(up)
         }
         val staged = stage(merged, table, Some(partitionCol))
         def dropStaged(): Unit = staged.headOption.foreach(e =>
           fs.delete(commitDirOf(new Path(e.path)), true): Unit)
         // an EMPTY touched read means every delete key is a miss (the
         // audit frame never ran) — they are all replays or wrong-partition
-        val missed = audit.fold(
-          if (snap.version >= 0) del.count() else 0L)(
-          _.get("missed_deletes").asInstanceOf[Long])
-        if (missed > 0L && snap.version >= 0) {
+        val missed =
+          if (snap.version < 0 || nDeletes == 0L) 0L
+          else existing.fold(nDeletes)(_ =>
+            obs.get("missed_deletes").asInstanceOf[Long])
+        if (missed > 0L) {
+          def keysOf(df: Option[DataFrame]): DataFrame = df
+            .fold(up.select(col(key)).limit(0))(_.select(col(key)))
           val wrongPartition = del.select(col(key)).distinct()
-            .join(readEntries(spark, touchedEntries)
-              .map(_.select(col(key))).getOrElse(up.select(col(key)).limit(0)),
-              Seq(key), "left_anti")
-            .join(readEntries(spark, snap.entries)
-              .map(_.select(col(key))).getOrElse(up.select(col(key)).limit(0)),
-              Seq(key), "left_semi")
+            .join(keysOf(existing), Seq(key), "left_anti")
+            .join(keysOf(readEntries(spark, snap.entries)), Seq(key),
+              "left_semi")
             .count()
           if (wrongPartition > 0L) {
             dropStaged()
@@ -716,10 +732,8 @@ object TxLog {
         }
         val manifest =
           snap.entries.filterNot(_.partition.exists(tokens)) ++ staged
-        val removedPaths = snap.entries.filter(_.partition.exists(tokens))
-          .map(_.path)
         if (atomicClaim(fs, versionFile(table, target),
-            renderDelta(staged, removedPaths).getBytes("UTF-8"))) {
+            renderDelta(staged, touchedEntries.map(_.path)).getBytes("UTF-8"))) {
           maybeCheckpoint(fs, table, target, manifest)
           return target
         }
@@ -732,6 +746,16 @@ object TxLog {
       throw new IllegalStateException(
         s"txlog merge contention exceeded $maxRetries retries for $table")
     } finally { del.unpersist(); up.unpersist(): Unit }
+  }
+
+  /** Cache a change frame the merge reads several times — unless it is
+    * already driver-local rows (a literal batch, or a filter the optimizer
+    * folded to empty, as [[upsertPartitioned]]'s deletes), where a cache
+    * only adds a build job.
+    */
+  private def pinned(df: DataFrame): DataFrame = df.queryExecution.optimizedPlan match {
+    case _: org.apache.spark.sql.catalyst.plans.logical.LocalRelation => df
+    case _ => df.persist()
   }
 
   /** Keyed upsert through the commit log: [[applyChanges]] with no

@@ -139,9 +139,10 @@ object Round11Queries {
     * (round 12 — q517 drives the same machinery inside the end-to-end
     * chain): builds the version-A membership table (doc_id, fp) in 16
     * fingerprint-bucket partitions under the given scratch name, flows the
-    * q510 change set through the delete-capable partition-scoped change
-    * sink, and returns the MAINTAINED table read back from disk. Every
-    * call re-stages from scratch (gates must be rerunnable).
+    * q510 change set through the commit log's partition-scoped merge
+    * (TxLog.applyChanges), and returns the MAINTAINED table read back
+    * from its latest snapshot. Every call re-stages from scratch (gates
+    * must be rerunnable).
     */
   private[queries] def incrementalMembers(s: SparkSession, dir: String,
       scrName: String): DataFrame = {
@@ -154,8 +155,8 @@ object Round11Queries {
       pmod(TextHash.hash60(c), lit(16L))
     val aFp = docs.select(col("doc_id"),
       graft.ext.TextAnalysis.fingerprint(col("text")).as("fp"))
-    graft.engine.Sinks.writePartitioned(
-      aFp.withColumn("fpb", fpb(col("fp"))), mPath, Seq("fpb"))
+    graft.engine.TxLog.append(
+      aFp.withColumn("fpb", fpb(col("fp"))), mPath, Some("fpb"))
     val bFp = stagedB(docs).select(col("doc_id"),
       graft.ext.TextAnalysis.fingerprint(col("text")).as("fp"))
     val d = graft.engine.Snapshot.diff(aFp, bFp, "doc_id", "fp")
@@ -167,9 +168,9 @@ object Round11Queries {
       .join(d.filter(col("status").isin("added", "changed"))
         .select("doc_id"), Seq("doc_id"))
       .withColumn("fpb", fpb(col("fp")))
-    graft.engine.Sinks.applyChangesPartitioned(
+    graft.engine.TxLog.applyChanges(
       s, mPath, deletes, upserts, "doc_id", "fpb")
-    s.read.parquet(mPath)
+    graft.engine.TxLog.read(s, mPath)
   }
 
   /** The q512 incremental-LSH maintenance path, factored for reuse (round
@@ -867,10 +868,10 @@ object Round11Queries {
     // 16 fingerprint buckets; when version B arrives, only the change set
     // flows — removed/changed ids are DELETED (each delete names the
     // bucket its old fingerprint lives in, known from the diff's A side),
-    // added/changed rows upserted — through the partition-scoped change
-    // sink (Sinks.applyChangesPartitioned): touched buckets rewrite,
-    // untouched buckets keep their files, an emptied bucket's directory
-    // is removed outright. The gate then elects keep-first survivors from
+    // added/changed rows upserted — through the commit log's partition-
+    // scoped merge (TxLog.applyChanges): touched buckets rewrite,
+    // untouched buckets keep their files, an emptied bucket drops out of
+    // the manifest. The gate then elects keep-first survivors from
     // the MAINTAINED table and hash-compares against from-scratch dedup
     // of version B — incremental ≡ full, the equivalence that lets a
     // 100 TB pipeline process the 1% change set instead of re-shuffling

@@ -423,9 +423,10 @@ object Round13Queries {
     // INCREMENTAL PQ-code maintenance from a vector snapshot diff — the
     // r12 SURVEY frontier's #1, the last maintenance surface: q501
     // ingests a STREAM and q504 rebuilds, but a BATCH version-B vector
-    // snapshot should flow deletes + upserts through the delete-capable
-    // partition-scoped change sink on the CELL-PARTITIONED codes table —
-    // the q511 membership story lifted to the vector index. The A-state
+    // snapshot should flow deletes + upserts through the commit log's
+    // partition-scoped merge (TxLog.applyChanges) on the CELL-PARTITIONED
+    // codes table — the q511 membership story lifted to the vector index.
+    // The A-state
     // codes artifact (SharedFrames.ivfPqIndex) is staged as a private
     // working copy (gates are rerunnable; the shared artifact is never
     // mutated), the q514 vector staging supplies the change classes
@@ -436,7 +437,7 @@ object Round13Queries {
     // assignment of the WHOLE version-B corpus from first principles.
     // This also drives the observe-folded delete audit (R13.4) through a
     // second real consumer. 100 TB: per-snapshot cost is the fresh
-    // slice's encode plus touched-cell directory rewrites, never a
+    // slice's encode plus touched-cell rewrites, never a
     // corpus re-encode; the staging write is the gate's rerunnability
     // floor, not the operator's.
     Q(
@@ -447,8 +448,8 @@ object Round13Queries {
         graft.engine.Scratch.rm(scr)
         val t = s"$scr/codes"
         val ix = SharedFrames.ivfPqIndex(s, dir)
-        graft.engine.Sinks.writePartitioned(
-          ix.codes.select("id", "cell", "m", "g"), t, Seq("cell"))
+        graft.engine.TxLog.append(
+          ix.codes.select("id", "cell", "m", "g"), t, Some("cell"))
         val e = Tables.embeddings(s, dir)
         // Derived cells (round 14) change the maintenance contract in one
         // honest way: the cell is a function of the VECTOR, so a revised
@@ -473,9 +474,9 @@ object Round13Queries {
               Round12Queries.freshBEmb(e), "embedding", planes),
             ix.cents, "vec_id", "embedding", "cell"),
           ix.cw)
-        graft.engine.Sinks.applyChangesPartitioned(
+        graft.engine.TxLog.applyChanges(
           s, t, deletes, upserts, "id", "cell")
-        s.read.parquet(t)
+        graft.engine.TxLog.read(s, t)
           .groupBy(col("id"), col("cell"))
           .agg(
             max(when(col("m") === 0, col("g"))).as("__c0"),

@@ -120,9 +120,9 @@ object Round14Queries {
       """.trim)),
 
     // LOG-COORDINATED MERGE — VERDICT_r13 next #2: the partition-scoped
-    // merge semantics (Sinks.applyChangesPartitioned: delete by key at a
-    // named partition, upsert by key, cell-move = delete-at-old +
-    // insert-at-new) routed THROUGH the commit log (TxLog.applyChanges):
+    // merge semantics (delete by key at a named partition, upsert by key,
+    // cell-move = delete-at-old + insert-at-new) routed THROUGH the commit
+    // log (TxLog.applyChanges):
     // each attempt merges against the snapshot it observed and claims the
     // next version; a lost claim re-merges on the new snapshot, so
     // concurrent writers COMPOSE (spec-pinned: disjoint and same-partition

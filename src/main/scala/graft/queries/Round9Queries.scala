@@ -396,8 +396,7 @@ object Round9Queries {
         graft.functions.GraftFunctions.ensureRegistered(s)
         val base = graft.engine.Scratch.dir(s, dir, "stream_ann_ingest")
         val src = base + "_src"
-        Seq(base, base + "_ckpt", base + "__upsert_tmp", src)
-          .foreach(graft.engine.Scratch.rm)
+        Seq(base, base + "_ckpt", src).foreach(graft.engine.Scratch.rm)
         val e = Tables.embeddings(s, dir)
         // derived cells (round 14): planes frozen from the base snapshot;
         // streamed arrivals below get their cell from the SAME frozen
@@ -411,15 +410,14 @@ object Round9Queries {
         val ix = SharedFrames.staleIvf(s, dir)
         val planes = SharedFrames.staleIvfPlanes(s, dir)
         val delta = e.filter(deltaPredSpark)
-        // seed the code table with the base snapshot's codes, CELL-
-        // PARTITIONED (round 11): the streaming upsert is partition-scoped
-        // (Sinks.upsertParquetPartitioned), so each micro-batch rewrites
-        // only the cell directories it touches — the full-table-rewrite-
-        // per-trigger defect VERDICT_r10 graded weak. Read-back appends the
-        // partition column last; the gate selects by name, so the pivot
-        // below is layout-invariant and the hash is unchanged.
-        graft.engine.Sinks.writePartitioned(
-          ix.codes.select("id", "cell", "m", "g"), base, Seq("cell"))
+        // seed the code table with the base snapshot's codes as a CELL-
+        // PARTITIONED commit-log table: the streaming upsert is the log's
+        // partition-scoped merge (TxLog.upsertPartitioned), so each
+        // micro-batch rewrites only the cells it touches — never the whole
+        // table per trigger. The pivot below groups and orders by key, so
+        // the hash does not depend on the file layout.
+        graft.engine.TxLog.append(
+          ix.codes.select("id", "cell", "m", "g"), base, Some("cell"))
         // stage arrivals as three files -> three rate-limited micro-batches
         delta.repartition(3).write.parquet(src)
         val arrivals = IvfPq.withDerivedCells(
@@ -430,7 +428,7 @@ object Round9Queries {
           graft.streaming.EventStreams.startVectorIngest(
             arrivals, ix.cents, ix.cw, "vec_id", "embedding", "cell",
             base, base + "_ckpt"))
-        s.read.parquet(base)
+        graft.engine.TxLog.read(s, base)
           .groupBy(col("id"), col("cell"))
           .agg(
             max(when(col("m") === 0, col("g"))).as("__c0"),

@@ -240,16 +240,16 @@ object EventStreams {
     * broadcast centroid/codebook artifacts; no retrain on the hot path,
     * the production ingest contract (q499 prices the staleness this
     * accrues) — and upserted into the parquet code table by vector id, so
-    * checkpoint-replayed batches land idempotently. The code table is
-    * CELL-PARTITIONED (the same inverted-list layout the search
-    * coordinator prunes on, SharedFrames.ivfPqIndex) and the upsert is
-    * PARTITION-SCOPED (VERDICT_r10 weak #1): a micro-batch touching k
-    * cells reads and rewrites only those k cell directories via the
-    * dynamic partition overwrite — never the whole table, which at 100 TB
-    * would be a full-table rewrite per trigger. AvailableNow trigger:
-    * the ingest drains whatever arrivals are staged and terminates
-    * (callers awaitTermination); a continuous deployment would swap the
-    * trigger, nothing else.
+    * checkpoint-replayed batches land idempotently. The code table is a
+    * CELL-PARTITIONED commit-log table (the same inverted-list layout the
+    * search coordinator prunes on, SharedFrames.ivfPqIndex; read it with
+    * `TxLog.read`) and the upsert is
+    * [[graft.engine.TxLog.upsertPartitioned]]: a micro-batch touching k
+    * cells reads and rewrites only those k cells' files — never the whole
+    * table, which at 100 TB would be a full-table rewrite per trigger.
+    * AvailableNow trigger: the ingest drains whatever arrivals are staged
+    * and terminates (callers awaitTermination); a continuous deployment
+    * would swap the trigger, nothing else.
     */
   def startVectorIngest(vecs: DataFrame, cents: DataFrame, cw: DataFrame,
       idCol: String, vecCol: String, cellCol: String,
@@ -259,11 +259,11 @@ object EventStreams {
       .foreachBatch { (batch: DataFrame, _: Long) =>
         // partition col is "cell": IvfPq.assignCodes pins its output shape
         // to (id, cell, m, g) whatever the input column names were
-        graft.engine.Sinks.upsertParquetPartitioned(
+        graft.engine.TxLog.upsertPartitioned(batch.sparkSession, outDir,
           graft.ext.IvfPq.assignCodes(
             graft.ext.IvfPq.residualParts(batch, cents, idCol, vecCol, cellCol),
             cw),
-          outDir, "id", Seq("cell"))
+          "id", "cell"): Unit
       }
       .option("checkpointLocation", checkpointDir)
       .outputMode(OutputMode.Update)
@@ -346,7 +346,7 @@ object EventStreams {
             require(fs.rename(staging, dest),
               s"startAnnServe: publish rename failed for batch $batchId " +
                 s"($staging -> $dest)")
-            spark.catalog.clearCache()
+            spark.catalog.refreshByPath(outDir)
           } else fs.delete(staging, true): Unit
         } catch { case e: Throwable => fs.delete(staging, true); throw e }
       }
@@ -359,24 +359,26 @@ object EventStreams {
     * micro-batch's rows replace same-key rows of the parquet target, so
     * state-store re-emissions and replayed batches land idempotently — the
     * exactly-once-per-key pattern for aggregation streams writing to a
-    * lake table. `partitionCols` selects the merge scope: non-empty routes
-    * through the PARTITION-SCOPED upsert (only the directories the batch
-    * touches are read and rewritten — the 100 TB contract; requires each
-    * key's partition values to be final, e.g. a window-start date column);
-    * empty keeps the whole-table form for small unpartitioned targets
-    * (bounded-key aggregate tables), where partition directories would
-    * cost more than they save.
+    * lake table. `partitionCol` selects the merge scope: a column routes
+    * through the commit log's PARTITION-SCOPED upsert
+    * ([[graft.engine.TxLog.upsertPartitioned]] — only the partitions the
+    * batch touches are read and rewritten, the 100 TB contract; requires
+    * each key's partition value to be final, e.g. a window-start date
+    * column; read the table with `TxLog.read`); None keeps the plain
+    * whole-table parquet form for small unpartitioned targets
+    * (bounded-key aggregate tables), where partitions would cost more
+    * than they save.
     */
   def startUpsertSink(df: DataFrame, outDir: String, checkpointDir: String,
-      key: String, partitionCols: Seq[String] = Nil):
+      key: String, partitionCol: Option[String] = None):
       org.apache.spark.sql.streaming.StreamingQuery =
     df.writeStream
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        if (partitionCols.isEmpty)
-          graft.engine.Sinks.upsertParquet(batch, outDir, key)
-        else
-          graft.engine.Sinks.upsertParquetPartitioned(
-            batch, outDir, key, partitionCols)
+        partitionCol match {
+          case None => graft.engine.Sinks.upsertParquet(batch, outDir, key)
+          case Some(p) => graft.engine.TxLog.upsertPartitioned(
+            batch.sparkSession, outDir, batch, key, p): Unit
+        }
       }
       .option("checkpointLocation", checkpointDir)
       .outputMode(OutputMode.Update)

@@ -18,6 +18,42 @@ class PlanQualitySpec extends SparkSpec {
     out.toString
   }
 
+  private object PlanWalk
+      extends org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+
+  /** Every window operator in `df`'s physical plan: the AQE final plan
+    * once executed (else the initial one), subqueries, and the plans of
+    * cached relations it scans. A physical plan prints the node as
+    * `Window`, so a search of the plan string for the class name
+    * `WindowExec` can never fail.
+    */
+  private def windowOps(df: org.apache.spark.sql.DataFrame)
+      : Seq[org.apache.spark.sql.execution.SparkPlan] = {
+    import org.apache.spark.sql.execution.SparkPlan
+    def walk(p: SparkPlan): Seq[SparkPlan] = PlanWalk.collectWithSubqueries(p) {
+      case w: org.apache.spark.sql.execution.window.WindowExecBase => Seq(w)
+      case c: org.apache.spark.sql.execution.columnar.InMemoryTableScanExec =>
+        walk(c.relation.cachedPlan)
+    }.flatten
+    walk(df.queryExecution.executedPlan)
+  }
+
+  test("windowOps finds a window before and after AQE, and inside a cache") {
+    import org.apache.spark.sql.expressions.Window
+    val ranked = spark.range(20).toDF("k")
+      .withColumn("r", row_number().over(Window.partitionBy(col("k") % 3).orderBy("k")))
+    assert(windowOps(ranked).size == 1, "the initial adaptive plan holds the window")
+    ranked.collect()
+    assert(windowOps(ranked).size == 1, "the final adaptive plan holds the window")
+    val cached = ranked.cache()
+    try {
+      cached.count()
+      val over = cached.filter(col("r") === 1)
+      assert(windowOps(over).size == 1, "a cached relation's plan is searched")
+    } finally cached.unpersist(): Unit
+    assert(windowOps(spark.range(20).toDF("k").groupBy(col("k") % 3).count()).isEmpty)
+  }
+
   test("filter pushdown: shipdate predicate reaches the parquet scan") {
     val df = Tables.lineitem(spark, sf0001)
       .filter(col("l_shipdate") <= lit("1995-01-01").cast("timestamp"))
@@ -555,7 +591,7 @@ class PlanQualitySpec extends SparkSpec {
     val df = graft.SparkEntry.queries("q319_abc_classification")(spark, sf0001)
     df.collect()
     val plan = df.queryExecution.executedPlan.toString
-    assert(!plan.contains("WindowExec"),
+    assert(windowOps(df).isEmpty,
       s"running share must not plan a window:\n$plan")
   }
 
@@ -678,7 +714,7 @@ class PlanQualitySpec extends SparkSpec {
       val plan = df.queryExecution.executedPlan.toString
       assert(plan.contains("TopKPerKey"),
         s"$q: expected the heap top-k operator in:\n$plan")
-      assert(!plan.contains("WindowExec"),
+      assert(windowOps(df).isEmpty,
         s"$q: no window-sort ranking allowed:\n$plan")
       assert(!plan.contains("CartesianProduct"),
         s"$q: bounded attaches must broadcast, not cartesian:\n$plan")
@@ -710,26 +746,26 @@ class PlanQualitySpec extends SparkSpec {
     // here; the corpus-linear x corpus-linear joins are the ones pinned)
     assert("ShuffledHashJoin \\[id#".r.findAllIn(p499).size >= 2,
       s"q499: both code-agreement joins must be shuffle-side on (id, m):\n$p499")
-    assert(!p499.contains("WindowExec"),
+    assert(windowOps(d499).isEmpty,
       s"q499: no window-sort ranking allowed:\n$p499")
     // The assignment argmin pin moved to the OPERATOR plan (round 15): the
     // delta assignment now reads the shared staleDeltaCodes artifact, so the
     // consumer's returned plan legitimately carries no TopKPerKey — the heap
     // discipline is pinned where the assignment is actually planned.
     val ix = graft.queries.SharedFrames.staleIvf(spark, sf0001)
-    val assignPlan = graft.ext.IvfPq.assignCodes(
+    val assign = graft.ext.IvfPq.assignCodes(
         graft.ext.IvfPq.residualParts(
           graft.ext.IvfPq.withDerivedCells(
             graft.Tables.embeddings(spark, sf0001), "embedding", 3),
           ix.cents, "vec_id", "embedding", "cell"),
         ix.cw)
-      .queryExecution.executedPlan.toString
-    assert(assignPlan.contains("TopKPerKey") && !assignPlan.contains("WindowExec"),
+    val assignPlan = assign.queryExecution.executedPlan.toString
+    assert(assignPlan.contains("TopKPerKey") && windowOps(assign).isEmpty,
       s"assignCodes argmin must be the heap, not a window:\n$assignPlan")
     val d498 = graft.SparkEntry.queries("q498_ivfpq_index_roundtrip")(spark, sf0001)
     d498.collect()
     val p498 = d498.queryExecution.executedPlan.toString
-    assert(!p498.contains("WindowExec") && !p498.contains("Join"),
+    assert(windowOps(d498).isEmpty && !p498.contains("Join"),
       s"q498: read-back pivot must be a single hash aggregate:\n$p498")
   }
 
@@ -747,7 +783,7 @@ class PlanQualitySpec extends SparkSpec {
       val plan = df.queryExecution.executedPlan.toString
       assert(plan.contains("TopKPerKey"),
         s"$q: expected the heap top-k operator in:\n$plan")
-      assert(!plan.contains("WindowExec"),
+      assert(windowOps(df).isEmpty,
         s"$q: no window-sort ranking allowed:\n$plan")
       assert(!plan.contains("CartesianProduct"),
         s"$q: bounded attaches must broadcast, not cartesian:\n$plan")
@@ -758,13 +794,13 @@ class PlanQualitySpec extends SparkSpec {
       // longer shows it. The salted-shuffle discipline is pinned on the
       // construction's own plan below.
     }
-    val lrePlan = graft.ext.Similarity.crossCellLongRangeEdges(
+    val lre = graft.ext.Similarity.crossCellLongRangeEdges(
         graft.Tables.embeddings(spark, sf0001), "vec_id", "embedding",
         "label", nForeign = 2)
-      .queryExecution.executedPlan.toString
+    val lrePlan = lre.queryExecution.executedPlan.toString
     assert(lrePlan.contains("ShuffledHashJoin [__"),
       s"crossCellLongRangeEdges: the live cell join must be shuffled, both sides:\n$lrePlan")
-    assert(lrePlan.contains("TopKPerKey") && !lrePlan.contains("WindowExec"),
+    assert(lrePlan.contains("TopKPerKey") && windowOps(lre).isEmpty,
       s"crossCellLongRangeEdges: picks must ride the heap:\n$lrePlan")
     // q504's returned frame carries the POST health re-measure (the pre row
     // is a materialized read-back by design): the occupancy scan must push
@@ -780,7 +816,7 @@ class PlanQualitySpec extends SparkSpec {
       s"q504: the health scan must push the m=0 filter:\n$p")
     assert(p.contains("ShuffledHashJoin [id#"),
       s"q504: the refit-agreement code join must be shuffle-side:\n$p")
-    assert(!p.contains("WindowExec"),
+    assert(windowOps(d).isEmpty,
       s"q504: no window-sort ranking allowed:\n$p")
   }
 

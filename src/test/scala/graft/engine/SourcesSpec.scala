@@ -119,108 +119,69 @@ class SourcesSpec extends SparkSpec {
     assert(got === Map(1L -> "a", 2L -> "B", 3L -> "c"))
   }
 
-  test("upsertParquetPartitioned rewrites touched partitions only — untouched files byte-identical") {
-    import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_upsert_p").toString + "/t"
-    Sinks.writePartitioned(
-      Seq((1L, "a", 10), (2L, "b", 10), (3L, "c", 20), (4L, "d", 30))
-        .toDF("k", "v", "p"),
-      dir, Seq("p"))
-    // fingerprint a partition directory: (name, length, mtime) per file —
-    // equality means the upsert never rewrote, truncated or re-committed it
-    def files(p: Int): Set[(String, Long, Long)] =
-      new java.io.File(s"$dir/p=$p").listFiles()
-        .filter(_.getName.endsWith(".parquet"))
-        .map(f => (f.getName, f.length(), f.lastModified())).toSet
-    val p20Before = files(20)
-    val p30Before = files(30)
-    assert(p20Before.nonEmpty && p30Before.nonEmpty)
-    // batch touches ONLY p=10: replaces key 2, inserts key 9
-    Sinks.upsertParquetPartitioned(
-      Seq((2L, "B", 10), (9L, "z", 10)).toDF("k", "v", "p"), dir, "k", Seq("p"))
-    assert(files(20) === p20Before,
-      "untouched partition p=20 must keep its exact files")
-    assert(files(30) === p30Before,
-      "untouched partition p=30 must keep its exact files")
-    val got = spark.read.parquet(dir).collect()
-      .map(r => r.getAs[Long]("k") -> (r.getAs[String]("v"), r.getAs[Int]("p"))).toMap
-    assert(got === Map(1L -> ("a", 10), 2L -> ("B", 10), 9L -> ("z", 10),
-      3L -> ("c", 20), 4L -> ("d", 30)))
-    // first write to a missing target lays down the partitioned table
-    val fresh = java.nio.file.Files.createTempDirectory("graft_upsert_p2").toString + "/t"
-    Sinks.upsertParquetPartitioned(
-      Seq((7L, "q", 40)).toDF("k", "v", "p"), fresh, "k", Seq("p"))
-    assert(new java.io.File(s"$fresh/p=40").exists())
-    assert(spark.read.parquet(fresh).count() === 1L)
-  }
+  // Partition-scoped change sets commit through TxLog.applyChanges /
+  // upsertPartitioned. The titles below keep the name of the Sinks merge
+  // these cases were first written for.
 
   test("applyChangesPartitioned deletes, upserts, prunes untouched buckets and removes emptied ones") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_changes_p").toString + "/t"
-    Sinks.writePartitioned(
-      Seq((1L, "a", 10), (2L, "b", 10), (3L, "c", 20), (4L, "d", 30))
-        .toDF("k", "v", "p"),
-      dir, Seq("p"))
-    def files(p: Int): Set[(String, Long, Long)] =
-      Option(new java.io.File(s"$dir/p=$p").listFiles()).getOrElse(Array.empty)
-        .filter(_.getName.endsWith(".parquet"))
-        .map(f => (f.getName, f.length(), f.lastModified())).toSet
-    val p30Before = files(30)
-    assert(p30Before.nonEmpty)
+    val t = Files.createTempDirectory("graft_changes_p").toString + "/t"
+    TxLog.append(Seq((1L, "a", 10), (2L, "b", 10), (3L, "c", 20), (4L, "d", 30))
+      .toDF("k", "v", "p"), t, Some("p"))
+    val p30 = TxLogSpec.partitionState(spark, t, "p=30")
+    assert(p30._1.nonEmpty)
     // change set: delete k=1 (p=10 keeps k=2), delete k=3 (EMPTIES p=20),
-    // replace k=2's value, insert k=9 into a new bucket p=40; p=30 untouched
-    Sinks.applyChangesPartitioned(spark, dir,
+    // replace k=2's value, insert k=9 into a new partition p=40; p=30 untouched
+    assert(TxLog.applyChanges(spark, t,
       deletes = Seq((1L, 10), (3L, 20)).toDF("k", "p"),
       upserts = Seq((2L, "B", 10), (9L, "z", 40)).toDF("k", "v", "p"),
-      key = "k", partitionCol = "p")
-    assert(files(30) === p30Before,
-      "untouched partition p=30 must keep its exact files")
-    assert(!new java.io.File(s"$dir/p=20").exists(),
-      "a partition emptied by deletes must lose its directory, not keep stale files")
-    val got = spark.read.parquet(dir).collect()
-      .map(r => r.getAs[Long]("k") -> (r.getAs[String]("v"), r.getAs[Int]("p"))).toMap
+      key = "k", partitionCol = "p") === 1L)
+    assert(TxLogSpec.partitionState(spark, t, "p=30") === p30,
+      "untouched partition p=30 must keep its entries and exact files")
+    assert(TxLogSpec.partitionState(spark, t, "p=20")._1.isEmpty,
+      "a partition emptied by deletes must drop out of the manifest")
+    val got = TxLog.read(spark, t).collect()
+      .map(r => r.getAs[Long]("k") -> ((r.getAs[String]("v"), r.getAs[Int]("p")))).toMap
     assert(got === Map(2L -> ("B", 10), 9L -> ("z", 40), 4L -> ("d", 30)))
   }
 
   test("concurrent upserts of disjoint partitions never clobber each other's staging") {
-    // VERDICT_r11 next #8: the fixed `path + "__upsert_tmp"` staging name
-    // made two writers upserting DISJOINT partitions of the same table race
-    // on one shared directory. Staging is now per-call (applicationId +
-    // UUID); two sessions merging disjoint partitions in parallel must both
-    // land. Sessions are independent (newSession: own SQLConf, so the
-    // scoped partitionOverwriteMode conf never crosses either).
-    val dir = java.nio.file.Files.createTempDirectory("graft_upsert_cc").toString + "/t"
+    // two sessions upserting DISJOINT partitions of one table at once: the
+    // loser of the commit claim re-merges against the winner's snapshot,
+    // so both must land. Sessions are independent (newSession: own SQLConf).
     import spark.implicits._
-    Sinks.writePartitioned(
-      Seq((1L, "a", 10), (2L, "b", 20), (3L, "c", 30)).toDF("k", "v", "p"),
-      dir, Seq("p"))
+    val t = Files.createTempDirectory("graft_upsert_cc").toString + "/t"
+    TxLog.append(Seq((1L, "a", 10), (2L, "b", 20), (3L, "c", 30)).toDF("k", "v", "p"),
+      t, Some("p"))
     val gate = new java.util.concurrent.CyclicBarrier(2)
+    val errs = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
     def writer(p: Int, k: Long): Thread = new Thread(() => {
-      val s = spark.newSession()
-      import s.implicits._
-      val batch = Seq((k, s"w$p", p)).toDF("k", "v", "p")
-      gate.await()
-      Sinks.upsertParquetPartitioned(batch, dir, "k", Seq("p"))
+      try {
+        val s = spark.newSession()
+        import s.implicits._
+        val batch = Seq((k, s"w$p", p)).toDF("k", "v", "p")
+        gate.await()
+        TxLog.upsertPartitioned(s, t, batch, "k", "p"): Unit
+      } catch { case e: Throwable => errs.add(e): Unit }
     })
     val (t1, t2) = (writer(10, 8L), writer(20, 9L))
-    t1.start(); t2.start(); t1.join(); t2.join()
-    val got = spark.read.parquet(dir).collect()
+    t1.start(); t2.start(); t1.join(120000); t2.join(120000)
+    assert(errs.isEmpty, s"upsert thread failed: ${errs.peek()}")
+    val got = TxLog.read(spark, t).collect()
       .map(r => r.getAs[Long]("k") -> r.getAs[String]("v")).toMap
     assert(got === Map(1L -> "a", 8L -> "w10", 2L -> "b", 9L -> "w20", 3L -> "c"),
-      "both writers' merges must land; neither staging may clobber the other")
+      "both writers' merges must land; neither may clobber the other")
   }
 
   test("applyChangesPartitioned rejects a delete naming a partition its key does not live in") {
-    // ADVICE_r11: a delete carrying a stale/wrong partition value used to
-    // silently no-op (the key's real directory was never read) — and a
-    // same-key upsert into a new partition would then leave a duplicate.
-    // The contract assert turns that corruption into a loud failure.
+    // a delete carrying a stale/wrong partition value would silently no-op
+    // (the key's real partition is never read), and a same-key upsert into
+    // a new partition would then leave a duplicate: it must fail loudly
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_changes_bad").toString + "/t"
-    Sinks.writePartitioned(
-      Seq((1L, "a", 10), (2L, "b", 20)).toDF("k", "v", "p"), dir, Seq("p"))
+    val t = Files.createTempDirectory("graft_changes_bad").toString + "/t"
+    TxLog.append(Seq((1L, "a", 10), (2L, "b", 20)).toDF("k", "v", "p"), t, Some("p"))
     val e = intercept[IllegalArgumentException] {
-      Sinks.applyChangesPartitioned(spark, dir,
+      TxLog.applyChanges(spark, t,
         deletes = Seq((2L, 10)).toDF("k", "p"), // k=2 actually lives in p=20
         upserts = Seq((9L, "z", 10)).toDF("k", "v", "p"),
         key = "k", partitionCol = "p")
@@ -228,82 +189,93 @@ class SourcesSpec extends SparkSpec {
     assert(e.getMessage.contains("delete"),
       s"expected the delete-contract failure, got: ${e.getMessage}")
     // the table is untouched by the failed call
-    val got = spark.read.parquet(dir).collect()
+    assert(TxLog.snapshot(spark, t).version === 0L, "a failed merge must commit nothing")
+    val got = TxLog.read(spark, t).collect()
       .map(r => r.getAs[Long]("k") -> r.getAs[String]("v")).toMap
     assert(got === Map(1L -> "a", 2L -> "b"))
   }
 
   test("applyChangesPartitioned converges on a replayed change batch") {
-    // ADVICE_r12: foreachBatch delivers at-least-once — a crash between the
-    // dynamic overwrite and checkpoint commit re-delivers the whole batch.
-    // A replayed DELETE's key is then absent from the table entirely; that
-    // must converge as an idempotent no-op (replayed upserts already do),
-    // while the wrong-partition case (previous spec) still fails loudly.
+    // foreachBatch delivers at-least-once: a crash between the commit and
+    // the checkpoint re-delivers the whole batch. A replayed DELETE's key is
+    // then absent from the table entirely; that must converge as an
+    // idempotent no-op, while the wrong-partition case still fails loudly.
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_changes_rp").toString + "/t"
-    Sinks.writePartitioned(
-      Seq((1L, "a", 10), (2L, "b", 20)).toDF("k", "v", "p"), dir, Seq("p"))
-    def apply(): Unit = Sinks.applyChangesPartitioned(spark, dir,
+    val t = Files.createTempDirectory("graft_changes_rp").toString + "/t"
+    TxLog.append(Seq((1L, "a", 10), (2L, "b", 20)).toDF("k", "v", "p"), t, Some("p"))
+    def apply(): Long = TxLog.applyChanges(spark, t,
       deletes = Seq((1L, 10)).toDF("k", "p"),
       upserts = Seq((9L, "z", 20)).toDF("k", "v", "p"),
       key = "k", partitionCol = "p")
-    apply() // first delivery
-    apply() // replay: delete key k=1 is already gone — must converge
-    val got = spark.read.parquet(dir).collect()
+    def got = TxLog.read(spark, t).collect()
       .map(r => r.getAs[Long]("k") -> r.getAs[String]("v")).toMap
+    assert(apply() === 1L) // first delivery
+    assert(got === Map(2L -> "b", 9L -> "z"))
+    assert(apply() === 2L) // replay: delete key k=1 is already gone
     assert(got === Map(2L -> "b", 9L -> "z"),
       "a replayed change batch must land the same table, not fail")
   }
 
-  test("applyChangesPartitioned handles NULL and escape-needing partition values") {
+  test("applyChangesPartitioned rejects a NULL delete key loudly") {
+    // every equality in the merge (full_outer) and in the wrong-partition
+    // probe (left_anti/left_semi) is null-dropping, so a delete row with a
+    // NULL key would read as "absent from the table entirely" and converge
+    // silently as a presumed replay no-op: a malformed change batch must
+    // fail instead, with nothing committed, staged or changed
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_changes_n").toString + "/t"
-    Sinks.writePartitioned(
-      Seq((1L, "a", Some("x y")), (2L, "b", None: Option[String]), (3L, "c", Some("x y")))
-        .toDF("k", "v", "p"),
-      dir, Seq("p"))
-    assert(new java.io.File(s"$dir/p=__HIVE_DEFAULT_PARTITION__").exists,
-      "fixture must land a Hive default (null) partition")
-    // delete k=2 — EMPTIES the null partition (IN-only pruning would never
-    // read it and the raw-name delete would miss its directory); replace
-    // k=1 inside the escape-needing "x y" partition
-    Sinks.applyChangesPartitioned(spark, dir,
-      deletes = Seq((2L, None: Option[String])).toDF("k", "p"),
-      upserts = Seq((1L, "A", Some("x y"))).toDF("k", "v", "p"),
-      key = "k", partitionCol = "p")
-    assert(!new java.io.File(s"$dir/p=__HIVE_DEFAULT_PARTITION__").exists,
-      "an emptied null partition must lose its directory")
-    val got = spark.read.parquet(dir).collect()
-      .map(r => r.getAs[Long]("k") -> (r.getAs[String]("v"), r.getAs[String]("p"))).toMap
-    assert(got === Map(1L -> ("A", "x y"), 3L -> ("c", "x y")))
+    val t = Files.createTempDirectory("graft_changes_nk").toString + "/t"
+    TxLog.append(Seq((1L, "a", 10), (2L, "b", 20)).toDF("k", "v", "p"), t, Some("p"))
+    def commitDirs = new java.io.File(s"$t/data").list().toSet
+    val dirsBefore = commitDirs
+    val e = intercept[IllegalArgumentException] {
+      TxLog.applyChanges(spark, t,
+        deletes = Seq((Option.empty[Long], 10)).toDF("k", "p"),
+        upserts = Seq((9L, "z", 10)).toDF("k", "v", "p"),
+        key = "k", partitionCol = "p")
+    }
+    assert(e.getMessage.contains("NULL key"),
+      s"expected the NULL-delete-key rejection, got: ${e.getMessage}")
+    assert(TxLog.snapshot(spark, t).version === 0L, "a rejected batch must commit nothing")
+    assert(commitDirs === dirsBefore, "a rejected batch must stage nothing")
+    val got = TxLog.read(spark, t).collect()
+      .map(r => r.getAs[Long]("k") -> r.getAs[String]("v")).toMap
+    assert(got === Map(1L -> "a", 2L -> "b"), "table must be untouched")
   }
 
-  test("upsertParquetPartitioned handles multi-column and NULL partition values") {
+  test("sinks refresh only the caches over the path they rewrite") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_upsert_mc").toString + "/t"
-    // two partition levels, one row with a NULL partition value (lands in
-    // the Hive default-partition directory; the touched-value predicate
-    // must match it via null-safe equality, not drop it)
-    val base = Seq(
-      (1L, "a", Some(10), "x"), (2L, "b", Some(10), "y"),
-      (3L, "c", Some(20), "x"), (4L, "d", None: Option[Int], "x"))
-      .toDF("k", "v", "p1", "p2")
-    Sinks.writePartitioned(base, dir, Seq("p1", "p2"))
-    def files(sub: String): Set[String] =
-      Option(new java.io.File(s"$dir/$sub").listFiles()).fold(Set.empty[String])(
-        _.filter(_.getName.endsWith(".parquet")).map(_.getName).toSet)
-    val untouched = files("p1=10/p2=y")
-    assert(untouched.nonEmpty)
-    // batch replaces the NULL-partition row and one (10, x) row
-    val batch = Seq(
-      (4L, "D", None: Option[Int], "x"), (1L, "A", Some(10), "x"))
-      .toDF("k", "v", "p1", "p2")
-    Sinks.upsertParquetPartitioned(batch, dir, "k", Seq("p1", "p2"))
-    assert(files("p1=10/p2=y") === untouched,
-      "the (10, y) partition was not in the batch and must keep its files")
-    val got = spark.read.parquet(dir).collect()
-      .map(r => r.getAs[Long]("k") -> r.getAs[String]("v")).toMap
-    assert(got === Map(1L -> "A", 2L -> "b", 3L -> "c", 4L -> "D"))
+    val root = Files.createTempDirectory("graft_cache_scope").toString
+    val (other, t) = (s"$root/other", s"$root/t")
+    Sinks.writeParquet(Seq(1L, 2L).toDF("k"), other)
+    val unrelated = spark.read.parquet(other).cache()
+    Sinks.writeParquet(Seq((1L, "a"), (2L, "b")).toDF("k", "v"), t)
+    val cached = spark.read.parquet(t).cache()
+    try {
+      assert(unrelated.count() === 2 && cached.count() === 2)
+      // a new query over the cached frame each time: an executed Dataset
+      // keeps its physical plan, and with it the file list it planned
+      def rows = cached.select("k", "v").collect()
+        .map(r => r.getLong(0) -> r.getString(1)).toMap
+      def stillCached(sink: String): Unit =
+        assert(unrelated.storageLevel != org.apache.spark.storage.StorageLevel.NONE,
+          s"$sink must leave a cache over an unrelated path in place")
+      Sinks.upsertParquet(Seq((2L, "B"), (3L, "c")).toDF("k", "v"), t, "k")
+      assert(rows === Map(1L -> "a", 2L -> "B", 3L -> "c"),
+        "a frame cached over the upserted path must return the new rows")
+      stillCached("upsertParquet")
+      Sinks.compactParquet(spark, t, targetFiles = 1)
+      assert(rows === Map(1L -> "a", 2L -> "B", 3L -> "c"))
+      stillCached("compactParquet")
+      Sinks.writeAndReadBack(spark, Seq((4L, "d")).toDF("k", "v"), t)
+      assert(rows === Map(4L -> "d"),
+        "a frame cached over the rewritten path must return the new rows")
+      stillCached("writeAndReadBack")
+      val parted = s"$root/parted"
+      Sinks.writePartitioned((1L to 6L).map(k => (k, "v", 1)).toDF("k", "v", "p"),
+        parted, Seq("p"), maxRecordsPerFile = 2L)
+      assert(Sinks.compactPartitions(spark, parted, targetFiles = 1, minFiles = 2) === 1)
+      stillCached("compactPartitions")
+    } finally { unrelated.unpersist(); cached.unpersist(): Unit }
   }
 
   test("compactPartitions rewrites only fragmented partitions, preserving rows") {
@@ -459,28 +431,5 @@ class SourcesSpec extends SparkSpec {
     assert(back.schema === df.schema)
     assert(back.except(df).count() === 0)
     assert(df.except(back).count() === 0)
-  }
-
-  test("applyChangesPartitioned rejects a NULL delete key loudly") {
-    // ADVICE_r13: every equality in the merge (full_outer) and in the
-    // wrong-partition probe (left_anti/left_semi) is null-dropping, so a
-    // delete row with a NULL key used to read as "absent from the table
-    // entirely" and converge silently as a presumed replay no-op — a
-    // malformed change batch must fail instead, with the table untouched.
-    import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_changes_nk").toString + "/t"
-    Sinks.writePartitioned(
-      Seq((1L, "a", 10), (2L, "b", 20)).toDF("k", "v", "p"), dir, Seq("p"))
-    val e = intercept[IllegalArgumentException] {
-      Sinks.applyChangesPartitioned(spark, dir,
-        deletes = Seq((Option.empty[Long], 10)).toDF("k", "p"),
-        upserts = Seq((9L, "z", 10)).toDF("k", "v", "p"),
-        key = "k", partitionCol = "p")
-    }
-    assert(e.getMessage.contains("NULL key"),
-      s"expected the NULL-delete-key rejection, got: ${e.getMessage}")
-    val got = spark.read.parquet(dir).collect()
-      .map(r => r.getAs[Long]("k") -> r.getAs[String]("v")).toMap
-    assert(got === Map(1L -> "a", 2L -> "b"), "table must be untouched")
   }
 }

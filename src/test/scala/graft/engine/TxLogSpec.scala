@@ -8,6 +8,7 @@ import org.apache.spark.sql.functions._
   * cannot rule out), and crash-tolerance of the claim step.
   */
 class TxLogSpec extends graft.SparkSpec {
+  import TxLogSpec.partitionState
 
   private def table(tag: String): String =
     java.nio.file.Files.createTempDirectory(s"graft_txlog_$tag").toString + "/t"
@@ -394,5 +395,77 @@ class TxLogSpec extends graft.SparkSpec {
         key = "k", partitionCol = "p")
     }
     assert(ne.getMessage.contains("NULL key"))
+  }
+
+  test("upsertPartitioned keeps untouched partitions' manifest entries and files") {
+    import spark.implicits._
+    val t = table("upsert_p")
+    TxLog.append(Seq((1L, "a", 10), (2L, "b", 10), (3L, "c", 20), (4L, "d", 30))
+      .toDF("k", "v", "p"), t, Some("p"))
+    val (p20, p30) = (partitionState(spark, t, "p=20"), partitionState(spark, t, "p=30"))
+    assert(p20._1.nonEmpty && p30._1.nonEmpty)
+    // batch touches ONLY p=10: replaces key 2, inserts key 9
+    TxLog.upsertPartitioned(spark, t,
+      Seq((2L, "B", 10), (9L, "z", 10)).toDF("k", "v", "p"), "k", "p")
+    assert(partitionState(spark, t, "p=20") === p20,
+      "untouched partition p=20 must keep its entries and exact files")
+    assert(partitionState(spark, t, "p=30") === p30,
+      "untouched partition p=30 must keep its entries and exact files")
+    val got = TxLog.read(spark, t).collect()
+      .map(r => r.getAs[Long]("k") -> ((r.getAs[String]("v"), r.getAs[Int]("p")))).toMap
+    assert(got === Map(1L -> ("a", 10), 2L -> ("B", 10), 9L -> ("z", 10),
+      3L -> ("c", 20), 4L -> ("d", 30)))
+    // an empty batch (a no-data streaming trigger) commits nothing
+    assert(TxLog.upsertPartitioned(spark, t,
+      Seq.empty[(Long, String, Int)].toDF("k", "v", "p"), "k", "p") === 1L)
+    assert(TxLog.snapshot(spark, t).version === 1L)
+    // a merge into a table with no log yet lays down version 0
+    val fresh = table("upsert_p_fresh")
+    assert(TxLog.upsertPartitioned(spark, fresh,
+      Seq((7L, "q", 40)).toDF("k", "v", "p"), "k", "p") === 0L)
+    assert(TxLog.read(spark, fresh).count() === 1L)
+  }
+
+  test("applyChanges round-trips NULL and escape-needing partition values") {
+    import spark.implicits._
+    val t = table("changes_n")
+    TxLog.append(Seq((1L, "a", Some("x y")), (2L, "b", None), (3L, "c", Some("x y")),
+        (4L, "d", Some("2024/01"))).toDF("k", "v", "p"), t, Some("p"))
+    val tokens = TxLog.snapshot(spark, t).entries.flatMap(_.partition).toSet
+    assert(tokens === Set("p=x y", "p=__HIVE_DEFAULT_PARTITION__", "p=2024%2F01"),
+      s"fixture must land a Hive default (null) and an escaped partition: $tokens")
+    def got = TxLog.read(spark, t).collect()
+      .map(r => r.getAs[Long]("k") -> ((r.getAs[String]("v"), r.getAs[String]("p")))).toMap
+    // delete k=2 — EMPTIES the null partition; replace k=1 inside "x y";
+    // move k=4 within "2024/01" to a new key — its delete only finds the
+    // row through the escaped directory token
+    TxLog.applyChanges(spark, t,
+      deletes = Seq((2L, None: Option[String]), (4L, Some("2024/01"))).toDF("k", "p"),
+      upserts = Seq((1L, "A", Some("x y")), (5L, "e", Some("2024/01"))).toDF("k", "v", "p"),
+      key = "k", partitionCol = "p")
+    assert(!TxLog.snapshot(spark, t).entries
+      .exists(_.partition.contains("p=__HIVE_DEFAULT_PARTITION__")),
+      "an emptied null partition must drop out of the manifest")
+    assert(got === Map(1L -> ("A", "x y"), 3L -> ("c", "x y"), 5L -> ("e", "2024/01")))
+    // and back into the null partition
+    TxLog.upsertPartitioned(spark, t,
+      Seq((6L, "f", None: Option[String])).toDF("k", "v", "p"), "k", "p")
+    assert(got.get(6L) === Some(("f", null)))
+  }
+}
+
+object TxLogSpec {
+
+  /** The live manifest entries of one partition, with (name, length,
+    * mtime) of each entry's file — equality means a merge neither
+    * re-pointed nor rewrote the partition.
+    */
+  def partitionState(spark: org.apache.spark.sql.SparkSession, t: String, token: String)
+      : (Seq[TxLog.FileEntry], Set[(String, Long, Long)]) = {
+    val es = TxLog.snapshot(spark, t).entries.filter(_.partition.contains(token))
+    (es, es.map { e =>
+      val f = new java.io.File(new org.apache.hadoop.fs.Path(e.path).toUri.getPath)
+      (f.getName, f.length(), f.lastModified())
+    }.toSet)
   }
 }

@@ -156,20 +156,24 @@ class EventStreamsSpec extends SparkSpec {
     val counts = in.toDF().groupBy("event_type", "user_id")
       .agg(count(lit(1)).as("n"))
     val q = EventStreams.startUpsertSink(
-      counts, s"$dir/out", s"$dir/ckpt", "user_id", partitionCols = Seq("event_type"))
+      counts, s"$dir/out", s"$dir/ckpt", "user_id", partitionCol = Some("event_type"))
     try {
       in.addData(Event(1L, ts(0), 7L, "click", 1.0), Event(2L, ts(1), 8L, "view", 2.0))
       q.processAllAvailable()
+      // the view partition's live manifest entries, with each file's mtime
       def files(p: String): Set[(String, Long)] =
-        new java.io.File(s"$dir/out/event_type=$p").listFiles()
-          .filter(_.getName.endsWith(".parquet"))
-          .map(f => (f.getName, f.lastModified())).toSet
+        graft.engine.TxLog.snapshot(spark, s"$dir/out").entries
+          .filter(_.partition.contains(s"event_type=$p"))
+          .map(e => e.path -> new java.io.File(
+            new org.apache.hadoop.fs.Path(e.path).toUri.getPath).lastModified())
+          .toSet
       val viewBefore = files("view")
+      assert(viewBefore.nonEmpty)
       in.addData(Event(3L, ts(2), 7L, "click", 1.0)) // only the click partition re-emits
       q.processAllAvailable()
       assert(files("view") === viewBefore,
         "a batch touching only event_type=click must not rewrite event_type=view")
-      val out = spark.read.parquet(s"$dir/out")
+      val out = graft.engine.TxLog.read(spark, s"$dir/out")
         .collect().map(r => (r.getAs[String]("event_type"), r.getAs[Long]("user_id")) ->
           r.getAs[Long]("n")).toMap
       assert(out === Map(("click", 7L) -> 2L, ("view", 8L) -> 1L), s"got $out")
