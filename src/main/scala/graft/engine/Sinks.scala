@@ -10,6 +10,10 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
   * modeled as a trait so the BigQuery connector (unreachable here: external
   * service + connector jar) and the local Parquet stand-in are the same code
   * path to callers.
+  *
+  * Sinks write whole directories or partitions; none merges by key. Keyed
+  * upserts and change sets commit through the table log ([[TxLog.upsert]],
+  * [[TxLog.applyChanges]]), which never deletes or renames the live table.
   */
 object Sinks {
 
@@ -298,58 +302,16 @@ object Sinks {
     obs.get
   }
 
-  /** Keyed parquet upsert: rows of `batch` replace same-key rows of the
-    * directory (insert when absent) — the lake-table merge primitive under
-    * the streaming foreachBatch sink and incremental batch loads alike.
-    * Requires key-unique `batch` rows. Same safe temp-swap as
-    * [[compactParquet]]: never overwrites the directory it is lazily
-    * reading. At warehouse scale this becomes MERGE INTO on a table format
-    * with transactional commits; the join shape (existing LEFT ANTI batch,
-    * union batch) is identical.
-    *
-    * Concurrency contract: the per-call staging only isolates the STAGING
-    * step. Two concurrent whole-table upserts of the same path still race
-    * read-merge-swap (both merge from v0; the second swap silently drops
-    * the first's batch) — the whole-table form is single-writer by design.
-    * Partitioned tables and concurrent writers merge through the commit
-    * log instead: [[TxLog.applyChanges]] / [[TxLog.upsertPartitioned]]
-    * touch only the named partitions, with optimistic concurrency for
-    * writers and snapshot isolation for readers.
-    */
-  def upsertParquet(batch: DataFrame, path: String, key: String): Unit = {
-    val spark = batch.sparkSession
-    import org.apache.hadoop.fs.Path
-    val dest = new Path(path)
-    val fs = dest.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(dest)) { writeParquet(batch, path); return }
-    val merged = spark.read.parquet(path)
-      .join(batch.select(key), Seq(key), "left_anti")
-      .unionByName(batch)
-    val tmp = new Path(stagingDir(path, "upsert", spark))
-    // cleanup is scoped to the STAGING WRITE only (ADVICE_r12): a failed
-    // merge write must not orphan the per-call directory (a retrying
-    // streaming sink would accumulate one per attempt), but once
-    // fs.delete(dest) has removed the table, tmp holds the ONLY copy of
-    // the merged data — a failed swap must leave it on disk for manual
-    // recovery, never delete it on the way out
-    try merged.write.mode(SaveMode.Overwrite).parquet(tmp.toString)
-    catch { case e: Throwable => fs.delete(tmp, true); throw e }
-    fs.delete(dest, true)
-    require(fs.rename(tmp, dest),
-      s"upsert swap failed for $path — merged data preserved at $tmp")
-    spark.catalog.refreshByPath(path)
-  }
-
-  /** Per-call staging directory for the swap sinks ([[upsertParquet]],
-    * the ANN serving log): a fixed `path + "__upsert_tmp"` sibling lets two
-    * writers of the SAME path stage into one shared directory and clobber
-    * each other's data. The applicationId scopes staging per driver, the
-    * UUID per call (two in-flight writers of one path inside a single
-    * app — e.g. two streaming queries — stay disjoint too). Each call
-    * renames its staging into place or deletes it before returning, so
-    * orphans only survive a crashed JVM; they are sibling directories
-    * (never inside the table root), invisible to partition discovery and
-    * readers.
+  /** Per-call staging directory for the ANN serving log's publish rename
+    * ([[graft.streaming.EventStreams.startAnnServe]]): a fixed sibling
+    * name would let two writers of the SAME path stage into one shared
+    * directory and clobber each other's data. The applicationId scopes
+    * staging per driver, the UUID per call (two in-flight writers of one
+    * path inside a single app — e.g. two streaming queries — stay disjoint
+    * too). Each call renames its staging into place or deletes it before
+    * returning, so orphans only survive a crashed JVM; they are sibling
+    * directories (never inside the table root), invisible to partition
+    * discovery and readers.
     */
   private[graft] def stagingDir(path: String, op: String, spark: SparkSession): String =
     s"${path}__${op}_tmp_${spark.sparkContext.applicationId}_${java.util.UUID.randomUUID()}"

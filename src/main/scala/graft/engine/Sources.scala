@@ -7,7 +7,7 @@ import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.parquet.hadoop.{Footer, ParquetFileReader}
 import org.apache.parquet.hadoop.util.HadoopInputFile
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, DataFrameReader, SparkSession}
 import org.apache.spark.sql.catalyst.csv.CSVOptions
 import org.apache.spark.sql.execution.datasources.CodecStreams
 import org.apache.spark.sql.execution.datasources.csv.CSVUtils
@@ -100,8 +100,15 @@ object Sources {
     * `spark.read.parquet`, so errors stay Spark's own. Directories of mixed
     * schemas need [[parquetMergedSchema]]. */
   def parquet(spark: SparkSession, path: String): DataFrame =
-    Try(footerSchema(spark, path)).fold(_ => spark.read.parquet(path),
-      spark.read.schema(_).parquet(path))
+    withFooterSchema(spark, path)(_.parquet(path))
+
+  /** `read` over a reader carrying the schema of the first data file under
+    * `probe` (a directory or a file), read on the driver; with no schema
+    * (plain inference, in a job) when that footer read fails. */
+  private[engine] def withFooterSchema(spark: SparkSession, probe: String)(
+      read: DataFrameReader => DataFrame): DataFrame =
+    Try(footerSchema(spark, probe)).fold(_ => read(spark.read),
+      s => read(spark.read.schema(s)))
 
   private def footerSchema(spark: SparkSession, path: String): StructType = {
     val conf = spark.sessionState.newHadoopConf()

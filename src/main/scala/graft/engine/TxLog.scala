@@ -6,10 +6,10 @@ import org.apache.spark.sql.functions.col
 
 /** Minimal optimistic-concurrency COMMIT LOG over parquet — the
   * multi-writer table format the round-12 frontier named (#5), and the
-  * engine's one partitioned keyed-merge protocol ([[applyChanges]]): the
-  * file-swap sink [[Sinks.upsertParquet]] is single-writer by contract,
-  * while a real lake coordinates concurrent writers through a
-  * transactional log, not external locks.
+  * engine's one keyed-merge protocol ([[applyChanges]], [[upsert]]) for
+  * partitioned and unpartitioned tables alike: a real lake coordinates
+  * concurrent writers through a transactional log, not external locks or
+  * a delete-then-rename directory swap.
   * This is the standard public protocol shape (a Delta-style ordered log
   * of commits; an Iceberg-style files-list manifest):
   *
@@ -309,22 +309,24 @@ object TxLog {
   }
 
   /** A manifest entry subset as one DataFrame (None when empty) — the
-    * read() body factored so the merge commit below can scan ONLY the
-    * touched partitions of the snapshot it observed.
+    * read() body factored so the merge commits below can scan ONLY the
+    * entries of the snapshot they observed. Every file of one commit dir
+    * comes from one staged write, so each scan takes its schema from one
+    * footer read on the driver ([[Sources.parquet]]'s rule) and builds
+    * with no schema-inference job; partition columns still come from the
+    * paths.
     */
   private def readEntries(spark: SparkSession,
       entries: Seq[FileEntry]): Option[DataFrame] = {
     val (parted, plain) = entries.partition(_.partition.isDefined)
-    val plainDf =
-      if (plain.isEmpty) Nil
-      else Seq(spark.read.parquet(plain.map(_.path): _*))
-    val partedDfs = parted.groupBy(e =>
-        new Path(e.path).getParent.getParent.toString)
-      .toSeq.sortBy(_._1)
-      .map { case (base, es) =>
-        spark.read.option("basePath", base).parquet(es.map(_.path): _*)
-      }
-    (plainDf ++ partedDfs).reduceOption(_ unionByName _)
+    val scans = (if (plain.isEmpty) Nil else Seq(None -> plain)) ++
+      parted.groupBy(e => new Path(e.path).getParent.getParent.toString)
+        .toSeq.sortBy(_._1).map { case (base, es) => Some(base) -> es }
+    scans.map { case (base, es) =>
+      val files = es.map(_.path)
+      Sources.withFooterSchema(spark, files.head)(r =>
+        base.fold(r)(r.option("basePath", _)).parquet(files: _*))
+    }.reduceOption(_ unionByName _)
   }
 
   /** Stage `df` under a fresh commit dir; returns the staged entries.
@@ -342,6 +344,9 @@ object TxLog {
     val fs = fsOf(spark, table)
     val dir = new Path(new Path(table, "data"),
       java.util.UUID.randomUUID().toString)
+    // a failed write leaves a commit dir nothing references: drop it
+    def write(w: => Unit): Unit =
+      try w catch { case e: Throwable => fs.delete(dir, true); throw e }
     val entries = partitionCol match {
       case Some(p) =>
         // explicit ADAPTIVE count (round 15): repartition(col) with no
@@ -351,8 +356,8 @@ object TxLog {
         // 33 of them) a 32-task job. The input-proportional count gives
         // tiny deltas one task and data-sized deltas the full writer
         // fan-out.
-        Partitions.spread(df, col(p))
-          .write.partitionBy(p).parquet(dir.toString)
+        write(Partitions.spread(df, col(p))
+          .write.partitionBy(p).parquet(dir.toString))
         fs.listStatus(dir).toSeq.filter(_.isDirectory).flatMap { d =>
           val token = d.getPath.getName
           fs.listStatus(d.getPath).toSeq
@@ -360,7 +365,7 @@ object TxLog {
             .map(s => FileEntry(s.getPath.toString, Some(token)))
         }
       case None =>
-        df.write.parquet(dir.toString)
+        write(df.write.parquet(dir.toString))
         fs.listStatus(dir).toSeq
           .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
           .map(s => FileEntry(s.getPath.toString, None))
@@ -435,13 +440,6 @@ object TxLog {
         renderEntries(full).getBytes("UTF-8"))): Unit
     }
 
-  /** The optimistic-retry commit core: compute the next live set from the
-    * latest COMMITTED snapshot, claim the next FREE version number (above
-    * every number present, committed or burned — a crashed claim must not
-    * livelock its successors) with the DELTA manifest, retry on a lost
-    * race. `next` must be a pure function of the observed snapshot — it
-    * re-runs per attempt.
-    */
   /** Test-only interleave seam: invoked once per commit ATTEMPT, before the
     * attempt's snapshot read — lets a spec deterministically land a
     * concurrent commit inside the [baseline read -> claim] window that a
@@ -450,8 +448,21 @@ object TxLog {
     */
   private[engine] var testInterleave: () => Unit = () => ()
 
-  private def commit(spark: SparkSession, table: String, maxRetries: Int)(
-      next: Snapshot => Seq[FileEntry]): Long = {
+  /** The optimistic-retry commit core: compute the next live set from the
+    * latest COMMITTED snapshot, claim the next FREE version number (above
+    * every number present, committed or burned — a crashed claim must not
+    * livelock its successors) with the DELTA manifest, retry on a lost
+    * race. `next` must be a pure function of the observed snapshot — it
+    * re-runs per attempt — and returns None when there is nothing to
+    * commit (the observed version is returned). With `restage`, `next`
+    * stages its own files on every attempt (the keyed merges, computed
+    * against the snapshot they observed): a lost claim deletes that
+    * attempt's staging, which nothing references, and the retry re-merges
+    * on the new snapshot. Without, the files were staged once before the
+    * loop and a retry only re-points the manifest.
+    */
+  private def commit(spark: SparkSession, table: String, maxRetries: Int,
+      restage: Boolean = false)(next: Snapshot => Option[Seq[FileEntry]]): Long = {
     val fs = fsOf(spark, table)
     fs.mkdirs(logDir(table))
     var attempt = 0
@@ -459,26 +470,35 @@ object TxLog {
       testInterleave()
       // ONE listing yields both the observed snapshot and the claim
       // target (see listLog): anything that commits after this listing
-      // takes `target` first, failing this claim into a rebase
+      // — a merge's stage takes seconds — takes `target` first, failing
+      // this claim into a rebase
       val (versions, checkpoints) = listLog(fs, table)
       val snap = snapshotFrom(fs, table, versions, checkpoints)
       val target = (versions :+ snap.version :+ -1L).max + 1
-      val full = next(snap)
+      val full = next(snap) match {
+        case Some(f) => f
+        case None => return snap.version
+      }
       val oldPaths = snap.entries.map(_.path).toSet
       val newPaths = full.map(_.path).toSet
-      val delta = renderDelta(
-        full.filterNot(e => oldPaths.contains(e.path)),
+      val added = full.filterNot(e => oldPaths.contains(e.path))
+      val delta = renderDelta(added,
         snap.entries.map(_.path).filterNot(newPaths.contains))
       if (atomicClaim(fs, versionFile(table, target),
           delta.getBytes("UTF-8"))) {
         maybeCheckpoint(fs, table, target, full)
         return target
       }
+      if (restage) dropStaged(fs, added)
       attempt += 1 // another writer claimed it first — rebase and retry
     }
     throw new IllegalStateException(
       s"txlog commit contention exceeded $maxRetries retries for $table")
   }
+
+  /** Delete one attempt's staging: its entries share one commit dir. */
+  private def dropStaged(fs: FileSystem, staged: Seq[FileEntry]): Unit =
+    staged.headOption.foreach(e => fs.delete(commitDirOf(new Path(e.path)), true): Unit)
 
   /** Append-commit: the new snapshot is everything live plus the staged
     * files. Concurrent appends never conflict semantically — collisions
@@ -489,7 +509,7 @@ object TxLog {
       partitionCol: Option[String] = None,
       statsCol: Option[String] = None, maxRetries: Int = 20): Long = {
     val staged = stage(df, table, partitionCol, statsCol)
-    commit(df.sparkSession, table, maxRetries)(snap => snap.entries ++ staged)
+    commit(df.sparkSession, table, maxRetries)(snap => Some(snap.entries ++ staged))
   }
 
   /** Retention-windowed GC — the maintenance leg of the log (round 13):
@@ -607,16 +627,16 @@ object TxLog {
             s"(v${baseline.version} -> v${snap.version}); re-read and " +
             "re-issue the replacement so the appended rows are not " +
             "silently dropped")
-      snap.entries.filterNot(_.partition.exists(tokens)) ++ staged
+      Some(snap.entries.filterNot(_.partition.exists(tokens)) ++ staged)
     }
   }
 
   /** Partition-scoped keyed MERGE through the commit log — the one
     * partitioned keyed-merge protocol of the engine (the streaming upsert
-    * sinks, the incremental maintenance gates and [[upsertPartitioned]]
-    * all commit through it): `deletes` keys are removed, `upserts` rows
-    * inserted or replaced by key, and only the partitions the change set
-    * names are read and rewritten. Concurrent writers get optimistic
+    * sinks, the incremental maintenance gates and [[upsert]] into a
+    * partitioned table all commit through it): `deletes` keys are
+    * removed, `upserts` rows inserted or replaced by key, and only the
+    * partitions the change set names are read and rewritten. Concurrent writers get optimistic
     * concurrency and readers snapshot isolation.
     *
     * Each attempt: read ONLY the touched partitions of the OBSERVED
@@ -657,7 +677,6 @@ object TxLog {
       partitionCol: String, maxRetries: Int = 20): Long = {
     import org.apache.spark.sql.functions.{coalesce, lit, max, sum, when}
     val fs = fsOf(spark, table)
-    fs.mkdirs(logDir(table))
     val del = pinned(deletes); val up = pinned(upserts)
     try {
       // ONE collect, bounded by the partition count: the touched values,
@@ -679,15 +698,7 @@ object TxLog {
       val changeKeys = del.select(col(key)).withColumn("__is_del", lit(1))
         .unionByName(up.select(col(key)).withColumn("__is_del", lit(0)))
         .groupBy(key).agg(max(col("__is_del")).as("__del"))
-      var attempt = 0
-      while (attempt <= maxRetries) {
-        testInterleave()
-        // one listing for snapshot AND claim target (see listLog): the
-        // merge+stage below take seconds, and a commit landing in that
-        // window must fail this claim, never be leapfrogged
-        val (versions, checkpoints) = listLog(fs, table)
-        val snap = snapshotFrom(fs, table, versions, checkpoints)
-        val target = (versions :+ snap.version :+ -1L).max + 1
+      commit(spark, table, maxRetries, restage = true) { snap =>
         val touchedEntries = snap.entries.filter(_.partition.exists(tokens))
         val obs = org.apache.spark.sql.Observation(
           s"graft_txmerge_${java.util.UUID.randomUUID()}")
@@ -701,8 +712,6 @@ object TxLog {
             .unionByName(up)
         }
         val staged = stage(merged, table, Some(partitionCol))
-        def dropStaged(): Unit = staged.headOption.foreach(e =>
-          fs.delete(commitDirOf(new Path(e.path)), true): Unit)
         // an EMPTY touched read means every delete key is a miss (the
         // audit frame never ran) — they are all replays or wrong-partition
         val missed =
@@ -718,7 +727,7 @@ object TxLog {
               "left_semi")
             .count()
           if (wrongPartition > 0L) {
-            dropStaged()
+            dropStaged(fs, staged)
             throw new IllegalArgumentException(
               s"TxLog.applyChanges: $wrongPartition delete key(s) live in " +
                 s"partitions of $table their delete rows do not name — " +
@@ -730,42 +739,58 @@ object TxLog {
                 "have converged as a no-op.")
           }
         }
-        val manifest =
-          snap.entries.filterNot(_.partition.exists(tokens)) ++ staged
-        if (atomicClaim(fs, versionFile(table, target),
-            renderDelta(staged, touchedEntries.map(_.path)).getBytes("UTF-8"))) {
-          maybeCheckpoint(fs, table, target, manifest)
-          return target
-        }
-        // lost the race: this attempt's merge was computed against a
-        // superseded snapshot — discard its staging (referenced by
-        // nothing) and re-merge on the new latest
-        dropStaged()
-        attempt += 1
+        Some(snap.entries.filterNot(_.partition.exists(tokens)) ++ staged)
       }
-      throw new IllegalStateException(
-        s"txlog merge contention exceeded $maxRetries retries for $table")
     } finally { del.unpersist(); up.unpersist(): Unit }
   }
 
   /** Cache a change frame the merge reads several times — unless it is
     * already driver-local rows (a literal batch, or a filter the optimizer
-    * folded to empty, as [[upsertPartitioned]]'s deletes), where a cache
-    * only adds a build job.
+    * folded to empty, as [[upsert]]'s deletes), where a cache only adds a
+    * build job.
     */
   private def pinned(df: DataFrame): DataFrame = df.queryExecution.optimizedPlan match {
     case _: org.apache.spark.sql.catalyst.plans.logical.LocalRelation => df
     case _ => df.persist()
   }
 
-  /** Keyed upsert through the commit log: [[applyChanges]] with no
-    * deletes — rows of `batch` replace same-key rows, insert otherwise,
-    * touching only the batch's partitions.
+  /** Keyed upsert through the commit log: rows of `batch` (key-unique)
+    * replace same-key rows and insert otherwise; a table with no log yet
+    * gets version 0. With `partitionCol` (the layout rule of [[append]])
+    * it is [[applyChanges]] with no deletes, touching only the batch's
+    * partitions. Without, each attempt merges the whole observed snapshot
+    * (existing rows whose key the batch carries are dropped, the batch is
+    * unioned in) into one staged write and claims a version whose manifest
+    * is that write alone — a table-sized rewrite, fine for the small
+    * bounded-key tables that stay unpartitioned. Nothing is deleted or
+    * renamed in place, so a failed write leaves the prior version live and
+    * concurrent upserts compose; an `observe()` count of the batch rides
+    * the staged write, and an empty batch into an existing table drops its
+    * staging and commits nothing (a no-data streaming trigger), where into
+    * a missing table it commits version 0 with the batch's schema.
     */
-  def upsertPartitioned(spark: SparkSession, table: String, batch: DataFrame,
-      key: String, partitionCol: String, maxRetries: Int = 20): Long =
-    applyChanges(spark, table, batch.filter(org.apache.spark.sql.functions.lit(false)),
-      batch, key, partitionCol, maxRetries)
+  def upsert(spark: SparkSession, table: String, batch: DataFrame, key: String,
+      partitionCol: Option[String] = None, maxRetries: Int = 20): Long = {
+    import org.apache.spark.sql.functions.{count, lit}
+    partitionCol match {
+      case Some(p) =>
+        applyChanges(spark, table, batch.filter(lit(false)), batch, key, p, maxRetries)
+      case None =>
+        val fs = fsOf(spark, table)
+        commit(spark, table, maxRetries, restage = true) { snap =>
+          val obs = org.apache.spark.sql.Observation(
+            s"graft_txupsert_${java.util.UUID.randomUUID()}")
+          val counted = batch.observe(obs, count(lit(1)).as("rows"))
+          // read in the batch's session: the staged write then runs there,
+          // where the observation listens
+          val staged = stage(readEntries(batch.sparkSession, snap.entries).fold(counted)(
+            _.join(batch.select(key), Seq(key), "left_anti").unionByName(counted)),
+            table, None)
+          if (snap.version < 0 || obs.get("rows").asInstanceOf[Long] > 0L) Some(staged)
+          else { dropStaged(fs, staged); None }
+        }
+    }
+  }
 
   /** Age-gated ORPHAN reclaim — the data-directory sweep [[vacuum]]
     * deliberately does not do: a commit-dir under `data/` referenced by NO

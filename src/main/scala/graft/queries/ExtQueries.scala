@@ -2553,7 +2553,7 @@ object ExtQueries {
       (s, dir) => {
         val base = Scratch.dir(s, dir, "stream_content_dedup")
         val src = base + "_src"
-        Seq(base, base + "_ckpt", base + "__upsert_tmp", src, src + "_tmp")
+        Seq(base, base + "_ckpt", src, src + "_tmp")
           .foreach(graft.engine.Scratch.rm)
         new java.io.File(src).mkdirs(): Unit
         java.nio.file.Files.copy(
@@ -2576,13 +2576,13 @@ object ExtQueries {
         graft.streaming.EventStreams.runDrained(s)(
           deduped.writeStream
             .foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>
-              Sinks.upsertParquet(b, base, "__key")
+              TxLog.upsert(b.sparkSession, base, b, "__key"): Unit
             }
             .option("checkpointLocation", base + "_ckpt")
             .outputMode("append")
             .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
             .start())
-        s.read.parquet(base)
+        TxLog.read(s, base)
           .select(col("__key").as("fp"), col("lang"), col("n_chars"))
           .orderBy("fp")
       },

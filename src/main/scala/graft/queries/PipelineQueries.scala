@@ -1749,26 +1749,26 @@ object PipelineQueries {
       """.trim
       }),
 
-    // Keyed-upsert (MERGE) round-trip through the parquet warehouse sink:
-    // write the base table, upsert a delta that UPDATES every key%5==0 row
-    // and would INSERT unseen keys, read back. The oracle states the merge
-    // contract directly with a CASE over the base — matched keys take the
-    // delta row, everything else passes through (Sinks.upsertParquet is the
-    // batch twin of the streaming exactly-once-per-key sink, X63).
+    // Keyed-upsert (MERGE) round-trip through the commit log: append the
+    // base table, upsert a delta that UPDATES every key%5==0 row and would
+    // INSERT unseen keys, read back. The oracle states the merge contract
+    // directly with a CASE over the base — matched keys take the delta
+    // row, everything else passes through (TxLog.upsert is also the merge
+    // under the streaming exactly-once-per-key sink, X63).
     Q(
       "q109_upsert_roundtrip",
       (s, dir) => {
         val path = Scratch.dir(s, dir, "upsert_tgt")
-        graft.engine.Scratch.rm(path); graft.engine.Scratch.rm(path + "__upsert_tmp")
+        graft.engine.Scratch.rm(path)
         val base = Tables.orders(s, dir).select(
           col("o_orderkey"), col("o_orderstatus").as("status"),
           col("o_totalprice").cast("double").as("price"))
-        Sinks.writeParquet(base, path)
+        TxLog.append(base, path)
         val delta = base.filter(col("o_orderkey") % 5 === 0)
           .withColumn("price", col("price") * 2)
           .withColumn("status", lit("U"))
-        Sinks.upsertParquet(delta, path, "o_orderkey")
-        s.read.parquet(path).orderBy("o_orderkey")
+        TxLog.upsert(s, path, delta, "o_orderkey")
+        TxLog.read(s, path).orderBy("o_orderkey")
       },
       Some("""
         SELECT o_orderkey,
@@ -1987,7 +1987,6 @@ object PipelineQueries {
       (s, dir) => {
         val base = Scratch.dir(s, dir, "stream_gate")
         graft.engine.Scratch.rm(base); graft.engine.Scratch.rm(base + "_ckpt")
-        graft.engine.Scratch.rm(base + "__upsert_tmp")
         val agg = graft.streaming.EventStreams.streamingEvents(s, dir)
           .groupBy(window(col("ts"), "1 hour"), col("event_type"))
           .agg(count(lit(1)).as("n_events"), Exact.sumD(col("value"), 6).as("sum_value"))
@@ -1998,13 +1997,13 @@ object PipelineQueries {
         graft.streaming.EventStreams.runDrained(s)(
           agg.writeStream
             .foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>
-              Sinks.upsertParquet(b, base, "__key")
+              TxLog.upsert(b.sparkSession, base, b, "__key"): Unit
             }
             .option("checkpointLocation", base + "_ckpt")
             .outputMode("update")
             .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
             .start())
-        s.read.parquet(base).drop("__key").orderBy("bucket", "event_type")
+        TxLog.read(s, base).drop("__key").orderBy("bucket", "event_type")
       },
       Some("""
         SELECT date_trunc('hour', ts) AS bucket, event_type,
@@ -2231,7 +2230,6 @@ object PipelineQueries {
       (s, dir) => {
         val base = Scratch.dir(s, dir, "stream_dedup")
         graft.engine.Scratch.rm(base); graft.engine.Scratch.rm(base + "_ckpt")
-        graft.engine.Scratch.rm(base + "__upsert_tmp")
         val deduped = graft.streaming.EventStreams.dedupStream(
             graft.streaming.EventStreams.streamingEvents(s, dir),
             Seq("user_id", "event_type"))
@@ -2241,13 +2239,13 @@ object PipelineQueries {
         graft.streaming.EventStreams.runDrained(s)(
           deduped.writeStream
             .foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>
-              Sinks.upsertParquet(b, base, "__key")
+              TxLog.upsert(b.sparkSession, base, b, "__key"): Unit
             }
             .option("checkpointLocation", base + "_ckpt")
             .outputMode("append")
             .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
             .start())
-        s.read.parquet(base).drop("__key").orderBy("user_id", "event_type")
+        TxLog.read(s, base).drop("__key").orderBy("user_id", "event_type")
       },
       Some("""
         SELECT DISTINCT user_id, event_type FROM events
@@ -3271,7 +3269,7 @@ object PipelineQueries {
         import graft.streaming.EventStreams
         val base = Scratch.dir(s, dir, "stream_sessions")
         val src = base + "_src"
-        Seq(base, base + "_ckpt", base + "__upsert_tmp", src, src + "_tmp")
+        Seq(base, base + "_ckpt", src, src + "_tmp")
           .foreach(graft.engine.Scratch.rm)
         new java.io.File(src).mkdirs(): Unit
         // Source file 1: the events table verbatim (raw nanos-long ts).
@@ -3314,13 +3312,13 @@ object PipelineQueries {
         graft.streaming.EventStreams.runDrained(s)(
           sessions.writeStream
             .foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>
-              Sinks.upsertParquet(b, base, "__key")
+              TxLog.upsert(b.sparkSession, base, b, "__key"): Unit
             }
             .option("checkpointLocation", base + "_ckpt")
             .outputMode("append")
             .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
             .start())
-        s.read.parquet(base)
+        TxLog.read(s, base)
           .select("user_id", "session_start", "session_end", "n_events")
           .orderBy("user_id", "session_start")
       },
@@ -3356,8 +3354,7 @@ object PipelineQueries {
       "q173_stream_interval_join_gate",
       (s, dir) => {
         val base = Scratch.dir(s, dir, "stream_ivjoin")
-        Seq(base, base + "_ckpt", base + "__upsert_tmp")
-          .foreach(graft.engine.Scratch.rm)
+        Seq(base, base + "_ckpt").foreach(graft.engine.Scratch.rm)
         val ev = graft.streaming.EventStreams.streamingEvents(s, dir)
         val joined = graft.streaming.EventStreams.intervalJoinStream(
             ev.filter(col("event_type") === "purchase"),
@@ -3371,13 +3368,13 @@ object PipelineQueries {
         graft.streaming.EventStreams.runDrained(s)(
           joined.writeStream
             .foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>
-              Sinks.upsertParquet(b, base, "__key")
+              TxLog.upsert(b.sparkSession, base, b, "__key"): Unit
             }
             .option("checkpointLocation", base + "_ckpt")
             .outputMode("append")
             .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
             .start())
-        s.read.parquet(base).drop("__key").orderBy("purchase_id", "view_id")
+        TxLog.read(s, base).drop("__key").orderBy("purchase_id", "view_id")
       },
       Some("""
         SELECT p.user_id, p.event_id AS purchase_id, v.event_id AS view_id,

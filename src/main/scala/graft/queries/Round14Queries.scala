@@ -150,7 +150,7 @@ object Round14Queries {
         graft.engine.Scratch.rm(scr)
         val t = s"$scr/t"
         val docs = Tables.documents(s, dir).select("doc_id", "n_chars", "lang")
-        graft.engine.TxLog.upsertPartitioned(s, t, docs, "doc_id", "lang")
+        graft.engine.TxLog.upsert(s, t, docs, "doc_id", Some("lang"))
         val b = pmod(graft.ext.TextHash.hash60(
           concat(lit("txm#"), col("doc_id").cast("string"))), lit(8L))
         val deletes = docs

@@ -412,7 +412,7 @@ object Round9Queries {
         val delta = e.filter(deltaPredSpark)
         // seed the code table with the base snapshot's codes as a CELL-
         // PARTITIONED commit-log table: the streaming upsert is the log's
-        // partition-scoped merge (TxLog.upsertPartitioned), so each
+        // partition-scoped merge (TxLog.upsert by "cell"), so each
         // micro-batch rewrites only the cells it touches — never the whole
         // table per trigger. The pivot below groups and orders by key, so
         // the hash does not depend on the file layout.

@@ -243,10 +243,10 @@ object EventStreams {
     * checkpoint-replayed batches land idempotently. The code table is a
     * CELL-PARTITIONED commit-log table (the same inverted-list layout the
     * search coordinator prunes on, SharedFrames.ivfPqIndex; read it with
-    * `TxLog.read`) and the upsert is
-    * [[graft.engine.TxLog.upsertPartitioned]]: a micro-batch touching k
-    * cells reads and rewrites only those k cells' files — never the whole
-    * table, which at 100 TB would be a full-table rewrite per trigger.
+    * `TxLog.read`) and the upsert is the log's partition-scoped
+    * [[graft.engine.TxLog.upsert]]: a micro-batch touching k cells reads
+    * and rewrites only those k cells' files — never the whole table, which
+    * at 100 TB would be a full-table rewrite per trigger.
     * AvailableNow trigger: the ingest drains whatever arrivals are staged
     * and terminates (callers awaitTermination); a continuous deployment
     * would swap the trigger, nothing else.
@@ -259,11 +259,11 @@ object EventStreams {
       .foreachBatch { (batch: DataFrame, _: Long) =>
         // partition col is "cell": IvfPq.assignCodes pins its output shape
         // to (id, cell, m, g) whatever the input column names were
-        graft.engine.TxLog.upsertPartitioned(batch.sparkSession, outDir,
+        graft.engine.TxLog.upsert(batch.sparkSession, outDir,
           graft.ext.IvfPq.assignCodes(
             graft.ext.IvfPq.residualParts(batch, cents, idCol, vecCol, cellCol),
             cw),
-          "id", "cell"): Unit
+          "id", Some("cell")): Unit
       }
       .option("checkpointLocation", checkpointDir)
       .outputMode(OutputMode.Update)
@@ -356,17 +356,16 @@ object EventStreams {
       .start()
 
   /** Keyed-upsert sink via foreachBatch (update output mode): each
-    * micro-batch's rows replace same-key rows of the parquet target, so
-    * state-store re-emissions and replayed batches land idempotently — the
-    * exactly-once-per-key pattern for aggregation streams writing to a
-    * lake table. `partitionCol` selects the merge scope: a column routes
-    * through the commit log's PARTITION-SCOPED upsert
-    * ([[graft.engine.TxLog.upsertPartitioned]] — only the partitions the
-    * batch touches are read and rewritten, the 100 TB contract; requires
-    * each key's partition value to be final, e.g. a window-start date
-    * column; read the table with `TxLog.read`); None keeps the plain
-    * whole-table parquet form for small unpartitioned targets
-    * (bounded-key aggregate tables), where partitions would cost more
+    * micro-batch commits [[graft.engine.TxLog.upsert]] into the commit-log
+    * table `outDir` (read it with `TxLog.read`), so its rows replace
+    * same-key rows and state-store re-emissions and replayed batches land
+    * idempotently — the exactly-once-per-key pattern for aggregation
+    * streams writing to a lake table. `partitionCol` selects the merge
+    * scope: a column makes the upsert PARTITION-SCOPED (only the
+    * partitions the batch touches are read and rewritten, the 100 TB
+    * contract; requires each key's partition value to be final, e.g. a
+    * window-start date column); None merges the whole table per batch, for
+    * small bounded-key aggregate tables where partitions would cost more
     * than they save.
     */
   def startUpsertSink(df: DataFrame, outDir: String, checkpointDir: String,
@@ -374,11 +373,8 @@ object EventStreams {
       org.apache.spark.sql.streaming.StreamingQuery =
     df.writeStream
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        partitionCol match {
-          case None => graft.engine.Sinks.upsertParquet(batch, outDir, key)
-          case Some(p) => graft.engine.TxLog.upsertPartitioned(
-            batch.sparkSession, outDir, batch, key, p): Unit
-        }
+        graft.engine.TxLog.upsert(batch.sparkSession, outDir, batch, key,
+          partitionCol): Unit
       }
       .option("checkpointLocation", checkpointDir)
       .outputMode(OutputMode.Update)

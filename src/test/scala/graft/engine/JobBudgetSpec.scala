@@ -124,8 +124,9 @@ class JobBudgetSpec extends SparkSpec {
   // The partition-scoped merge behind the streaming upsert sinks and the
   // incremental maintenance gates, on a 40-row table in 4 partitions.
   // Computed (not literal) change frames, as the gates pass them, so the
-  // cached-change path is the one counted. Measured: 9 jobs for a merge
-  // with deletes, 8 for an upsert (its folded-away deletes are not cached).
+  // cached-change path is the one counted. Measured: 8 jobs for a merge
+  // with deletes, 7 for an upsert (its folded-away deletes are not cached);
+  // each was one more while the touched read inferred its schema in a job.
   test("TxLog's partition-scoped merge stays within its job budget") {
     val t = tmp("budget_txmerge")
     TxLog.append(spark.range(1, 41).select(col("id").as("k"),
@@ -138,11 +139,61 @@ class JobBudgetSpec extends SparkSpec {
         key = "k", partitionCol = "p"): Unit
     }
     val upsert = jobsIn {
-      TxLog.upsertPartitioned(spark, t, spark.range(50, 52).select(col("id").as("k"),
-        lit("n").as("v"), (col("id") % 4).as("p")), "k", "p"): Unit
+      TxLog.upsert(spark, t, spark.range(50, 52).select(col("id").as("k"),
+        lit("n").as("v"), (col("id") % 4).as("p")), "k", Some("p")): Unit
     }
-    assert(merge <= 9 && upsert <= 8, s"merge=$merge upsert=$upsert")
+    assert(merge <= 8 && upsert <= 7, s"merge=$merge upsert=$upsert")
     assert(TxLog.read(spark, t).count() === 40L)
+  }
+
+  // TxLog.read as the commit log read it before its footer reads moved to
+  // the driver: one inferred scan per commit dir (plain files in one scan).
+  private def inferredRead(t: String): DataFrame = {
+    val (parted, plain) = TxLog.snapshot(spark, t).entries.partition(_.partition.isDefined)
+    val scans = (if (plain.isEmpty) Nil else Seq(spark.read.parquet(plain.map(_.path): _*))) ++
+      parted.groupBy(e => new org.apache.hadoop.fs.Path(e.path).getParent.getParent.toString)
+        .toSeq.sortBy(_._1).map { case (base, es) =>
+          spark.read.option("basePath", base).parquet(es.map(_.path): _*)
+        }
+    scans.reduce(_ unionByName _)
+  }
+
+  test("TxLog.read builds with no job, to the inferred read's schema and rows") {
+    val plain = tmp("budget_txread_plain")
+    TxLog.append(sample, plain)
+    TxLog.append(sample.withColumn("id", col("id") + 10), plain)
+    val parted = tmp("budget_txread_parted")
+    TxLog.append(sample.withColumn("p", col("id") % 2), parted, Some("p"))
+    TxLog.append(sample.withColumn("id", col("id") + 10).withColumn("p", lit(7L)),
+      parted, Some("p"))
+    for (t <- Seq(plain, parted)) {
+      assert(TxLog.snapshot(spark, t).entries
+        .map(_.path.split("/data/")(1).takeWhile(_ != '/')).distinct.size >= 2,
+        s"$t needs two live commit dirs")
+      var df: DataFrame = null
+      assert(jobsIn { df = TxLog.read(spark, t) } == 0, t)
+      val inferred = inferredRead(t)
+      assert(df.schema == inferred.schema, t)
+      assert(df.collect().toSet == inferred.collect().toSet, t)
+    }
+  }
+
+  // The unpartitioned merge into a 200-row table, a 20-row batch. Measured:
+  // 2 jobs each. The delete-then-rename file swap it replaced took 3, one
+  // of them its read's schema inference.
+  test("TxLog's unpartitioned upsert stays within the file swap's job budget") {
+    val t = tmp("budget_txupsert")
+    TxLog.append(spark.range(200).select(col("id").as("k"),
+      concat(lit("v"), col("id")).as("v")), t)
+    val computed = jobsIn {
+      TxLog.upsert(spark, t, spark.range(190, 210).select(col("id").as("k"),
+        lit("c").as("v")), "k"): Unit
+    }
+    val literal = jobsIn {
+      TxLog.upsert(spark, t, (300L until 320L).map(k => (k, "l")).toDF("k", "v"), "k"): Unit
+    }
+    assert(computed <= 2 && literal <= 2, s"computed=$computed literal=$literal")
+    assert(TxLog.read(spark, t).count() === 230L)
   }
 
   // Small dimension: 40 keys bootstrapped with one history row each for

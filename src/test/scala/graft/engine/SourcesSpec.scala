@@ -110,18 +110,18 @@ class SourcesSpec extends SparkSpec {
     assert(spark.read.parquet(dir).count() === df.count())
   }
 
+  // Keyed merges commit through TxLog.upsert / TxLog.applyChanges. The
+  // titles below keep the name of the Sinks merge each case was first
+  // written for.
+
   test("upsertParquet replaces same-key rows and inserts new ones") {
     import spark.implicits._
     val dir = java.nio.file.Files.createTempDirectory("graft_upsert_b").toString + "/t"
-    Sinks.writeParquet(Seq((1L, "a"), (2L, "b")).toDF("k", "v"), dir)
-    Sinks.upsertParquet(Seq((2L, "B"), (3L, "c")).toDF("k", "v"), dir, "k")
-    val got = spark.read.parquet(dir).collect().map(r => (r.getLong(0), r.getString(1))).toMap
+    TxLog.append(Seq((1L, "a"), (2L, "b")).toDF("k", "v"), dir)
+    TxLog.upsert(spark, dir, Seq((2L, "B"), (3L, "c")).toDF("k", "v"), "k")
+    val got = TxLog.read(spark, dir).collect().map(r => (r.getLong(0), r.getString(1))).toMap
     assert(got === Map(1L -> "a", 2L -> "B", 3L -> "c"))
   }
-
-  // Partition-scoped change sets commit through TxLog.applyChanges /
-  // upsertPartitioned. The titles below keep the name of the Sinks merge
-  // these cases were first written for.
 
   test("applyChangesPartitioned deletes, upserts, prunes untouched buckets and removes emptied ones") {
     import spark.implicits._
@@ -161,7 +161,7 @@ class SourcesSpec extends SparkSpec {
         import s.implicits._
         val batch = Seq((k, s"w$p", p)).toDF("k", "v", "p")
         gate.await()
-        TxLog.upsertPartitioned(s, t, batch, "k", "p"): Unit
+        TxLog.upsert(s, t, batch, "k", Some("p")): Unit
       } catch { case e: Throwable => errs.add(e): Unit }
     })
     val (t1, t2) = (writer(10, 8L), writer(20, 9L))
@@ -259,12 +259,8 @@ class SourcesSpec extends SparkSpec {
       def stillCached(sink: String): Unit =
         assert(unrelated.storageLevel != org.apache.spark.storage.StorageLevel.NONE,
           s"$sink must leave a cache over an unrelated path in place")
-      Sinks.upsertParquet(Seq((2L, "B"), (3L, "c")).toDF("k", "v"), t, "k")
-      assert(rows === Map(1L -> "a", 2L -> "B", 3L -> "c"),
-        "a frame cached over the upserted path must return the new rows")
-      stillCached("upsertParquet")
       Sinks.compactParquet(spark, t, targetFiles = 1)
-      assert(rows === Map(1L -> "a", 2L -> "B", 3L -> "c"))
+      assert(rows === Map(1L -> "a", 2L -> "b"))
       stillCached("compactParquet")
       Sinks.writeAndReadBack(spark, Seq((4L, "d")).toDF("k", "v"), t)
       assert(rows === Map(4L -> "d"),

@@ -405,8 +405,8 @@ class TxLogSpec extends graft.SparkSpec {
     val (p20, p30) = (partitionState(spark, t, "p=20"), partitionState(spark, t, "p=30"))
     assert(p20._1.nonEmpty && p30._1.nonEmpty)
     // batch touches ONLY p=10: replaces key 2, inserts key 9
-    TxLog.upsertPartitioned(spark, t,
-      Seq((2L, "B", 10), (9L, "z", 10)).toDF("k", "v", "p"), "k", "p")
+    TxLog.upsert(spark, t,
+      Seq((2L, "B", 10), (9L, "z", 10)).toDF("k", "v", "p"), "k", Some("p"))
     assert(partitionState(spark, t, "p=20") === p20,
       "untouched partition p=20 must keep its entries and exact files")
     assert(partitionState(spark, t, "p=30") === p30,
@@ -416,14 +416,132 @@ class TxLogSpec extends graft.SparkSpec {
     assert(got === Map(1L -> ("a", 10), 2L -> ("B", 10), 9L -> ("z", 10),
       3L -> ("c", 20), 4L -> ("d", 30)))
     // an empty batch (a no-data streaming trigger) commits nothing
-    assert(TxLog.upsertPartitioned(spark, t,
-      Seq.empty[(Long, String, Int)].toDF("k", "v", "p"), "k", "p") === 1L)
+    assert(TxLog.upsert(spark, t,
+      Seq.empty[(Long, String, Int)].toDF("k", "v", "p"), "k", Some("p")) === 1L)
     assert(TxLog.snapshot(spark, t).version === 1L)
     // a merge into a table with no log yet lays down version 0
     val fresh = table("upsert_p_fresh")
-    assert(TxLog.upsertPartitioned(spark, fresh,
-      Seq((7L, "q", 40)).toDF("k", "v", "p"), "k", "p") === 0L)
+    assert(TxLog.upsert(spark, fresh,
+      Seq((7L, "q", 40)).toDF("k", "v", "p"), "k", Some("p")) === 0L)
     assert(TxLog.read(spark, fresh).count() === 1L)
+  }
+
+  private def kv(t: String): Map[Long, String] = TxLog.read(spark, t).collect()
+    .map(r => r.getAs[Long]("k") -> r.getAs[String]("v")).toMap
+
+  test("unpartitioned upsert replaces same-key rows and inserts new keys") {
+    import spark.implicits._
+    val t = table("upsert_u")
+    TxLog.append(Seq((1L, "a"), (2L, "b")).toDF("k", "v"), t)
+    TxLog.append(Seq((3L, "c")).toDF("k", "v"), t)
+    // a computed batch: replaces k=2 and k=3 (from two commit dirs), inserts k=4
+    assert(TxLog.upsert(spark, t, spark.range(2, 5)
+      .select(col("id").as("k"), concat(lit("u"), col("id")).as("v")), "k") === 2L)
+    assert(kv(t) === Map(1L -> "a", 2L -> "u2", 3L -> "u3", 4L -> "u4"))
+    assert(TxLog.snapshot(spark, t).entries.forall(_.partition.isEmpty))
+  }
+
+  test("unpartitioned upsert of an empty batch commits nothing into an existing table") {
+    import spark.implicits._
+    val t = table("upsert_u_empty")
+    TxLog.append(Seq((1L, "a")).toDF("k", "v"), t)
+    def commitDirs = new java.io.File(s"$t/data").list().toSet
+    val dirsBefore = commitDirs
+    assert(TxLog.upsert(spark, t, Seq.empty[(Long, String)].toDF("k", "v"), "k") === 0L)
+    assert(TxLog.upsert(spark, t,
+      spark.range(0).select(col("id").as("k"), lit("x").as("v")), "k") === 0L)
+    assert(TxLog.snapshot(spark, t).version === 0L)
+    assert(commitDirs === dirsBefore, "an empty batch must leave no staging behind")
+    assert(kv(t) === Map(1L -> "a"))
+  }
+
+  test("unpartitioned upsert of an empty batch into a missing table commits an empty version 0") {
+    import spark.implicits._
+    val t = table("upsert_u_fresh")
+    assert(TxLog.upsert(spark, t, Seq.empty[(Long, String)].toDF("k", "v"), "k") === 0L)
+    val got = TxLog.read(spark, t)
+    assert(got.schema.map(f => f.name -> f.dataType) ===
+      Seq("k" -> org.apache.spark.sql.types.LongType,
+        "v" -> org.apache.spark.sql.types.StringType))
+    assert(got.count() === 0L)
+    // and the empty table takes the next batch like any other
+    TxLog.upsert(spark, t, Seq((1L, "a")).toDF("k", "v"), "k")
+    assert(kv(t) === Map(1L -> "a"))
+  }
+
+  test("a replayed unpartitioned upsert converges") {
+    import spark.implicits._
+    val t = table("upsert_u_replay")
+    TxLog.append(Seq((1L, "a"), (2L, "b")).toDF("k", "v"), t)
+    def deliver(): Long = TxLog.upsert(spark, t, Seq((2L, "B"), (3L, "c")).toDF("k", "v"), "k")
+    assert(deliver() === 1L)
+    assert(deliver() === 2L) // at-least-once redelivery
+    assert(kv(t) === Map(1L -> "a", 2L -> "B", 3L -> "c"))
+    assert(TxLog.read(spark, t).count() === 3L, "a replay must not duplicate keys")
+  }
+
+  test("concurrent unpartitioned upserts of disjoint keys both land") {
+    // writer A blocks inside its staged write until writer B has committed,
+    // so A's claim must lose and A must re-merge on B's version; a
+    // read-merge-swap would drop B's row here
+    import spark.implicits._
+    val t = table("upsert_u_cc")
+    TxLog.append(Seq((1L, "a"), (2L, "b")).toDF("k", "v"), t)
+    val (entered, release) = (new java.util.concurrent.CountDownLatch(1),
+      new java.util.concurrent.CountDownLatch(1))
+    TxLogSpec.latches = Some((entered, release))
+    val gated = udf { (v: String) =>
+      TxLogSpec.latches.foreach { case (in, go) =>
+        in.countDown(); go.await(60, java.util.concurrent.TimeUnit.SECONDS) }
+      v
+    }.asNondeterministic()
+    val errs = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
+    val a = new Thread(() => {
+      try {
+        val s = spark.newSession()
+        TxLog.upsert(s, t, s.range(8, 9)
+          .select(col("id").as("k"), gated(lit("wA")).as("v")), "k"): Unit
+      } catch { case e: Throwable => errs.add(e): Unit }
+    })
+    try {
+      a.start()
+      assert(entered.await(60, java.util.concurrent.TimeUnit.SECONDS),
+        "writer A never reached its staged write")
+      assert(TxLog.upsert(spark.newSession(), t, Seq((9L, "wB")).toDF("k", "v"), "k") === 1L)
+      release.countDown()
+      a.join(120000)
+    } finally { release.countDown(); TxLogSpec.latches = None }
+    assert(errs.isEmpty, s"upsert thread failed: ${errs.peek()}")
+    assert(kv(t) === Map(1L -> "a", 2L -> "b", 8L -> "wA", 9L -> "wB"),
+      "both writers' upserts must land; neither may clobber the other")
+    assert(TxLog.snapshot(spark, t).version === 2L,
+      "the losing claim must re-merge onto the winner's version")
+    assert(new java.io.File(s"$t/data").list().length === 3,
+      "one commit dir per committed version: the lost attempt's staging is dropped")
+  }
+
+  test("an upsert whose staged write throws leaves the prior version live") {
+    // the window in which a delete-then-rename swap has no table on disk
+    import spark.implicits._
+    val t = table("upsert_u_fault")
+    TxLog.append(Seq((1L, "a"), (2L, "b")).toDF("k", "v"), t)
+    val before = (TxLog.snapshot(spark, t), kv(t),
+      new java.io.File(s"$t/_txlog").list().toSet,
+      new java.io.File(s"$t/data").list().toSet)
+    val boom = udf { (k: Long) =>
+      if (k == 3L) throw new IllegalStateException("injected write fault")
+      s"u$k"
+    }
+    intercept[Exception] {
+      TxLog.upsert(spark, t, spark.range(2, 5)
+        .select(col("id").as("k"), boom(col("id")).as("v")), "k")
+    }
+    assert(TxLog.snapshot(spark, t) === before._1, "no version may be committed")
+    assert(kv(t) === before._2, "the prior version must read back unchanged")
+    assert(new java.io.File(s"$t/_txlog").list().toSet === before._3,
+      "no manifest may be written for the failed attempt")
+    assert(new java.io.File(s"$t/data").list().toSet === before._4,
+      "the failed attempt's staging must be dropped")
   }
 
   test("applyChanges round-trips NULL and escape-needing partition values") {
@@ -448,13 +566,18 @@ class TxLogSpec extends graft.SparkSpec {
       "an emptied null partition must drop out of the manifest")
     assert(got === Map(1L -> ("A", "x y"), 3L -> ("c", "x y"), 5L -> ("e", "2024/01")))
     // and back into the null partition
-    TxLog.upsertPartitioned(spark, t,
-      Seq((6L, "f", None: Option[String])).toDF("k", "v", "p"), "k", "p")
+    TxLog.upsert(spark, t,
+      Seq((6L, "f", None: Option[String])).toDF("k", "v", "p"), "k", Some("p"))
     assert(got.get(6L) === Some(("f", null)))
   }
 }
 
 object TxLogSpec {
+
+  /** (entered, release) for a UDF that parks a writer inside its staged
+    * write; tasks run in the driver JVM, so the closure reads it here. */
+  @volatile var latches: Option[(java.util.concurrent.CountDownLatch,
+    java.util.concurrent.CountDownLatch)] = None
 
   /** The live manifest entries of one partition, with (name, length,
     * mtime) of each entry's file — equality means a merge neither

@@ -141,7 +141,7 @@ class EventStreamsSpec extends SparkSpec {
       q.processAllAvailable()
       in.addData(Event(3L, ts(2), 7L, "click", 1.0)) // user 7 again -> n=2
       q.processAllAvailable()
-      val out = spark.read.parquet(s"$dir/out")
+      val out = graft.engine.TxLog.read(spark, s"$dir/out")
         .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
       assert(out === Map(7L -> 2L, 8L -> 1L), s"got $out")
     } finally q.stop()
