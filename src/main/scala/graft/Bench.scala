@@ -217,25 +217,26 @@ object Bench {
     // Same-code guard (ADVICE_r12): the merge is only valid when the prev
     // detail artifact came from THIS code — a stale file from a prior
     // round would silently mix cross-code per-query times and read
-    // stale-low. The detail artifact carries a code fingerprint (registry
-    // names + size — any query added, removed or renamed changes it), and
-    // the merge is skipped with a note when the prev's doesn't match or
-    // predates the field. (A plan change inside an unrenamed query still
-    // rides the documented commit convention; the fingerprint closes the
-    // stale-FILE class, which is what has actually occurred.)
+    // stale-low. The detail artifact carries a build fingerprint (a hash
+    // of the compiled classes, so a plan change inside an unrenamed query
+    // changes it as surely as an added, removed or renamed query), and the
+    // merge is skipped with a note when the prev's doesn't match or
+    // predates the field. The older code fingerprint (registry names +
+    // size) is still emitted for readers of the artifact.
     val codeFingerprint =
       f"${scala.util.hashing.MurmurHash3.orderedHash(names) & 0xffffffffL}%08x-${names.size}"
+    val buildFp = buildFingerprint()
     val minOfRuns: String = {
       val prevPath = sys.env.getOrElse("GRAFT_BENCH_PREV",
         sys.env.getOrElse("GRAFT_BENCH_DETAIL", "BENCH_detail_latest.json"))
       try {
         val root = new com.fasterxml.jackson.databind.ObjectMapper()
           .readTree(new java.io.File(prevPath))
-        val prevFp = root.path("code_fingerprint")
-        if (!prevFp.isTextual || prevFp.asText() != codeFingerprint) {
+        val prevFp = root.path("build_fingerprint")
+        if (!prevFp.isTextual || prevFp.asText() != buildFp || buildFp == "unknown") {
           System.err.println(s"MIN-OF-RUNS-SKIPPED: prev artifact $prevPath " +
-            s"fingerprint ${if (prevFp.isTextual) prevFp.asText() else "absent"} " +
-            s"!= current $codeFingerprint (different code — merge would mix runs)")
+            s"build_fingerprint ${if (prevFp.isTextual) prevFp.asText() else "absent"} " +
+            s"!= current $buildFp (different code — merge would mix runs)")
           ""
         } else {
           val it = root.path("queries").fields()
@@ -258,7 +259,7 @@ object Bench {
       }
     }
     val fullJson =
-      s"""{"metric":"total","value":$total,"unit":"sec","n_queries":${results.size}$failedJson,"code_fingerprint":"$codeFingerprint","queries":$qs,"sf":"$sfDir"$calib$minOfRuns$scaleup}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","n_queries":${results.size}$failedJson,"code_fingerprint":"$codeFingerprint","build_fingerprint":"$buildFp","queries":$qs,"sf":"$sfDir"$calib$minOfRuns$scaleup}"""
     val detailPath = sys.env.getOrElse("GRAFT_BENCH_DETAIL", "BENCH_detail_latest.json")
     try {
       val w = new java.io.PrintWriter(detailPath, "UTF-8")
@@ -278,6 +279,29 @@ object Bench {
     spark.stop()
     if (failed.nonEmpty) sys.exit(1)
   }
+
+  /** SHA-256 (first 16 hex digits) over the compiled `graft` classes this
+    * run executes: every `.class` file under `graft/` in the classes
+    * directory Bench runs from, name and bytes, in name order. Two builds of
+    * different code differ here even when their registry names agree.
+    * "unknown" when that directory cannot be read (a packaged jar, say),
+    * which never counts as a match, so a merge is skipped rather than mixed.
+    */
+  private[graft] def buildFingerprint(): String = scala.util.Try {
+    import scala.jdk.CollectionConverters._
+    import java.nio.file.{Files, Paths}
+    val root = Paths.get(getClass.getProtectionDomain.getCodeSource.getLocation.toURI)
+    val classes = scala.util.Using.resource(Files.walk(root.resolve("graft"))) {
+      _.iterator.asScala.filter(_.toString.endsWith(".class")).toList
+    }
+    require(classes.nonEmpty, s"no graft classes under $root")
+    val md = java.security.MessageDigest.getInstance("SHA-256")
+    classes.map(p => root.relativize(p).toString -> p).sortBy(_._1).foreach { case (name, p) =>
+      md.update(name.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      md.update(Files.readAllBytes(p))
+    }
+    md.digest().take(8).map(b => f"$b%02x").mkString
+  }.getOrElse("unknown")
 
   /** JSON string literal with control/quote/backslash escaping — paths from
     * env vars go through this so a quoted or backslashed path can never

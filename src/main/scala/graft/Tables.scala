@@ -6,7 +6,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * table under a scale-factor directory. Mirrors the reference's
   * path-addressed table model (csv_to_parquet.py:13-19 reads path constants;
   * final_dim_load.py:31-33 reads silver parquet back) but parameterized —
-  * no hardcoded bucket paths.
+  * no hardcoded bucket paths. Every table reads through
+  * [[graft.engine.Sources.parquet]], so building a table's DataFrame costs
+  * no job.
   */
 object Tables {
   val names: Seq[String] = Seq(
@@ -14,7 +16,7 @@ object Tables {
     "orders", "lineitem", "events", "documents", "embeddings")
 
   def read(spark: SparkSession, sfDir: String, table: String): DataFrame =
-    spark.read.parquet(s"$sfDir/$table.parquet")
+    graft.engine.Sources.parquet(spark, s"$sfDir/$table.parquet")
 
   def lineitem(spark: SparkSession, dir: String): DataFrame = read(spark, dir, "lineitem")
   def orders(spark: SparkSession, dir: String): DataFrame = read(spark, dir, "orders")

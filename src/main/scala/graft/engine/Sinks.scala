@@ -31,13 +31,14 @@ object Sinks {
     * (final_dim_load.py:208-210). The reference clears every cache to dodge
     * a stale FileIndex (final_dim_load.py:455); `refreshByPath` re-lists
     * and re-caches only the frames that read `path`, so a caller's caches
-    * over other paths survive.
+    * over other paths survive. The read-back is [[Sources.parquet]]'s, so
+    * the write is the only job this call runs.
     */
   def writeAndReadBack(spark: SparkSession, df: DataFrame, path: String,
       maxRecordsPerFile: Long = 0L): DataFrame = {
     writeParquet(df, path, maxRecordsPerFile)
     spark.catalog.refreshByPath(path)
-    spark.read.parquet(path)
+    Sources.parquet(spark, path)
   }
 
   /** ORC sink/source round-trip (S-surface beyond the reference's
@@ -203,7 +204,7 @@ object Sinks {
     require(targetFiles > 0, "targetFiles must be positive")
     import org.apache.hadoop.fs.Path
     val tmp = new Path(path + "__compact_tmp")
-    spark.read.parquet(path).repartition(targetFiles)
+    Sources.parquet(spark, path).repartition(targetFiles)
       .write.mode(SaveMode.Overwrite).parquet(tmp.toString)
     val fs = tmp.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val dest = new Path(path)
@@ -271,7 +272,7 @@ object Sinks {
         val done = fragmented.map { d =>
           scala.concurrent.Future {
             val tmp = new Path(d.getParent, "." + d.getName + "__compact_tmp")
-            spark.read.parquet(d.toString).repartition(targetFiles)
+            Sources.parquet(spark, d.toString).repartition(targetFiles)
               .write.mode(SaveMode.Overwrite).parquet(tmp.toString)
             fs.delete(d, true)
             require(fs.rename(tmp, d), s"compaction swap failed for $d")

@@ -23,6 +23,11 @@ import org.apache.spark.sql.types.{StringType, StructField, StructType}
   * reading the header on the driver; at scale prefer `csvWithSchema` — an
   * explicit StructType lets the reader parse directly into typed columns
   * (one less projection; malformed rows surface at scan time).
+  *
+  * Parquet has one reader, [[parquet]]: it alone decides how a scan gets its
+  * schema (one footer, read on the driver), and no other module in the
+  * library or the query registry builds a parquet read of its own
+  * (`SourcesSpec` walks the sources to keep it so).
   */
 object Sources {
 
@@ -92,13 +97,14 @@ object Sources {
       .schema(schema.add(CorruptCol, org.apache.spark.sql.types.StringType))
       .csv(path)
 
-  /** Parquet read with no schema-inference job: Spark (without mergeSchema)
-    * takes the schema of the first data file by path but reads its footer in
-    * a job; here the driver reads it, by Spark's rule (stored row schema, else
-    * type conversion). Partition columns still come from the paths. Anything
-    * else (no data file, summary files, an error) falls back to plain
-    * `spark.read.parquet`, so errors stay Spark's own. Directories of mixed
-    * schemas need [[parquetMergedSchema]]. */
+  /** The parquet reader: every library and query read of a parquet table
+    * goes through here, so building the DataFrame costs no job. Spark
+    * (without mergeSchema) takes the schema of the first data file by path
+    * but reads its footer in a job; here the driver reads it, by Spark's rule
+    * (stored row schema, else type conversion). Partition columns still come
+    * from the paths. Anything else (no data file, summary files, an error)
+    * falls back to plain `spark.read.parquet`, so errors stay Spark's own.
+    * Directories of mixed schemas need [[parquetMergedSchema]]. */
   def parquet(spark: SparkSession, path: String): DataFrame =
     withFooterSchema(spark, path)(_.parquet(path))
 

@@ -373,7 +373,8 @@ object TxLog {
     statsCol.filter(_ => entries.nonEmpty).fold(entries) { c =>
       import org.apache.spark.sql.functions.{input_file_name, max, min}
       def norm(p: String): String = new Path(p).toUri.getPath
-      val byFile = spark.read.parquet(entries.map(_.path): _*)
+      val byFile = Sources.withFooterSchema(spark, entries.head.path)(
+          _.parquet(entries.map(_.path): _*))
         .select(input_file_name().as("__f"), col(c).cast("double").as("__v"))
         .groupBy("__f")
         .agg(min("__v").as("mn"), max("__v").as("mx"))

@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables
+import graft.engine.Sources
 import graft.ext.{NearDup, TextAnalysis, TextHash}
 
 /** Corpus-operations wave 3: interval algebra, weighted order statistics,
@@ -1134,7 +1135,7 @@ object CorpusQueries {
           od.filter(!month(col("o_orderdate")).isin(3, 11)),
           path, partitionCols = Seq("order_month"))
         s.catalog.clearCache()
-        val present = s.read.parquet(path).select("order_month").distinct()
+        val present = Sources.parquet(s, path).select("order_month").distinct()
         val spine = od.agg(min(col("o_orderdate")).as("mn"), max(col("o_orderdate")).as("mx"))
           .select(explode(sequence(trunc(col("mn"), "month"),
             trunc(col("mx"), "month"), expr("interval 1 month"))).as("m"))

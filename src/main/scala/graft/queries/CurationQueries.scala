@@ -2,6 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.functions._
 import graft.Tables
+import graft.engine.Sources
 import graft.ext.{NearDup, Similarity, TextAnalysis, TextHash}
 
 /** Corpus-curation wave 5: semantic (embedding-space) dedup decisions,
@@ -308,7 +309,7 @@ object CurationQueries {
         exactKept.select("doc_id", "text", "source", "__nt", "__q")
           .write.mode("overwrite").parquet(stage)
         s.catalog.clearCache()
-        val silver = s.read.parquet(stage)
+        val silver = Sources.parquet(s, stage)
         val survivors = NearDup.dropNearDuplicates(
           silver, "doc_id", "text", n = 3, k = 64, bands = 16, threshold = 0.8)
         survivors

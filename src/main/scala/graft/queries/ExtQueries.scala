@@ -537,7 +537,7 @@ object ExtQueries {
           Tables.orders(s, dir).select("o_orderkey", "o_orderstatus", "o_orderpriority", "o_totalprice"),
           path, partitionCols = Seq("o_orderstatus"))
         s.catalog.clearCache()
-        s.read.parquet(path)
+        Sources.parquet(s, path)
           .filter(col("o_orderstatus") === "F")
           .groupBy("o_orderpriority")
           .agg(count(lit(1)).as("n_orders"), Exact.sumD(col("o_totalprice")).as("sales"))
@@ -2559,7 +2559,7 @@ object ExtQueries {
         java.nio.file.Files.copy(
           java.nio.file.Paths.get(dir, "documents.parquet"),
           java.nio.file.Paths.get(src, "docs1.parquet")): Unit
-        val docs = s.read.parquet(s"$dir/documents.parquet")
+        val docs = Tables.documents(s, dir)
         docs.select((col("doc_id") + lit(1000000L)).as("doc_id"), col("text"),
             col("lang"), col("source"), col("n_chars"))
           .coalesce(1).write.parquet(src + "_tmp")

@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables
+import graft.engine.Sources
 
 /** Operations/monitoring wave: time-sliced distribution bands, forecasting
   * baselines, and serving-side report shapes. Exactness discipline as
@@ -669,7 +670,7 @@ object OpsQueries {
         // made at execution time), assert the plan actually pushed, and
         // hand back the 1-row result as a local frame
         val resultRow = {
-          val df = s2.read.parquet(path)
+          val df = Sources.parquet(s2, path)
             .agg(count(lit(1)).as("n_rows"),
               min(col("cents")).as("min_cents"),
               max(col("cents")).as("max_cents"))
@@ -1632,8 +1633,8 @@ object OpsQueries {
             col("c_acctbal"),                                    // kept
             concat(lit("seg_"), col("c_custkey")).as("c_segment_v2")) // added
           .write.mode("overwrite").parquet(p2)                   // mktsegment removed
-        val s1 = s.read.parquet(p1).schema.map(f => f.name -> f.dataType.sql).toMap
-        val s2 = s.read.parquet(p2).schema.map(f => f.name -> f.dataType.sql).toMap
+        val s1 = Sources.parquet(s, p1).schema.map(f => f.name -> f.dataType.sql).toMap
+        val s2 = Sources.parquet(s, p2).schema.map(f => f.name -> f.dataType.sql).toMap
         val rows = (s1.keySet ++ s2.keySet).toSeq.sorted.map { name =>
           (s1.get(name), s2.get(name)) match {
             case (Some(a), Some(b)) if a == b => (name, a, b, "kept", 0L)
@@ -2692,7 +2693,7 @@ object OpsQueries {
           .groupBy("o_orderpriority")
           .agg(count(lit(1)).as("n"), sum(col("cents")).cast("long").as("c"))
           .write.mode("overwrite").parquet(path)
-        val snapshot = s.read.parquet(path)
+        val snapshot = Sources.parquet(s, path)
           .select(col("o_orderpriority"), col("n").as("snap_n"),
             col("c").as("snap_cents"))
         val fresh = o.groupBy("o_orderpriority")

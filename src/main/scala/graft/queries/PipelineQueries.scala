@@ -2490,7 +2490,7 @@ object PipelineQueries {
     // partition" lineage query run before compaction.
     Q(
       "q147_file_metadata",
-      (s, dir) => s.read.parquet(s"$dir/orders.parquet")
+      (s, dir) => Tables.orders(s, dir)
         .select(col("_metadata.file_name").as("file_name"), col("o_orderkey"))
         .groupBy("file_name")
         .agg(count(lit(1)).as("n_rows"), max("o_orderkey").as("max_key"))
@@ -2689,7 +2689,7 @@ object PipelineQueries {
             .outputMode("append")
             .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
             .start())
-        s.read.parquet(base)
+        Sources.parquet(s, base)
           .groupBy("n_name")
           .agg(count(lit(1)).as("n_events"), Exact.sumD(col("value"), 6).as("sum_value"))
           .orderBy("n_name")
@@ -3106,7 +3106,7 @@ object PipelineQueries {
           .select(col("n_nationkey").as("nation_id"),
             col("n_name").as("nation"), col("r_name").as("region"))
         wh.save(dimLocation, "dim_location")
-        s.read.parquet(s"$root/dim_location").orderBy("nation_id")
+        Sources.parquet(s, s"$root/dim_location").orderBy("nation_id")
       },
       Some("""
         SELECT n_nationkey AS nation_id, n_name AS nation, r_name AS region
@@ -3281,7 +3281,7 @@ object PipelineQueries {
         // The sentinel's ts column is written in the SAME encoding the raw
         // file carries (nanos long vs timestamp), so the declared-schema
         // file-stream source reads both files uniformly.
-        val raw = s.read.parquet(s"$dir/events.parquet")
+        val raw = Tables.read(s, dir, "events")
         val maxUs = graft.Tables.normalizeTs(raw)
           .agg(max(unix_micros(col("ts")))).head.getLong(0)
         val sentinelUs = maxUs + 100L * 86400L * 1000000L
@@ -3941,7 +3941,7 @@ object PipelineQueries {
           "n_rows" -> count(lit(1)),
           "sum_price" -> sum(col("o_totalprice").cast("decimal(24,2)")),
           "n_open" -> sum(when(col("o_orderstatus") === "O", 1L).otherwise(0L))))
-        val readBack = s.read.parquet(path).count()
+        val readBack = Sources.parquet(s, path).count()
         import s.implicits._
         Seq((m("n_rows").asInstanceOf[Long],
           m("sum_price").asInstanceOf[java.math.BigDecimal].doubleValue(),

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
+import graft.engine.Sources
 import graft.ext.{IvfPq, NearDup, Similarity, TextHash}
 
 /** Round-11 additions — closing VERDICT_r10's two open lifecycle loops:
@@ -495,12 +496,12 @@ object Round11Queries {
         val refitCodes0 = IvfPq.assignCodes(fParts, fCw).localCheckpoint()
         val refitCodes = refitCodes0.select(col("id"), col("m"), col("g").as("__fg"))
         def healthRow(phase: String): DataFrame = {
-          val artifact = s.read.parquet(codesPath)
+          val artifact = Sources.parquet(s, codesPath)
           val occ = artifact.filter(col("m") === 0)
             .groupBy("cell").agg(count(lit(1)).as("n_vecs"))
           val tot = occ.agg(sum(col("n_vecs")).as("n_total"),
             max(col("n_vecs")).as("max_vecs"), count(lit(1)).as("n_cells"))
-          val led = s.read.parquet(ledgerPath).agg(count(lit(1)).as("n_delta"))
+          val led = Sources.parquet(s, ledgerPath).agg(count(lit(1)).as("n_delta"))
           // both code frames are corpus-linear -> pinned shuffle join
           val dif = artifact.select(col("id"), col("m"), col("g"))
             .join(refitCodes.hint("shuffle_hash"), Seq("id", "m"))
@@ -627,7 +628,7 @@ object Round11Queries {
           codes, Seq("cell"), maxRecordsPerFile = capRows)
         // heal: only over-threshold cell directories rewrite
         graft.engine.Sinks.compactPartitions(s, codes, targetFiles = 1, minFiles = 2)
-        s.read.parquet(codes)
+        Sources.parquet(s, codes)
           .groupBy(col("id"), col("cell"))
           .agg(
             max(when(col("m") === 0, col("g"))).as("__c0"),
@@ -693,7 +694,7 @@ object Round11Queries {
           graft.streaming.EventStreams.startAnnServe(
             arrivals, ix, "query_id", "qv", base, base + "_ckpt",
             nprobe = 4, shortlist = 40))
-        s.read.parquet(base)
+        Sources.parquet(s, base)
           .select(col("query_id"), col("neighbor_id"), col("adc"))
           .orderBy("query_id", "neighbor_id")
       },

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
+import graft.engine.Sources
 import graft.ext.{NearDup, Similarity, Splits, TextAnalysis, TextHash}
 
 /** Round-12 additions — extending the round-11 incremental-maintenance
@@ -609,7 +610,7 @@ object Round12Queries {
         graft.engine.Sinks.overwritePartitionsDynamic(
           en, t, Seq("lang"), maxRecordsPerFile = capRows)
         def health(phase: String): DataFrame =
-          s.read.parquet(t)
+          Sources.parquet(s, t)
             .select(col("lang"), col("_metadata.file_name").as("__f"))
             .groupBy("lang")
             .agg(countDistinct(col("__f")).as("n_files"),

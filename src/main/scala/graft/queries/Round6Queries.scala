@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.functions._
 
 import graft.Tables
+import graft.engine.Sources
 import graft.ext.{NearDup, Sketches, TextAnalysis, TextHash}
 
 /** Round-6 additions (SURVEY §2.16): the second SparkSessionExtensions seam
@@ -338,7 +339,7 @@ object Round6Queries {
           finally footer.close()
         require(schemaStr.contains("typed_value"),
           s"variant column must be SHREDDED (typed_value group in the footer):\n$schemaStr")
-        s2.read.parquet(path)
+        Sources.parquet(s2, path)
           .select(
             expr("variant_get(v, '$.status', 'string')").as("status"),
             expr("variant_get(v, '$.prio', 'string')").as("prio"),

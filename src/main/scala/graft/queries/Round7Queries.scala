@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Tables
+import graft.engine.Sources
 import graft.ext.TextAnalysis
 
 /** Round-7 additions: span-level dedup (the ExactSubstr-style TRANSFORM the
@@ -953,7 +954,7 @@ object Round7Queries {
         } finally reader.close()
         require(hasBloom,
           "o_custkey column chunk must carry a persisted bloom filter")
-        s.read.parquet(path)
+        Sources.parquet(s, path)
           .filter(col("o_custkey").isin(1, 7, 13, 42))
           .groupBy("o_orderstatus")
           .agg(count(lit(1)).as("n_orders"),
@@ -2059,7 +2060,7 @@ object Round7Queries {
         Tables.orders(s, dir).repartition(1)
           .write.mode("overwrite")
           .option("maxRecordsPerFile", "1000").parquet(path)
-        val census = s.read.parquet(path)
+        val census = Sources.parquet(s, path)
           .select(col("_metadata.file_name").as("fn"))
           .groupBy("fn").agg(count(lit(1)).as("c"))
         census.agg(count(lit(1)).as("n_files"), sum(col("c")).as("n_rows"),

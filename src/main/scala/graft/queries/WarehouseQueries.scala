@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables
+import graft.engine.Sources
 
 /** Warehouse-integration wave: CDC log compaction, exact monetary
   * allocation, late-arriving-dimension handling, and snapshot-history
@@ -345,7 +346,7 @@ object WarehouseQueries {
         val before = nFiles
         Sinks.compactParquet(s, path, targetFiles = 3)
         val after = nFiles
-        s.read.parquet(path)
+        Sources.parquet(s, path)
           .agg(count(lit(1)).as("n_rows"),
             countDistinct(col("o_orderkey")).as("n_keys"),
             sum(col("__c")).cast("long").as("revenue_cents"))
@@ -380,7 +381,7 @@ object WarehouseQueries {
         val patch = o.filter(col("o_orderpriority") === "3-MEDIUM")
           .withColumn("amount_cents", col("amount_cents") + 7L)
         Sinks.overwritePartitionsDynamic(patch, path, Seq("o_orderpriority"))
-        s.read.parquet(path)
+        Sources.parquet(s, path)
           .groupBy("o_orderpriority")
           .agg(count(lit(1)).as("n_rows"),
             sum(col("amount_cents")).cast("long").as("total_cents"))
@@ -411,7 +412,7 @@ object WarehouseQueries {
         val path = Scratch.dir(s, dir, "rangeclust_gate")
         val li = Tables.lineitem(s, dir).select(col("l_orderkey"), col("l_partkey"))
         Sinks.writeRangeClustered(li, path, "l_orderkey", numFiles = 8)
-        val back = s.read.parquet(path)
+        val back = Sources.parquet(s, path)
         val files = back
           .groupBy(col("_metadata.file_path").as("f"))
           .agg(min(col("l_orderkey")).as("lo"), max(col("l_orderkey")).as("hi"),
@@ -1461,7 +1462,7 @@ object WarehouseQueries {
           val parts = fs.listStatus(p).map(_.getPath.getName)
             .filter(_.endsWith(".parquet"))
           val allSuffixed = parts.nonEmpty && parts.forall(_.endsWith(suffix))
-          s.read.parquet(path)
+          Sources.parquet(s, path)
             .agg(count(lit(1)).as("n_rows"),
               sum(col("__c")).cast("long").as("revenue_cents"))
             .select(lit(codec).as("codec"), col("n_rows"), col("revenue_cents"),
@@ -2075,7 +2076,7 @@ object WarehouseQueries {
             struct(col("lang"), col("source"), col("text"),
               col("n_chars")).as("meta"))
           .write.mode("overwrite").parquet(path)
-        s.read.parquet(path)
+        Sources.parquet(s, path)
           .groupBy(col("meta.lang").as("lang"))
           .agg(count(lit(1)).as("n_docs"),
             sum(col("meta.n_chars")).cast("long").as("total_chars"))
@@ -2177,8 +2178,8 @@ object WarehouseQueries {
             when(col("o_orderpriority").isin("1-URGENT", "2-HIGH"), "high")
               .otherwise("normal"))
           .write.mode("overwrite").parquet(dimPath)
-        val fact = s.read.parquet(factPath)
-        val dim = s.read.parquet(dimPath).filter(col("urgency") === "high")
+        val fact = Sources.parquet(s, factPath)
+        val dim = Sources.parquet(s, dimPath).filter(col("urgency") === "high")
         fact.join(broadcast(dim), Seq("o_orderpriority"))
           .groupBy("o_orderpriority")
           .agg(count(lit(1)).as("n_rows"),

@@ -69,7 +69,7 @@ object EventStreams {
     * as stream arrivals (the standard bronze-landing-zone pattern).
     */
   def streamingEvents(spark: SparkSession, dir: String): DataFrame = {
-    val schema = spark.read.parquet(s"$dir/events.parquet").schema
+    val schema = graft.engine.Sources.parquet(spark, s"$dir/events.parquet").schema
     // file-stream sources take a DIRECTORY; glob-filter to the events table
     graft.Tables.normalizeTs(
       spark.readStream.schema(schema)

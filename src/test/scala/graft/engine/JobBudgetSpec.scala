@@ -121,6 +121,82 @@ class JobBudgetSpec extends SparkSpec {
       Keys.surrogateKeys(input, "k", "sk", offset = 7L).collect().toSet)
   }
 
+  test("Tables.read builds every test table with no job, to the inferred read's schema and rows") {
+    for (t <- graft.Tables.names) {
+      var df: DataFrame = null
+      assert(jobsIn { df = graft.Tables.read(spark, sf0001, t) } == 0, t)
+      val inferred = spark.read.parquet(s"$sf0001/$t.parquet")
+      assert(df.schema == inferred.schema, t)
+      assert(df.collect().toSet == inferred.collect().toSet, t)
+    }
+  }
+
+  // events.ts as the fixtures have shipped it: INT64 TIMESTAMP(NANOS), which
+  // the session reads as raw nanos longs (nanosAsLong), and TIMESTAMP(MICROS)
+  // with no UTC adjustment, which Spark reads as TIMESTAMP_NTZ.
+  private def writeEvents(dir: String, unit: String, perMicro: Long): Unit = {
+    import org.apache.parquet.example.data.simple.SimpleGroupFactory
+    import org.apache.parquet.hadoop.example.ExampleParquetWriter
+    import org.apache.parquet.schema.MessageTypeParser
+    val schema = MessageTypeParser.parseMessageType(s"""message events {
+      optional int64 event_id; optional int64 ts (TIMESTAMP($unit,false));
+      optional int64 user_id; optional binary event_type (STRING);
+      optional double value; optional binary props (STRING); }""")
+    val w = ExampleParquetWriter.builder(new org.apache.hadoop.fs.Path(s"$dir/events.parquet"))
+      .withType(schema).withConf(spark.sessionState.newHadoopConf()).build()
+    val rows = new SimpleGroupFactory(schema)
+    try (1L to 5L).foreach { i =>
+      val g = rows.newGroup().append("event_id", i)
+      // sub-microsecond nanos truncate; one row has no ts
+      if (i != 3L) g.append("ts", (1700000000000000L + i * 3600000000L) * perMicro + i % 2)
+      w.write(g.append("user_id", i % 2).append("event_type", s"t${i % 3}")
+        .append("value", i * 1.5).append("props", "{}"))
+    } finally w.close()
+  }
+
+  test("Tables.events reads both events.ts encodings with no job, as the inferred read does") {
+    import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
+    for ((unit, perMicro, raw) <-
+        Seq(("NANOS", 1000L, LongType), ("MICROS", 1L, TimestampNTZType))) {
+      val dir = Files.createTempDirectory(s"budget_events_$unit").toString
+      writeEvents(dir, unit, perMicro)
+      val plain = spark.read.parquet(s"$dir/events.parquet")
+      assert(plain.schema("ts").dataType == raw, unit)
+      var df: DataFrame = null
+      assert(jobsIn { df = graft.Tables.events(spark, dir) } == 0, unit)
+      val inferred = graft.Tables.normalizeTs(plain)
+      assert(df.schema == inferred.schema, unit)
+      assert(df.schema("ts").dataType == TimestampType, unit)
+      assert(df.collect().toSet == inferred.collect().toSet, unit)
+      assert(df.filter(col("ts").isNull).count() == 1L, unit)
+      assert(graft.streaming.EventStreams.streamingEvents(spark, dir).schema == inferred.schema,
+        unit)
+    }
+  }
+
+  test("a SharedFrames artifact's second call (a memo hit) builds with no job") {
+    import graft.queries.SharedFrames
+    val first = SharedFrames.simhashSigs(spark, sf0001).collect().toSet
+    var again: DataFrame = null
+    assert(jobsIn { again = SharedFrames.simhashSigs(spark, sf0001) } == 0)
+    assert(again.collect().toSet == first)
+    // the IVF-PQ index: three memo parts under one key
+    val codes = SharedFrames.ivfPqIndex(spark, sf0001).codes.collect().toSet
+    var ix: graft.ext.IvfPq.Index = null
+    assert(jobsIn { ix = SharedFrames.ivfPqIndex(spark, sf0001) } == 0)
+    assert(ix.codes.columns.toSeq == Seq("id", "cell", "m", "g"))
+    assert(ix.codes.collect().toSet == codes)
+  }
+
+  test("Sinks.writeAndReadBack runs only its write's jobs") {
+    val write = jobsIn { Sinks.writeParquet(sample, tmp("budget_wrb_write")) }
+    val path = tmp("budget_wrb")
+    var back: DataFrame = null
+    assert(jobsIn { back = Sinks.writeAndReadBack(spark, sample, path) } == write)
+    assert(back.schema == spark.read.parquet(path).schema)
+    assert(back.collect().toSet == sample.collect().toSet)
+  }
+
   // The partition-scoped merge behind the streaming upsert sinks and the
   // incremental maintenance gates, on a 40-row table in 4 partitions.
   // Computed (not literal) change frames, as the gates pass them, so the

@@ -428,4 +428,26 @@ class SourcesSpec extends SparkSpec {
     assert(back.except(df).count() === 0)
     assert(df.except(back).count() === 0)
   }
+
+  // One parquet reader: a parquet read built anywhere but Sources would take
+  // its schema its own way (inferred in a job at construction). A reader
+  // chain is matched over each file's whole text, so one broken across
+  // lines, or carrying option/schema steps, or naming the format, counts.
+  test("only Sources builds a parquet read in src/main") {
+    import scala.jdk.CollectionConverters._
+    val root = Paths.get("src/main/scala")
+    val files = scala.util.Using.resource(Files.walk(root))(_.iterator.asScala
+      .filter(_.toString.endsWith(".scala")).toList)
+    assert(files.size > 50, s"expected the library sources under ${root.toAbsolutePath}")
+    val step = """\s*\.(?:options?|schema|format)\((?:[^()]|\([^()]*\))*\)"""
+    val parquetRead = (raw"""\.read\s*\.schema\(|\.read(?:$step)*\s*\.parquet\(""" +
+      raw"""|\.read(?:$step)*?\s*\.format\(\s*"parquet"\s*\)""").r
+    val hits = files.filterNot(_.endsWith(Paths.get("graft/engine/Sources.scala")))
+      .flatMap { f =>
+        val text = new String(Files.readAllBytes(f), "UTF-8")
+        parquetRead.findAllMatchIn(text).map(m =>
+          s"$f:${text.take(m.start).count(_ == '\n') + 1}: ${m.matched.replaceAll("\\s+", " ")}")
+      }
+    assert(hits.isEmpty, hits.mkString("parquet reads outside Sources:\n", "\n", ""))
+  }
 }

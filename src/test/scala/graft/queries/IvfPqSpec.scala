@@ -57,7 +57,8 @@ class IvfPqSpec extends SparkSpec {
     assert(persisted.cw.except(live.cw).count() === 0)
     assert(persisted.cents.except(live.cents).count() === 0)
     // build-once: the artifact directory timestamps don't change on re-read
-    val dir = new java.io.File(SharedFrames.ivfPqIndexPath(spark, sf0001), "codes")
+    val dir = new java.io.File(
+      SharedFrames.path(spark, sf0001, "ivfpq_m4x16_cw32_dcell"), "codes")
     val before = dir.lastModified()
     SharedFrames.ivfPqIndex(spark, sf0001).codes.count()
     assert(dir.lastModified() === before, "second access must not rebuild")

@@ -13,7 +13,7 @@ class SharedFramesSpec extends SparkSpec {
 
   test("materialized pair frame equals the live pipeline and builds only once") {
     val dir = sf0001
-    val path = SharedFrames.pairFramePath(spark, dir)
+    val path = SharedFrames.path(spark, dir, "mh_pairs_n3_k64_b16_t080")
 
     val fromHelper = SharedFrames.verifiedDocPairs(spark, dir)
       .select("id_a", "id_b", "jaccard").collect()
@@ -48,7 +48,7 @@ class SharedFramesSpec extends SparkSpec {
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(fromHelper === live)
     assert(fromHelper.nonEmpty)
-    val marker = new File(SharedFrames.mutualKnnPath(spark, dir), "_SUCCESS")
+    val marker = new File(SharedFrames.path(spark, dir, "mknn_cell_k3"), "_SUCCESS")
     assert(marker.exists)
     val mtime = marker.lastModified()
     assert(SharedFrames.mutualKnnEdges(spark, dir).count().toInt === fromHelper.size)
@@ -68,15 +68,15 @@ class SharedFramesSpec extends SparkSpec {
     // contract the parquet round-trip must preserve.
     assert(fromHelper === live)
     assert(fromHelper.nonEmpty)
-    val marker = new File(SharedFrames.docShinglesPath(spark, dir, 3), "_SUCCESS")
+    val marker = new File(SharedFrames.path(spark, dir, "doc_shingles_n3"), "_SUCCESS")
     assert(marker.exists)
     val mtime = marker.lastModified()
     assert(SharedFrames.docShingles(spark, dir, 3).count().toInt === fromHelper.size)
     assert(marker.lastModified() === mtime,
       "second call must read the artifact back, not rebuild it")
     // n participates in the key: the n=8 frame is a different artifact
-    assert(SharedFrames.docShinglesPath(spark, dir, 8)
-      !== SharedFrames.docShinglesPath(spark, dir, 3))
+    assert(SharedFrames.path(spark, dir, "doc_shingles_n8")
+      !== SharedFrames.path(spark, dir, "doc_shingles_n3"))
   }
 
   test("materialized minhash signatures equal the live construction and build only once") {
@@ -91,7 +91,7 @@ class SharedFramesSpec extends SparkSpec {
     // index), so the parquet round-trip must preserve order, not just sets.
     assert(fromHelper === live)
     assert(fromHelper.nonEmpty)
-    val marker = new File(SharedFrames.minhashSigsPath(spark, dir), "_SUCCESS")
+    val marker = new File(SharedFrames.path(spark, dir, "minhash_sigs_n3_k64"), "_SUCCESS")
     assert(marker.exists)
     val mtime = marker.lastModified()
     assert(SharedFrames.minhashSigs(spark, dir).count().toInt === fromHelper.size)
@@ -103,12 +103,13 @@ class SharedFramesSpec extends SparkSpec {
     // ScaleData's 10x rehearsal dir and the base dir share a session — the
     // scratch key must keep them apart (a cross-read would hand the 10x
     // rehearsal the 1x pair set and silently invalidate its timings).
-    val a = SharedFrames.pairFramePath(spark, "/data/sf0.1")
-    val b = SharedFrames.pairFramePath(spark, "/tmp/graft_scale/app/sf0.1_x10")
+    val a = SharedFrames.path(spark, "/data/sf0.1", "mh_pairs_n3_k64_b16_t080")
+    val b = SharedFrames.path(spark, "/tmp/graft_scale/app/sf0.1_x10",
+      "mh_pairs_n3_k64_b16_t080")
     assert(a !== b)
     // ADVICE_r06: the key hashes the FULL canonical path, so two corpora
     // with IDENTICAL leaf names in one session also stay apart.
-    val c = SharedFrames.pairFramePath(spark, "/other/corpus/sf0.1")
+    val c = SharedFrames.path(spark, "/other/corpus/sf0.1", "mh_pairs_n3_k64_b16_t080")
     assert(a !== c)
   }
 }
