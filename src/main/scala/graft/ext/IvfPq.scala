@@ -30,6 +30,8 @@ import org.apache.spark.sql.functions._
   * broadcast; the codes frame is corpus-linear and only ever streams
   * (shuffled joins / map-side broadcast probes against it); the ADC
   * distance table is probes x nprobe x M x 32 — bounded — and broadcast.
+  * The build materializes the two bounded artifacts once each on the
+  * driver ([[buildIndex]]); the corpus-linear codes stay lazy.
   */
 object IvfPq {
 
@@ -150,15 +152,30 @@ object IvfPq {
     * codebooks -> frozen-codebook code assignment (for the training corpus
     * itself, assignment under the just-trained codebooks — identical
     * semantics to the round-8 in-query pipeline).
+    *
+    * Centroids (one row per cell) and codebooks (at most M x 32 rows) are
+    * collected once each and come back as local frames holding exactly the
+    * rows [[Similarity.exactCentroids]] and [[trainCodebooks]] compute, so
+    * the lazy codes frame and the caller's writes read them instead of
+    * re-running the corpus aggregates behind them. Both already pass
+    * through the driver as broadcasts, so driver memory stays bounded by
+    * the same rows. The returned `cents` and `cw` are planned as one
+    * partition each (one file per write).
     */
   def buildIndex(corpus: DataFrame, idCol: String, vecCol: String,
       cellCol: String): Index = {
     graft.functions.GraftFunctions.ensureRegistered(corpus.sparkSession)
-    val cents = Similarity.exactCentroids(corpus, vecCol, cellCol)
+    val cents = collected(Similarity.exactCentroids(corpus, vecCol, cellCol))
     val parts = residualParts(corpus, cents, idCol, vecCol, cellCol)
-    val cw = trainCodebooks(parts)
-    Index(cents, cw, assignCodes(parts, cw))
+    val cw = collected(trainCodebooks(parts))
+    Index(cents.coalesce(1), cw.coalesce(1), assignCodes(parts, cw))
   }
+
+  /** `df`'s rows as a driver-side local frame of the same schema: the one
+    * evaluation of a bounded frame that several plans read.
+    */
+  private def collected(df: DataFrame): DataFrame =
+    df.sparkSession.createDataFrame(java.util.Arrays.asList(df.collect(): _*), df.schema)
 
   /** ADC search against a (possibly read-back) index: `probes` carries
     * (query_id, qv); each probe visits its `nprobe` nearest cells by exact
@@ -180,13 +197,13 @@ object IvfPq {
     // hashOrderedProbes/LIMIT like every other broadcast-probe operator.
     Similarity.requireBounded(probes, "adcShortlist", "probes")
     graft.functions.GraftFunctions.ensureRegistered(probes.sparkSession)
-    val qc = graft.plans.TopKPerKey.of(
+    val qc = collected(graft.plans.TopKPerKey.of(
         probes.crossJoin(broadcast(ix.cents))
           .select(col("query_id"), col("qv"), col("cell"), col("centroid"),
             d2(col("qv"), col("centroid")).as("qd2")),
         keyCols = Seq("query_id"),
         order = Seq("qd2" -> true, "cell" -> true), k = nprobe)
-      .select(col("query_id"), col("qv"), col("cell"), col("centroid"))
+      .select(col("query_id"), col("qv"), col("cell"), col("centroid")))
     val qparts = qc
       .select(col("query_id"), col("cell"),
         zip_with(col("qv"), col("centroid"),
@@ -207,18 +224,21 @@ object IvfPq {
     // probed cells' files — FAISS-style inverted-list IO, sublinear in
     // storage, not just compute. (Dynamic partition pruning cannot derive
     // this: the cell pick flows through the custom heap top-k node, which
-    // the DPP selectivity heuristics don't see through.) The collect is a
-    // bounded single-small-frame gate, the repo's allowed pattern; values
-    // are unchanged — the join's cell equality already implied the filter.
-    // LOAD-BEARING for callers' observe() audits (ADVICE_r13): this eager
-    // collect is the FIRST action on any plan built over `probes`, so an
-    // Observation a caller attached to the probes frame (the streaming
-    // serve cap audit, EventStreams.startAnnServe) resolves when this
-    // collect fully evaluates the probes subtree — including a caller's
-    // LIMIT. If this collect ever stops consuming the full probes plan
-    // (e.g. a future sampled or lazy cell pick), the serve contract's cap
-    // metric must move to an action the caller controls.
-    val probedCells = qc.select("cell").distinct().collect().map(_.get(0)).toSeq
+    // the DPP selectivity heuristics don't see through.) The cell pick `qc`
+    // is collected once (probes x nprobe rows): the probed-cell list and
+    // the ADC table both read that local frame, so the pick never reruns
+    // inside the main plan. Values are unchanged — the join's cell
+    // equality already implied the filter.
+    // LOAD-BEARING for callers' observe() audits (ADVICE_r13): the `qc`
+    // collect is the ONLY evaluation of `probes` (everything after it
+    // reads the local frame), so an Observation a caller attached to the
+    // probes frame (the streaming serve cap audit,
+    // EventStreams.startAnnServe) resolves when this collect fully
+    // evaluates the probes subtree — including a caller's LIMIT. If this
+    // collect ever stops consuming the full probes plan (e.g. a future
+    // sampled or lazy cell pick), the serve contract's cap metric must
+    // move to an action the caller controls.
+    val probedCells = qc.collect().map(_.getAs[Any]("cell")).distinct.toSeq
     val codes = ix.codes.filter(col("cell").isInCollection(probedCells))
     val contrib = codes
       .join(broadcast(dt),

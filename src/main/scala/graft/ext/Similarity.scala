@@ -390,6 +390,15 @@ object Similarity {
     * cuts ride the TopKPerKey heap under the total (cosine desc, node asc)
     * order, so the walk is deterministic and an engine-independent oracle
     * can replay it hop by hop.
+    *
+    * Per-hop job shape: the frontier is broadcast once and expanded over
+    * `edges` plus one self-pair per corpus row, so frontier nodes and their
+    * neighbours come out of one join; that bounded candidate set is
+    * broadcast into the corpus scan; duplicate candidates collapse inside
+    * the beam cut's `query_id` shuffle (a node scores at its best corpus
+    * row). So each hop adds two broadcasts and one shuffle, and the final
+    * `k` cut reuses the last beam cut's partitioning with no exchange of
+    * its own (JobBudgetSpec pins at most 3 jobs per extra hop).
     */
   def graphBeamSearch(corpus: DataFrame, edges: DataFrame, queries: DataFrame,
       idCol: String, vecCol: String, entries: DataFrame,
@@ -424,26 +433,32 @@ object Similarity {
     require(hops >= 1, "graphBeamSearch needs at least one hop")
     requireBounded(queries, "graphBeamSearch", "queries")
     graft.functions.GraftFunctions.ensureRegistered(corpus.sparkSession)
+    // both edge directions plus one self-pair per corpus row: a frontier
+    // node is its own candidate through the same join that expands it
     val und = edges.select(col("id_a").as("u"), col("id_b").as("w"))
       .unionAll(edges.select(col("id_b").as("u"), col("id_a").as("w")))
+      .unionAll(corpus.select(col(idCol).as("u"), col(idCol).as("w")))
     val en = corpus.select(col(idCol).as("node"), col(vecCol).as("__cv"),
       sqrt(nativeDot(col(vecCol), col(vecCol))).as("__cn"))
     val probes = queries
       .select(col(idCol).as("query_id"), col(vecCol).as("__qv"))
       .withColumn("__qn", sqrt(nativeDot(col("__qv"), col("__qv"))))
     def hop(frontier: DataFrame): DataFrame = {
-      val f = frontier.select("query_id", "node")
-      val expanded = f
-        .unionAll(und.join(broadcast(f.withColumnRenamed("node", "u")), Seq("u"))
-          .select(col("query_id"), col("w").as("node")))
-        .distinct()
+      val expanded = und
+        .join(broadcast(frontier.select(col("query_id"), col("node").as("u"))), Seq("u"))
+        .select(col("query_id"), col("w").as("node"))
         .filter(col("node") =!= col("query_id"))
+      // duplicate candidates (shared neighbours, duplicate edges, the
+      // frontier re-reached) collapse inside the query_id shuffle the
+      // beam cut needs anyway: one row per (query, node) at its best score
       val scored = en
         .join(broadcast(expanded), Seq("node"))
         .join(broadcast(probes), Seq("query_id"))
         .select(col("query_id"), col("node"),
           (nativeDot(col("__qv"), col("__cv")) / (col("__qn") * col("__cn")))
             .as("cosine"))
+        .repartition(col("query_id"))
+        .groupBy("query_id", "node").agg(max(col("cosine")).as("cosine"))
       graft.plans.TopKPerKey.of(scored,
           keyCols = Seq("query_id"),
           order = Seq("cosine" -> false, "node" -> true), k = beam)

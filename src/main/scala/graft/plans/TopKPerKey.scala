@@ -6,7 +6,7 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Ascending, Attribute, AttributeReference, Descending, Expression, GenericInternalRow, JoinedRow, SortOrder, UnsafeProjection}
 import org.apache.spark.sql.catalyst.expressions.codegen.GenerateOrdering
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, UnaryNode}
-import org.apache.spark.sql.catalyst.plans.physical.{ClusteredDistribution, Distribution}
+import org.apache.spark.sql.catalyst.plans.physical.{ClusteredDistribution, Distribution, Partitioning}
 import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy, UnaryExecNode}
 import org.apache.spark.sql.graftbridge.PlanBridge
 import org.apache.spark.sql.types.IntegerType
@@ -27,6 +27,11 @@ import org.apache.spark.sql.types.IntegerType
   * order). Supply a TOTAL order (include a tiebreaker) and the result is
   * independent of arrival order — identical rows and ranks to the window
   * formulation (asserted in TopKPerKeySpec).
+  *
+  * Partitioning passthrough: the heaps run inside each partition and never
+  * move a row, so the output keeps the child's partitioning (the key's hash
+  * clustering after the exchange). A second top-k on the same key, or an
+  * aggregate grouped on a superset of the keys, plans no further exchange.
   *
   * Scale note: memory is bounded by keys-per-partition x k retained rows.
   * For the top-k-neighbors shape (many rows per key, k small) that is a
@@ -66,6 +71,8 @@ case class TopKPerKeyExec(
     */
   override def requiredChildDistribution: Seq[Distribution] =
     ClusteredDistribution(keys) :: Nil
+
+  override def outputPartitioning: Partitioning = child.outputPartitioning
 
   override protected def doExecute(): RDD[InternalRow] = {
     val childOutput = child.output

@@ -8,6 +8,7 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.SparkSpec
+import graft.ext.{IvfPq, Similarity}
 
 /** Job budgets for the paper pipeline's hot operators: Spark job launches,
   * not compute, dominate a nightly load at this size, so the counts are
@@ -321,5 +322,58 @@ class JobBudgetSpec extends SparkSpec {
   test("writing an SCD2 merge of a small dimension stays within its job budget") {
     assert(mergeJobs(full = false) <= 4)
     assert(mergeJobs(full = true) <= 4)
+  }
+
+  // The ANN path on the embeddings fixture (derived cells, 4 partitions):
+  // the index build and its three writes, one ADC probe batch against the
+  // read-back index, and the beam walk over a read-back mutual-kNN graph.
+  // Measured: 13 jobs for the build and writes (17 while the writes
+  // re-derived centroids and codebooks), 7 for the ADC batch (9 while the
+  // cell pick ran twice), 7/10/13 for the walk at 1/2/3 hops (10/14/18
+  // while each hop broadcast its frontier twice and ran its own distinct).
+  private lazy val annDir = Files.createTempDirectory("budget_ann").toString
+  private lazy val annCells = {
+    val e = graft.Tables.embeddings(spark, sf0001)
+    IvfPq.withDerivedCells(e, "embedding", IvfPq.derivedPlanes(e.count()))
+  }
+  private def annProbes = Similarity.hashOrderedProbes(
+    graft.Tables.embeddings(spark, sf0001), "vec_id", "probe", 16)
+
+  test("building the IVF-PQ index and writing its three parts stays within its job budget") {
+    val cells = annCells
+    val jobs = jobsIn {
+      val ix = IvfPq.buildIndex(cells, "vec_id", "embedding", "cell")
+      for ((part, df) <- Seq("cents" -> ix.cents, "cw" -> ix.cw, "codes" -> ix.codes))
+        Sinks.writeParquet(df, s"$annDir/$part")
+    }
+    assert(jobs <= 13, s"build=$jobs")
+  }
+
+  test("an ADC probe batch against a read-back index stays within its job budget") {
+    val ix = IvfPq.buildIndex(annCells, "vec_id", "embedding", "cell")
+    for ((part, df) <- Seq("cents" -> ix.cents, "cw" -> ix.cw, "codes" -> ix.codes))
+      Sinks.writeParquet(df, s"$annDir/adc_$part")
+    val back = IvfPq.Index(Sources.parquet(spark, s"$annDir/adc_cents"),
+      Sources.parquet(spark, s"$annDir/adc_cw"), Sources.parquet(spark, s"$annDir/adc_codes"))
+    val q = annProbes.select(col("vec_id").as("query_id"), col("embedding").as("qv"))
+    var n = 0L
+    val jobs = jobsIn { n = IvfPq.adcShortlist(back, q, nprobe = 4, shortlist = 10).collect().length }
+    assert(n > 0 && jobs <= 7, s"adc=$jobs")
+  }
+
+  test("the beam walk stays within its job budget at one hop and per extra hop") {
+    Sinks.writeParquet(
+      Similarity.mutualKnnGraph(annCells, "vec_id", "embedding", "cell", k = 5), s"$annDir/edges")
+    val edges = Sources.parquet(spark, s"$annDir/edges")
+    val entries = Similarity.topDegreeNodes(edges, 8)
+    val corpus = graft.Tables.embeddings(spark, sf0001)
+    val jobs = (1 to 3).map { h =>
+      jobsIn {
+        Similarity.graphBeamSearch(corpus, edges, annProbes, "vec_id", "embedding", entries,
+          hops = h, beam = 8, k = 5).collect(): Unit
+      }
+    }
+    assert(jobs.head <= 7 && jobs.sliding(2).forall { case Seq(a, b) => b - a <= 3 },
+      s"walk jobs at hops 1..3: $jobs")
   }
 }

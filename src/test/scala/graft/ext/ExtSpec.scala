@@ -146,6 +146,76 @@ class ExtSpec extends SparkSpec {
     assert(full(1) === 4L, s"expected node 4 at rank 1 after 4 hops, got $full")
   }
 
+  /** Driver-side replay of the beam walk's contract: a hop's candidates
+    * are the frontier plus its neighbours over the undirected edges, minus
+    * the query itself; a candidate scores at its best corpus row (sequential
+    * double dot, then dot / (|q| |v|)); the beam keeps the top `beam` by
+    * (cosine desc, node asc). Returns per query the top `k` (node, cosine).
+    */
+  private def referenceWalk(corpus: Seq[(Long, Array[Float])], edges: Seq[(Long, Long)],
+      queries: Seq[(Long, Array[Float])], frontier0: Map[Long, Seq[Long]],
+      hops: Int, beam: Int, k: Int): Map[Long, Seq[(Long, Double)]] = {
+    def dot(a: Array[Float], b: Array[Float]) =
+      a.indices.foldLeft(0.0)((acc, i) => acc + a(i).toDouble * b(i).toDouble)
+    val nbrs = (edges ++ edges.map(_.swap)).groupBy(_._1).map { case (u, ws) => u -> ws.map(_._2) }
+    val rows = corpus.groupBy(_._1)
+    queries.map { case (q, qv) =>
+      def cut(cands: Iterable[Long], n: Int) = cands.toSeq.distinct.filter(_ != q)
+        .flatMap(node => rows.get(node).map(rs => node -> rs.map { case (_, v) =>
+          dot(qv, v) / (math.sqrt(dot(qv, qv)) * math.sqrt(dot(v, v)))
+        }.max))
+        .sortBy { case (node, cos) => (-cos, node) }.take(n)
+      val last = (1 to hops).foldLeft(frontier0(q).map(_ -> 0.0)) { (f, _) =>
+        cut(f.flatMap { case (u, _) => u +: nbrs.getOrElse(u, Nil) }, beam)
+      }
+      q -> last.take(k)
+    }.toMap
+  }
+
+  test("graphBeamSearch matches a driver-side reference walk on the graph's edge cases") {
+    def v(deg: Double, len: Double = 1.0) = Array(
+      (len * math.cos(math.toRadians(deg))).toFloat, (len * math.sin(math.toRadians(deg))).toFloat)
+    // corpus id 5 appears twice (two directions); id 9 has no edges; 99 is
+    // an entry with edges but no corpus row; (2, 2) is a self-loop; (1, 3)
+    // comes three times, once reversed
+    val corpus = Seq(1L -> v(0), 2L -> v(11), 3L -> v(23, 2.0), 4L -> v(37), 5L -> v(52),
+      5L -> v(78), 6L -> v(64), 7L -> v(89), 8L -> v(101, 0.5), 9L -> v(47))
+    val edges = Seq(99L -> 1L, 1L -> 3L, 1L -> 3L, 3L -> 1L, 2L -> 2L, 1L -> 2L, 3L -> 4L,
+      4L -> 5L, 5L -> 6L, 6L -> 7L, 7L -> 8L, 2L -> 4L)
+    // query 4 is also a corpus id: the walk never returns a query as its own neighbour
+    val queries = Seq(100L -> v(70), 101L -> v(28), 4L -> v(37))
+    val entries = Seq(99L, 9L)
+    val corpusDf = corpus.toDF("vec_id", "embedding")
+    val edgesDf = edges.toDF("id_a", "id_b")
+    val queriesDf = queries.toDF("vec_id", "embedding")
+    val entriesDf = entries.toDF("node")
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getAs[Long]("query_id"), r.getAs[Int]("rank"),
+          r.getAs[Long]("neighbor_id"), r.getAs[Double]("cosine")))
+        .groupBy(_._1).map { case (q, rs) => q -> rs.sortBy(_._2).map(r => (r._3, r._4)).toSeq }
+    def walk(hops: Int, k: Int) = rows(Similarity.graphBeamSearch(corpusDf, edgesDf, queriesDf,
+      "vec_id", "embedding", entriesDf, hops = hops, beam = 3, k = k))
+    def same(got: Map[Long, Seq[(Long, Double)]], want: Map[Long, Seq[(Long, Double)]]) = {
+      assert(got.keySet === want.keySet)
+      for (q <- want.keys) {
+        assert(got(q).map(_._1) === want(q).map(_._1), s"query $q")
+        got(q).zip(want(q)).foreach { case ((_, a), (_, b)) => assert(math.abs(a - b) < 1e-12) }
+      }
+    }
+    val start = queries.map(_._1 -> entries).toMap
+    for (hops <- 1 to 4)
+      same(walk(hops, k = 2), referenceWalk(corpus, edges, queries, start, hops, beam = 3, k = 2))
+    // every neighbour list is duplicate-free, the duplicated corpus id included
+    assert(walk(4, k = 3).values.forall(ns => ns.map(_._1).distinct.size == ns.size))
+    // continuing from the full hop-h frontier reproduces the longer walk (q534)
+    for (h <- 1 to 2) {
+      val frontier = walk(h, k = 3).toSeq.flatMap { case (q, ns) => ns.map(n => (q, n._1)) }
+        .toDF("query_id", "node")
+      same(rows(Similarity.graphBeamSearchFrom(corpusDf, edgesDf, queriesDf, "vec_id",
+        "embedding", frontier, hops = 4 - h, beam = 3, k = 2)), walk(4, k = 2))
+    }
+  }
+
   test("cell-join salt adapts to the distinct-cell/partition ratio; results are salt-invariant") {
     val e = Tables.embeddings(spark, sf0001)
     // 10 labels >= the suite's 4 shuffle partitions -> the salt buys

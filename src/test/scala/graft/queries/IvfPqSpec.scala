@@ -29,6 +29,29 @@ class IvfPqSpec extends SparkSpec {
     assert(ix2.codes.except(ix.codes).count() === 0)
   }
 
+  test("buildIndex returns centroids and codebooks as one-partition local frames, bit-equal to the lazy stages") {
+    import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+    val cells = IvfPq.withDerivedCells(e, "embedding", IvfPq.derivedPlanes(e.count()))
+    val ix = IvfPq.buildIndex(cells, "vec_id", "embedding", "cell")
+    val lazyCents = Similarity.exactCentroids(cells, "embedding", "cell")
+    val lazyCw = IvfPq.trainCodebooks(
+      IvfPq.residualParts(cells, lazyCents, "vec_id", "embedding", "cell"))
+    // exact bits of every double, so -0.0 / NaN differences cannot hide
+    def bits(df: org.apache.spark.sql.DataFrame) = df.collect().map(r =>
+      r.toSeq.map {
+        case v: scala.collection.Seq[_] =>
+          v.map(d => java.lang.Double.doubleToRawLongBits(d.asInstanceOf[Double]))
+        case x => x
+      }).toSet
+    for ((built, lazyFrame) <- Seq(ix.cents -> lazyCents, ix.cw -> lazyCw)) {
+      assert(built.queryExecution.analyzed.collectLeaves()
+        .forall(_.isInstanceOf[LocalRelation]), built.queryExecution.analyzed)
+      assert(built.rdd.getNumPartitions === 1)
+      assert(built.schema === lazyFrame.schema)
+      assert(bits(built) === bits(lazyFrame))
+    }
+  }
+
   test("assignCodes under frozen codebooks reproduces the build's own codes (incremental == rebuild on unchanged vectors)") {
     // The q499/q501 construction invariant: the incremental path IS the
     // build's assignment step, so re-assigning the training corpus against
