@@ -15,32 +15,42 @@ object Debug {
     val cpuNs = new java.util.concurrent.atomic.AtomicLong
     val runMs = new java.util.concurrent.atomic.AtomicLong
     val printJobs = sys.env.contains("GRAFT_JOBS")
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        nJobs.incrementAndGet()
-        if (printJobs) println(s"JOB ${js.jobId} " +
-          Option(js.properties).flatMap(p => Option(p.getProperty("callSite.short")))
-            .getOrElse("?") + " :: " +
-          js.stageInfos.map(_.name.takeWhile(_ != '\n')).mkString(" | "))
-      }
-      override def onStageCompleted(sc: SparkListenerStageCompleted): Unit = {
-        val si = sc.stageInfo
-        nStages.incrementAndGet()
-        cpuNs.addAndGet(si.taskMetrics.executorCpuTime)
-        runMs.addAndGet(si.taskMetrics.executorRunTime)
-        val cpuSec = si.taskMetrics.executorCpuTime / 1e9
-        val runSec = si.taskMetrics.executorRunTime / 1e3
-        if (runSec > 0.5) println(
-          f"STAGE ${si.stageId}%4d tasks=${si.numTasks}%4d run=${runSec}%8.1fs cpu=${cpuSec}%8.1fs  ${si.name.takeWhile(_ != '\n')}")
-      }
-    })
     def counters(): (Long, Long, Double, Double) =
       (nJobs.get, nStages.get, cpuNs.get / 1e9, runMs.get / 1e3)
+    // The counters as of the last marker job's start (ListenerMarker); the
+    // marker's own job and stages are not counted.
+    val settled = new java.util.concurrent.atomic.AtomicReference(counters())
+    val markerStages = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    spark.sparkContext.addSparkListener(new SparkListener {
+      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (ListenerMarker.isMarker(js.properties)) {
+          js.stageIds.foreach(markerStages.add)
+          settled.set(counters())
+        } else {
+          nJobs.incrementAndGet()
+          if (printJobs) println(s"JOB ${js.jobId} " +
+            Option(js.properties).flatMap(p => Option(p.getProperty("callSite.short")))
+              .getOrElse("?") + " :: " +
+            js.stageInfos.map(_.name.takeWhile(_ != '\n')).mkString(" | "))
+        }
+      override def onStageCompleted(sc: SparkListenerStageCompleted): Unit = {
+        val si = sc.stageInfo
+        if (!markerStages.contains(si.stageId)) {
+          nStages.incrementAndGet()
+          cpuNs.addAndGet(si.taskMetrics.executorCpuTime)
+          runMs.addAndGet(si.taskMetrics.executorRunTime)
+          val cpuSec = si.taskMetrics.executorCpuTime / 1e9
+          val runSec = si.taskMetrics.executorRunTime / 1e3
+          if (runSec > 0.5) println(
+            f"STAGE ${si.stageId}%4d tasks=${si.numTasks}%4d run=${runSec}%8.1fs cpu=${cpuSec}%8.1fs  ${si.name.takeWhile(_ != '\n')}")
+        }
+      }
+    })
     def diffCounters(tag: String, name: String, before: (Long, Long, Double, Double)): Unit = {
-      // stage completion events race the job end by a beat; give the bus
-      // a moment to drain (listenerBus is private[spark])
-      Thread.sleep(150)
-      val now = counters()
+      // Stage completions trail their job's end: a marker job closes the
+      // window once the bus has delivered every event posted before it.
+      ListenerMarker.close(spark.sparkContext)
+      val now = settled.get
       println(f"$tag $name jobs=${now._1 - before._1} stages=${now._2 - before._2} " +
         f"cpu=${now._3 - before._3}%.1fs taskrun=${now._4 - before._4}%.1fs")
     }

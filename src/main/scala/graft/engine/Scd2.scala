@@ -6,6 +6,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, TimestampType}
+import graft.plans.SharedSubplan
 
 /** Slowly-changing-dimension Type-2 merge (SURVEY.md section 7 M5; reference
   * behavior: final_dim_load.py:94-180 for dim_host, :329-451 for dim_listing).
@@ -26,8 +27,12 @@ import org.apache.spark.sql.types.{LongType, TimestampType}
   *
   * Scale notes (100 TB design point): the merge is one key-partitioned pass
   * (current ∪ incoming rows under one window on the natural key: a single
-  * shuffle classifies every row) plus the driver watermark (one job over the
-  * existing keys, no exchange) and the keying. Key assignment is pluggable:
+  * shuffle classifies every row, and it runs once: the pass sits under a
+  * plan barrier, so its two consumers, the current rows and the keyed fresh
+  * rows, share one exchange) plus the watermark and the keying. The
+  * watermark is read from the parquet footers on the driver when `existing`
+  * is a bare scan of an unpartitioned parquet table (no job), else it is one
+  * job over the existing keys with no exchange. Key assignment is pluggable:
   * pass `Keys.surrogateKeys` for the reference's single-task window or
   * `Keys.surrogateKeysScalable` (default), whose output is identical: for a
   * dimension small enough for one range-sort partition it is one sorted
@@ -129,12 +134,7 @@ object Scd2 {
   private def classify(existing: DataFrame, incoming: DataFrame, naturalKey: String,
       scdCols: Seq[String], skCol: String, runTs: String, sentinel: String,
       keying: (DataFrame, String, String, Long) => DataFrame, fullSnapshot: Boolean) = {
-    // Driver-side watermark, the reference's agg(max).collect() round-trip
-    // (final_dim_load.py:103-104) as one job with no exchange: each
-    // partition's max, combined here. No key (empty or all null) is 0.
-    val maxSk = existing.select(col(skCol).cast(LongType)).rdd
-      .mapPartitions(it => it.filterNot(_.isNullAt(0)).map(_.getLong(0)).maxOption.iterator)
-      .collect().maxOption.getOrElse(0L)
+    val maxSk = watermark(existing, skCol)
 
     // Columns pass through unaliased: an alias of an SCD column next to the
     // hash over it doubles the optimizer's constraint set per column.
@@ -142,11 +142,14 @@ object Scd2 {
       df.withColumn("__curr", lit(current)).withColumn("__hash", rowHash(scdCols))
     val (isCurr, hash, keyed) = (col("__curr"), col("__hash"), col(naturalKey).isNotNull)
     val byKey = Window.partitionBy(naturalKey)
-    val rows = tagged(existing.filter(col("is_valid")), current = true)
+    // Under the barrier both consumers below (the current rows and the
+    // keyed fresh rows) keep the whole pass, so their exchanges are equal
+    // and AQE runs the classify shuffle once.
+    val rows = SharedSubplan.of(tagged(existing.filter(col("is_valid")), current = true)
       .unionByName(tagged(incoming, current = false), allowMissingColumns = true)
       .select(col("*"), max(when(isCurr, hash)).over(byKey).as("__curr_hash"),
         min(when(!isCurr, hash)).over(byKey).as("__lo"),
-        max(when(!isCurr, hash)).over(byKey).as("__hi"))
+        max(when(!isCurr, hash)).over(byKey).as("__hi")))
     val differs = !(col("__lo") <=> hash && col("__hi") <=> hash)
     val expire = keyed && (if (fullSnapshot) differs else col("__lo").isNotNull && differs)
     val current = rows.filter(isCurr)
@@ -170,4 +173,19 @@ object Scd2 {
       .unionByName(current.select(cols: _*))
       .unionByName(fresh.select(cols: _*))
   }
+
+  /** The largest surrogate key of `existing`, 0 when it has none (no rows,
+    * or all null): the reference's agg(max).collect() round-trip
+    * (final_dim_load.py:103-104). Read from the parquet footers when
+    * `existing` is a bare scan ([[Sources.footerMax]]), with no job; else
+    * one job with no exchange, each partition's max combined here.
+    */
+  private[engine] def watermark(existing: DataFrame, skCol: String): Long =
+    Sources.footerMax(existing, skCol).getOrElse(scannedWatermark(existing, skCol))
+      .getOrElse(0L)
+
+  private[engine] def scannedWatermark(existing: DataFrame, skCol: String): Option[Long] =
+    existing.select(col(skCol).cast(LongType)).rdd
+      .mapPartitions(it => it.filterNot(_.isNullAt(0)).map(_.getLong(0)).maxOption.iterator)
+      .collect().maxOption
 }

@@ -1,5 +1,6 @@
 package graft.engine
 
+import scala.jdk.CollectionConverters._
 import scala.util.{Try, Using}
 
 import com.univocity.parsers.csv.CsvParser
@@ -7,13 +8,19 @@ import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.parquet.hadoop.{Footer, ParquetFileReader}
 import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.parquet.schema.LogicalTypeAnnotation
+import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
 import org.apache.spark.sql.{DataFrame, DataFrameReader, SparkSession}
 import org.apache.spark.sql.catalyst.csv.CSVOptions
-import org.apache.spark.sql.execution.datasources.CodecStreams
+import org.apache.spark.sql.catalyst.expressions.AttributeReference
+import org.apache.spark.sql.catalyst.plans.logical.Project
+import org.apache.spark.sql.execution.datasources.{CodecStreams, HadoopFsRelation,
+  LogicalRelation}
 import org.apache.spark.sql.execution.datasources.csv.CSVUtils
 import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat,
   ParquetToSparkSchemaConverter}
-import org.apache.spark.sql.types.{StringType, StructField, StructType}
+import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType, StringType,
+  StructField, StructType}
 
 /** Source readers (SURVEY.md section 2.1, S1-S2).
   *
@@ -123,6 +130,65 @@ object Sources {
       ParquetFileReader.open(HadoopInputFile.fromStatus(file, conf)))(_.getFooter)
     ParquetFileFormat.readSchemaFromFooter(new Footer(file.getPath, footer),
       new ParquetToSparkSchemaConverter(spark.sessionState.conf))
+  }
+
+  /** The maximum of the integral `column` over `df`, answered from the
+    * parquet footers on the driver with no job: `Some(max)`, `Some(None)`
+    * when no row holds a value (no rows, or all null). It answers only when
+    * `df.select(column)` optimizes to a bare scan of an unpartitioned
+    * parquet relation and every row group of every file carries usable
+    * statistics for a signed INT32/INT64 column of that name; anything else
+    * (a filter, a union, an RDD, Hive partitions, a non-integral type, a
+    * file without statistics or without the column, a read error) is `None`
+    * and the caller computes the maximum itself. The footers are read one
+    * after another, so the cost grows with the number of files. */
+  def footerMax(df: DataFrame, column: String): Option[Option[Long]] =
+    df.select(df.col(column)).queryExecution.optimizedPlan match {
+      case Project(Seq(a: AttributeReference), r: LogicalRelation) => footerMax(r, a)
+      case r: LogicalRelation if r.output.size == 1 => footerMax(r, r.output.head)
+      case _ => None
+    }
+
+  private def footerMax(r: LogicalRelation, a: AttributeReference): Option[Option[Long]] =
+    r.relation match {
+      case fs: HadoopFsRelation if fs.fileFormat.isInstanceOf[ParquetFileFormat] &&
+          fs.partitionSchema.isEmpty &&
+          Seq(ByteType, ShortType, IntegerType, LongType).contains(a.dataType) =>
+        val conf = fs.sparkSession.sessionState.newHadoopConfWithOptions(fs.options)
+        Try(fs.location.inputFiles.toSeq.map(f => fileMax(conf, f, a.name)))
+          .toOption.flatMap(maxOfAll)
+      case _ => None
+    }
+
+  /** The maximum over parts that each answered, or `None` if one did not. */
+  private def maxOfAll(parts: Seq[Option[Option[Long]]]): Option[Option[Long]] =
+    if (parts.forall(_.isDefined)) Some(parts.flatten.flatten.maxOption) else None
+
+  /** One file's maximum of `name` from its row-group statistics; `None`
+    * when the file cannot answer. */
+  private def fileMax(conf: Configuration, file: String, name: String)
+      : Option[Option[Long]] = {
+    val footer = Using.resource(
+      ParquetFileReader.open(HadoopInputFile.fromPath(new Path(file), conf)))(_.getFooter)
+    val signedInt = footer.getFileMetaData.getSchema.getFields.asScala.exists(t =>
+      t.getName == name && t.isPrimitive &&
+        Seq(PrimitiveTypeName.INT32, PrimitiveTypeName.INT64)
+          .contains(t.asPrimitiveType.getPrimitiveTypeName) &&
+        (t.getLogicalTypeAnnotation match {
+          case null => true
+          case i: LogicalTypeAnnotation.IntLogicalTypeAnnotation => i.isSigned
+          case _ => false
+        }))
+    if (!signedInt) None
+    else maxOfAll(footer.getBlocks.asScala.toSeq.filter(_.getRowCount > 0).map { b =>
+      b.getColumns.asScala.find(_.getPath.toArray.sameElements(Array(name))).flatMap { c =>
+        val st = c.getStatistics
+        if (st == null || st.isEmpty) None
+        else if (st.hasNonNullValue) Some(Some(st.genericGetMax.asInstanceOf[Number].longValue))
+        else if (st.isNumNullsSet && st.getNumNulls == c.getValueCount) Some(None)
+        else None
+      }
+    })
   }
 
   /** The data files under `path`, lazily, depth-first in full-path order,

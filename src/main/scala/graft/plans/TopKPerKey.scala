@@ -1,7 +1,7 @@
 package graft.plans
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Ascending, Attribute, AttributeReference, Descending, Expression, GenericInternalRow, JoinedRow, SortOrder, UnsafeProjection}
 import org.apache.spark.sql.catalyst.expressions.codegen.GenerateOrdering
@@ -144,16 +144,6 @@ object TopKPerKeyStrategy extends SparkStrategy {
 
 object TopKPerKey {
 
-  /** Idempotently install the strategy into an existing session (sessions
-    * built with spark.sql.extensions=graft.GraftExtensions get it injected).
-    */
-  def ensureStrategy(spark: SparkSession): Unit = {
-    val existing = spark.experimental.extraStrategies
-    if (!existing.contains(TopKPerKeyStrategy)) {
-      spark.experimental.extraStrategies = existing :+ TopKPerKeyStrategy
-    }
-  }
-
   /** DataFrame-level entry: top `k` rows per `keyCols` group under `order`
     * ((column, ascending) pairs forming a total order), with a 1-based int
     * rank column appended.
@@ -161,7 +151,7 @@ object TopKPerKey {
   def of(df: DataFrame, keyCols: Seq[String], order: Seq[(String, Boolean)],
       k: Int, rankName: String = "rank"): DataFrame = {
     val spark = df.sparkSession
-    ensureStrategy(spark)
+    Install.strategy(spark, TopKPerKeyStrategy)
     val plan = df.queryExecution.analyzed
     def attr(c: String): Attribute = plan.output.find(_.name == c).getOrElse(
       throw new IllegalArgumentException(

@@ -37,7 +37,7 @@ import org.apache.spark.sql.types.IntegerType
   * contract row_number already imposes).
   *
   * Installed by [[graft.GraftExtensions]] (injectOptimizerRule) and
-  * [[TopKPerKey.ensureInstalled]] (spark.experimental.extraOptimizations —
+  * [[TopKRankInstall.ensureInstalled]] (spark.experimental.extraOptimizations —
   * the post-hoc path runs in the "User Provided Optimizers" batch after the
   * main optimizer, by which point filter pushdown has already placed the
   * rank filter directly above its Window node).
@@ -101,7 +101,7 @@ object TopKRankInstall {
     * get both injected at build time instead.)
     */
   def ensureInstalled(spark: SparkSession): Unit = {
-    TopKPerKey.ensureStrategy(spark)
+    Install.strategy(spark, TopKPerKeyStrategy)
     if (!spark.experimental.extraOptimizations.contains(TopKRankRewrite)) {
       spark.experimental.extraOptimizations =
         spark.experimental.extraOptimizations :+ TopKRankRewrite

@@ -17,11 +17,12 @@ object PipelineQueries {
   private val TsRun = "2021-07-01 00:00:00"
   private val Sentinel = "2099-12-31 00:00:00"
 
-  /** The q17/q166 prior state of the customer dimension over `base`.
-    * Materialized once: Scd2.merge reads it in three subtrees (watermark,
-    * its classify pass — run twice, once inside the RDD-backed keying —
-    * and history), so without the barrier both zipWithIndex chains below
-    * re-run per reference. Dimension-sized, so bounded at any scale.
+  /** The q17/q166 prior state of the customer dimension over `base`. Not
+    * materialized: Scd2.merge reads it in three subtrees (the watermark
+    * job, its one classify exchange and the history rows), and the two
+    * keyings below add no job of their own (one sorted pass in the plan, or
+    * above one range partition an RDD shuffle built once and reused by
+    * each reader). A checkpoint here cost one job more than the re-reads.
     */
   private def seededCustomerDim(base: DataFrame): DataFrame = {
     val cur = Keys.surrogateKeysScalable(
@@ -41,7 +42,6 @@ object PipelineQueries {
     cur.unionByName(hist).select(
       "customer_sk", "c_custkey", "c_name", "c_mktsegment", "bal",
       "start_dt", "end_dt", "is_valid")
-      .localCheckpoint()
   }
 
   val qs: Seq[Q] = Seq(
@@ -886,10 +886,9 @@ object PipelineQueries {
           .withColumn("is_valid", lit(true))
           .select("customer_sk", "c_custkey", "c_name", "bal",
             "start_dt", "end_dt", "is_valid")
-          // Materialized once: mergeFullSnapshot references `existing` from
-          // three subtrees (watermark, its one classify pass, history) and
-          // the RDD-backed keying gets no exchange reuse.
-          .localCheckpoint()
+        // Not materialized: mergeFullSnapshot reads `existing` in three
+        // subtrees (the watermark job, its one classify exchange, history),
+        // which cost one job fewer than a checkpoint of it.
         val snapshot = base.filter(col("c_custkey") % 10 =!= 3)
         Scd2.mergeFullSnapshot(existing, snapshot,
             naturalKey = "c_custkey", scdCols = Seq("c_name", "bal"),

@@ -1,11 +1,10 @@
 package graft.engine
 
 import java.nio.file.Files
-import java.util.concurrent.{CountDownLatch, TimeUnit}
 import java.util.concurrent.atomic.AtomicInteger
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import graft.SparkSpec
 import graft.ext.{IvfPq, Similarity}
@@ -17,27 +16,22 @@ import graft.ext.{IvfPq, Similarity}
 class JobBudgetSpec extends SparkSpec {
   import spark.implicits._
 
-  /** Spark jobs started while `body` runs. Listener events arrive
-    * asynchronously but in order, so a marker job run after `body` closes
-    * the window: every job seen before the marker's start is counted.
+  /** Spark jobs started while `body` runs: every job seen before the start
+    * of the marker job that closes the window (graft.ListenerMarker).
     */
   private def jobsIn(body: => Unit): Int = {
     val sc = spark.sparkContext
-    val marker = s"job-budget-marker-${System.nanoTime()}"
     val count = new AtomicInteger
-    val closed = new CountDownLatch(1)
+    @volatile var closed = false
     val listener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == marker))
-          closed.countDown()
-        else if (closed.getCount > 0) count.incrementAndGet()
+        if (graft.ListenerMarker.isMarker(e.properties)) closed = true
+        else if (!closed) count.incrementAndGet()
     }
     sc.addSparkListener(listener)
     try {
       body
-      sc.setJobGroup(marker, "job budget marker")
-      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
-      assert(closed.await(60, TimeUnit.SECONDS), "marker job never reached the listener")
+      graft.ListenerMarker.close(sc)
       count.get
     } finally sc.removeSparkListener(listener)
   }
@@ -275,8 +269,9 @@ class JobBudgetSpec extends SparkSpec {
 
   // Small dimension: 40 keys bootstrapped with one history row each for
   // every fifth key, then a day with 10 changed, 5 new and (full snapshot)
-  // 5 deleted keys.
-  private def mergeJobs(full: Boolean): Int = {
+  // 5 deleted keys. `read` builds `existing` from the written dimension.
+  private def mergeJobs(full: Boolean,
+      read: String => DataFrame = Sources.parquet(spark, _)): (Int, Set[Row]) = {
     val path = tmp(s"budget_dim_$full")
     val base = (1L to 40L).map(k => (k, s"n$k", s"t${k % 3}")).toDF("id", "name", "tier")
     val current = Scd2.bootstrap(base, "id", "sk", "2021-01-01 00:00:00")
@@ -288,13 +283,15 @@ class JobBudgetSpec extends SparkSpec {
     current.unionByName(history).write.parquet(path)
     val incoming = (6L to 45L).map(k => (k, s"n$k", if (k <= 15) "changed" else s"t${k % 3}"))
       .toDF("id", "name", "tier")
-    jobsIn {
-      val existing = Sources.parquet(spark, path)
+    val out = tmp(s"budget_out_$full")
+    val jobs = jobsIn {
+      val existing = read(path)
       val merge = if (full) Scd2.mergeFullSnapshot _ else Scd2.merge _
       merge(existing, incoming, "id", Seq("name", "tier"), "sk", "2022-01-01 00:00:00",
         "2099-12-31 00:00:00", Keys.surrogateKeysScalable(_, _, _, _))
-        .write.parquet(tmp(s"budget_out_$full"))
+        .write.parquet(out)
     }
+    (jobs, spark.read.parquet(out).collect().toSet)
   }
 
   // Catalyst's constraint propagation doubles its constraint set for every
@@ -315,13 +312,29 @@ class JobBudgetSpec extends SparkSpec {
     }
   }
 
-  // Measured: 4 jobs in either mode — the watermark's one, then the write:
-  // the classify shuffle twice (the current and the keyed fresh rows each
-  // prune the pass to their own columns, so the two exchanges differ and
-  // are not reused) and the result stage.
+  // Measured: 2 jobs in either mode: the classify shuffle, run once for
+  // both of its consumers (the current and the keyed fresh rows), and the
+  // result stage; the watermark comes from the parquet footers. It was 4
+  // while the watermark took a job and each consumer pruned the pass to its
+  // own columns, so the two exchanges differed and the shuffle ran twice.
   test("writing an SCD2 merge of a small dimension stays within its job budget") {
-    assert(mergeJobs(full = false) <= 4)
-    assert(mergeJobs(full = true) <= 4)
+    for (full <- Seq(false, true)) {
+      val (jobs, _) = mergeJobs(full)
+      assert(jobs <= 2, s"full=$full jobs=$jobs")
+    }
+  }
+
+  // An `existing` that is not a bare scan (here filtered, or with a
+  // computed key column) takes the one-job watermark: measured 3 jobs.
+  test("an SCD2 merge of a filtered or computed dimension takes the job watermark") {
+    val reads = Seq[String => DataFrame](
+      Sources.parquet(spark, _).filter(col("sk") > 0),
+      Sources.parquet(spark, _).withColumn("sk", col("sk") + 0))
+    for (full <- Seq(false, true); read <- reads) {
+      val (jobs, rows) = mergeJobs(full, read)
+      assert(jobs <= 3, s"full=$full jobs=$jobs")
+      assert(rows == mergeJobs(full)._2, s"full=$full")
+    }
   }
 
   // The ANN path on the embeddings fixture (derived cells, 4 partitions):

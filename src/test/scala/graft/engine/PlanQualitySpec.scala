@@ -159,6 +159,29 @@ class PlanQualitySpec extends SparkSpec {
       s"expected a reused shingle exchange/stage in the final adaptive plan:\n$finalPlan")
   }
 
+  test("an SCD2 merge write plans one classify exchange, reused by both its consumers") {
+    // The classify pass feeds the current rows and the keyed fresh rows;
+    // under its plan barrier both consumers keep the whole pass, so the
+    // final adaptive plan shuffles it once and reuses that exchange.
+    import org.apache.spark.sql.execution.exchange.{ReusedExchangeExec, ShuffleExchangeExec}
+    import spark.implicits._
+    val path = java.nio.file.Files.createTempDirectory("spec_scd2").resolve("dim").toString
+    Scd2.bootstrap((1L to 40L).map(k => (k, s"n$k", s"t${k % 3}")).toDF("id", "name", "tier"),
+      "id", "sk", "2021-01-01 00:00:00").write.parquet(path)
+    val incoming = (6L to 45L).map(k => (k, s"n$k", if (k <= 15) "changed" else s"t${k % 3}"))
+      .toDF("id", "name", "tier")
+    for (merge <- Seq(Scd2.merge _, Scd2.mergeFullSnapshot _)) {
+      val out = merge(Sources.parquet(spark, path), incoming, "id", Seq("name", "tier"), "sk",
+        "2022-01-01 00:00:00", "2099-12-31 00:00:00", Keys.surrogateKeysScalable(_, _, _, _))
+      out.collect()
+      val plan = out.queryExecution.executedPlan
+      val shuffles = PlanWalk.collectWithSubqueries(plan) { case e: ShuffleExchangeExec => e }
+      val reused = PlanWalk.collectWithSubqueries(plan) { case r: ReusedExchangeExec => r }
+      assert(shuffles.size == 1 && reused.size == 1,
+        s"expected one classify exchange and one reuse of it:\n$plan")
+    }
+  }
+
   test("bitmap rollup reuses the daily-bitmap exchange across both consumers") {
     // q123's per-(type, day, bucket) bitmap frame feeds the per-day distinct
     // branch AND the bitmap_or_agg merge branch; the subtrees canonicalize

@@ -226,4 +226,48 @@ class Scd2Spec extends SparkSpec {
         s"3|40|dave|bronze|$run2|$sentinel|true"), s"full=$full")
     }
   }
+
+  // The merge's one classify exchange is shared by its two consumers under
+  // a plan barrier, and its watermark comes from the footers of a parquet
+  // `existing`: neither may make the output depend on the plan settings.
+  test("merge output does not depend on AQE or the shuffle partition count") {
+    val path = java.nio.file.Files.createTempDirectory("scd2_inv").resolve("dim").toString
+    val keys = spark.range(1, 301, 1, 3)
+    keys.select(col("id").as("sk"), col("id"), concat(lit("n"), col("id")).as("name"),
+        (col("id") % 4).cast("string").as("tier"), lit(run1).cast("timestamp").as("start_dt"),
+        lit(sentinel).cast("timestamp").as("end_dt"), lit(true).as("is_valid"))
+      .unionByName(keys.filter(col("id") % 10 === 0).select((col("id") + 1000).as("sk"),
+        col("id"), concat(lit("old"), col("id")).as("name"), lit("x").as("tier"),
+        lit(run0).cast("timestamp").as("start_dt"), lit(run1).cast("timestamp").as("end_dt"),
+        lit(false).as("is_valid")))
+      .write.parquet(path)
+    val incoming = spark.range(150, 351, 1, 2).select(
+        when(col("id") % 50 === 7, lit(null)).otherwise(col("id")).as("id"),
+        concat(lit("n"), col("id")).as("name"),
+        when(col("id") % 3 === 0, lit("changed")).otherwise((col("id") % 4).cast("string"))
+          .as("tier"))
+    val settings = Seq(("true", "4"), ("false", "4"), ("true", "1"), ("false", "1"),
+      ("true", "200"), ("false", "200"))
+    def outputs(existing: => DataFrame) = settings.map { case (aqe, parts) =>
+      val prior = Seq("spark.sql.adaptive.enabled", "spark.sql.shuffle.partitions")
+        .map(k => k -> spark.conf.get(k))
+      spark.conf.set("spark.sql.adaptive.enabled", aqe)
+      spark.conf.set("spark.sql.shuffle.partitions", parts)
+      try {
+        val rendered = Seq(false, true).map { full =>
+          val merge = if (full) Scd2.mergeFullSnapshot _ else Scd2.merge _
+          render(merge(existing, incoming, "id", Seq("name", "tier"), "sk", run2, sentinel,
+            Keys.surrogateKeysScalable(_, _, _, _)))
+        }
+        s"aqe=$aqe parts=$parts" -> rendered
+      } finally prior.foreach { case (k, v) => spark.conf.set(k, v) }
+    }
+    val footer = outputs(Sources.parquet(spark, path))
+    val (_, reference) = footer.head
+    assert(reference.head.size > 300 && reference(1).size > reference.head.size - 10)
+    footer.foreach { case (setting, rendered) => assert(rendered == reference, setting) }
+    // the job watermark, under the same settings
+    outputs(Sources.parquet(spark, path).filter(col("sk") > 0))
+      .foreach { case (setting, rendered) => assert(rendered == reference, setting) }
+  }
 }
