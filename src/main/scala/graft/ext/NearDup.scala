@@ -2,6 +2,7 @@ package graft.ext
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.plans.SharedSubplan
 
 /** Near-duplicate detection for LLM training corpora: word-shingling, exact
   * n-gram Jaccard, MinHash signatures with banded LSH candidate generation,
@@ -546,24 +547,18 @@ object NearDup {
     * at A->B (q512) and B->C (q521). Scale: everything corpus-sized is an
     * artifact read or anti-join; everything recomputed is change-slice
     * sized; the candidate join is bucket-keyed, never all-pairs.
+    * It materializes nothing: in the one returned plan, AQE computes each
+    * frame with several consumers once and reuses its exchange. A caller
+    * that runs the result more than once (say, `connectedComponents`'
+    * actions and an audit) materializes it itself.
     */
   def incrementalPairs(oldPairs: DataFrame, oldSigs: DataFrame,
       oldShingles: DataFrame, gone: DataFrame, fresh: DataFrame,
       idCol: String, textCol: String, n: Int, k: Int, bands: Int,
       threshold: Double): DataFrame = {
-    // the fresh slice feeds three consumers (bucket probe side, the union
-    // arm, the verify shingle side) — localCheckpoint so the
-    // tokenize+shingle+k-min pipeline runs once per call, not thrice.
-    // freshSh is LAZY (round 15): its first consumer is freshSigs' own
-    // eager materialization job, which folds the shingle compute in —
-    // one job instead of two. freshSigs stays EAGER: its first consumers
-    // are BOTH sides of the candidate self-join inside one job, which
-    // would race-compute a lazy checkpoint twice.
     val freshSh = shingleFrame(fresh, idCol, textCol, n)
-      .localCheckpoint(eager = false)
-    val freshSigs = minHashSignatureFrame(freshSh, idCol, k).localCheckpoint()
-    incrementalPairsPrepared(oldPairs, oldSigs, oldShingles, gone,
-      freshSh, freshSigs, idCol, k, bands, threshold)
+    incrementalPairsPrepared(oldPairs, oldSigs, oldShingles, gone, freshSh,
+      minHashSignatureFrame(freshSh, idCol, k), idCol, k, bands, threshold)
   }
 
   /** [[incrementalPairs]] with the fresh slice's shingle/signature frames
@@ -572,7 +567,7 @@ object NearDup {
     * state for the next step — computing them once and passing them here
     * removes a duplicate change-slice re-shingle per version. Both frames
     * must be exactly shingleFrame(fresh)/minHashSignatureFrame(freshSh)
-    * (deterministic), so values are unchanged by construction.
+    * (deterministic), so values are unchanged; it materializes nothing.
     */
   def incrementalPairsPrepared(oldPairs: DataFrame, oldSigs: DataFrame,
       oldShingles: DataFrame, gone: DataFrame, freshSh: DataFrame,
@@ -583,36 +578,29 @@ object NearDup {
       .join(gone.select(col(idCol).as("id_b")), Seq("id_b"), "left_anti")
       .select("id_a", "id_b", "jaccard")
     val unchangedSigs = oldSigs.join(gone, Seq(idCol), "left_anti")
-    val allBuckets = banded(unchangedSigs, idCol, k, bands)
-      .unionByName(banded(freshSigs, idCol, k, bands))
-    // the candidate set feeds two consumers (the shingle prune below and
-    // the verify join) — localCheckpoint so the bucket self-join runs
-    // once; LAZY (round 15): the first consumer (the candIds broadcast
-    // inside allSh's eager job) folds the materialization in, and the
-    // consumers are strictly sequential
-    val cand = banded(freshSigs, idCol, k, bands).as("a")
-      .join(allBuckets.as("b").hint("shuffle_hash"),
+    // Fresh buckets probe the unchanged ones and themselves: two joins whose
+    // three fresh sides plan equal copies, so one bucket exchange feeds them.
+    val freshBands = banded(freshSigs, idCol, k, bands)
+    def collisions(other: DataFrame): DataFrame = freshBands.as("a")
+      .join(other.as("b").hint("shuffle_hash"),
         col("a.__band") === col("b.__band") &&
           col("a.__bucket") === col("b.__bucket") &&
           col(s"a.$idCol") =!= col(s"b.$idCol"))
       .select(least(col(s"a.$idCol"), col(s"b.$idCol")).as("id_a"),
         greatest(col(s"a.$idCol"), col(s"b.$idCol")).as("id_b"))
-      .distinct()
-      .localCheckpoint(eager = false)
+    // The barrier keeps the shingle prune's and the verify join's copies
+    // equal; without it they plan apart and the candidate join runs per copy.
+    val cand = SharedSubplan.of(collisions(banded(unchangedSigs, idCol, k, bands))
+      .unionByName(collisions(freshBands)).distinct())
     // The verify join only ever reads shingles of docs that appear in a
     // candidate pair — a change-slice-bounded id set. Semi-join-prune the
-    // corpus-sized shingle table down to those ids BEFORE it is evaluated
-    // (guide §3.2: drop definitely-non-matching rows from the big side
-    // before it moves), and materialize the pruned slice once: the
-    // un-pruned form evaluated the full artifact-∪-fresh union TWICE (one
-    // per join side), each time shuffling every shingle array in the
-    // corpus for a candidate set that touches a sliver of them.
+    // corpus-sized shingle table down to those ids BEFORE it moves (guide
+    // §3.2); both verify sides then reuse the pruned slice's exchange.
     val candIds = cand.select(col("id_a").as(idCol))
       .unionByName(cand.select(col("id_b").as(idCol))).distinct()
     val allSh = oldShingles.join(gone, Seq(idCol), "left_anti")
       .unionByName(freshSh)
       .join(broadcast(candIds), Seq(idCol), "left_semi")
-      .localCheckpoint()
     kept.unionByName(
       verifyJaccard(cand, "id_a", "id_b", allSh, allSh, idCol, threshold))
   }
@@ -763,13 +751,9 @@ object NearDup {
     while (!converged && i < maxIters) {
       val prop = undirected.join(labels, undirected("src") === labels("id"))
         .select(col("dst").as("id"), col("cluster_id"))
-      // eager localCheckpoint: materializes AND truncates lineage (replaced
-      // frames drop out of driver scope, so the ContextCleaner reclaims
-      // their blocks). Checkpointing the edge-step result is what lets the
-      // halving step's consumers (probe + lookup sides) share one computed
-      // frame instead of re-running the propagation join per reference.
       val stepped = labels.unionAll(prop)
         .groupBy("id").agg(min(col("cluster_id")).as("cluster_id"))
+        // materialize: loop — cuts the lineage; both halving joins read the stepped labels
         .localCheckpoint(eager = true)
       // Pointer halving, applied TWICE per round (round 15 — the remaining
       // half of the large-star/small-star round cut): l(v) <-
@@ -794,6 +778,7 @@ object NearDup {
       val obs = org.apache.spark.sql.Observation()
       val halved = halve(halve(stepped))
         .observe(obs, sum(col("cluster_id").cast("decimal(38,0)")).as("__sum"))
+        // materialize: loop — the next iteration's labels, and the observed sum's job
         .localCheckpoint(eager = true)
       // Constraint-free view over the checkpointed blocks: localCheckpoint
       // preserves the origin plan's CONSTRAINTS on its LogicalRDD, and the
@@ -857,6 +842,7 @@ object NearDup {
         .agg((lit(base) + expr("(85 * sum(contrib)) div 100")).as("rank"))
         .select(col("dst").as("node"), col("rank"))
     }
+    // materialize: loop — cuts the unrolled iterations to an O(1)-deep returned plan
     val out = ranks.localCheckpoint(eager = true)
     withDeg.unpersist()
     out

@@ -3,8 +3,9 @@ package graft.queries
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables
-import graft.engine.Sources
+import graft.engine.{Partitions, Sources}
 import graft.ext.{NearDup, TextAnalysis, TextHash}
+import graft.plans.SharedSubplan
 
 /** Corpus-operations wave 3: interval algebra, weighted order statistics,
   * crawl-URL canonicalization, LSH parameter evaluation, and the
@@ -238,11 +239,11 @@ object CorpusQueries {
             TextHash.hash60(concat(lit("lshpilot#"), col("doc_id").cast("string"))))
           .orderBy(col("__ord"), col("doc_id")).limit(2000).drop("__ord")
         val cap = 64
-        // Materialized once: the pilot shingle frame feeds the signature
-        // banding AND the exact-truth verify below (~4 plan references);
-        // 2000 docs, bounded at any corpus size.
-        val sh = NearDup.shingleFrame(docs, "doc_id", "text", n = 3)
-          .localCheckpoint()
+        // The pilot shingle frame feeds the signature banding AND the
+        // exact-truth verify below (~4 plan references): one spread
+        // exchange under the barrier, so the shingles are computed once.
+        val sh = SharedSubplan.of(Partitions.spread(
+          NearDup.shingleFrame(docs, "doc_id", "text", n = 3)))
         val banded = NearDup.minHashSignatureFrame(sh, "doc_id", k = 64)
           .select(col("doc_id"),
             explode(NearDup.bandBuckets(col("__sig"), 16, 4)).as("__bb"))

@@ -3009,11 +3009,9 @@ object PipelineQueries {
           Map("o_orderkey" -> LongType, "o_custkey" -> LongType,
             "o_orderdate" -> TimestampType))
         // Gold dims: SCD2 merge over the q17 seeded prior state, built from
-        // the SILVER frame so the whole dim derives from the CSV leg; `base`
-        // is materialized once so the CSV parse does not re-run per use.
+        // the SILVER frame so the whole dim derives from the CSV leg.
         val base = custSilver.select(col("c_custkey"), col("c_name"),
           col("c_mktsegment"), col("c_acctbal").cast("decimal(12,2)").as("bal"))
-          .localCheckpoint()
         val dim = Scd2.merge(seededCustomerDim(base), base,
           naturalKey = "c_custkey", scdCols = Seq("c_name", "c_mktsegment", "bal"),
           skCol = "customer_sk", runTs = TsRun, sentinel = Sentinel)

@@ -348,7 +348,8 @@ object Round12Queries {
         TextAnalysis.splitAssign(
           coalesce(col("cluster_id"), col("doc_id")), SplitWeights)
           .as("prior_split"))
-    val bPairs = Round11Queries.incrementalBPairs(s, dir).select("id_a", "id_b")
+    // materialize: cross-action — connectedComponents' actions, then q515's leak audit
+    val bPairs = Round11Queries.incrementalBPairs(s, dir).select("id_a", "id_b").localCheckpoint()
     val bDocs = Round11Queries.stagedB(Tables.documents(s, dir)).select("doc_id")
     val bCc = NearDup.connectedComponents(bPairs, "id_a", "id_b")
       .select(col("id").as("doc_id"), col("cluster_id"))
@@ -788,7 +789,8 @@ object Round12Queries {
         // increment equals from-scratch, and this gate's own oracle still
         // derives C's pairs from scratch, so the equivalence is re-checked
         // through the whole policy chain here)
-        val cPairs = incrementalCPairs(s, dir).select("id_a", "id_b")
+        // materialize: cross-action — connectedComponents' actions, then the leak audit
+        val cPairs = incrementalCPairs(s, dir).select("id_a", "id_b").localCheckpoint()
         val cCc = NearDup.connectedComponents(cPairs, "id_a", "id_b")
           .select(col("id").as("doc_id"), col("cluster_id"))
         val members = cDocs.select("doc_id").join(cCc, Seq("doc_id"), "left")

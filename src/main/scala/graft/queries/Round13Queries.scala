@@ -168,10 +168,8 @@ object Round13Queries {
       "q522_maintained_graph_recall",
       (s, dir) => {
         graft.functions.GraftFunctions.ensureRegistered(s)
-        // the staged-B union is consumed by every hop join of the walk
-        // plus the brute-force truth — checkpoint it once (corpus-linear,
-        // the same one-materialization a deployment's staged snapshot is)
         Round12Queries.recallAuditOver(
+          // materialize: fanout — every walk hop and the truth re-read it; one copy is cheaper
           Round12Queries.stagedBEmb(Tables.embeddings(s, dir)).localCheckpoint(),
           SharedFrames.navEdgesB(s, dir), beam = 8,
           (_, edges) => Similarity.topDegreeNodes(edges, 64))
@@ -228,6 +226,7 @@ object Round13Queries {
             TextAnalysis.splitAssign(col("component"), Round12Queries.SplitWeights))
           .withColumn("quarantined", lit(0))
           .withColumn("stable_for", lit(0))
+          // materialize: decision — the bridge-doc picks are read from it; the version chain re-reads it
           .localCheckpoint()
         // the deterministic bridge fixture: lowest-id SINGLETON train/test
         // docs (two 1-row bounded gates)
@@ -257,6 +256,7 @@ object Round13Queries {
             gone = docs.filter(col("doc_id") === bId).select("doc_id"),
             fresh = v2.filter(col("doc_id") === bId),
             "doc_id", "text", n = 3, k = 64, bands = 16, threshold = 0.8)
+          // materialize: cross-action — connectedComponents' actions, then v3 and the audits
           .select("id_a", "id_b").localCheckpoint()
         def members(docIds: DataFrame, pairs: DataFrame): DataFrame = {
           val cc = NearDup.connectedComponents(pairs, "id_a", "id_b")
@@ -269,6 +269,7 @@ object Round13Queries {
           Splits.pinnedComponentSplitsVersioned(m, "doc_id", "component",
               prior, "split", "quarantined", "stable_for",
               Round12Queries.SplitWeights, retireAfter = 2)
+            // materialize: cross-action — the next step's actions and the final audit
             .localCheckpoint()
         val st2 = step(members(v2.select("doc_id"), v2Pairs), st1)
         // v3: the bridge doc leaves; the pair set is the incremental KEPT
@@ -276,6 +277,7 @@ object Round13Queries {
         val v3Ids = v2.select("doc_id").filter(col("doc_id") =!= bId)
         val v3Pairs = v2Pairs
           .filter(col("id_a") =!= bId && col("id_b") =!= bId)
+        // materialize: cross-action — read by the v3 and the v4 step
         val m3 = members(v3Ids, v3Pairs).localCheckpoint()
         val st3 = step(m3, st2)
         // v4: unchanged corpus — the calm window completes

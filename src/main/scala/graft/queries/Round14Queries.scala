@@ -372,6 +372,7 @@ object Round14Queries {
             TextAnalysis.splitAssign(col("component"), Round12Queries.SplitWeights))
           .withColumn("quarantined", lit(0))
           .withColumn("stable_for", lit(0))
+          // materialize: decision — the calm-doc picks are collected from it; the version chain re-reads it
           .localCheckpoint()
         // the CALM picks: lowest-id singleton train/test docs untouched by
         // every staging rule (snap >= 3: survives B un-revised, un-cloned;
@@ -409,6 +410,7 @@ object Round14Queries {
           Splits.pinnedComponentSplitsVersioned(m, "doc_id", "component",
               prior, "split", "quarantined", "stable_for",
               Round12Queries.SplitWeights, retireAfter = 1)
+            // materialize: cross-action — the next step's actions and the final audit
             .localCheckpoint()
         // ---- the four-version chain. Round 15: each version's FRESH
         // artifacts (the md5-heavy change-slice shingle + signature
@@ -416,10 +418,8 @@ object Round14Queries {
         // stagings and the bridge texts — never on the pair/CC/split chain
         // — so they materialize on a small thread pool OVERLAPPING the
         // driver-synchronous CC/step jobs (guide section 2.6, the
-        // compactPartitions precedent). sh frames stay LAZY (first
-        // consumer is the sg job on the same future); sg frames are EAGER
-        // (they feed both sides of the candidate self-join in one job).
-        // Values are untouched — this only reorders independent jobs.
+        // compactPartitions precedent). Values are untouched — this only
+        // reorders independent jobs.
         import scala.concurrent.{Await, Future}
         import scala.concurrent.duration.Duration
         val pool = java.util.concurrent.Executors.newFixedThreadPool(3)
@@ -437,6 +437,7 @@ object Round14Queries {
             .unionByName(one(bId, "").select("doc_id"))
           val fresh3 = Round12Queries.freshAtC(bDocs).unionByName(one(bId, bText))
           val cDocs = Round12Queries.stagedC(bDocs)
+            // materialize: cross-action — read by the v4 slices on the pool and by ids4
             .localCheckpoint(eager = false)
           // ---- v4 slices: organic D noise (the snap3 rule over C) + the
           // bridge content RETURNS — the retired component re-conflicts
@@ -449,8 +450,10 @@ object Round14Queries {
             .unionByName(one(bId, aText))
           def freshArtifacts(fresh: DataFrame): (DataFrame, DataFrame) = {
             val sh = NearDup.shingleFrame(fresh, "doc_id", "text", 3)
+              // materialize: cross-action — sg's job, the pair step and the next state
               .localCheckpoint(eager = false)
             val sg = NearDup.minHashSignatureFrame(sh, "doc_id", 64)
+              // materialize: cross-action — eager across threads; the pair step and the next state
               .localCheckpoint()
             (sh, sg)
           }
@@ -461,20 +464,22 @@ object Round14Queries {
           val v2Pairs = NearDup.incrementalPairsPrepared(aPairs,
               SharedFrames.minhashSigs(s, dir), SharedFrames.docShingles(s, dir, 3),
               gone2, sh2, sg2, "doc_id", k = 64, bands = 16, threshold = 0.8)
+            // materialize: cross-action — connectedComponents, the next pair step, the leak audit
             .localCheckpoint(eager = false)
           // v2 artifact states, delta-derived (the persisted-state inputs
           // of the next maintenance step — nothing corpus-sized is
-          // recomputed); both feed TWO consumers (the v3 maintenance call
-          // and the v3 state unions evaluated under v4), so they checkpoint
-          // EAGERLY on the pool, overlapping the v2 CC/step chain below
+          // recomputed), checkpointed on the pool, overlapping the v2
+          // CC/step chain below
           val fState2 = Future {
             val v2Sigs = SharedFrames.minhashSigs(s, dir)
               .join(gone2, Seq("doc_id"), "left_anti")
               .unionByName(sg2)
+              // materialize: cross-action — the v3 pair step and the v4 state union read it
               .localCheckpoint()
             val v2Shingles = SharedFrames.docShingles(s, dir, 3)
               .join(gone2, Seq("doc_id"), "left_anti")
               .unionByName(sh2)
+              // materialize: cross-action — the v3 pair step and the v4 state union read it
               .localCheckpoint()
             (v2Sigs, v2Shingles)
           }
@@ -484,6 +489,7 @@ object Round14Queries {
           val v3Pairs = NearDup.incrementalPairsPrepared(v2Pairs, v2Sigs,
               v2Shingles, gone3, sh3, sg3, "doc_id", k = 64, bands = 16,
               threshold = 0.8)
+            // materialize: cross-action — connectedComponents, the next pair step, the leak audit
             .localCheckpoint(eager = false)
           val st3 = step(members(cDocs.select("doc_id"), v3Pairs), st2)
           val v3Sigs = v2Sigs.join(gone3, Seq("doc_id"), "left_anti")
@@ -494,6 +500,7 @@ object Round14Queries {
           val v4Pairs = NearDup.incrementalPairsPrepared(v3Pairs, v3Sigs,
               v3Shingles, gone4, sh4, sg4, "doc_id", k = 64, bands = 16,
               threshold = 0.8)
+            // materialize: cross-action — connectedComponents' actions, then the leak audit
             .localCheckpoint(eager = false)
           val ids4 = cDocs.withColumn("__b", snap3Bucket)
             .filter(col("__b") =!= 0L).select("doc_id")
@@ -735,13 +742,14 @@ object Round14Queries {
       (s, dir) => {
         graft.functions.GraftFunctions.ensureRegistered(s)
         import s.implicits._
+        // materialize: cross-action — the f4 collect, then the final plan's walks and truth
         val e = Tables.embeddings(s, dir).localCheckpoint()
         val edges = SharedFrames.denseNavEdges(s, dir)
         val probes = Similarity.hashOrderedProbes(e, "vec_id", "beam", 20)
         val entries = Similarity.hashOrderedProbes(
           e.select("vec_id"), "vec_id", "entry", 128)
         val brute = Similarity.topKCosine(probes, e, "vec_id", "embedding", 3)
-          .select("query_id", "neighbor_id").localCheckpoint()
+          .select("query_id", "neighbor_id")
         def audit(tag: String, beam: Int, hops: Int,
             walk: DataFrame): DataFrame =
           brute.join(walk.select("query_id", "neighbor_id"),

@@ -512,6 +512,7 @@ object Round6Queries {
               Seq("a"), "left_semi")
             .join(keep.withColumnRenamed("id", "b").hint("shuffle_hash"),
               Seq("b"), "left_semi")
+            // materialize: loop — each peeling round reads the previous round's edges
             .localCheckpoint()
         }
         val converged = degrees(e)

@@ -669,6 +669,7 @@ object Round7Queries {
         for (_ <- 1 to rounds)
           e = e.join(support(e).filter(col("sup") >= 1).select("a", "b")
               .hint("shuffle_hash"), Seq("a", "b"), "left_semi")
+            // materialize: loop — each truss round reads the previous round's edges
             .localCheckpoint()
         val converged = e.join(support(e).filter(col("sup") >= 1).select("a", "b")
             .hint("shuffle_hash"), Seq("a", "b"), "left_anti")
@@ -811,6 +812,7 @@ object Round7Queries {
         val mu = mutualKnnEdges(s, dir)
         val und = mu.select(col("id_a").as("u"), col("id_b").as("v"))
           .unionAll(mu.select(col("id_b").as("u"), col("id_a").as("v")))
+        // materialize: loop — the hop-1 reach set that each later hop extends
         var reach = und.distinct().localCheckpoint()
         val counts = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
         counts += reach.filter(col("u") < col("v"))
@@ -822,6 +824,7 @@ object Round7Queries {
                 .hint("shuffle_hash"), Seq("v"))
               .select(col("u"), col("x").as("v"))
               .filter(col("u") =!= col("v")))
+            // materialize: loop — each hop extends the previous hop's reach set
             .distinct().localCheckpoint()
           counts += reach.filter(col("u") < col("v"))
             .agg(count(lit(1)).as("n_pairs")).select(lit(h).as("h"), col("n_pairs"))
@@ -1112,12 +1115,14 @@ object Round7Queries {
         val mu = mutualKnnEdges(s, dir)
         val und = mu.select(col("id_a").as("u"), col("id_b").as("v"))
           .unionAll(mu.select(col("id_b").as("u"), col("id_a").as("v")))
+        // materialize: loop — the hop-1 reach set that each later hop extends
         val r1 = und.distinct().localCheckpoint()
         def expand(r: DataFrame) = r
           .unionAll(r.join(und.select(col("u").as("v"), col("v").as("x"))
               .hint("shuffle_hash"), Seq("v"))
             .select(col("u"), col("x").as("v"))
             .filter(col("u") =!= col("v")))
+          // materialize: loop — each hop extends the previous hop's reach set
           .distinct().localCheckpoint()
         val r2 = expand(r1)
         val r3 = expand(r2)

@@ -391,10 +391,9 @@ object SharedFrames {
     * [[staleIvfPlanes]].
     */
   def staleIvf(s: SparkSession, dir: String): IvfPq.Index =
-    // one evaluation of the residual expansion serves both the codebook
-    // train and the code assignment
     indexMemo(s, dir, staleKey)(
       IvfPq.withDerivedCells(staleBase(s, dir), "embedding", staleIvfPlanes(s, dir)),
+      // materialize: cross-action — the codebook write and the codes write
       _.localCheckpoint())
 
   /** The frozen plane count the stale index is trained at — what a

@@ -337,6 +337,17 @@ class JobBudgetSpec extends SparkSpec {
     }
   }
 
+  // Measured: 12 jobs for one incremental pair-maintenance step over
+  // persisted version-A artifacts. It was 16 while the operator
+  // localCheckpointed its fresh shingles and signatures, its candidate
+  // pairs and its pruned shingle slice, each a job of its own.
+  test("one incremental near-dup pair step stays within its job budget") {
+    val fixture = graft.ext.IncrementalPairsFixture(spark, sf0001)
+    var n = 0
+    val jobs = jobsIn { n = fixture.pairs.collect().length }
+    assert(n > 0 && jobs <= 12, s"jobs=$jobs")
+  }
+
   // The ANN path on the embeddings fixture (derived cells, 4 partitions):
   // the index build and its three writes, one ADC probe batch against the
   // read-back index, and the beam walk over a read-back mutual-kNN graph.

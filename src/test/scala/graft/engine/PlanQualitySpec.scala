@@ -182,6 +182,38 @@ class PlanQualitySpec extends SparkSpec {
     }
   }
 
+  test("incremental pairs run the signature aggregate and the candidate join once, reused") {
+    // The fresh band buckets feed three join sides, the candidate pairs
+    // (under their barrier) the shingle prune and the verify join, and the
+    // pruned shingle slice both verify sides: each plans one exchange, and
+    // AQE reuses it instead of recomputing the subtree.
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    import org.apache.spark.sql.execution.aggregate.HashAggregateExec
+    import org.apache.spark.sql.execution.exchange.{ReusedExchangeExec, ShuffleExchangeExec}
+    val df = graft.ext.IncrementalPairsFixture(spark, sf0001).pairs
+    df.collect()
+    val plan = df.queryExecution.executedPlan
+    val shuffles = PlanWalk.collectWithSubqueries(plan) { case e: ShuffleExchangeExec => e }
+    val reused = PlanWalk.collectWithSubqueries(plan) { case r: ReusedExchangeExec => r.child }
+    val signatures = PlanWalk.collectWithSubqueries(plan) {
+      case a: HashAggregateExec if a.output.exists(_.name == "__sig") => a
+    }
+    def exchange(output: Seq[String], keys: Seq[String]) = shuffles.filter(e =>
+      e.output.map(_.name) == output && (e.outputPartitioning match {
+        case h: HashPartitioning => h.expressions.flatMap(_.references).map(_.name) == keys
+        case _ => false
+      }))
+    val bands = shuffles.filter(_.find(p => signatures.exists(_ eq p)).nonEmpty)
+    val candidates = exchange(Seq("id_a", "id_b"), Seq("id_a", "id_b"))
+    val slices = exchange(Seq("id_a", "__sa"), Seq("id_a"))
+    val shared = Seq(bands -> 2, candidates -> 2, slices -> 1)
+    assert(signatures.size == 1 && shared.forall(_._1.size == 1),
+      s"expected one signature aggregate and one band, candidate and slice exchange, " +
+        s"found ${signatures.size} and ${shared.map(_._1.size).mkString(", ")}:\n$plan")
+    for ((Seq(e), n) <- shared)
+      assert(reused.count(_.sameResult(e)) == n, s"expected $n reuses of $e in:\n$plan")
+  }
+
   test("bitmap rollup reuses the daily-bitmap exchange across both consumers") {
     // q123's per-(type, day, bucket) bitmap frame feeds the per-day distinct
     // branch AND the bitmap_or_agg merge branch; the subtrees canonicalize
