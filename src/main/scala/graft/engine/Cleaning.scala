@@ -80,4 +80,8 @@ object Cleaning {
     */
   def normalizeText(c: Column): Column =
     regexp_replace(trim(lower(c)), "\\s+", " ")
+
+  /** DuckDB twin of [[normalizeText]] over the SQL expression `c`. */
+  def duckNormalizeText(c: String): String =
+    raw"regexp_replace(trim(lower($c)), '\s+', ' ', 'g')"
 }

@@ -6,9 +6,10 @@ import graft.engine.Keys
 
 /** Reusable measurement operators for training-data pipelines: relational
   * Bloom filters (build + probe as plain DataFrame algebra, no driver-side
-  * sketch objects) and the scale-safe Mann-Whitney AUC. Everything here is
-  * deterministic cross-engine: integer/bit arithmetic end-to-end, with at
-  * most one final IEEE division surfacing a double.
+  * sketch objects), the scale-safe Mann-Whitney AUC and the per-query ANN
+  * recall audit. Everything here is deterministic cross-engine: integer/bit
+  * arithmetic end-to-end, with at most one final IEEE division surfacing a
+  * double.
   */
 object EvalStats {
 
@@ -84,4 +85,39 @@ object EvalStats {
         ((col("__sum2") - col("n_pos") * (col("n_pos") + lit(1L))).cast("double")
           / (lit(2L) * col("n_pos") * col("n_neg")).cast("double")).as("auc"))
   }
+
+  /** Per-query recall of `found` against `truth`, both (query_id,
+    * neighbor_id): (query_id, n_true, n_hits, recall_micro) with recall in
+    * integer micro floor units, ordered by query_id. The hit count is a
+    * semi join on the pair key.
+    */
+  def recallAudit(truth: DataFrame, found: DataFrame): DataFrame = {
+    val hits = truth
+      .join(found, Seq("query_id", "neighbor_id"), "left_semi")
+      .groupBy("query_id").agg(count(lit(1)).as("n_hits"))
+    truth.groupBy("query_id").agg(count(lit(1)).as("n_true"))
+      .join(hits, Seq("query_id"), "left")
+      .select(col("query_id"), col("n_true"),
+        coalesce(col("n_hits"), lit(0L)).as("n_hits"))
+      .withColumn("recall_micro",
+        expr("n_hits * 1000000 DIV n_true"))
+      .orderBy("query_id")
+  }
+
+  /** DuckDB twin of [[recallAudit]] over relations `truth` and `found`: a
+    * `hits` CTE (continuing an open WITH list) and the final SELECT.
+    */
+  def duckRecallAudit(truth: String, found: String): String = s"""hits AS (
+          SELECT b.query_id, COUNT(*) AS n_hits
+          FROM $truth b
+          JOIN $found w ON w.query_id = b.query_id
+                     AND w.neighbor_id = b.neighbor_id
+          GROUP BY b.query_id
+        )
+        SELECT b.query_id, CAST(COUNT(*) AS BIGINT) AS n_true,
+               CAST(COALESCE(MAX(h.n_hits), 0) AS BIGINT) AS n_hits,
+               CAST(COALESCE(MAX(h.n_hits), 0) * 1000000 // COUNT(*) AS BIGINT)
+                 AS recall_micro
+        FROM $truth b LEFT JOIN hits h ON h.query_id = b.query_id
+        GROUP BY b.query_id ORDER BY b.query_id"""
 }

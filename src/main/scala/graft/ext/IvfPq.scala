@@ -83,14 +83,6 @@ object IvfPq {
     */
   final case class Index(cents: DataFrame, cw: DataFrame, codes: DataFrame)
 
-  /** Sequential-order squared L2 between a BIGINT micro-residual (or FLOAT
-    * query-vector) list and a DOUBLE codeword/centroid list (fixed
-    * left-to-right accumulation; left side cast to double per element).
-    */
-  def d2(r: Column, c: Column): Column =
-    aggregate(zip_with(r, c, (x, cw) => (x.cast("double") - cw) * (x.cast("double") - cw)),
-      lit(0.0), (acc, v) => acc + v)
-
   /** Sign-pattern codebook seed: bits of (r[0..4] >= 0) packed MSB-first. */
   private def signSeed(r: Column): Column =
     (0 until 5).map(i =>
@@ -143,7 +135,7 @@ object IvfPq {
     graft.plans.TopKPerKey.of(
         parts.join(broadcast(cw), Seq("m"))
           .select(col("id"), col("cell"), col("m"), col("g"),
-            d2(col("r"), col("cwvec")).as("cd2")),
+            Similarity.d2(col("r"), col("cwvec")).as("cd2")),
         keyCols = Seq("id", "m"),
         order = Seq("cd2" -> true, "g" -> true), k = 1)
       .select(col("id"), col("cell"), col("m"), col("g"))
@@ -200,7 +192,7 @@ object IvfPq {
     val qc = collected(graft.plans.TopKPerKey.of(
         probes.crossJoin(broadcast(ix.cents))
           .select(col("query_id"), col("qv"), col("cell"), col("centroid"),
-            d2(col("qv"), col("centroid")).as("qd2")),
+            Similarity.d2(col("qv"), col("centroid")).as("qd2")),
         keyCols = Seq("query_id"),
         order = Seq("qd2" -> true, "cell" -> true), k = nprobe)
       .select(col("query_id"), col("qv"), col("cell"), col("centroid")))
@@ -216,7 +208,7 @@ object IvfPq {
       .select(col("query_id"), col("cell"), col("p.m").as("m"), col("p.rq").as("rq"))
     val dt = qparts.join(broadcast(ix.cw), Seq("m"))
       .select(col("query_id"), col("cell"), col("m"), col("g"),
-        d2(col("rq"), col("cwvec")).as("dd"))
+        Similarity.d2(col("rq"), col("cwvec")).as("dd"))
     // The IVF search-coordinator move: the probed cell list is KNOWN and
     // bounded (probes x nprobe rows) before any corpus IO — collect it and
     // push it into the codes scan as a STATIC partition filter, so the

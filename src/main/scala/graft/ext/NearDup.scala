@@ -50,6 +50,10 @@ object NearDup {
       .otherwise(array_distinct(transform(arrays_zip(parts: _*), shingleOf)))
   }
 
+  /** DuckDB twin of [[shingles]] over the token-list expression `w`. */
+  def duckShingles(w: String, n: Int): String =
+    s"list_distinct([array_to_string($w[i:i+${n - 1}], ' ') FOR i IN generate_series(1, len($w) - ${n - 1})])"
+
   /** Universal-hash family for MinHash: member s maps a base hash h to
     * (A_s * h + s) mod P over the Mersenne prime P = 2^31 - 1. One md5 per
     * shingle (the base hash, reduced mod P) feeds all k members as cheap
@@ -675,6 +679,25 @@ object NearDup {
     * component is canonical), so the decision is invisible to hashes —
     * the same bounded-decision-read shape as the skew-salt cutover.
     */
+  /** DuckDB twin of [[connectedComponents]] as recursive CTEs over the pair
+    * relation `pairs(id_a, id_b)`: `${out}_e` (undirected edges),
+    * `${out}_reach(v, label)`, then `out(doc_id, component)` with the
+    * min-label component id. Needs an enclosing `WITH RECURSIVE`.
+    */
+  def duckConnectedComponents(pairs: String, out: String): String = s"""
+        ${out}_e AS (
+          SELECT id_a AS src, id_b AS dst FROM $pairs
+          UNION
+          SELECT id_b AS src, id_a AS dst FROM $pairs
+        ), ${out}_reach(v, label) AS (
+          SELECT src, src FROM ${out}_e
+          UNION
+          SELECT e.dst, r.label FROM ${out}_reach r JOIN ${out}_e e ON e.src = r.v
+        ), $out AS MATERIALIZED (
+          SELECT v AS doc_id, CAST(MIN(label) AS BIGINT) AS component
+          FROM ${out}_reach GROUP BY v
+        )""".stripMargin.trim
+
   val CcSingleJobMaxEdges: Long = 1000000L
 
   def connectedComponents(pairs: DataFrame, aCol: String, bCol: String,
@@ -957,7 +980,7 @@ object NearDup {
     }.mkString(" + ")
     s"""WITH toks AS (
        |  SELECT $idCol, unnest(list_distinct(string_split(
-       |           regexp_replace(trim(lower($textCol)), '\\s+', ' ', 'g'), ' '))) AS __tok
+       |           ${graft.engine.Cleaning.duckNormalizeText(textCol)}, ' '))) AS __tok
        |  FROM $docsRel
        |), hashed AS (
        |  SELECT $idCol, ${TextHash.duckHash60("__tok")} AS __h FROM toks

@@ -13,7 +13,7 @@ import org.apache.spark.sql.functions._
   * (here the `label` column; at 100 TB a k-means assignment computed
   * upstream), queries probe only their own cell, cutting the candidate set by
   * the cell count while keeping the same per-pair math. Sign-LSH
-  * (`hyperplaneBuckets`) gives a data-independent alternative: deterministic
+  * (`hyperplaneBucket`) gives a data-independent alternative: deterministic
   * pseudo-random hyperplanes derived from the shared 60-bit hash, so the
   * DuckDB oracle reproduces bucket assignment bit-for-bit.
   *
@@ -37,6 +37,23 @@ object Similarity {
     */
   def nativeDot(a: Column, b: Column): Column =
     call_function("graft_vec_dot", a, b)
+
+  /** DuckDB twin of [[dot]] / [[nativeDot]] over float lists `a`, `b`. */
+  def duckDot(a: String, b: String): String =
+    s"list_sum([CAST($a[i] AS DOUBLE) * CAST($b[i] AS DOUBLE) FOR i IN generate_series(1, len($a))])"
+
+  /** Sequential-order squared L2 between a numeric list (a BIGINT
+    * micro-residual or a FLOAT vector) and a DOUBLE codeword/centroid list:
+    * left side cast to double per element, fixed left-to-right accumulation.
+    */
+  def d2(r: Column, c: Column): Column =
+    aggregate(zip_with(r, c, (x, cw) => (x.cast("double") - cw) * (x.cast("double") - cw)),
+      lit(0.0), (acc, v) => acc + v)
+
+  /** DuckDB twin of [[d2]] over the first `n` elements (a SQL expression). */
+  def duckD2(r: String, c: String, n: String): String =
+    s"""list_sum([(CAST($r[i] AS DOUBLE) - $c[i]) * (CAST($r[i] AS DOUBLE) - $c[i])
+                 FOR i IN generate_series(1, $n)])"""
 
   /** L2 norm (double). */
   def norm(a: Column): Column = sqrt(dot(a, a))
@@ -75,6 +92,14 @@ object Similarity {
         TextHash.hash60(concat(lit(tag + "#"), col(idCol).cast("string"))))
       .orderBy(col("__ord"), col(idCol)).limit(n).drop("__ord")
   }
+
+  /** DuckDB twin of [[hashOrderedProbes]]: the ORDER BY … LIMIT tail that
+    * picks the same `n` rows from any relation carrying `idCol`.
+    */
+  def duckHashOrderedProbes(idCol: String, tag: String, n: Int): String =
+    s"""ORDER BY ${TextHash.duckHash60(s"'$tag#' || CAST($idCol AS VARCHAR)")},
+                   $idCol
+          LIMIT $n"""
 
   /** Brute-force per-query top-k cosine neighbors.
     *
@@ -305,10 +330,7 @@ object Similarity {
     // named "cell" would otherwise collide with exactCentroids' output
     val cents = exactCentroids(corpus, vecCol, cellCol)
       .select(col("cell").as("__fcell"), col("centroid").as("__fcent"))
-    val dist2 = aggregate(
-      zip_with(col(vecCol), col("__fcent"),
-        (x, c) => (x.cast("double") - c) * (x.cast("double") - c)),
-      lit(0.0), (acc, v) => acc + v)
+    val dist2 = d2(col(vecCol), col("__fcent"))
     graft.plans.TopKPerKey.of(
         spread(corpus, idCol)
           .crossJoin(broadcast(cents))
@@ -486,10 +508,7 @@ object Similarity {
       vecCol: String, cellCol: String, nprobe: Int, k: Int): DataFrame = {
     graft.functions.GraftFunctions.ensureRegistered(corpus.sparkSession)
     val cents = exactCentroids(corpus, vecCol, cellCol)
-    val dist2 = aggregate(
-      zip_with(col(vecCol), col("centroid"),
-        (x, c) => (x.cast("double") - c) * (x.cast("double") - c)),
-      lit(0.0), (acc, v) => acc + v)
+    val dist2 = d2(col(vecCol), col("centroid"))
     val probed = graft.plans.TopKPerKey.of(
         spread(queries, idCol)
           .crossJoin(broadcast(cents))
@@ -661,6 +680,29 @@ object Similarity {
         transform(col("__cm"), s => s.getField("mean")).as("centroid"))
   }
 
+  /** DuckDB twin of the exact element mean inside [[exactCentroids]]: the
+    * 2^48-scaled decimal sum of `v`, scaled back, over COUNT(*).
+    */
+  def duckExactMean(v: String): String =
+    s"""CAST(SUM(CAST(CAST($v AS DOUBLE) * 281474976710656 AS DECIMAL(38,0))) AS DOUBLE)
+                   / 281474976710656 / COUNT(*)"""
+
+  /** DuckDB twin of [[exactCentroids]] as two CTEs: `means(cell, dim, mean)`
+    * over the rows of `from` (its `embedding` list, cell expression `cell`),
+    * then `cents(cell, centroid)`, the means re-assembled dim-ordered.
+    */
+  def duckExactCentroids(means: String, cents: String, from: String,
+      cell: String = "label"): String = s"""$means AS (
+          SELECT $cell AS cell, CAST(u.i - 1 AS INTEGER) AS dim,
+                 ${duckExactMean("u.v")} AS mean
+          FROM $from,
+               LATERAL (SELECT unnest(embedding) AS v,
+                               generate_subscripts(embedding, 1) AS i) u
+          GROUP BY $cell, dim
+        ), $cents AS (
+          SELECT cell, list(mean ORDER BY dim) AS centroid FROM $means GROUP BY cell
+        )"""
+
   /** IVF assignment step: each vector goes to its nearest centroid by
     * squared L2 (ties to the lowest cell id). Centroids broadcast; the
     * argmin is the custom heap TopKPerKey with k=1 — one pass, no per-key
@@ -669,10 +711,7 @@ object Similarity {
     */
   def assignToNearestCentroid(corpus: DataFrame, idCol: String, vecCol: String,
       centroids: DataFrame): DataFrame = {
-    val dist2 = aggregate(
-      zip_with(col(vecCol), col("centroid"),
-        (x, c) => (x.cast("double") - c) * (x.cast("double") - c)),
-      lit(0.0), (acc, v) => acc + v)
+    val dist2 = d2(col(vecCol), col("centroid"))
     val pairs = spread(corpus, idCol)
       .crossJoin(broadcast(centroids))
       .select(corpus.columns.filter(_ != vecCol).map(col) :+
@@ -682,12 +721,6 @@ object Similarity {
       .drop("rank")
   }
 
-  /** Sign-LSH bucket id: `planes` pseudo-random hyperplanes whose component
-    * j of plane p is +1/-1 from the shared deterministic 60-bit hash of
-    * "p:j" (bit 0). The bucket is the sign pattern of the plane dot products
-    * packed into a long. Oracle-reproducible; at scale this is the
-    * data-independent candidate generator (group by bucket, pair within).
-    */
   /** Uniform 8-bit quantization codes for a materialized array<double>
     * column with its per-row min/max: floor((x - min) * 255 / (max - min)),
     * clamped to 255 (all zeros for a constant vector). floor (never
@@ -701,6 +734,12 @@ object Similarity {
       transform(dv, x => least(floor((x - qmin) * lit(255.0) / (qmax - qmin)), lit(255L))))
       .otherwise(transform(dv, _ => lit(0L)))
 
+  /** Sign-LSH bucket id: `planes` pseudo-random hyperplanes whose component
+    * j of plane p is +1/-1 from the shared deterministic 60-bit hash of
+    * "p:j" (bit 0). The bucket is the sign pattern of the plane dot products
+    * packed into a long. Oracle-reproducible; at scale this is the
+    * data-independent candidate generator (group by bucket, pair within).
+    */
   def hyperplaneBucket(vec: Column, planes: Int): Column = {
     require(planes >= 1 && planes <= 60)
     val bits = (0 until planes).map { p =>
@@ -715,6 +754,19 @@ object Similarity {
     }
     bits.reduce(_ + _)
   }
+
+  /** DuckDB twin of [[hyperplaneBucket]] / [[hyperplaneBucketFast]] over the
+    * float list `vec`; `lastPlane` is the SQL expression of planes - 1.
+    */
+  def duckHyperplaneBucket(vec: String, lastPlane: String): String = s"""CAST(list_sum([
+                   CASE WHEN list_sum([
+                     CAST($vec[i] AS DOUBLE) *
+                     (CASE WHEN (${TextHash.duckHash60(
+                        "CAST(p AS VARCHAR) || ':' || CAST(i - 1 AS VARCHAR)")} & 1) = 1
+                      THEN 1.0 ELSE -1.0 END)
+                     FOR i IN generate_series(1, len($vec))]) >= 0
+                   THEN CAST(1 AS BIGINT) << p ELSE CAST(0 AS BIGINT) END
+                   FOR p IN generate_series(0, $lastPlane)]) AS BIGINT)"""
 
   /** Driver-side evaluation of the shared 60-bit hash (same md5-prefix
     * definition as TextHash.hash60) — lets plan construction pre-fold

@@ -20,6 +20,10 @@ object TextAnalysis {
     */
   def tokens(text: Column): Column = split(Cleaning.normalizeText(text), " ")
 
+  /** DuckDB twin of [[tokens]] over the SQL expression `text`. */
+  def duckTokens(text: String): String =
+    s"string_split(${Cleaning.duckNormalizeText(text)}, ' ')"
+
   /** BPE-ish subword pre-tokenization count: alphabetic runs, digit runs, and
     * single non-space symbols — the classic GPT-2-style pre-split shape,
     * counted without materializing the token list downstream.
@@ -36,6 +40,11 @@ object TextAnalysis {
     */
   def scrubTokens(toks: Column, blocklist: Seq[String]): Column =
     filter(toks, t => !t.isInCollection(blocklist))
+
+  /** DuckDB twin of the stopword list [[stopwordRatio]] counts: the quoted
+    * body of an IN list.
+    */
+  val duckStopwords: String = Stopwords.map(w => s"'$w'").mkString(",")
 
   /** Fraction of tokens that are stopwords (0 when the document is empty). */
   def stopwordRatio(toks: Column): Column =
@@ -85,6 +94,26 @@ object TextAnalysis {
         when(laterScores.foldLeft(lit(true): Column)((acc, s) => acc && score >= s), lang)
           .otherwise(elseCol)
     }
+  }
+
+  /** DuckDB twin of [[langId]]'s per-profile hit counts over the token list
+    * `w`: one `c_<lang>` column per [[LangProfiles]] entry, for a SELECT list.
+    */
+  def duckLangCounts(w: String): String =
+    LangProfiles.map { case (lang, words) =>
+      s"len(list_filter($w, t -> t IN (${words.map(x => s"'$x'").mkString(",")}))) AS c_$lang"
+    }.mkString(",\n                 ")
+
+  /** DuckDB twin of [[langId]] over the `c_<lang>` columns of
+    * [[duckLangCounts]]: the same argmax with ties to the earlier profile.
+    */
+  val duckLangId: String = {
+    val langs = LangProfiles.map(_._1)
+    val arms = langs.init.zipWithIndex.map { case (lang, i) =>
+      val later = langs.drop(i + 1).map(l => s"c_$lang >= c_$l").mkString(" AND ")
+      s"WHEN $later THEN '$lang'"
+    }.mkString(" ")
+    s"CASE $arms ELSE '${langs.last}' END"
   }
 
   /** 32-hex md5 fingerprint of the normalized text — the exact-dedup key.

@@ -4,8 +4,12 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.engine.{Partitions, Sources}
-import graft.ext.{NearDup, TextAnalysis, TextHash}
+import graft.ext.{NearDup, Similarity, TextAnalysis, TextHash}
 import graft.plans.SharedSubplan
+import graft.engine.Cleaning.duckNormalizeText
+import graft.ext.NearDup.duckShingles
+import graft.ext.Similarity.duckD2
+import graft.ext.TextAnalysis.duckTokens
 
 /** Corpus-operations wave 3: interval algebra, weighted order statistics,
   * crawl-URL canonicalization, LSH parameter evaluation, and the
@@ -15,16 +19,6 @@ import graft.plans.SharedSubplan
   * unpartitioned window anywhere (per-user/per-lang frames only).
   */
 object CorpusQueries {
-
-  /** DuckDB fragment: normalized text (mirror of Cleaning.normalizeText). */
-  private val NormText = raw"regexp_replace(trim(lower(text)), '\s+', ' ', 'g')"
-
-  /** DuckDB fragment: whitespace tokens of the normalized text. */
-  private val Toks = s"string_split($NormText, ' ')"
-
-  /** DuckDB fragment: distinct word n-gram shingles of token list `w`. */
-  private def duckShingles(w: String, n: Int): String =
-    s"list_distinct([array_to_string($w[i:i+${n - 1}], ' ') FOR i IN generate_series(1, len($w) - ${n - 1})])"
 
   val qs: Seq[Q] = Seq(
 
@@ -122,10 +116,9 @@ object CorpusQueries {
             max(col("total")).as("total_weight"))
           .orderBy("lang")
       },
-      Some("""
+      Some(s"""
         WITH g AS (
-          SELECT lang, n_chars, SUM(len(string_split(
-                   regexp_replace(trim(lower(text)), '\s+', ' ', 'g'), ' '))) AS gw
+          SELECT lang, n_chars, SUM(len(${duckTokens("text")})) AS gw
           FROM documents GROUP BY 1, 2
         ), c AS (
           SELECT lang, n_chars, gw,
@@ -296,11 +289,9 @@ object CorpusQueries {
       Some(s"""
         WITH pilot AS (
           SELECT * FROM documents
-          ORDER BY ${TextHash.duckHash60("'lshpilot#' || CAST(doc_id AS VARCHAR)")},
-                   doc_id
-          LIMIT 2000
+          ${Similarity.duckHashOrderedProbes("doc_id", "lshpilot", 2000)}
         ), d AS (
-          SELECT doc_id, ${duckShingles(Toks, 3)} AS sh FROM pilot
+          SELECT doc_id, ${duckShingles(duckTokens("text"), 3)} AS sh FROM pilot
         ), nz AS (
           SELECT doc_id, sh FROM d WHERE len(sh) > 0
         ), sigs AS (
@@ -799,7 +790,7 @@ object CorpusQueries {
           SELECT unnest(['table value part', 'scan slow fast', 'spark a a'])
             AS phrase
         ), d AS (
-          SELECT doc_id, ' ' || $NormText || ' ' AS t FROM documents
+          SELECT doc_id, ' ' || ${duckNormalizeText("text")} || ' ' AS t FROM documents
         ), m AS (
           SELECT phrase, doc_id,
                  (length(t) - length(replace(t, ' ' || phrase || ' ', ' ')))
@@ -1187,7 +1178,7 @@ object CorpusQueries {
       },
       Some(s"""
         WITH d AS (
-          SELECT $Toks AS w FROM documents
+          SELECT ${duckTokens("text")} AS w FROM documents
         ), pairs AS (
           SELECT unnest([struct_pack(a := w[i], b := w[i + j])
                          FOR i IN generate_series(1, len(w) - j)]) AS pr
@@ -1299,7 +1290,7 @@ object CorpusQueries {
       },
       Some(s"""
         WITH real AS (
-          SELECT DISTINCT unnest($Toks) AS w FROM documents
+          SELECT DISTINCT unnest(${duckTokens("text")}) AS w FROM documents
         ), nz AS (
           SELECT DISTINCT w FROM (
             SELECT w FROM real WHERE len(w) > 0
@@ -1412,21 +1403,9 @@ object CorpusQueries {
                 lit(2L) * dec(col("a2")) * dec(col("b2"))).cast("double")).as("ari"))
       },
       Some(s"""
-        WITH m AS (
-          SELECT label, CAST(u.i - 1 AS INTEGER) AS dim,
-                 CAST(SUM(CAST(CAST(u.v AS DOUBLE) * 281474976710656 AS DECIMAL(38,0))) AS DOUBLE)
-                   / 281474976710656 / COUNT(*) AS mean
-          FROM embeddings,
-               LATERAL (SELECT unnest(embedding) AS v,
-                               generate_subscripts(embedding, 1) AS i) u
-          GROUP BY label, dim
-        ), c AS (
-          SELECT label AS cell, list(mean ORDER BY dim) AS centroid FROM m GROUP BY label
-        ), p AS (
+        WITH ${Similarity.duckExactCentroids("m", "c", "embeddings")}, p AS (
           SELECT e.vec_id, e.label, c.cell,
-                 list_sum([(CAST(e.embedding[i] AS DOUBLE) - c.centroid[i])
-                           * (CAST(e.embedding[i] AS DOUBLE) - c.centroid[i])
-                           FOR i IN generate_series(1, len(e.embedding))]) AS dist2
+                 ${duckD2("e.embedding", "c.centroid", "len(e.embedding)")} AS dist2
           FROM embeddings e CROSS JOIN c
         ), assigned AS (
           SELECT vec_id, label, cell FROM p
@@ -1480,11 +1459,11 @@ object CorpusQueries {
       Some(s"""
         WITH a AS (
           SELECT tok, row_number() OVER (ORDER BY COUNT(*) DESC, tok) AS rank_a
-          FROM (SELECT unnest($Toks) AS tok FROM documents WHERE doc_id % 2 = 0)
+          FROM (SELECT unnest(${duckTokens("text")}) AS tok FROM documents WHERE doc_id % 2 = 0)
           WHERE len(tok) > 0 GROUP BY tok
         ), b AS (
           SELECT tok, row_number() OVER (ORDER BY COUNT(*) DESC, tok) AS rank_b
-          FROM (SELECT unnest($Toks) AS tok FROM documents WHERE doc_id % 2 = 1)
+          FROM (SELECT unnest(${duckTokens("text")}) AS tok FROM documents WHERE doc_id % 2 = 1)
           WHERE len(tok) > 0 GROUP BY tok
         )
         SELECT a.tok, CAST(rank_a AS BIGINT) AS rank_a,
@@ -1703,21 +1682,13 @@ object CorpusQueries {
           .orderBy("true_lang", "pred_lang")
       },
       Some {
-        val langCounts = TextAnalysis.LangProfiles.map { case (lang, words) =>
-          s"len(list_filter(w, t -> t IN (${words.map(x => s"'$x'").mkString(",")}))) AS c_$lang"
-        }.mkString(",\n                 ")
-        val langs = TextAnalysis.LangProfiles.map(_._1)
-        val langCase = langs.init.zipWithIndex.map { case (lang, i) =>
-          val later = langs.drop(i + 1).map(l => s"c_$lang >= c_$l").mkString(" AND ")
-          s"WHEN $later THEN '$lang'"
-        }.mkString(" ")
         s"""
         WITH base AS (
-          SELECT doc_id, lang AS true_lang, $Toks AS w FROM documents
+          SELECT doc_id, lang AS true_lang, ${duckTokens("text")} AS w FROM documents
         ), feat AS (
-          SELECT doc_id, true_lang, $langCounts FROM base
+          SELECT doc_id, true_lang, ${TextAnalysis.duckLangCounts("w")} FROM base
         ), pred AS (
-          SELECT true_lang, CASE $langCase ELSE '${langs.last}' END AS pred_lang
+          SELECT true_lang, ${TextAnalysis.duckLangId} AS pred_lang
           FROM feat
         ), cells AS (
           SELECT true_lang, pred_lang, CAST(COUNT(*) AS BIGINT) AS n
@@ -1766,7 +1737,7 @@ object CorpusQueries {
                    AS text
           FROM documents
         ), base AS (
-          SELECT doc_id, text, $NormText AS norm, $Toks AS w FROM clipped
+          SELECT doc_id, text, ${duckNormalizeText("text")} AS norm, ${duckTokens("text")} AS w FROM clipped
         ), feat AS (
           SELECT doc_id, text, norm, w, ${duckShingles("w", 8)} AS sh8
           FROM base

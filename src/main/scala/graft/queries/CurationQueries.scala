@@ -4,6 +4,10 @@ import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.engine.Sources
 import graft.ext.{NearDup, Similarity, TextAnalysis, TextHash}
+import graft.engine.Cleaning.duckNormalizeText
+import graft.ext.NearDup.duckShingles
+import graft.ext.Similarity.{duckDot, duckD2}
+import graft.ext.TextAnalysis.duckTokens
 
 /** Corpus-curation wave 5: semantic (embedding-space) dedup decisions,
   * prototype-distance pruning, and lexical-diversity audits — the curation
@@ -13,37 +17,6 @@ import graft.ext.{NearDup, Similarity, TextAnalysis, TextHash}
   * DuckDB, integer counts everywhere else, no unpartitioned windows.
   */
 object CurationQueries {
-
-  /** DuckDB fragment: normalized text (mirror of Cleaning.normalizeText). */
-  private val NormText = raw"regexp_replace(trim(lower(text)), '\s+', ' ', 'g')"
-
-  /** DuckDB fragment: whitespace tokens of the normalized text. */
-  private val Toks = s"string_split($NormText, ' ')"
-
-  /** DuckDB fragment: distinct word n-gram shingles of token list `w`. */
-  private def duckShingles(w: String, n: Int): String =
-    s"list_distinct([array_to_string($w[i:i+${n - 1}], ' ') FOR i IN generate_series(1, len($w) - ${n - 1})])"
-
-  /** DuckDB fragment: sequential double dot product of float lists a,b. */
-  private def duckDot(a: String, b: String): String =
-    s"list_sum([CAST($a[i] AS DOUBLE) * CAST($b[i] AS DOUBLE) FOR i IN generate_series(1, len($a))])"
-
-  /** DuckDB CTE body: SRP bucket per vec_id (mirror of
-    * Similarity.hyperplaneBucketFast with `planes` hyperplanes) — the same
-    * sign matrix derived from hash60("p:j") bit 0.
-    */
-  private def duckSrpBucket(planes: Int): String = s"""
-          SELECT vec_id,
-                 CAST(list_sum([
-                   CASE WHEN list_sum([
-                     CAST(embedding[i] AS DOUBLE) *
-                     (CASE WHEN (${TextHash.duckHash60(
-                        "CAST(p AS VARCHAR) || ':' || CAST(i - 1 AS VARCHAR)")} & 1) = 1
-                      THEN 1.0 ELSE -1.0 END)
-                     FOR i IN generate_series(1, len(embedding))]) >= 0
-                   THEN CAST(1 AS BIGINT) << p ELSE CAST(0 AS BIGINT) END
-                   FOR p IN generate_series(0, ${planes - 1})]) AS BIGINT) AS bucket
-          FROM embeddings""".stripMargin
 
   val qs: Seq[Q] = Seq(
 
@@ -75,7 +48,10 @@ object CurationQueries {
           .orderBy("vec_id")
       },
       Some(s"""
-        WITH sb AS (${duckSrpBucket(6)}
+        WITH sb AS (
+          SELECT vec_id,
+                 ${Similarity.duckHyperplaneBucket("embedding", "5")} AS bucket
+          FROM embeddings
         ), e AS (
           SELECT v.vec_id, v.embedding, sb.bucket,
                  sqrt(${duckDot("v.embedding", "v.embedding")}) AS nrm
@@ -120,23 +96,11 @@ object CurationQueries {
           .select("label", "rank", "vec_id", "dist2")
           .orderBy("label", "rank")
       },
-      Some("""
-        WITH m AS (
-          SELECT label, CAST(u.i - 1 AS INTEGER) AS dim,
-                 CAST(SUM(CAST(CAST(u.v AS DOUBLE) * 281474976710656 AS DECIMAL(38,0))) AS DOUBLE)
-                   / 281474976710656 / COUNT(*) AS mean
-          FROM embeddings,
-               LATERAL (SELECT unnest(embedding) AS v,
-                               generate_subscripts(embedding, 1) AS i) u
-          GROUP BY label, dim
-        ), c AS (
-          SELECT label, list(mean ORDER BY dim) AS centroid FROM m GROUP BY label
-        ), p AS (
+      Some(s"""
+        WITH ${Similarity.duckExactCentroids("m", "c", "embeddings")}, p AS (
           SELECT e.label, e.vec_id,
-                 list_sum([(CAST(e.embedding[i] AS DOUBLE) - c.centroid[i])
-                           * (CAST(e.embedding[i] AS DOUBLE) - c.centroid[i])
-                           FOR i IN generate_series(1, len(e.embedding))]) AS dist2
-          FROM embeddings e JOIN c ON e.label = c.label
+                 ${duckD2("e.embedding", "c.centroid", "len(e.embedding)")} AS dist2
+          FROM embeddings e JOIN c ON e.label = c.cell
         )
         SELECT label,
                CAST(row_number() OVER (PARTITION BY label
@@ -198,7 +162,7 @@ object CurationQueries {
         }.mkString(" UNION ALL ")
         s"""
         WITH t AS (
-          SELECT source, $Toks AS w FROM documents
+          SELECT source, ${duckTokens("text")} AS w FROM documents
         ), per AS ($blocks
         ), tots AS (
           SELECT source, n, CAST(SUM(tot) AS BIGINT) AS total_ngrams
@@ -321,24 +285,16 @@ object CurationQueries {
           .orderBy("source")
       },
       Some {
-        val langCounts = TextAnalysis.LangProfiles.map { case (lang, words) =>
-          s"len(list_filter(w, t -> t IN (${words.map(x => s"'$x'").mkString(",")}))) AS c_$lang"
-        }.mkString(", ")
-        val langs = TextAnalysis.LangProfiles.map(_._1)
-        val langCase = langs.init.zipWithIndex.map { case (lang, i) =>
-          val later = langs.drop(i + 1).map(l => s"c_$lang >= c_$l").mkString(" AND ")
-          s"WHEN $later THEN '$lang'"
-        }.mkString(" ")
         s"""
         WITH base AS (
-          SELECT doc_id, text, source, $NormText AS norm, $Toks AS w FROM documents
+          SELECT doc_id, text, source, ${duckNormalizeText("text")} AS norm, ${duckTokens("text")} AS w FROM documents
         ), feat AS (
           SELECT doc_id, text, source, CAST(len(w) AS INTEGER) AS nt,
                  md5(norm) AS fp,
-                 len(list_filter(w, t -> t IN (${ExtQueries.StopList}))) AS n_stop,
+                 len(list_filter(w, t -> t IN (${TextAnalysis.duckStopwords}))) AS n_stop,
                  CAST(list_sum([length(t) FOR t IN w]) AS DOUBLE) AS sum_len,
                  CAST(len(w) AS INTEGER) AS n_tokens,
-                 $langCounts
+                 ${TextAnalysis.duckLangCounts("w")}
           FROM base
         ), scored AS (
           SELECT doc_id, text, source, nt, fp,
@@ -348,7 +304,7 @@ object CurationQueries {
                    + 0.2 * least((CASE WHEN n_tokens = 0 THEN 0.0
                                        ELSE sum_len / CAST(n_tokens AS DOUBLE) END) / 8.0, 1.0)
                    AS q,
-                 CASE $langCase ELSE '${langs.last}' END AS pred_lang
+                 ${TextAnalysis.duckLangId} AS pred_lang
           FROM feat
         ), gated AS (
           SELECT * FROM scored WHERE pred_lang = 'en' AND q >= 0.4
@@ -447,7 +403,7 @@ object CurationQueries {
         }.mkString(" UNION ALL ")
         s"""
         WITH d AS (
-          SELECT doc_id, ${duckShingles(Toks, 3)} AS sh FROM documents
+          SELECT doc_id, ${duckShingles(duckTokens("text"), 3)} AS sh FROM documents
         ), sigs AS (
           SELECT doc_id, sh,
                  [list_min([((s * 2654435761 % ${NearDup.MinHashP - 1} + 1)
@@ -754,7 +710,10 @@ object CurationQueries {
           .orderBy("split_lo", "split_hi")
       },
       Some(s"""
-        WITH sb AS (${duckSrpBucket(6)}
+        WITH sb AS (
+          SELECT vec_id,
+                 ${Similarity.duckHyperplaneBucket("embedding", "5")} AS bucket
+          FROM embeddings
         ), sp AS (
           SELECT vec_id,
                  CASE WHEN ${TextHash.duckHash60("CAST(vec_id AS VARCHAR)")} % 100 < 80 THEN 'train'
@@ -902,7 +861,7 @@ object CurationQueries {
       },
       Some(s"""
         WITH st AS (
-          SELECT DISTINCT source, unnest($Toks) AS t FROM documents
+          SELECT DISTINCT source, unnest(${duckTokens("text")}) AS t FROM documents
         ), sizes AS (
           SELECT source, CAST(COUNT(*) AS BIGINT) AS n_vocab FROM st GROUP BY 1
         ), inter AS (
@@ -1011,9 +970,7 @@ object CurationQueries {
           FROM embeddings
         ), probes AS (
           SELECT vec_id FROM embeddings
-          ORDER BY ${TextHash.duckHash60("'probe#' || CAST(vec_id AS VARCHAR)")},
-                   vec_id
-          LIMIT 200
+          ${Similarity.duckHashOrderedProbes("vec_id", "probe", 200)}
         ), tk AS (
           SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
                  CAST(row_number() OVER (

@@ -6,6 +6,10 @@ import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.engine._
 import graft.ext._
+import graft.engine.Cleaning.duckNormalizeText
+import graft.ext.NearDup.{duckShingles, duckConnectedComponents}
+import graft.ext.Similarity.duckDot
+import graft.ext.TextAnalysis.duckTokens
 
 /** Model-eval and distribution-statistics queries — the measurement half of a
   * training-data pipeline: sketch rollups across corpus slices, classifier
@@ -16,20 +20,6 @@ import graft.ext._
   * (or the q194 micro-nat log quantization) per output column.
   */
 object EvalQueries {
-
-  /** DuckDB fragment: normalized text (mirror of Cleaning.normalizeText). */
-  private val NormText = raw"regexp_replace(trim(lower(text)), '\s+', ' ', 'g')"
-
-  /** DuckDB fragment: whitespace tokens of the normalized text. */
-  private val Toks = s"string_split($NormText, ' ')"
-
-  /** DuckDB fragment: distinct word n-gram shingles of token list `w`. */
-  private def duckShingles(w: String, n: Int): String =
-    s"list_distinct([array_to_string($w[i:i+${n - 1}], ' ') FOR i IN generate_series(1, len($w) - ${n - 1})])"
-
-  /** DuckDB fragment: sequential double dot product of float lists a,b. */
-  private def duckDot(a: String, b: String): String =
-    s"list_sum([CAST($a[i] AS DOUBLE) * CAST($b[i] AS DOUBLE) FOR i IN generate_series(1, len($a))])"
 
   val qs: Seq[Q] = Seq(
 
@@ -61,7 +51,7 @@ object EvalQueries {
       },
       Some(s"""
         WITH d AS (
-          SELECT doc_id, source, ${duckShingles(Toks, 3)} AS sh FROM documents
+          SELECT doc_id, source, ${duckShingles(duckTokens("text"), 3)} AS sh FROM documents
         ), sigs AS (
           SELECT doc_id, source,
                  [list_min([((s * 2654435761 % ${NearDup.MinHashP - 1} + 1)
@@ -153,7 +143,7 @@ object EvalQueries {
                  CAST(len(list_filter(w, x -> x IN ('the','a','of','and','to','in','is')))
                    AS BIGINT) AS n_en,
                  CASE WHEN lang = 'en' THEN 1 ELSE 0 END AS pos
-          FROM (SELECT $Toks AS w, lang FROM documents)
+          FROM (SELECT ${duckTokens("text")} AS w, lang FROM documents)
           WHERE len(w) > 0
         ), b AS (
           SELECT least((n_en * 1000 // n_tok) // 20, 9) AS bin,
@@ -260,7 +250,7 @@ object EvalQueries {
       },
       Some(s"""
         WITH tok AS (
-          SELECT source, unnest($Toks) AS t FROM documents
+          SELECT source, unnest(${duckTokens("text")}) AS t FROM documents
         ), st AS (
           SELECT source, t, COUNT(*) AS n_st FROM tok GROUP BY 1, 2
         ), ct AS (
@@ -334,7 +324,7 @@ object EvalQueries {
       },
       Some(s"""
         WITH t0 AS (
-          SELECT doc_id, source, $Toks AS w FROM documents
+          SELECT doc_id, source, ${duckTokens("text")} AS w FROM documents
         ), t1 AS (
           SELECT doc_id, source, w, CAST(len(w) AS INTEGER) AS nt FROM t0 WHERE len(w) > 0
         ), blk AS (
@@ -437,22 +427,14 @@ object EvalQueries {
             / (n * n - pe).cast("double")).as("kappa"))
       },
       Some {
-        val langCounts = TextAnalysis.LangProfiles.map { case (lang, words) =>
-          s"len(list_filter(w, t -> t IN (${words.map(x => s"'$x'").mkString(",")}))) AS c_$lang"
-        }.mkString(",\n                 ")
-        val langs = TextAnalysis.LangProfiles.map(_._1)
-        val langCase = langs.init.zipWithIndex.map { case (lang, i) =>
-          val later = langs.drop(i + 1).map(l => s"c_$lang >= c_$l").mkString(" AND ")
-          s"WHEN $later THEN '$lang'"
-        }.mkString(" ")
         s"""
         WITH base AS (
-          SELECT lang, $Toks AS w FROM documents
+          SELECT lang, ${duckTokens("text")} AS w FROM documents
         ), feat AS (
-          SELECT lang, $langCounts FROM base
+          SELECT lang, ${TextAnalysis.duckLangCounts("w")} FROM base
         ), lab AS (
           SELECT CASE WHEN lang = 'en' THEN 1 ELSE 0 END AS truth,
-                 CASE WHEN (CASE $langCase ELSE '${langs.last}' END) = 'en'
+                 CASE WHEN (${TextAnalysis.duckLangId}) = 'en'
                       THEN 1 ELSE 0 END AS pred
           FROM feat
         ), cm AS (
@@ -507,7 +489,7 @@ object EvalQueries {
       },
       Some(s"""
         WITH d AS (
-          SELECT source, CAST(len($Toks) AS BIGINT) AS x FROM documents
+          SELECT source, CAST(len(${duckTokens("text")}) AS BIGINT) AS x FROM documents
         ), g AS (
           SELECT source, x, COUNT(*) AS c, COUNT(*) * x AS sx
           FROM d GROUP BY 1, 2
@@ -628,7 +610,7 @@ object EvalQueries {
       },
       Some(s"""
         WITH tok AS (
-          SELECT unnest($Toks) AS t FROM documents
+          SELECT unnest(${duckTokens("text")}) AS t FROM documents
         ), tf AS (
           SELECT t, COUNT(*) AS f FROM tok GROUP BY 1
         ), fg AS (
@@ -748,7 +730,7 @@ object EvalQueries {
       },
       Some(s"""
         WITH sh AS (
-          SELECT doc_id, unnest(${duckShingles(Toks, 3)}) AS s FROM documents
+          SELECT doc_id, unnest(${duckShingles(duckTokens("text"), 3)}) AS s FROM documents
         ), first AS (
           SELECT s, MIN(doc_id) AS fd FROM sh GROUP BY 1
         ), nb AS (
@@ -852,7 +834,7 @@ object EvalQueries {
                       WHEN ${TextHash.duckHash60("CAST(doc_id AS VARCHAR)")} % 100 < 90
                         THEN 'val'
                       ELSE 'test' END AS split,
-                 unnest($Toks) AS t
+                 unnest(${duckTokens("text")}) AS t
           FROM documents
         ), st AS (
           SELECT split, t, COUNT(*) AS n FROM toks GROUP BY 1, 2
@@ -975,7 +957,7 @@ object EvalQueries {
       },
       Some(s"""
         WITH t0 AS (
-          SELECT doc_id, text, $Toks AS w FROM documents
+          SELECT doc_id, text, ${duckTokens("text")} AS w FROM documents
         ), feat AS (
           SELECT doc_id, text,
                  CAST(len(w) AS INTEGER) AS nt,
@@ -984,11 +966,11 @@ object EvalQueries {
                       ELSE CAST(list_sum([CAST(len(x) AS BIGINT) FOR x IN w]) AS DOUBLE)
                            / CAST(len(w) AS DOUBLE) END AS mtl,
                  CASE WHEN len(w) = 0 THEN 0.0
-                      ELSE CAST(len([x FOR x IN w IF x IN (${ExtQueries.StopList})]) AS DOUBLE)
+                      ELSE CAST(len([x FOR x IN w IF x IN (${TextAnalysis.duckStopwords})]) AS DOUBLE)
                            / CAST(len(w) AS DOUBLE) END AS swr,
                  CAST(greatest(len(w) - 2, 0) AS INTEGER) AS t3,
                  CAST(len(${duckShingles("w", 3)}) AS INTEGER) AS d3,
-                 md5($NormText) AS fp
+                 md5(${duckNormalizeText("text")}) AS fp
           FROM t0
         ), q AS (
           SELECT doc_id, text, n_tok, fp FROM (
@@ -1052,21 +1034,13 @@ object EvalQueries {
           .orderBy("lang")
       },
       Some {
-        val langCounts = TextAnalysis.LangProfiles.map { case (lang, words) =>
-          s"len(list_filter(w, t -> t IN (${words.map(x => s"'$x'").mkString(",")}))) AS c_$lang"
-        }.mkString(",\n                 ")
-        val langs = TextAnalysis.LangProfiles.map(_._1)
-        val langCase = langs.init.zipWithIndex.map { case (lang, i) =>
-          val later = langs.drop(i + 1).map(l => s"c_$lang >= c_$l").mkString(" AND ")
-          s"WHEN $later THEN '$lang'"
-        }.mkString(" ")
         s"""
         WITH base AS (
-          SELECT lang AS truth, $Toks AS w FROM documents
+          SELECT lang AS truth, ${duckTokens("text")} AS w FROM documents
         ), feat AS (
-          SELECT truth, $langCounts FROM base
+          SELECT truth, ${TextAnalysis.duckLangCounts("w")} FROM base
         ), lab AS (
-          SELECT truth, CASE $langCase ELSE '${langs.last}' END AS pred FROM feat
+          SELECT truth, ${TextAnalysis.duckLangId} AS pred FROM feat
         ), conf AS (
           SELECT truth, pred, COUNT(*) AS n FROM lab GROUP BY 1, 2
         ), bt AS (
@@ -1174,21 +1148,9 @@ object EvalQueries {
           .orderBy("cluster_size")
       },
       Some(s"""
-        ${("WITH RECURSIVE " + ExtQueries.MinhashPairsCte.stripPrefix("WITH ")).trim}, edges AS (
-          SELECT id_a AS src, id_b AS dst FROM verified
-          UNION
-          SELECT id_b AS src, id_a AS dst FROM verified
-        ), nodes AS (
-          SELECT DISTINCT src AS v FROM edges
-        ), reach(v, label) AS (
-          SELECT v, v FROM nodes
-          UNION
-          SELECT e.dst, r.label FROM reach r JOIN edges e ON e.src = r.v
-        ), lab AS (
-          SELECT v, MIN(label) AS cluster_id FROM reach GROUP BY v
-        ), sizes AS (
-          SELECT cluster_id, CAST(COUNT(*) AS BIGINT) AS cluster_size
-          FROM lab GROUP BY 1
+        ${("WITH RECURSIVE " + ExtQueries.MinhashPairsCte.stripPrefix("WITH ")).trim}, ${duckConnectedComponents("verified", "cc")}, sizes AS (
+          SELECT component, CAST(COUNT(*) AS BIGINT) AS cluster_size
+          FROM cc GROUP BY 1
         )
         SELECT cluster_size, CAST(COUNT(*) AS BIGINT) AS n_clusters
         FROM sizes GROUP BY 1 ORDER BY cluster_size
@@ -1219,7 +1181,7 @@ object EvalQueries {
       },
       Some(s"""
         WITH tok AS (
-          SELECT doc_id, unnest($Toks) AS t FROM documents
+          SELECT doc_id, unnest(${duckTokens("text")}) AS t FROM documents
         ), dc AS (
           SELECT doc_id, t, COUNT(*) AS c FROM tok GROUP BY 1, 2
         ), m AS (
@@ -1262,23 +1224,15 @@ object EvalQueries {
           .limit(50)
       },
       Some {
-        val langCounts = TextAnalysis.LangProfiles.map { case (lang, words) =>
-          s"CAST(len(list_filter(w, t -> t IN (${words.map(x => s"'$x'").mkString(",")}))) AS BIGINT) AS c_$lang"
-        }.mkString(",\n                 ")
-        val langs = TextAnalysis.LangProfiles.map(_._1)
-        val langCase = langs.init.zipWithIndex.map { case (lang, i) =>
-          val later = langs.drop(i + 1).map(l => s"c_$lang >= c_$l").mkString(" AND ")
-          s"WHEN $later THEN '$lang'"
-        }.mkString(" ")
-        val arr = langs.map(l => s"c_$l").mkString(", ")
+        val arr = TextAnalysis.LangProfiles.map(l => s"c_${l._1}").mkString(", ")
         s"""
         WITH base AS (
-          SELECT doc_id, $Toks AS w FROM documents
+          SELECT doc_id, ${duckTokens("text")} AS w FROM documents
         ), feat AS (
-          SELECT doc_id, $langCounts FROM base
+          SELECT doc_id, ${TextAnalysis.duckLangCounts("w")} FROM base
         ), m AS (
           SELECT doc_id,
-                 CASE $langCase ELSE '${langs.last}' END AS pred_lang,
+                 ${TextAnalysis.duckLangId} AS pred_lang,
                  list_sort([$arr])[5] AS best,
                  list_sort([$arr])[4] AS second
           FROM feat
@@ -1379,7 +1333,7 @@ object EvalQueries {
       },
       Some(s"""
         WITH d AS (
-          SELECT CAST(len($Toks) AS BIGINT) AS len FROM documents
+          SELECT CAST(len(${duckTokens("text")}) AS BIGINT) AS len FROM documents
         ), b AS (
           SELECT (len - 1) // 32 AS bucket, len FROM d WHERE len > 0
         ), a AS (
@@ -1473,15 +1427,7 @@ object EvalQueries {
       Some(s"""
         WITH sb AS (
           SELECT vec_id,
-                 CAST(list_sum([
-                   CASE WHEN list_sum([
-                     CAST(embedding[i] AS DOUBLE) *
-                     (CASE WHEN (${TextHash.duckHash60(
-                        "CAST(p AS VARCHAR) || ':' || CAST(i - 1 AS VARCHAR)")} & 1) = 1
-                      THEN 1.0 ELSE -1.0 END)
-                     FOR i IN generate_series(1, len(embedding))]) >= 0
-                   THEN CAST(1 AS BIGINT) << p ELSE CAST(0 AS BIGINT) END
-                   FOR p IN generate_series(0, 5)]) AS BIGINT) AS bucket
+                 ${Similarity.duckHyperplaneBucket("embedding", "5")} AS bucket
           FROM embeddings
         ), e AS (
           SELECT v.vec_id, v.embedding, sb.bucket,
@@ -1545,7 +1491,7 @@ object EvalQueries {
       },
       Some(s"""
         WITH sh AS (
-          SELECT doc_id, unnest(${duckShingles(Toks, 3)}) AS s FROM documents
+          SELECT doc_id, unnest(${duckShingles(duckTokens("text"), 3)}) AS s FROM documents
         ), dfreq AS (
           SELECT s, COUNT(*) AS df FROM sh GROUP BY 1
         )
@@ -2486,7 +2432,7 @@ object EvalQueries {
       },
       Some(s"""
         WITH docs AS (
-          SELECT doc_id, $Toks AS w FROM documents
+          SELECT doc_id, ${duckTokens("text")} AS w FROM documents
         ), tf AS (
           SELECT doc_id, t, COUNT(*) AS tf
           FROM (SELECT doc_id, unnest(w) AS t FROM docs) GROUP BY 1, 2
@@ -2639,7 +2585,7 @@ object EvalQueries {
               .as("drift_dist2"))
           .orderBy("label")
       },
-      Some("""
+      Some(s"""
         WITH halves AS (
           -- the corpus is fixed 64-dim; a literal series sidesteps
           -- DuckDB's lateral-parameter limit on generate_series
@@ -2648,8 +2594,7 @@ object EvalQueries {
           FROM embeddings, generate_series(1, 64) AS t(i)
         ), means AS (
           SELECT label, half, dim, CAST(COUNT(*) AS BIGINT) AS n,
-                 CAST(SUM(CAST(v * 281474976710656.0 AS DECIMAL(38,0)))
-                   AS DOUBLE) / 281474976710656.0 / COUNT(*) AS mean
+                 ${Similarity.duckExactMean("v")} AS mean
           FROM halves GROUP BY 1, 2, 3
         ), cents AS (
           SELECT label, half, MAX(n) AS n_vecs,

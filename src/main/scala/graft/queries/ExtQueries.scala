@@ -5,6 +5,10 @@ import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.engine._
 import graft.ext._
+import graft.engine.Cleaning.duckNormalizeText
+import graft.ext.NearDup.{duckShingles, duckConnectedComponents}
+import graft.ext.Similarity.{duckDot, duckD2}
+import graft.ext.TextAnalysis.duckTokens
 
 /** LLM-training-data-pipeline queries over documents/embeddings: text stats,
   * fingerprinting/quality/language-ID, exact and approximate near-dup
@@ -15,22 +19,6 @@ import graft.ext._
   */
 object ExtQueries {
 
-  /** DuckDB fragment: normalized text (mirror of Cleaning.normalizeText). */
-  private[queries] val NormText = raw"regexp_replace(trim(lower(text)), '\s+', ' ', 'g')"
-
-  /** DuckDB fragment: whitespace tokens of the normalized text. */
-  private[queries] val Toks = s"string_split($NormText, ' ')"
-
-  /** DuckDB fragment: distinct word n-gram shingles of token list `w`. */
-  private def duckShingles(w: String, n: Int): String =
-    s"list_distinct([array_to_string($w[i:i+${n - 1}], ' ') FOR i IN generate_series(1, len($w) - ${n - 1})])"
-
-  /** DuckDB fragment: sequential double dot product of float lists a,b. */
-  private def duckDot(a: String, b: String): String =
-    s"list_sum([CAST($a[i] AS DOUBLE) * CAST($b[i] AS DOUBLE) FOR i IN generate_series(1, len($a))])"
-
-  private[queries] val StopList = "'the','a','an','of','and','to','in','is','for','on','with'"
-
   /** DuckDB mirror of Similarity.hashOrderedProbes over a vec_id table:
     * a scalar IN-list subquery of the n hash-ordered ids. The bounded-probe
     * convention (q423, registry-wide since round 8) — a modulus probe set
@@ -39,8 +27,7 @@ object ExtQueries {
     */
   private[queries] def duckProbes(table: String, idCol: String, tag: String, n: Int): String =
     s"""(SELECT $idCol FROM $table
-           ORDER BY ${graft.ext.TextHash.duckHash60(s"'$tag#' || CAST($idCol AS VARCHAR)")}, $idCol
-           LIMIT $n)"""
+           ${Similarity.duckHashOrderedProbes(idCol, tag, n)})"""
 
   /** DuckDB CTE chain mirroring NearDup.minHashNearDupPairs (k=64, b=16,
     * r=4, n=3, threshold 0.8): shingles -> universal-hash MinHash signatures
@@ -52,7 +39,7 @@ object ExtQueries {
   private[queries] def minhashPairsCteOver(table: String,
       thresholdSql: String = "0.8", prefix: String = ""): String = s"""
         WITH ${prefix}d AS (
-          SELECT doc_id, ${duckShingles(Toks, 3)} AS sh FROM $table
+          SELECT doc_id, ${duckShingles(duckTokens("text"), 3)} AS sh FROM $table
         ), ${prefix}sigs AS (
           SELECT doc_id, sh,
                  [list_min([((s * 2654435761 % ${NearDup.MinHashP - 1} + 1)
@@ -91,7 +78,7 @@ object ExtQueries {
     */
   private lazy val ExactJaccardPairsSql: String = s"""
         WITH d AS (
-          SELECT doc_id, ${duckShingles(Toks, 3)} AS sh FROM documents
+          SELECT doc_id, ${duckShingles(duckTokens("text"), 3)} AS sh FROM documents
         ), inv AS (
           SELECT doc_id, unnest(sh) AS s FROM d
         ), pairs AS (
@@ -135,7 +122,7 @@ object ExtQueries {
       Some(s"""
         WITH t AS (
           SELECT lang, source, n_chars,
-                 CAST(len($Toks) AS INTEGER) AS nt,
+                 CAST(len(${duckTokens("text")}) AS INTEGER) AS nt,
                  CAST(len(regexp_extract_all(lower(text), '[a-z]+|[0-9]+|[^a-z0-9\\s]')) AS INTEGER) AS nb
           FROM documents
         )
@@ -176,24 +163,16 @@ object ExtQueries {
           .orderBy("doc_id")
       },
       Some {
-        val langCounts = TextAnalysis.LangProfiles.map { case (lang, words) =>
-          s"len(list_filter(w, t -> t IN (${words.map(x => s"'$x'").mkString(",")}))) AS c_$lang"
-        }.mkString(",\n                 ")
-        val langs = TextAnalysis.LangProfiles.map(_._1)
-        val langCase = langs.init.zipWithIndex.map { case (lang, i) =>
-          val later = langs.drop(i + 1).map(l => s"c_$lang >= c_$l").mkString(" AND ")
-          s"WHEN $later THEN '$lang'"
-        }.mkString(" ")
         s"""
         WITH base AS (
-          SELECT doc_id, $NormText AS norm, $Toks AS w FROM documents
+          SELECT doc_id, ${duckNormalizeText("text")} AS norm, ${duckTokens("text")} AS w FROM documents
         ), feat AS (
           SELECT doc_id, norm, w,
                  ${duckShingles("w", 8)} AS sh8,
                  CAST(len(w) AS INTEGER) AS n_tokens,
-                 len(list_filter(w, t -> t IN ($StopList))) AS n_stop,
+                 len(list_filter(w, t -> t IN (${TextAnalysis.duckStopwords}))) AS n_stop,
                  CAST(list_sum([length(t) FOR t IN w]) AS DOUBLE) AS sum_len,
-                 $langCounts
+                 ${TextAnalysis.duckLangCounts("w")}
           FROM base
         )
         SELECT doc_id, md5(norm) AS fp,
@@ -208,7 +187,7 @@ object ExtQueries {
                  + 0.2 * least((CASE WHEN n_tokens = 0 THEN 0.0
                                      ELSE sum_len / CAST(n_tokens AS DOUBLE) END) / 8.0, 1.0)
                  AS quality,
-               CASE $langCase ELSE '${langs.last}' END AS pred_lang
+               ${TextAnalysis.duckLangId} AS pred_lang
         FROM feat ORDER BY doc_id
       """.trim
       }),
@@ -273,19 +252,8 @@ object ExtQueries {
         .select(col("id").as("doc_id"), col("cluster_id"))
         .orderBy("doc_id"),
       Some(s"""
-        ${("WITH RECURSIVE " + MinhashPairsCte.stripPrefix("WITH ")).trim}, edges AS (
-          SELECT id_a AS src, id_b AS dst FROM verified
-          UNION
-          SELECT id_b AS src, id_a AS dst FROM verified
-        ), nodes AS (
-          SELECT DISTINCT src AS v FROM edges
-        ), reach(v, label) AS (
-          SELECT v, v FROM nodes
-          UNION
-          SELECT e.dst, r.label FROM reach r JOIN edges e ON e.src = r.v
-        )
-        SELECT v AS doc_id, CAST(MIN(label) AS BIGINT) AS cluster_id
-        FROM reach GROUP BY v ORDER BY doc_id
+        ${("WITH RECURSIVE " + MinhashPairsCte.stripPrefix("WITH ")).trim}, ${duckConnectedComponents("verified", "cc")}
+        SELECT doc_id, component AS cluster_id FROM cc ORDER BY doc_id
       """.trim)),
 
     // SimHash banded near-dup pairs: bit-slice bucketing (never all-pairs)
@@ -352,7 +320,7 @@ object ExtQueries {
       },
       Some(s"""
         WITH tok AS (
-          SELECT doc_id, unnest($Toks) AS token FROM documents
+          SELECT doc_id, unnest(${duckTokens("text")}) AS token FROM documents
         ), tf AS (
           SELECT doc_id, token, COUNT(*) AS tf FROM tok GROUP BY doc_id, token
         ), dfreq AS (
@@ -474,21 +442,9 @@ object ExtQueries {
           .orderBy("vec_id")
       },
       Some(s"""
-        WITH m AS (
-          SELECT label, CAST(u.i - 1 AS INTEGER) AS dim,
-                 CAST(SUM(CAST(CAST(u.v AS DOUBLE) * 281474976710656 AS DECIMAL(38,0))) AS DOUBLE)
-                   / 281474976710656 / COUNT(*) AS mean
-          FROM embeddings,
-               LATERAL (SELECT unnest(embedding) AS v,
-                               generate_subscripts(embedding, 1) AS i) u
-          GROUP BY label, dim
-        ), c AS (
-          SELECT label AS cell, list(mean ORDER BY dim) AS centroid FROM m GROUP BY label
-        ), p AS (
+        WITH ${Similarity.duckExactCentroids("m", "c", "embeddings")}, p AS (
           SELECT e.vec_id, e.label, c.cell,
-                 list_sum([(CAST(e.embedding[i] AS DOUBLE) - c.centroid[i])
-                           * (CAST(e.embedding[i] AS DOUBLE) - c.centroid[i])
-                           FOR i IN generate_series(1, len(e.embedding))]) AS dist2
+                 ${duckD2("e.embedding", "c.centroid", "len(e.embedding)")} AS dist2
           FROM embeddings e CROSS JOIN c
         )
         SELECT vec_id, label, cell, dist2 FROM p
@@ -603,21 +559,9 @@ object ExtQueries {
           .orderBy("query_id", "rank")
       },
       Some(s"""
-        WITH m AS (
-          SELECT label, CAST(u.i - 1 AS INTEGER) AS dim,
-                 CAST(SUM(CAST(CAST(u.v AS DOUBLE) * 281474976710656 AS DECIMAL(38,0))) AS DOUBLE)
-                   / 281474976710656 / COUNT(*) AS mean
-          FROM embeddings,
-               LATERAL (SELECT unnest(embedding) AS v,
-                               generate_subscripts(embedding, 1) AS i) u
-          GROUP BY label, dim
-        ), c AS (
-          SELECT label AS cell, list(mean ORDER BY dim) AS centroid FROM m GROUP BY label
-        ), pr AS (
+        WITH ${Similarity.duckExactCentroids("m", "c", "embeddings")}, pr AS (
           SELECT e.vec_id AS query_id, e.embedding AS qe, c.cell,
-                 list_sum([(CAST(e.embedding[i] AS DOUBLE) - c.centroid[i])
-                           * (CAST(e.embedding[i] AS DOUBLE) - c.centroid[i])
-                           FOR i IN generate_series(1, len(e.embedding))]) AS d2
+                 ${duckD2("e.embedding", "c.centroid", "len(e.embedding)")} AS d2
           FROM embeddings e CROSS JOIN c
           WHERE e.vec_id % 20 = 0
           QUALIFY row_number() OVER (PARTITION BY e.vec_id ORDER BY d2, c.cell) <= 2
@@ -657,7 +601,7 @@ object ExtQueries {
       },
       Some(s"""
         WITH t AS (
-          SELECT lang, unnest($Toks) AS token FROM documents
+          SELECT lang, unnest(${duckTokens("text")}) AS token FROM documents
         ), c AS (
           SELECT lang, token, COUNT(*) AS n FROM t GROUP BY lang, token
         )
@@ -684,7 +628,7 @@ object ExtQueries {
         .orderBy("doc_id"),
       Some(s"""
         WITH t AS (
-          SELECT doc_id, $Toks AS w FROM documents
+          SELECT doc_id, ${duckTokens("text")} AS w FROM documents
         ), s AS (
           SELECT doc_id,
                  CAST(greatest(len(w) - 2, 0) AS INTEGER) AS total_3grams,
@@ -710,7 +654,7 @@ object ExtQueries {
         .orderBy("doc_id", "chunk_idx"),
       Some(s"""
         WITH t AS (
-          SELECT doc_id, $Toks AS w FROM documents
+          SELECT doc_id, ${duckTokens("text")} AS w FROM documents
         ), s AS (
           SELECT doc_id, w, CAST(len(w) AS INTEGER) AS nt FROM t WHERE len(w) > 0
         ), c AS (
@@ -750,7 +694,7 @@ object ExtQueries {
       },
       Some(s"""
         WITH tok AS (
-          SELECT doc_id, unnest($Toks) AS token FROM documents
+          SELECT doc_id, unnest(${duckTokens("text")}) AS token FROM documents
         ), vocab AS (
           SELECT token FROM (SELECT token, COUNT(*) AS n FROM tok GROUP BY token)
           ORDER BY n DESC, token LIMIT 20
@@ -796,7 +740,7 @@ object ExtQueries {
         .orderBy("lang"),
       Some(s"""
         WITH t AS (
-          SELECT lang, $Toks AS w FROM documents
+          SELECT lang, ${duckTokens("text")} AS w FROM documents
         ), m AS (
           SELECT lang,
                  CAST(len(w) AS INTEGER) AS nt,
@@ -804,7 +748,7 @@ object ExtQueries {
                       ELSE CAST(list_sum([CAST(len(x) AS BIGINT) FOR x IN w]) AS DOUBLE)
                            / CAST(len(w) AS DOUBLE) END AS mtl,
                  CASE WHEN len(w) = 0 THEN 0.0
-                      ELSE CAST(len([x FOR x IN w IF x IN ($StopList)]) AS DOUBLE)
+                      ELSE CAST(len([x FOR x IN w IF x IN (${TextAnalysis.duckStopwords})]) AS DOUBLE)
                            / CAST(len(w) AS DOUBLE) END AS swr,
                  CAST(greatest(len(w) - 2, 0) AS INTEGER) AS t3,
                  CAST(len(${duckShingles("w", 3)}) AS INTEGER) AS d3
@@ -912,7 +856,7 @@ object ExtQueries {
       },
       Some(s"""
         WITH t AS (
-          SELECT $Toks AS w FROM documents
+          SELECT ${duckTokens("text")} AS w FROM documents
         ), ix AS (
           SELECT w, unnest(generate_series(1, len(w) - 1)) AS i FROM t
         ), bc AS (
@@ -964,7 +908,7 @@ object ExtQueries {
                  CASE WHEN ${TextHash.duckHash60("CAST(doc_id AS VARCHAR)")} % 100 < 80 THEN 'train'
                       WHEN ${TextHash.duckHash60("CAST(doc_id AS VARCHAR)")} % 100 < 90 THEN 'val'
                       ELSE 'test' END AS split,
-                 ${duckShingles(Toks, 8)} AS sh
+                 ${duckShingles(duckTokens("text"), 8)} AS sh
           FROM documents
         ), g AS (
           SELECT doc_id, split, unnest(sh) AS gram FROM d
@@ -998,15 +942,7 @@ object ExtQueries {
       Some(s"""
         WITH sb AS (
           SELECT vec_id,
-                 CAST(list_sum([
-                   CASE WHEN list_sum([
-                     CAST(embedding[i] AS DOUBLE) *
-                     (CASE WHEN (${TextHash.duckHash60(
-                        "CAST(p AS VARCHAR) || ':' || CAST(i - 1 AS VARCHAR)")} & 1) = 1
-                      THEN 1.0 ELSE -1.0 END)
-                     FOR i IN generate_series(1, len(embedding))]) >= 0
-                   THEN CAST(1 AS BIGINT) << p ELSE CAST(0 AS BIGINT) END
-                   FOR p IN generate_series(0, 5)]) AS BIGINT) AS bucket
+                 ${Similarity.duckHyperplaneBucket("embedding", "5")} AS bucket
           FROM embeddings
         ), e AS (
           SELECT v.vec_id, v.embedding, sb.bucket,
@@ -1052,8 +988,8 @@ object ExtQueries {
                CAST(len(toks) AS INTEGER) AS n_tokens,
                CAST(len(toks) - len(kept) AS INTEGER) AS n_removed,
                array_to_string(kept, ' ') AS scrubbed
-        FROM (SELECT doc_id, $Toks AS toks,
-                     list_filter($Toks, t -> t NOT IN ('hash', 'merge', 'batch')) AS kept
+        FROM (SELECT doc_id, ${duckTokens("text")} AS toks,
+                     list_filter(${duckTokens("text")}, t -> t NOT IN ('hash', 'merge', 'batch')) AS kept
               FROM documents)
         ORDER BY doc_id
       """.trim)),
@@ -1072,9 +1008,9 @@ object ExtQueries {
         .select("doc_id", "fp", "lang", "source", "n_chars")
         .orderBy("doc_id"),
       Some(s"""
-        SELECT doc_id, md5($NormText) AS fp, lang, source, n_chars
+        SELECT doc_id, md5(${duckNormalizeText("text")}) AS fp, lang, source, n_chars
         FROM (SELECT *, row_number() OVER (
-                PARTITION BY md5($NormText)
+                PARTITION BY md5(${duckNormalizeText("text")})
                 ORDER BY n_chars DESC, doc_id) AS rn
               FROM documents)
         WHERE rn = 1 ORDER BY doc_id
@@ -1155,7 +1091,7 @@ object ExtQueries {
       },
       Some(s"""
         WITH t AS (
-          SELECT doc_id, CAST(len($Toks) AS BIGINT) AS n_tok FROM documents
+          SELECT doc_id, CAST(len(${duckTokens("text")}) AS BIGINT) AS n_tok FROM documents
         )
         SELECT doc_id, n_tok,
                CAST(SUM(n_tok) OVER (ORDER BY doc_id ROWS UNBOUNDED PRECEDING)
@@ -1184,7 +1120,7 @@ object ExtQueries {
         .orderBy("id_a", "id_b"),
       Some(s"""
         WITH d AS (
-          SELECT doc_id, ${duckShingles(Toks, 3)} AS sh FROM documents
+          SELECT doc_id, ${duckShingles(duckTokens("text"), 3)} AS sh FROM documents
         ), inv AS (
           SELECT doc_id, unnest(sh) AS s FROM d
         ), rare AS (
@@ -1230,7 +1166,7 @@ object ExtQueries {
       },
       Some(s"""
         WITH tok AS (
-          SELECT unnest($Toks) AS token FROM documents
+          SELECT unnest(${duckTokens("text")}) AS token FROM documents
         ), cells AS (
           SELECT j, h % 256 AS bucket, COUNT(*) AS cnt FROM (
             SELECT r.j AS j,
@@ -1274,7 +1210,7 @@ object ExtQueries {
       },
       Some(s"""
         WITH g AS (
-          SELECT source, unnest(${duckShingles(Toks, 3)}) AS g FROM documents
+          SELECT source, unnest(${duckShingles(duckTokens("text"), 3)}) AS g FROM documents
         )
         SELECT source,
                CAST(COUNT(*) AS BIGINT) AS n_grams,
@@ -1303,11 +1239,11 @@ object ExtQueries {
       },
       Some(s"""
         WITH base AS (
-          SELECT doc_id, lang, $Toks AS w FROM documents
+          SELECT doc_id, lang, ${duckTokens("text")} AS w FROM documents
         ), feat AS (
           SELECT doc_id, lang,
                  CAST(len(w) AS INTEGER) AS n_tokens,
-                 len(list_filter(w, t -> t IN ($StopList))) AS n_stop,
+                 len(list_filter(w, t -> t IN (${TextAnalysis.duckStopwords}))) AS n_stop,
                  CAST(list_sum([length(t) FOR t IN w]) AS DOUBLE) AS sum_len
           FROM base
         ), q AS (
@@ -1357,15 +1293,7 @@ object ExtQueries {
       Some(s"""
         WITH sb AS (
           SELECT vec_id,
-                 CAST(list_sum([
-                   CASE WHEN list_sum([
-                     CAST(embedding[i] AS DOUBLE) *
-                     (CASE WHEN (${TextHash.duckHash60(
-                        "CAST(p AS VARCHAR) || ':' || CAST(i - 1 AS VARCHAR)")} & 1) = 1
-                      THEN 1.0 ELSE -1.0 END)
-                     FOR i IN generate_series(1, len(embedding))]) >= 0
-                   THEN CAST(1 AS BIGINT) << p ELSE CAST(0 AS BIGINT) END
-                   FOR p IN generate_series(0, 5)]) AS BIGINT) AS bucket
+                 ${Similarity.duckHyperplaneBucket("embedding", "5")} AS bucket
           FROM embeddings
         ), e AS (
           SELECT v.vec_id, v.embedding, sb.bucket,
@@ -1433,7 +1361,7 @@ object ExtQueries {
         .orderBy("doc_id"),
       Some(s"""
         WITH d AS (
-          SELECT doc_id, ${duckShingles(Toks, 8)} AS sh FROM documents
+          SELECT doc_id, ${duckShingles(duckTokens("text"), 8)} AS sh FROM documents
         ), inv AS (
           SELECT doc_id, unnest(sh) AS s FROM d WHERE len(sh) > 0
         ), df AS (
@@ -1481,7 +1409,7 @@ object ExtQueries {
       },
       Some(s"""
         WITH t AS (
-          SELECT lang, n_chars, CAST(len($Toks) AS BIGINT) AS nt FROM documents
+          SELECT lang, n_chars, CAST(len(${duckTokens("text")}) AS BIGINT) AS nt FROM documents
         ), r AS (
           SELECT lang,
                  2 * rank() OVER (PARTITION BY lang ORDER BY n_chars)
@@ -1522,7 +1450,7 @@ object ExtQueries {
         .orderBy("doc_id"),
       Some(s"""
         SELECT min(doc_id) AS doc_id, CAST(COUNT(*) AS BIGINT) AS n_dups
-        FROM (SELECT doc_id, md5(substr($NormText, 1, 80)) AS fp FROM documents)
+        FROM (SELECT doc_id, md5(substr(${duckNormalizeText("text")}, 1, 80)) AS fp FROM documents)
         GROUP BY fp ORDER BY doc_id
       """.trim)),
 
@@ -1535,7 +1463,7 @@ object ExtQueries {
         .orderBy("doc_id"),
       Some(s"""
         WITH t AS (
-          SELECT doc_id, $Toks AS w FROM documents
+          SELECT doc_id, ${duckTokens("text")} AS w FROM documents
         ), gr AS (
           SELECT doc_id,
                  [array_to_string(w[i:i+3], ' ')
@@ -1599,29 +1527,16 @@ object ExtQueries {
           .orderBy("cell", "dim")
       },
       Some(s"""
-        WITH m AS (
-          SELECT label, CAST(u.i - 1 AS INTEGER) AS dim,
-                 CAST(SUM(CAST(CAST(u.v AS DOUBLE) * 281474976710656 AS DECIMAL(38,0))) AS DOUBLE)
-                   / 281474976710656 / COUNT(*) AS mean
-          FROM embeddings,
-               LATERAL (SELECT unnest(embedding) AS v,
-                               generate_subscripts(embedding, 1) AS i) u
-          GROUP BY label, dim
-        ), c AS (
-          SELECT label AS cell, list(mean ORDER BY dim) AS centroid FROM m GROUP BY label
-        ), p AS (
+        WITH ${Similarity.duckExactCentroids("m", "c", "embeddings")}, p AS (
           SELECT e.vec_id, c.cell,
-                 list_sum([(CAST(e.embedding[i] AS DOUBLE) - c.centroid[i])
-                           * (CAST(e.embedding[i] AS DOUBLE) - c.centroid[i])
-                           FOR i IN generate_series(1, len(e.embedding))]) AS dist2
+                 ${duckD2("e.embedding", "c.centroid", "len(e.embedding)")} AS dist2
           FROM embeddings e CROSS JOIN c
         ), a AS (
           SELECT vec_id, cell FROM p
           QUALIFY row_number() OVER (PARTITION BY vec_id ORDER BY dist2, cell) = 1
         )
         SELECT a.cell AS cell, CAST(u.i - 1 AS INTEGER) AS dim,
-               CAST(SUM(CAST(CAST(u.v AS DOUBLE) * 281474976710656 AS DECIMAL(38,0))) AS DOUBLE)
-                 / 281474976710656 / COUNT(*) AS mean
+               ${Similarity.duckExactMean("u.v")} AS mean
         FROM embeddings e JOIN a ON e.vec_id = a.vec_id,
              LATERAL (SELECT unnest(e.embedding) AS v,
                              generate_subscripts(e.embedding, 1) AS i) u
@@ -1680,7 +1595,7 @@ object ExtQueries {
         .orderBy("doc_id"),
       Some(s"""
         WITH t AS (
-          SELECT doc_id, list_filter($Toks, x -> len(x) >= 8) AS lt FROM documents
+          SELECT doc_id, list_filter(${duckTokens("text")}, x -> len(x) >= 8) AS lt FROM documents
         )
         SELECT doc_id,
                CAST(GREATEST(len(lt), 1) AS BIGINT) AS n_rows,
@@ -1710,7 +1625,7 @@ object ExtQueries {
           .orderBy("doc_id")
       },
       Some(s"""
-        WITH t AS (SELECT doc_id, $Toks AS lt FROM documents)
+        WITH t AS (SELECT doc_id, ${duckTokens("text")} AS lt FROM documents)
         SELECT doc_id,
                CAST(len(lt) AS INTEGER) AS n_toks,
                CAST(len(list_distinct(lt)) AS INTEGER) AS n_distinct,
@@ -1742,7 +1657,7 @@ object ExtQueries {
         .limit(20),
       Some(s"""
         WITH w AS (
-          SELECT unnest($Toks) AS w FROM documents
+          SELECT unnest(${duckTokens("text")}) AS w FROM documents
         ), p AS (
           SELECT unnest([substr(w, CAST(i AS INTEGER), 2)
                          FOR i IN generate_series(1, len(w) - 1)]) AS pair
@@ -1779,8 +1694,7 @@ object ExtQueries {
           val hi = j * 32 + 32
           s"""m$j AS (
           SELECT label, CAST(u.i - 1 AS INTEGER) AS dim,
-                 CAST(SUM(CAST(CAST(u.v AS DOUBLE) * 281474976710656 AS DECIMAL(38,0))) AS DOUBLE)
-                   / 281474976710656 / COUNT(*) AS mean
+                 ${Similarity.duckExactMean("u.v")} AS mean
           FROM embeddings,
                LATERAL (SELECT unnest(embedding[$lo:$hi]) AS v,
                                generate_subscripts(embedding[$lo:$hi], 1) AS i) u
@@ -1830,7 +1744,7 @@ object ExtQueries {
       },
       Some(s"""
         WITH toks AS (
-          SELECT doc_id, unnest($Toks) AS tok FROM documents
+          SELECT doc_id, unnest(${duckTokens("text")}) AS tok FROM documents
         ), counts AS (
           SELECT doc_id, ${TextHash.duckHash60("tok")} % 16 AS bucket, COUNT(*) AS cnt
           FROM toks GROUP BY 1, 2
@@ -1873,7 +1787,7 @@ object ExtQueries {
       },
       Some(s"""
         WITH toks AS (
-          SELECT doc_id, $Toks AS w FROM documents
+          SELECT doc_id, ${duckTokens("text")} AS w FROM documents
         ), chunks AS (
           SELECT doc_id, t.ci,
                  array_to_string(w[CAST(t.ci*32+1 AS BIGINT):CAST(t.ci*32+32 AS BIGINT)], ' ') AS chunk
@@ -1906,7 +1820,7 @@ object ExtQueries {
       },
       Some(s"""
         SELECT lang, t.tok, COUNT(*) AS n
-        FROM documents CROSS JOIN UNNEST($Toks) t(tok)
+        FROM documents CROSS JOIN UNNEST(${duckTokens("text")}) t(tok)
         WHERE length(t.tok) >= 8
         GROUP BY lang, t.tok
         ORDER BY lang, t.tok
@@ -1969,7 +1883,7 @@ object ExtQueries {
       Some {
         val quality = """0.5 * least(CAST(len(w) AS DOUBLE) / 100.0, 1.0)
                  + 0.3 * (CASE WHEN len(w) = 0 THEN 0.0
-                               ELSE CAST(len(list_filter(w, t -> t IN (""" + StopList + """))) AS DOUBLE)
+                               ELSE CAST(len(list_filter(w, t -> t IN (""" + TextAnalysis.duckStopwords + """))) AS DOUBLE)
                                     / CAST(len(w) AS DOUBLE) END)
                  + 0.2 * least((CASE WHEN len(w) = 0 THEN 0.0
                                      ELSE CAST(list_sum([length(t) FOR t IN w]) AS DOUBLE)
@@ -1992,7 +1906,7 @@ object ExtQueries {
           QUALIFY r <= 5
         ), qual AS (
           SELECT doc_id, $quality AS quality
-          FROM (SELECT doc_id, $Toks AS w FROM documents)
+          FROM (SELECT doc_id, ${duckTokens("text")} AS w FROM documents)
         )
         SELECT query_id, neighbor_id, cosine * quality AS rerank,
                CAST(row_number() OVER (PARTITION BY query_id
@@ -2028,8 +1942,8 @@ object ExtQueries {
       },
       Some(s"""
         WITH d AS (
-          SELECT doc_id, lang, n_chars, md5($NormText) AS fp,
-                 len($Toks) AS n_toks
+          SELECT doc_id, lang, n_chars, md5(${duckNormalizeText("text")}) AS fp,
+                 len(${duckTokens("text")}) AS n_toks
           FROM documents
         ), fc AS (SELECT fp, COUNT(*) AS c FROM d GROUP BY fp)
         SELECT CAST(COUNT(*) AS BIGINT) AS n_docs,
@@ -2189,7 +2103,7 @@ object ExtQueries {
       },
       Some(s"""
         WITH toks AS (
-          SELECT doc_id, unnest(list_distinct($Toks)) AS tok FROM documents
+          SELECT doc_id, unnest(list_distinct(${duckTokens("text")})) AS tok FROM documents
         ), lex AS (
           SELECT q.doc_id AS query_id, c.doc_id AS neighbor_id,
                  row_number() OVER (PARTITION BY q.doc_id
@@ -2252,7 +2166,7 @@ object ExtQueries {
       Some {
         val quality = """0.5 * least(CAST(len(w) AS DOUBLE) / 100.0, 1.0)
                  + 0.3 * (CASE WHEN len(w) = 0 THEN 0.0
-                               ELSE CAST(len(list_filter(w, t -> t IN (""" + StopList + """))) AS DOUBLE)
+                               ELSE CAST(len(list_filter(w, t -> t IN (""" + TextAnalysis.duckStopwords + """))) AS DOUBLE)
                                     / CAST(len(w) AS DOUBLE) END)
                  + 0.2 * least((CASE WHEN len(w) = 0 THEN 0.0
                                      ELSE CAST(list_sum([length(t) FOR t IN w]) AS DOUBLE)
@@ -2260,7 +2174,7 @@ object ExtQueries {
         s"""
         WITH pts AS (
           SELECT doc_id, $quality AS quality, CAST(len(w) AS BIGINT) AS n_tokens
-          FROM (SELECT doc_id, $Toks AS w FROM documents)
+          FROM (SELECT doc_id, ${duckTokens("text")} AS w FROM documents)
         )
         SELECT p.doc_id, p.quality, p.n_tokens
         FROM pts p
@@ -2295,8 +2209,8 @@ object ExtQueries {
           .orderBy("doc_id")
       },
       Some(s"""
-        SELECT doc_id, CAST(strlen($NormText) AS BIGINT) AS length,
-               md5($NormText) AS content_md5
+        SELECT doc_id, CAST(strlen(${duckNormalizeText("text")}) AS BIGINT) AS length,
+               md5(${duckNormalizeText("text")}) AS content_md5
         FROM documents WHERE doc_id < 100 ORDER BY doc_id
       """.trim)),
 
@@ -2315,7 +2229,7 @@ object ExtQueries {
           aggregate(col("w"), lit(0), (acc, t) => acc + length(t)).as("char_sum"))
         .orderBy("doc_id"),
       Some(s"""
-        WITH t AS (SELECT doc_id, $Toks AS w FROM documents)
+        WITH t AS (SELECT doc_id, ${duckTokens("text")} AS w FROM documents)
         SELECT doc_id,
                CAST(len(list_filter(w, t -> length(t) > 4)) AS INTEGER) AS n_long,
                len(list_filter(w, t -> t = 'the')) > 0 AS has_the,
@@ -2409,8 +2323,7 @@ object ExtQueries {
           val hi = j * 32 + 32
           s"""m$j AS (
           SELECT label, CAST(u.i - 1 AS INTEGER) AS dim,
-                 CAST(SUM(CAST(CAST(u.v AS DOUBLE) * 281474976710656 AS DECIMAL(38,0))) AS DOUBLE)
-                   / 281474976710656 / COUNT(*) AS mean
+                 ${Similarity.duckExactMean("u.v")} AS mean
           FROM embeddings,
                LATERAL (SELECT unnest(embedding[$lo:$hi]) AS v,
                                generate_subscripts(embedding[$lo:$hi], 1) AS i) u
@@ -2482,7 +2395,7 @@ object ExtQueries {
       },
       Some(s"""
         WITH t AS (
-          SELECT doc_id, $Toks AS w FROM documents
+          SELECT doc_id, ${duckTokens("text")} AS w FROM documents
         ), s AS (
           SELECT doc_id, w, CAST(len(w) AS INTEGER) AS nt FROM t WHERE len(w) > 0
         ), c AS (
@@ -2587,7 +2500,7 @@ object ExtQueries {
           .orderBy("fp")
       },
       Some(s"""
-        SELECT DISTINCT md5($NormText) AS fp, lang, n_chars
+        SELECT DISTINCT md5(${duckNormalizeText("text")}) AS fp, lang, n_chars
         FROM documents ORDER BY fp
       """.trim)),
 
@@ -2639,7 +2552,7 @@ object ExtQueries {
       },
       Some(s"""
         WITH docs AS (
-          SELECT doc_id, $Toks AS w FROM documents
+          SELECT doc_id, ${duckTokens("text")} AS w FROM documents
         ), dls AS (
           SELECT doc_id, CAST(len(w) AS BIGINT) AS dl, w FROM docs
         ), tok AS (
@@ -2701,7 +2614,7 @@ object ExtQueries {
       },
       Some(s"""
         ${("WITH RECURSIVE " + MinhashPairsCte.stripPrefix("WITH ")).trim}, cd AS (
-          SELECT doc_id, ${duckShingles(Toks, 3)} AS sh FROM documents
+          SELECT doc_id, ${duckShingles(duckTokens("text"), 3)} AS sh FROM documents
         ), cinv AS (
           SELECT doc_id, unnest(sh) AS s FROM cd
         ), crare AS (
@@ -2721,7 +2634,7 @@ object ExtQueries {
           WHERE greatest(CAST(inter AS DOUBLE) / CAST(sa.n AS DOUBLE),
                          CAST(inter AS DOUBLE) / CAST(sb.n AS DOUBLE)) >= 0.8
         ), xf AS (
-          SELECT doc_id, md5($NormText) AS fp FROM documents
+          SELECT doc_id, md5(${duckNormalizeText("text")}) AS fp FROM documents
         ), xpairs AS (
           SELECT a.doc_id AS id_a, b.doc_id AS id_b
           FROM xf a JOIN xf b ON a.fp = b.fp AND a.doc_id < b.doc_id
@@ -2729,20 +2642,10 @@ object ExtQueries {
           SELECT id_a, id_b FROM verified
           UNION SELECT id_a, id_b FROM cont
           UNION SELECT id_a, id_b FROM xpairs
-        ), edges AS (
-          SELECT id_a AS src, id_b AS dst FROM eunion
-          UNION
-          SELECT id_b AS src, id_a AS dst FROM eunion
-        ), nodes AS (
-          SELECT DISTINCT src AS v FROM edges
-        ), reach(v, label) AS (
-          SELECT v, v FROM nodes
-          UNION
-          SELECT e.dst, r.label FROM reach r JOIN edges e ON e.src = r.v
-        )
-        SELECT v AS doc_id, CAST(MIN(label) AS BIGINT) AS cluster_id,
-               CAST(CASE WHEN v = MIN(label) THEN 1 ELSE 0 END AS INTEGER) AS is_canonical
-        FROM reach GROUP BY v ORDER BY doc_id
+        ), ${duckConnectedComponents("eunion", "cc")}
+        SELECT doc_id, component AS cluster_id,
+               CAST(CASE WHEN doc_id = component THEN 1 ELSE 0 END AS INTEGER) AS is_canonical
+        FROM cc ORDER BY doc_id
       """.trim)),
 
     // Source-overlap contamination matrix: for every source PAIR, how many
@@ -2768,7 +2671,7 @@ object ExtQueries {
       },
       Some(s"""
         WITH t AS (
-          SELECT doc_id, source, $Toks AS w FROM documents
+          SELECT doc_id, source, ${duckTokens("text")} AS w FROM documents
         ), s AS (
           SELECT doc_id, source, w, CAST(len(w) AS INTEGER) AS nt FROM t WHERE len(w) > 0
         ), c AS (
@@ -2831,7 +2734,7 @@ object ExtQueries {
       },
       Some(s"""
         WITH t AS (
-          SELECT doc_id, $Toks AS w FROM documents
+          SELECT doc_id, ${duckTokens("text")} AS w FROM documents
         ), tt AS (
           SELECT doc_id, w FROM t WHERE len(w) > 1
         ), big AS (
@@ -2845,7 +2748,7 @@ object ExtQueries {
           SELECT w1, COUNT(*) AS c1 FROM big GROUP BY w1
         ), vocab AS (
           SELECT COUNT(DISTINCT u.t) AS v
-          FROM (SELECT unnest($Toks) AS t FROM documents) u
+          FROM (SELECT unnest(${duckTokens("text")}) AS t FROM documents) u
         ), unats AS (
           SELECT b.doc_id,
                  CAST(round(ln(CAST(c2.c2 + 1 AS DOUBLE)
@@ -3254,7 +3157,7 @@ object ExtQueries {
       Some {
         val quality = """0.5 * least(CAST(len(w) AS DOUBLE) / 100.0, 1.0)
                  + 0.3 * (CASE WHEN len(w) = 0 THEN 0.0
-                               ELSE CAST(len(list_filter(w, t -> t IN (""" + StopList + """))) AS DOUBLE)
+                               ELSE CAST(len(list_filter(w, t -> t IN (""" + TextAnalysis.duckStopwords + """))) AS DOUBLE)
                                     / CAST(len(w) AS DOUBLE) END)
                  + 0.2 * least((CASE WHEN len(w) = 0 THEN 0.0
                                      ELSE CAST(list_sum([length(t) FOR t IN w]) AS DOUBLE)
@@ -3263,7 +3166,7 @@ object ExtQueries {
         WITH scored AS (
           SELECT doc_id, source, $quality AS q,
                  ${TextHash.duckHash60("CAST(doc_id AS VARCHAR) || ':resample'")} AS h
-          FROM (SELECT doc_id, source, $Toks AS w FROM documents)
+          FROM (SELECT doc_id, source, ${duckTokens("text")} AS w FROM documents)
         )
         SELECT source,
                CAST(COUNT(*) AS BIGINT) AS n_docs,
@@ -3302,7 +3205,7 @@ object ExtQueries {
       },
       Some(s"""
         WITH t AS (
-          SELECT lang, CAST(SUM(len($Toks)) AS BIGINT) AS n_tokens
+          SELECT lang, CAST(SUM(len(${duckTokens("text")})) AS BIGINT) AS n_tokens
           FROM documents GROUP BY lang
         ), tot AS (
           SELECT CAST(SUM(n_tokens) AS BIGINT) AS total,
@@ -3345,7 +3248,7 @@ object ExtQueries {
       },
       Some(s"""
         WITH tok AS (
-          SELECT source, unnest($Toks) AS t FROM documents
+          SELECT source, unnest(${duckTokens("text")}) AS t FROM documents
         ), c AS (
           SELECT source, t, CAST(COUNT(*) AS BIGINT) AS c FROM tok GROUP BY source, t
         ), agg AS (
@@ -3517,7 +3420,7 @@ object ExtQueries {
       },
       Some(s"""
         WITH d AS (
-          SELECT doc_id, CAST(len($Toks) AS BIGINT) AS n_tokens,
+          SELECT doc_id, CAST(len(${duckTokens("text")}) AS BIGINT) AS n_tokens,
                  ${TextHash.duckHash60("CAST(doc_id AS VARCHAR) || ':priority'")} AS h
           FROM documents
         ), keyed AS (
@@ -3683,15 +3586,7 @@ object ExtQueries {
       Some(s"""
         WITH sb AS (
           SELECT vec_id,
-                 CAST(list_sum([
-                   CASE WHEN list_sum([
-                     CAST(embedding[i] AS DOUBLE) *
-                     (CASE WHEN (${TextHash.duckHash60(
-                        "CAST(p AS VARCHAR) || ':' || CAST(i - 1 AS VARCHAR)")} & 1) = 1
-                      THEN 1.0 ELSE -1.0 END)
-                     FOR i IN generate_series(1, len(embedding))]) >= 0
-                   THEN CAST(1 AS BIGINT) << p ELSE CAST(0 AS BIGINT) END
-                   FOR p IN generate_series(0, 5)]) AS BIGINT) AS bucket
+                 ${Similarity.duckHyperplaneBucket("embedding", "5")} AS bucket
           FROM embeddings
         ), e AS (
           SELECT v.vec_id, v.embedding, sb.bucket,
@@ -3777,7 +3672,7 @@ object ExtQueries {
       },
       Some(s"""
         WITH words AS (
-          SELECT lang, unnest($Toks) AS w FROM documents
+          SELECT lang, unnest(${duckTokens("text")}) AS w FROM documents
         ), w2 AS (
           SELECT lang, w FROM words WHERE length(w) >= 2
         ), pairs AS (
@@ -3826,7 +3721,7 @@ object ExtQueries {
       },
       Some(s"""
         WITH d AS (
-          SELECT doc_id, CAST(len($Toks) AS BIGINT) AS n_tokens FROM documents
+          SELECT doc_id, CAST(len(${duckTokens("text")}) AS BIGINT) AS n_tokens FROM documents
         ), d2 AS (
           SELECT doc_id, n_tokens FROM d WHERE n_tokens > 0
         ), c AS (
@@ -3886,7 +3781,7 @@ object ExtQueries {
       },
       Some(s"""
         WITH d AS (
-          SELECT doc_id, ${duckShingles(Toks, 3)} AS sh FROM documents
+          SELECT doc_id, ${duckShingles(duckTokens("text"), 3)} AS sh FROM documents
         ), inv AS (
           SELECT doc_id, unnest(sh) AS s FROM d
         ), nd AS (
@@ -4056,21 +3951,10 @@ object ExtQueries {
           .orderBy("cluster_id")
       },
       Some(s"""
-        ${("WITH RECURSIVE " + MinhashPairsCte.stripPrefix("WITH ")).trim}, edges AS (
-          SELECT id_a AS src, id_b AS dst FROM verified
-          UNION
-          SELECT id_b AS src, id_a AS dst FROM verified
-        ), nodes AS (
-          SELECT DISTINCT src AS v FROM edges
-        ), reach(v, label) AS (
-          SELECT v, v FROM nodes
-          UNION
-          SELECT e.dst, r.label FROM reach r JOIN edges e ON e.src = r.v
-        ), labels AS (
-          SELECT v AS doc_id, CAST(MIN(label) AS BIGINT) AS cluster_id
-          FROM reach GROUP BY v
+        ${("WITH RECURSIVE " + MinhashPairsCte.stripPrefix("WITH ")).trim}, ${duckConnectedComponents("verified", "cc")}, labels AS (
+          SELECT doc_id, component AS cluster_id FROM cc
         ), t AS (
-          SELECT doc_id, CAST(len($Toks) AS BIGINT) AS n_tok FROM documents
+          SELECT doc_id, CAST(len(${duckTokens("text")}) AS BIGINT) AS n_tok FROM documents
         )
         SELECT cluster_id, CAST(COUNT(*) AS BIGINT) AS n_docs,
                CAST(SUM(n_tok) AS BIGINT) AS total_tokens,

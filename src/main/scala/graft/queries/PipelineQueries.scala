@@ -4,6 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.engine._
+import graft.ext.Similarity
 
 /** Warehouse-pipeline queries: the SCD2 merge (the reference's core
   * composite, final_dim_load.py:94-180), time-bucketed event analytics and
@@ -307,10 +308,9 @@ object PipelineQueries {
               / scale / count(lit(1))).as("mean"))
           .orderBy("label", "dim")
       },
-      Some("""
+      Some(s"""
         SELECT label, CAST(u.i - 1 AS INTEGER) AS dim, COUNT(*) AS n,
-               CAST(SUM(CAST(CAST(u.v AS DOUBLE) * 281474976710656 AS DECIMAL(38,0))) AS DOUBLE)
-                 / 281474976710656 / COUNT(*) AS mean
+               ${Similarity.duckExactMean("u.v")} AS mean
         FROM embeddings,
              LATERAL (SELECT unnest(embedding) AS v,
                              generate_subscripts(embedding, 1) AS i) u

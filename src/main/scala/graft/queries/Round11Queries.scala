@@ -5,7 +5,11 @@ import org.apache.spark.sql.functions._
 
 import graft.Tables
 import graft.engine.Sources
-import graft.ext.{IvfPq, NearDup, Similarity, TextHash}
+import graft.ext.{EvalStats, IvfPq, NearDup, Similarity, TextHash}
+import graft.engine.Cleaning.duckNormalizeText
+import graft.ext.NearDup.duckConnectedComponents
+import graft.ext.Similarity.{duckDot, duckD2}
+import graft.ext.TextAnalysis.duckTokens
 
 /** Round-11 additions — closing VERDICT_r10's two open lifecycle loops:
   *   - q503: the graph-walk recall DEFECT FIX — q500 measured 20% recall
@@ -38,10 +42,6 @@ import graft.ext.{IvfPq, NearDup, Similarity, TextHash}
   */
 object Round11Queries {
 
-  /** DuckDB fragment: sequential double dot product of float lists a,b. */
-  private def duckDot(a: String, b: String): String =
-    s"list_sum([CAST($a[i] AS DOUBLE) * CAST($b[i] AS DOUBLE) FOR i IN generate_series(1, len($a))])"
-
   /** The navigable proximity graph as a CTE chain: the mutual-kNN pairs
     * (`mu`, from Round7Queries.MutualKnnCte — which also defines the
     * normed corpus `e`) UNION one long-range edge per (vector, foreign
@@ -52,23 +52,11 @@ object Round11Queries {
     * Ends with relation `nav(id_a, id_b)`.
     */
   private val NavGraphCte: String = s"""
-        ${Round7Queries.MutualKnnCte}, ccm AS (
-          SELECT label AS cell, CAST(u.i - 1 AS INTEGER) AS dim,
-                 CAST(SUM(CAST(CAST(u.v AS DOUBLE) * 281474976710656 AS DECIMAL(38,0))) AS DOUBLE)
-                   / 281474976710656 / COUNT(*) AS mean
-          FROM embeddings,
-               LATERAL (SELECT unnest(embedding) AS v,
-                               generate_subscripts(embedding, 1) AS i) u
-          GROUP BY label, dim
-        ), ccents AS (
-          SELECT cell, list(mean ORDER BY dim) AS centroid FROM ccm GROUP BY cell
-        ), fcell AS (
+        ${Round7Queries.MutualKnnCte}, ${Similarity.duckExactCentroids("ccm", "ccents", "embeddings")}, fcell AS (
           SELECT vec_id, qv, qn, cell FROM (
             SELECT q.vec_id, q.embedding AS qv, q.nrm AS qn, c.cell,
                    row_number() OVER (PARTITION BY q.vec_id ORDER BY
-                     list_sum([(CAST(q.embedding[i] AS DOUBLE) - c.centroid[i])
-                               * (CAST(q.embedding[i] AS DOUBLE) - c.centroid[i])
-                               FOR i IN generate_series(1, len(q.embedding))]),
+                     ${duckD2("q.embedding", "c.centroid", "len(q.embedding)")},
                      c.cell) AS rn
             FROM e q JOIN ccents c ON c.cell <> q.label)
           WHERE rn <= 2
@@ -313,16 +301,7 @@ object Round11Queries {
           .select("query_id", "neighbor_id")
         val brute = Similarity.topKCosine(probes, e, "vec_id", "embedding", k = 3)
           .select("query_id", "neighbor_id")
-        val hits = brute
-          .join(walk, Seq("query_id", "neighbor_id"), "left_semi")
-          .groupBy("query_id").agg(count(lit(1)).as("n_hits"))
-        brute.groupBy("query_id").agg(count(lit(1)).as("n_true"))
-          .join(hits, Seq("query_id"), "left")
-          .select(col("query_id"), col("n_true"),
-            coalesce(col("n_hits"), lit(0L)).as("n_hits"))
-          .withColumn("recall_micro",
-            expr("n_hits * 1000000 DIV n_true"))
-          .orderBy("query_id")
+        EvalStats.recallAudit(brute, walk)
       },
       Some(s"""
         ${Round8Queries.beamWalkCteOver(20, 32, 4, 8, NavGraphCte, "nav")}, walk AS (
@@ -340,19 +319,7 @@ object Round11Queries {
                        DESC, c.vec_id) AS rn
             FROM bprobes p JOIN ben c ON c.vec_id <> p.query_id)
           WHERE rn <= 3
-        ), hits AS (
-          SELECT b.query_id, COUNT(*) AS n_hits
-          FROM brute b
-          JOIN walk w ON w.query_id = b.query_id
-                     AND w.neighbor_id = b.neighbor_id
-          GROUP BY b.query_id
-        )
-        SELECT b.query_id, CAST(COUNT(*) AS BIGINT) AS n_true,
-               CAST(COALESCE(MAX(h.n_hits), 0) AS BIGINT) AS n_hits,
-               CAST(COALESCE(MAX(h.n_hits), 0) * 1000000 // COUNT(*) AS BIGINT)
-                 AS recall_micro
-        FROM brute b LEFT JOIN hits h ON h.query_id = b.query_id
-        GROUP BY b.query_id ORDER BY b.query_id
+        ), ${EvalStats.duckRecallAudit("brute", "walk")}
       """.trim)),
 
     // The recall/cost FRONTIER's second audited point: same navigable
@@ -383,16 +350,7 @@ object Round11Queries {
           .select("query_id", "neighbor_id")
         val brute = Similarity.topKCosine(probes, e, "vec_id", "embedding", k = 3)
           .select("query_id", "neighbor_id")
-        val hits = brute
-          .join(walk, Seq("query_id", "neighbor_id"), "left_semi")
-          .groupBy("query_id").agg(count(lit(1)).as("n_hits"))
-        brute.groupBy("query_id").agg(count(lit(1)).as("n_true"))
-          .join(hits, Seq("query_id"), "left")
-          .select(col("query_id"), col("n_true"),
-            coalesce(col("n_hits"), lit(0L)).as("n_hits"))
-          .withColumn("recall_micro",
-            expr("n_hits * 1000000 DIV n_true"))
-          .orderBy("query_id")
+        EvalStats.recallAudit(brute, walk)
       },
       Some(s"""
         ${Round8Queries.beamWalkCteOver(20, 32, 4, 16, NavGraphCte, "nav")}, walk AS (
@@ -410,19 +368,7 @@ object Round11Queries {
                        DESC, c.vec_id) AS rn
             FROM bprobes p JOIN ben c ON c.vec_id <> p.query_id)
           WHERE rn <= 3
-        ), hits AS (
-          SELECT b.query_id, COUNT(*) AS n_hits
-          FROM brute b
-          JOIN walk w ON w.query_id = b.query_id
-                     AND w.neighbor_id = b.neighbor_id
-          GROUP BY b.query_id
-        )
-        SELECT b.query_id, CAST(COUNT(*) AS BIGINT) AS n_true,
-               CAST(COALESCE(MAX(h.n_hits), 0) AS BIGINT) AS n_hits,
-               CAST(COALESCE(MAX(h.n_hits), 0) * 1000000 // COUNT(*) AS BIGINT)
-                 AS recall_micro
-        FROM brute b LEFT JOIN hits h ON h.query_id = b.query_id
-        GROUP BY b.query_id ORDER BY b.query_id
+        ), ${EvalStats.duckRecallAudit("brute", "walk")}
       """.trim)),
 
     // Index-health decide -> ACT loop — q502's rebuild flag finally
@@ -787,20 +733,7 @@ object Round11Queries {
         split.crossJoin(broadcast(leak)).orderBy("doc_id")
       },
       Some(s"""
-        ${("WITH RECURSIVE " + ExtQueries.MinhashPairsCte.stripPrefix("WITH ")).trim}, e2 AS (
-          SELECT id_a AS src, id_b AS dst FROM verified
-          UNION
-          SELECT id_b AS src, id_a AS dst FROM verified
-        ), vnodes AS (
-          SELECT DISTINCT src AS v FROM e2
-        ), reach(v, label) AS (
-          SELECT v, v FROM vnodes
-          UNION
-          SELECT e.dst, r.label FROM reach r JOIN e2 e ON e.src = r.v
-        ), cc AS (
-          SELECT v AS doc_id, CAST(MIN(label) AS BIGINT) AS component
-          FROM reach GROUP BY v
-        ), comp AS (
+        ${("WITH RECURSIVE " + ExtQueries.MinhashPairsCte.stripPrefix("WITH ")).trim}, ${duckConnectedComponents("verified", "cc")}, comp AS (
           SELECT d.doc_id, COALESCE(cc.component, d.doc_id) AS component
           FROM documents d LEFT JOIN cc ON cc.doc_id = d.doc_id
         ), sp AS (
@@ -847,9 +780,9 @@ object Round11Queries {
       },
       Some(s"""
         WITH $SnapshotBCte, a AS (
-          SELECT doc_id, md5(${ExtQueries.NormText}) AS fp FROM documents
+          SELECT doc_id, md5(${duckNormalizeText("text")}) AS fp FROM documents
         ), b2 AS (
-          SELECT doc_id, md5(${ExtQueries.NormText}) AS fp FROM bsrc
+          SELECT doc_id, md5(${duckNormalizeText("text")}) AS fp FROM bsrc
         )
         SELECT COALESCE(a.doc_id, b2.doc_id) AS doc_id,
                CASE WHEN a.doc_id IS NULL THEN 'added'
@@ -885,7 +818,7 @@ object Round11Queries {
       },
       Some(s"""
         WITH $SnapshotBCte, b2 AS (
-          SELECT doc_id, md5(${ExtQueries.NormText}) AS fp FROM bsrc
+          SELECT doc_id, md5(${duckNormalizeText("text")}) AS fp FROM bsrc
         ), canon AS (
           SELECT fp, MIN(doc_id) AS canonical_id FROM b2 GROUP BY fp
         )
@@ -982,7 +915,7 @@ object Round11Queries {
                    AS sched_pos
           FROM v
         ), toks AS (
-          SELECT doc_id, CAST(len(${ExtQueries.Toks}) AS BIGINT) AS n_tokens
+          SELECT doc_id, CAST(len(${duckTokens("text")}) AS BIGINT) AS n_tokens
           FROM documents
         ), ordered AS (
           SELECT s.doc_id, s.lang, s.sched_pos, t.n_tokens

@@ -5,7 +5,11 @@ import org.apache.spark.sql.functions._
 
 import graft.Tables
 import graft.engine.Sources
-import graft.ext.{NearDup, Similarity, Splits, TextAnalysis, TextHash}
+import graft.ext.{EvalStats, NearDup, Similarity, Splits, TextAnalysis, TextHash}
+import graft.engine.Cleaning.duckNormalizeText
+import graft.ext.NearDup.duckConnectedComponents
+import graft.ext.Similarity.{duckDot, duckD2}
+import graft.ext.TextAnalysis.duckTokens
 
 /** Round-12 additions — extending the round-11 incremental-maintenance
   * trilogy (q510 diff / q511 dedup / q512 LSH) to the LAST full-rebuild
@@ -30,10 +34,6 @@ import graft.ext.{NearDup, Similarity, Splits, TextAnalysis, TextHash}
   * ratios, DuckDB oracle twins from first principles.
   */
 object Round12Queries {
-
-  /** DuckDB fragment: sequential double dot product of float lists a,b. */
-  private def duckDot(a: String, b: String): String =
-    s"list_sum([CAST($a[i] AS DOUBLE) * CAST($b[i] AS DOUBLE) FOR i IN generate_series(1, len($a))])"
 
   // ---------------------------------------------------------------------
   // Version-B EMBEDDINGS staging (q514): the vector-corpus twin of the
@@ -182,23 +182,11 @@ object Round12Queries {
           SELECT a.qid AS id_a, a.nid AS id_b
           FROM knn a JOIN knn b ON b.qid = a.nid AND b.nid = a.qid
           WHERE a.qid < a.nid
-        ), ccm AS (
-          SELECT label AS cell, CAST(u.i - 1 AS INTEGER) AS dim,
-                 CAST(SUM(CAST(CAST(u.v AS DOUBLE) * 281474976710656 AS DECIMAL(38,0))) AS DOUBLE)
-                   / 281474976710656 / COUNT(*) AS mean
-          FROM $src,
-               LATERAL (SELECT unnest(embedding) AS v,
-                               generate_subscripts(embedding, 1) AS i) u
-          GROUP BY label, dim
-        ), ccents AS (
-          SELECT cell, list(mean ORDER BY dim) AS centroid FROM ccm GROUP BY cell
-        ), fcell AS (
+        ), ${Similarity.duckExactCentroids("ccm", "ccents", src)}, fcell AS (
           SELECT vec_id, qv, qn, cell FROM (
             SELECT q.vec_id, q.embedding AS qv, q.nrm AS qn, c.cell,
                    row_number() OVER (PARTITION BY q.vec_id ORDER BY
-                     list_sum([(CAST(q.embedding[i] AS DOUBLE) - c.centroid[i])
-                               * (CAST(q.embedding[i] AS DOUBLE) - c.centroid[i])
-                               FOR i IN generate_series(1, len(q.embedding))]),
+                     ${duckD2("q.embedding", "c.centroid", "len(q.embedding)")},
                      c.cell) AS rn
             FROM e q JOIN ccents c ON c.cell <> q.label)
           WHERE rn <= $nForeign
@@ -243,16 +231,7 @@ object Round12Queries {
       .select("query_id", "neighbor_id")
     val brute = Similarity.topKCosine(probes, e, "vec_id", "embedding", k = 3)
       .select("query_id", "neighbor_id")
-    val hits = brute
-      .join(walk, Seq("query_id", "neighbor_id"), "left_semi")
-      .groupBy("query_id").agg(count(lit(1)).as("n_hits"))
-    brute.groupBy("query_id").agg(count(lit(1)).as("n_true"))
-      .join(hits, Seq("query_id"), "left")
-      .select(col("query_id"), col("n_true"),
-        coalesce(col("n_hits"), lit(0L)).as("n_hits"))
-      .withColumn("recall_micro",
-        expr("n_hits * 1000000 DIV n_true"))
-      .orderBy("query_id")
+    EvalStats.recallAudit(brute, walk)
   }
 
   /** DuckDB twin of [[recallAudit]] over the entry-parameterized walk. */
@@ -279,19 +258,7 @@ object Round12Queries {
                        DESC, c.vec_id) AS rn
             FROM bprobes p JOIN ben c ON c.vec_id <> p.query_id)
           WHERE rn <= 3
-        ), hits AS (
-          SELECT b.query_id, COUNT(*) AS n_hits
-          FROM brute b
-          JOIN walk w ON w.query_id = b.query_id
-                     AND w.neighbor_id = b.neighbor_id
-          GROUP BY b.query_id
-        )
-        SELECT b.query_id, CAST(COUNT(*) AS BIGINT) AS n_true,
-               CAST(COALESCE(MAX(h.n_hits), 0) AS BIGINT) AS n_hits,
-               CAST(COALESCE(MAX(h.n_hits), 0) * 1000000 // COUNT(*) AS BIGINT)
-                 AS recall_micro
-        FROM brute b LEFT JOIN hits h ON h.query_id = b.query_id
-        GROUP BY b.query_id ORDER BY b.query_id
+        ), ${EvalStats.duckRecallAudit("brute", "walk")}
       """.trim
 
   /** Version-B staged documents WITH the lang column (q517 needs the
@@ -373,18 +340,7 @@ object Round12Queries {
       .stripPrefix("WITH ").trim
     val bChain = ExtQueries.minhashPairsCteOver("bsrc").stripPrefix("WITH ").trim
     s"""
-        ${Round11Queries.SnapshotBCte}, $aChain, $bChain, a_e2 AS (
-          SELECT id_a AS src, id_b AS dst FROM a_verified
-          UNION
-          SELECT id_b AS src, id_a AS dst FROM a_verified
-        ), a_reach(v, label) AS (
-          SELECT src, src FROM a_e2
-          UNION
-          SELECT e.dst, r.label FROM a_reach r JOIN a_e2 e ON e.src = r.v
-        ), a_cc AS (
-          SELECT v AS doc_id, CAST(MIN(label) AS BIGINT) AS component
-          FROM a_reach GROUP BY v
-        ), asplit AS (
+        ${Round11Queries.SnapshotBCte}, $aChain, $bChain, ${duckConnectedComponents("a_verified", "a_cc")}, asplit AS (
           SELECT d.doc_id,
                  CASE WHEN ${TextHash.duckHash60(
                      "CAST(COALESCE(a_cc.component, d.doc_id) AS VARCHAR)")}
@@ -394,18 +350,7 @@ object Round12Queries {
                         % 100 < 90 THEN 'val'
                       ELSE 'test' END AS prior_split
           FROM documents d LEFT JOIN a_cc ON a_cc.doc_id = d.doc_id
-        ), b_e2 AS (
-          SELECT id_a AS src, id_b AS dst FROM verified
-          UNION
-          SELECT id_b AS src, id_a AS dst FROM verified
-        ), b_reach(v, label) AS (
-          SELECT src, src FROM b_e2
-          UNION
-          SELECT e.dst, r.label FROM b_reach r JOIN b_e2 e ON e.src = r.v
-        ), b_cc AS (
-          SELECT v AS doc_id, CAST(MIN(label) AS BIGINT) AS component
-          FROM b_reach GROUP BY v
-        ), members AS (
+        ), ${duckConnectedComponents("verified", "b_cc")}, members AS (
           SELECT b.doc_id, COALESCE(b_cc.component, b.doc_id) AS component
           FROM bsrc b LEFT JOIN b_cc ON b_cc.doc_id = b.doc_id
         ), surv AS (
@@ -709,7 +654,7 @@ object Round12Queries {
       },
       Some(s"""
         WITH RECURSIVE $SnapshotBFullCte, $pinnedSplitCtes, b2f AS (
-          SELECT doc_id, lang, text, md5(${ExtQueries.NormText}) AS fp
+          SELECT doc_id, lang, text, md5(${duckNormalizeText("text")}) AS fp
           FROM bsrcf
         ), canon AS (
           SELECT MIN(doc_id) AS doc_id FROM b2f GROUP BY fp
@@ -739,7 +684,7 @@ object Round12Queries {
                    AS sched_pos
           FROM tv
         ), ttoks AS (
-          SELECT doc_id, CAST(len(${ExtQueries.Toks}) AS BIGINT) AS n_tokens
+          SELECT doc_id, CAST(len(${duckTokens("text")}) AS BIGINT) AS n_tokens
           FROM train
         ), tordered AS (
           SELECT s.doc_id, s.lang, s.sched_pos, t.n_tokens
@@ -847,18 +792,7 @@ object Round12Queries {
             FROM bsrc)
           WHERE h2 <> 0
         ), ${ExtQueries.minhashPairsCteOver("csrc", prefix = "c_")
-          .stripPrefix("WITH ").trim}, c_e2 AS (
-          SELECT id_a AS src, id_b AS dst FROM c_verified
-          UNION
-          SELECT id_b AS src, id_a AS dst FROM c_verified
-        ), c_reach(v, label) AS (
-          SELECT src, src FROM c_e2
-          UNION
-          SELECT e.dst, r.label FROM c_reach r JOIN c_e2 e ON e.src = r.v
-        ), c_cc AS (
-          SELECT v AS doc_id, CAST(MIN(label) AS BIGINT) AS component
-          FROM c_reach GROUP BY v
-        ), c_members AS (
+          .stripPrefix("WITH ").trim}, ${duckConnectedComponents("c_verified", "c_cc")}, c_members AS (
           SELECT c.doc_id, COALESCE(c_cc.component, c.doc_id) AS component
           FROM csrc c LEFT JOIN c_cc ON c_cc.doc_id = c.doc_id
         ), c_surv AS (
@@ -951,8 +885,6 @@ object Round12Queries {
           e.select("vec_id"), "vec_id", "entry", 128)),
       Some(recallOracle(16,
         s"""SELECT vec_id AS node FROM embeddings
-          ORDER BY ${TextHash.duckHash60("'entry#' || CAST(vec_id AS VARCHAR)")},
-                   vec_id
-          LIMIT 128""")))
+          ${Similarity.duckHashOrderedProbes("vec_id", "entry", 128)}""")))
   )
 }

@@ -5,6 +5,8 @@ import org.apache.spark.sql.functions._
 
 import graft.Tables
 import graft.ext.{NearDup, Similarity, Splits, TextAnalysis, TextHash}
+import graft.ext.NearDup.duckConnectedComponents
+import graft.ext.Similarity.duckDot
 
 /** Round-13 additions — executing VERDICT_r12's list: the maintenance
   * story extended to the surfaces q520/q518 exposed, plus the quarantine
@@ -31,9 +33,6 @@ import graft.ext.{NearDup, Similarity, Splits, TextAnalysis, TextHash}
   * from first principles.
   */
 object Round13Queries {
-
-  private[queries] def duckDot(a: String, b: String): String =
-    s"list_sum([CAST($a[i] AS DOUBLE) * CAST($b[i] AS DOUBLE) FOR i IN generate_series(1, len($a))])"
 
   /** DuckDB twin of one [[graft.ext.Splits.pinnedComponentSplitsVersioned]]
     * application at the given retireAfter: members relation `mem(doc_id,
@@ -76,23 +75,6 @@ object Round13Queries {
           FROM ${out}_surv s JOIN ${out}_pins p ON p.component = s.component
         )""".stripMargin.trim
   }
-
-  /** Recursive connected-components CTE chunk over a pair relation
-    * `pairs(id_a, id_b)`, emitting `out(doc_id, component)` (min-label).
-    */
-  private[queries] def ccCte(pairs: String, out: String): String = s"""
-        ${out}_e AS (
-          SELECT id_a AS src, id_b AS dst FROM $pairs
-          UNION
-          SELECT id_b AS src, id_a AS dst FROM $pairs
-        ), ${out}_reach(v, label) AS (
-          SELECT src, src FROM ${out}_e
-          UNION
-          SELECT e.dst, r.label FROM ${out}_reach r JOIN ${out}_e e ON e.src = r.v
-        ), $out AS MATERIALIZED (
-          SELECT v AS doc_id, CAST(MIN(label) AS BIGINT) AS component
-          FROM ${out}_reach GROUP BY v
-        )""".stripMargin.trim
 
   val qs: Seq[Q] = Seq(
 
@@ -332,7 +314,7 @@ object Round13Queries {
         s"""
         WITH RECURSIVE $aChain, a_ver AS MATERIALIZED (
           SELECT id_a, id_b FROM a_verified
-        ), ${ccCte("a_ver", "a_cc")}, st1 AS MATERIALIZED (
+        ), ${duckConnectedComponents("a_ver", "a_cc")}, st1 AS MATERIALIZED (
           SELECT c.doc_id, c.component,
                  CASE WHEN $compHash % 100 < 80 THEN 'train'
                       WHEN $compHash % 100 < 90 THEN 'val'
@@ -361,13 +343,13 @@ object Round13Queries {
           FROM documents d CROSS JOIN pick p
         ), $v2Chain, v2_ver AS MATERIALIZED (
           SELECT id_a, id_b FROM v2_verified
-        ), ${ccCte("v2_ver", "v2_cc")}, mem2 AS MATERIALIZED (
+        ), ${duckConnectedComponents("v2_ver", "v2_cc")}, mem2 AS MATERIALIZED (
           SELECT v.doc_id, COALESCE(v2_cc.component, v.doc_id) AS component
           FROM v2src v LEFT JOIN v2_cc ON v2_cc.doc_id = v.doc_id
         ), ${versionedPolicyCte("mem2", "st1", "st2")}, v3_pairs AS (
           SELECT id_a, id_b FROM v2_ver
           CROSS JOIN pick WHERE id_a <> bid AND id_b <> bid
-        ), ${ccCte("v3_pairs", "v3_cc")}, mem3 AS MATERIALIZED (
+        ), ${duckConnectedComponents("v3_pairs", "v3_cc")}, mem3 AS MATERIALIZED (
           SELECT v.doc_id, COALESCE(v3_cc.component, v.doc_id) AS component
           FROM v2src v CROSS JOIN pick
           LEFT JOIN v3_cc ON v3_cc.doc_id = v.doc_id
@@ -627,9 +609,7 @@ object Round13Queries {
       },
       Some(Round12Queries.recallOracleOver(16,
         s"""SELECT vec_id AS node FROM embeddings
-          ORDER BY ${TextHash.duckHash60("'entry#' || CAST(vec_id AS VARCHAR)")},
-                   vec_id
-          LIMIT 128""",
+          ${Similarity.duckHashOrderedProbes("vec_id", "entry", 128)}""",
         "WITH " + Round12Queries.navGraphCteOver("embeddings", k = 3, nForeign = 3),
         "embeddings"))),
 
@@ -680,15 +660,7 @@ object Round13Queries {
             AS planes
         ), sb AS (
           SELECT vec_id,
-                 CAST(list_sum([
-                   CASE WHEN list_sum([
-                     CAST(embedding[i] AS DOUBLE) *
-                     (CASE WHEN (${TextHash.duckHash60(
-                        "CAST(p AS VARCHAR) || ':' || CAST(i - 1 AS VARCHAR)")} & 1) = 1
-                      THEN 1.0 ELSE -1.0 END)
-                     FOR i IN generate_series(1, len(embedding))]) >= 0
-                   THEN CAST(1 AS BIGINT) << p ELSE CAST(0 AS BIGINT) END
-                   FOR p IN generate_series(0, planes - 1)]) AS BIGINT) AS bucket
+                 ${Similarity.duckHyperplaneBucket("embedding", "planes - 1")} AS bucket
           FROM embeddings CROSS JOIN pl
         ), e AS (
           SELECT v.vec_id, v.embedding, sb.bucket,

@@ -5,6 +5,8 @@ import org.apache.spark.sql.functions._
 
 import graft.Tables
 import graft.ext.{IvfPq, NearDup, Similarity, Splits, TextAnalysis, TextHash}
+import graft.ext.NearDup.duckConnectedComponents
+import graft.ext.Similarity.duckDot
 
 /** Round-14 additions — executing VERDICT_r13's list. Opens with the
   * derived-cell lifecycle contract made MEASURABLE:
@@ -68,7 +70,7 @@ object Round14Queries {
         val qc = graft.plans.TopKPerKey.of(
             probes.crossJoin(broadcast(ix.cents))
               .select(col("query_id"), col("cell"),
-                IvfPq.d2(col("qv"), col("centroid")).as("qd2")),
+                Similarity.d2(col("qv"), col("centroid")).as("qd2")),
             keyCols = Seq("query_id"),
             order = Seq("qd2" -> true, "cell" -> true), k = 4)
         val nProbed = qc.select("cell").distinct().count()
@@ -87,9 +89,7 @@ object Round14Queries {
       Some(s"""
         WITH ${Round9Queries.pqCte("x", "TRUE")}, probes AS (
           SELECT vec_id AS query_id, embedding AS qv FROM embeddings
-          ORDER BY ${graft.ext.TextHash.duckHash60(
-            "'ivfpq#' || CAST(vec_id AS VARCHAR)")}, vec_id
-          LIMIT 50
+          ${Similarity.duckHashOrderedProbes("vec_id", "ivfpq", 50)}
         ), qc AS (
           SELECT query_id, cell FROM (
             SELECT p.query_id, c.cell,
@@ -583,7 +583,7 @@ object Round14Queries {
         s"""
         WITH RECURSIVE $aChain, a_ver AS MATERIALIZED (
           SELECT id_a, id_b FROM a_verified
-        ), ${Round13Queries.ccCte("a_ver", "a_cc")}, st1 AS MATERIALIZED (
+        ), ${duckConnectedComponents("a_ver", "a_cc")}, st1 AS MATERIALIZED (
           SELECT c.doc_id, c.component,
                  CASE WHEN $compHash % 100 < 80 THEN 'train'
                       WHEN $compHash % 100 < 90 THEN 'val'
@@ -625,7 +625,7 @@ object Round14Queries {
           CROSS JOIN pick p
         ), $v2Chain, v2_ver AS MATERIALIZED (
           SELECT id_a, id_b FROM v2_verified
-        ), ${Round13Queries.ccCte("v2_ver", "v2_cc")}, mem2 AS MATERIALIZED (
+        ), ${duckConnectedComponents("v2_ver", "v2_cc")}, mem2 AS MATERIALIZED (
           SELECT v.doc_id, COALESCE(v2_cc.component, v.doc_id) AS component
           FROM v2src v LEFT JOIN v2_cc ON v2_cc.doc_id = v.doc_id
         ), ${Round13Queries.versionedPolicyCte("mem2", "st1", "st2", 1)},
@@ -637,7 +637,7 @@ object Round14Queries {
           FROM v2src v CROSS JOIN pick p WHERE ${h("snap2")} <> 0
         ), $v3Chain, v3_ver AS MATERIALIZED (
           SELECT id_a, id_b FROM v3_verified
-        ), ${Round13Queries.ccCte("v3_ver", "v3_cc")}, mem3 AS MATERIALIZED (
+        ), ${duckConnectedComponents("v3_ver", "v3_cc")}, mem3 AS MATERIALIZED (
           SELECT v.doc_id, COALESCE(v3_cc.component, v.doc_id) AS component
           FROM v3src v LEFT JOIN v3_cc ON v3_cc.doc_id = v.doc_id
         ), ${Round13Queries.versionedPolicyCte("mem3", "st2", "st3", 1)},
@@ -649,7 +649,7 @@ object Round14Queries {
           FROM v3src v CROSS JOIN pick p WHERE ${h("snap3")} <> 0
         ), $v4Chain, v4_ver AS MATERIALIZED (
           SELECT id_a, id_b FROM v4_verified
-        ), ${Round13Queries.ccCte("v4_ver", "v4_cc")}, mem4 AS MATERIALIZED (
+        ), ${duckConnectedComponents("v4_ver", "v4_cc")}, mem4 AS MATERIALIZED (
           SELECT v.doc_id, COALESCE(v4_cc.component, v.doc_id) AS component
           FROM v4src v LEFT JOIN v4_cc ON v4_cc.doc_id = v.doc_id
         ), ${Round13Queries.versionedPolicyCte("mem4", "st3", "st4", 1)},
@@ -790,9 +790,7 @@ object Round14Queries {
           "WITH " + Round12Queries.navGraphCteOver("embeddings",
             k = 3, nForeign = 3), "nav",
           s"""SELECT vec_id AS node FROM embeddings
-            ORDER BY ${TextHash.duckHash60(
-              "'entry#' || CAST(vec_id AS VARCHAR)")}, vec_id
-            LIMIT 128""")
+            ${Similarity.duckHashOrderedProbes("vec_id", "entry", 128)}""")
         val chainA = (1 to 8).map(i =>
           Round8Queries.hopCte(if (i == 1) "f0" else s"a_f${i - 1}",
             s"a_f$i", 16)).mkString(", ")
@@ -826,7 +824,7 @@ object Round14Queries {
           SELECT query_id, neighbor_id FROM (
             SELECT p.query_id, c.vec_id AS neighbor_id,
                    row_number() OVER (PARTITION BY p.query_id
-                     ORDER BY ${Round13Queries.duckDot("p.qv", "c.embedding")}
+                     ORDER BY ${duckDot("p.qv", "c.embedding")}
                        / (p.qn * c.nrm) DESC, c.vec_id) AS rn
             FROM bprobes p JOIN ben c ON c.vec_id <> p.query_id)
           WHERE rn <= 3

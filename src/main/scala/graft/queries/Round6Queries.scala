@@ -5,6 +5,8 @@ import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.engine.Sources
 import graft.ext.{NearDup, Sketches, TextAnalysis, TextHash}
+import graft.ext.NearDup.duckConnectedComponents
+import graft.ext.TextAnalysis.duckTokens
 
 /** Round-6 additions (SURVEY §2.16): the second SparkSessionExtensions seam
   * (the injected optimizer-rule + planner-strategy path, complementing
@@ -47,12 +49,6 @@ object Round6Queries {
         }
       }
   }
-
-  /** DuckDB fragment: normalized text (mirror of Cleaning.normalizeText). */
-  private val NormText = raw"regexp_replace(trim(lower(text)), '\s+', ' ', 'g')"
-
-  /** DuckDB fragment: whitespace tokens of the normalized text. */
-  private val Toks = s"string_split($NormText, ' ')"
 
   val qs: Seq[Q] = Seq(
 
@@ -135,7 +131,7 @@ object Round6Queries {
       },
       Some(s"""
         WITH tok AS (
-          SELECT unnest($Toks) AS token FROM documents
+          SELECT unnest(${duckTokens("text")}) AS token FROM documents
         ), tot AS (
           SELECT CAST(COUNT(*) AS BIGINT) AS n_total FROM tok
         ), cells AS (
@@ -207,27 +203,14 @@ object Round6Queries {
           .orderBy("split")
       },
       Some(s"""
-        ${("WITH RECURSIVE " + ExtQueries.MinhashPairsCte.stripPrefix("WITH ")).trim}, edges AS (
-          SELECT id_a AS src, id_b AS dst FROM verified
-          UNION
-          SELECT id_b AS src, id_a AS dst FROM verified
-        ), nodes AS (
-          SELECT DISTINCT src AS v FROM edges
-        ), reach(v, label) AS (
-          SELECT v, v FROM nodes
-          UNION
-          SELECT e.dst, r.label FROM reach r JOIN edges e ON e.src = r.v
-        ), cc AS (
-          SELECT v AS doc_id, CAST(MIN(label) AS BIGINT) AS cluster_id
-          FROM reach GROUP BY v
-        ), assigned AS (
-          SELECT d.doc_id, CAST(len($Toks) AS BIGINT) AS n_tok,
-                 COALESCE(cc.cluster_id, d.doc_id) AS cluster_id,
+        ${("WITH RECURSIVE " + ExtQueries.MinhashPairsCte.stripPrefix("WITH ")).trim}, ${duckConnectedComponents("verified", "cc")}, assigned AS (
+          SELECT d.doc_id, CAST(len(${duckTokens("text")}) AS BIGINT) AS n_tok,
+                 COALESCE(cc.component, d.doc_id) AS cluster_id,
                  CASE WHEN ${TextHash.duckHash60(
-                     "CAST(COALESCE(cc.cluster_id, d.doc_id) AS VARCHAR)")}
+                     "CAST(COALESCE(cc.component, d.doc_id) AS VARCHAR)")}
                         % 100 < 80 THEN 'train'
                       WHEN ${TextHash.duckHash60(
-                     "CAST(COALESCE(cc.cluster_id, d.doc_id) AS VARCHAR)")}
+                     "CAST(COALESCE(cc.component, d.doc_id) AS VARCHAR)")}
                         % 100 < 90 THEN 'val'
                       ELSE 'test' END AS split
           FROM documents d LEFT JOIN cc ON cc.doc_id = d.doc_id
@@ -278,7 +261,7 @@ object Round6Queries {
       },
       Some(s"""
         WITH tok AS (
-          SELECT source, unnest($Toks) AS token FROM documents
+          SELECT source, unnest(${duckTokens("text")}) AS token FROM documents
         ), vc AS (
           SELECT source, token, COUNT(*) AS c FROM tok GROUP BY 1, 2
         )

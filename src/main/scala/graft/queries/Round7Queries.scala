@@ -7,6 +7,9 @@ import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.engine.Sources
 import graft.ext.TextAnalysis
+import graft.ext.NearDup.duckConnectedComponents
+import graft.ext.Similarity.duckDot
+import graft.ext.TextAnalysis.duckTokens
 
 /** Round-7 additions: span-level dedup (the ExactSubstr-style TRANSFORM the
   * document-level pipeline lacked), graph link prediction, Kneser-Ney
@@ -17,16 +20,6 @@ import graft.ext.TextAnalysis
   * final doubles, DuckDB oracle twins derived from first principles.
   */
 object Round7Queries {
-
-  /** DuckDB fragment: normalized text (mirror of Cleaning.normalizeText). */
-  private val NormText = raw"regexp_replace(trim(lower(text)), '\s+', ' ', 'g')"
-
-  /** DuckDB fragment: whitespace tokens of the normalized text. */
-  private val Toks = s"string_split($NormText, ' ')"
-
-  /** DuckDB fragment: sequential double dot product of float lists a,b. */
-  private def duckDot(a: String, b: String): String =
-    s"list_sum([CAST($a[i] AS DOUBLE) * CAST($b[i] AS DOUBLE) FOR i IN generate_series(1, len($a))])"
 
   /** DuckDB CTE chain mirroring the MUTUAL top-3 cosine graph within IVF
     * cells (q27's gated ANN shape, symmetrized): ends with relation
@@ -117,7 +110,7 @@ object Round7Queries {
       },
       Some(s"""
         WITH t AS (
-          SELECT doc_id, $Toks AS w FROM documents
+          SELECT doc_id, ${duckTokens("text")} AS w FROM documents
         ), st AS (
           SELECT doc_id, u.i AS i, array_to_string(w[u.i:u.i+7], ' ') AS gram
           FROM t, LATERAL (SELECT unnest(generate_series(1, len(w) - 7)) AS i) u
@@ -261,7 +254,7 @@ object Round7Queries {
       },
       Some(s"""
         WITH t AS (
-          SELECT doc_id, $Toks AS w FROM documents
+          SELECT doc_id, ${duckTokens("text")} AS w FROM documents
         ), tt AS (
           SELECT doc_id, w FROM t WHERE len(w) > 1
         ), big AS (
@@ -323,12 +316,12 @@ object Round7Queries {
       },
       Some(s"""
         WITH base AS (
-          SELECT doc_id, source, $Toks AS w FROM documents
+          SELECT doc_id, source, ${duckTokens("text")} AS w FROM documents
         ), feat AS (
           SELECT doc_id, source,
                  CAST(len(w) AS BIGINT) AS n_tok,
                  CAST(len(w) AS INTEGER) AS n_tokens,
-                 len(list_filter(w, t -> t IN (${ExtQueries.StopList}))) AS n_stop,
+                 len(list_filter(w, t -> t IN (${TextAnalysis.duckStopwords}))) AS n_stop,
                  CAST(list_sum([length(t) FOR t IN w]) AS DOUBLE) AS sum_len
           FROM base
         ), d AS (
@@ -483,7 +476,7 @@ object Round7Queries {
       },
       Some(s"""
         ${ExtQueries.MinhashPairsCte}, tk AS (
-          SELECT doc_id, $Toks AS w FROM documents
+          SELECT doc_id, ${duckTokens("text")} AS w FROM documents
         ), uni AS (
           SELECT doc_id, u.tok AS g, COUNT(*) AS c
           FROM tk, LATERAL (SELECT unnest(w) AS tok) u
@@ -622,7 +615,7 @@ object Round7Queries {
       Some(s"""
         WITH d AS (
           SELECT source,
-                 CAST(len($Toks) AS BIGINT) AS ws,
+                 CAST(len(${duckTokens("text")}) AS BIGINT) AS ws,
                  CAST(len(regexp_extract_all(lower(text),
                    '[a-z]+|[0-9]+|[^a-z0-9\\s]')) AS BIGINT) AS bpe,
                  CAST(octet_length(encode(text)) AS BIGINT) AS nb
@@ -895,7 +888,7 @@ object Round7Queries {
       },
       Some(s"""
         WITH t AS (
-          SELECT source, CAST(SUM(len($Toks)) AS BIGINT) AS n_tokens
+          SELECT source, CAST(SUM(len(${duckTokens("text")})) AS BIGINT) AS n_tokens
           FROM documents GROUP BY source
         ), q AS (
           SELECT source, n_tokens,
@@ -917,7 +910,6 @@ object Round7Queries {
                  AS BIGINT) AS epochs_micro
         FROM q CROSS JOIN tot ORDER BY source
       """.trim)),
-
 
     // Parquet BLOOM FILTER write gate — the storage-side point-lookup
     // accelerator (q398 gates the RUNTIME bloom-join seam; this gates the
@@ -1655,7 +1647,7 @@ object Round7Queries {
         WITH d AS (
           SELECT CAST(${graft.ext.TextHash.duckHash60(
             "'fold:' || CAST(doc_id AS VARCHAR)")} % 5 AS INTEGER) AS fold,
-                 CAST(len($Toks) AS BIGINT) AS nt
+                 CAST(len(${duckTokens("text")}) AS BIGINT) AS nt
           FROM documents
         ), per AS (
           SELECT fold, CAST(COUNT(*) AS BIGINT) AS n_test,
@@ -1800,7 +1792,7 @@ object Round7Queries {
       Some(s"""
         WITH w AS (
           SELECT word, CAST(COUNT(*) AS BIGINT) AS c
-          FROM (SELECT unnest($Toks) AS word FROM documents)
+          FROM (SELECT unnest(${duckTokens("text")}) AS word FROM documents)
           WHERE length(word) BETWEEN 2 AND 20
           GROUP BY word
         ), p0 AS (
@@ -1887,7 +1879,7 @@ object Round7Queries {
       },
       Some(s"""
         WITH t AS (
-          SELECT doc_id, $Toks AS w FROM documents
+          SELECT doc_id, ${duckTokens("text")} AS w FROM documents
         ), pos AS (
           SELECT doc_id, u.p AS p, u.tok AS tok
           FROM t, LATERAL (SELECT unnest(w) AS tok,
@@ -1933,7 +1925,7 @@ object Round7Queries {
       Some(s"""
         WITH d AS (
           SELECT doc_id,
-                 CAST(len($Toks) AS BIGINT) * 1000000 + doc_id
+                 CAST(len(${duckTokens("text")}) AS BIGINT) * 1000000 + doc_id
                    AS difficulty_micro
           FROM documents
         ), r AS (
@@ -2274,7 +2266,7 @@ object Round7Queries {
       },
       Some(s"""
         WITH t AS (
-          SELECT doc_id, $Toks AS w FROM documents
+          SELECT doc_id, ${duckTokens("text")} AS w FROM documents
         )
         SELECT doc_id, CAST(len(w) AS BIGINT) AS n_tokens,
                CAST(len(list_filter(w, x -> length(x) > 5)) AS BIGINT)
@@ -2846,7 +2838,7 @@ object Round7Queries {
       },
       Some(s"""
         WITH t AS (
-          SELECT doc_id, $Toks AS w, CAST(len($Toks) AS BIGINT) AS n
+          SELECT doc_id, ${duckTokens("text")} AS w, CAST(len(${duckTokens("text")}) AS BIGINT) AS n
           FROM documents
         ), ch AS (
           SELECT doc_id, n, u.idx AS idx,
@@ -3253,26 +3245,14 @@ object Round7Queries {
             (lit(1000000L) - col("pen_sum")).as("q_micro"))
       },
       Some(s"""
-        ${("WITH RECURSIVE " + ExtQueries.MinhashPairsCte.stripPrefix("WITH ")).trim}, edges AS (
-          SELECT id_a AS src, id_b AS dst FROM verified
-          UNION
-          SELECT id_b AS src, id_a AS dst FROM verified
-        ), nodes AS (
-          SELECT DISTINCT src AS v FROM edges
-        ), reach(v, label) AS (
-          SELECT v, v FROM nodes
-          UNION
-          SELECT e.dst, r.label FROM reach r JOIN edges e ON e.src = r.v
-        ), lab AS (
-          SELECT v, MIN(label) AS cluster_id FROM reach GROUP BY v
-        ), m AS (
+        ${("WITH RECURSIVE " + ExtQueries.MinhashPairsCte.stripPrefix("WITH ")).trim}, ${duckConnectedComponents("verified", "cc")}, m AS (
           SELECT CAST(COUNT(*) AS BIGINT) AS m FROM verified
         ), deg AS (
           SELECT src AS v, CAST(COUNT(*) AS BIGINT) AS deg
-          FROM edges GROUP BY src
+          FROM cc_e GROUP BY src
         ), dc AS (
-          SELECT lab.cluster_id, CAST(SUM(deg.deg) AS BIGINT) AS d_c
-          FROM deg JOIN lab ON lab.v = deg.v GROUP BY lab.cluster_id
+          SELECT cc.component, CAST(SUM(deg.deg) AS BIGINT) AS d_c
+          FROM deg JOIN cc ON cc.doc_id = deg.v GROUP BY cc.component
         ), pen AS (
           SELECT CAST(COUNT(*) AS BIGINT) AS n_communities,
                  CAST(SUM(d_c * d_c * 1000000 // (4 * m.m * m.m)) AS BIGINT)
@@ -3413,7 +3393,7 @@ object Round7Queries {
     // top-20 keyphrases are ranked under a total order. All integer
     // micro arithmetic (deg*1e6 div freq summed per phrase); the word
     // frame is vocabulary-sized, the joins key-equi. The stopword list is
-    // the fixed 11-word ExtQueries.StopList.
+    // the fixed 11-word TextAnalysis.duckStopwords.
     Q(
       "q487_rake_keywords",
       (s, dir) => {
@@ -3452,7 +3432,7 @@ object Round7Queries {
       Some(s"""
         WITH pos AS (
           SELECT doc_id, u.p AS p, u.tok AS tok
-          FROM (SELECT doc_id, $Toks AS w FROM documents),
+          FROM (SELECT doc_id, ${duckTokens("text")} AS w FROM documents),
                LATERAL (SELECT unnest(w) AS tok,
                         generate_subscripts(w, 1) AS p) u
         ), ns AS (
@@ -3460,7 +3440,7 @@ object Round7Queries {
                  p - row_number() OVER (PARTITION BY doc_id ORDER BY p)
                    AS grp
           FROM pos
-          WHERE tok NOT IN (${ExtQueries.StopList})
+          WHERE tok NOT IN (${TextAnalysis.duckStopwords})
         ), pl AS (
           SELECT doc_id, grp, CAST(COUNT(*) AS BIGINT) AS plen
           FROM ns GROUP BY 1, 2

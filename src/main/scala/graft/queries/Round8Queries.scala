@@ -4,7 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
-import graft.ext.{Similarity, TextHash}
+import graft.ext.{EvalStats, Similarity, TextHash}
+import graft.ext.Similarity.{duckDot, duckD2}
 
 /** Round-8 additions. Headline: the second production ANN family the
   * round-7 judge asked for — full IVF-PQ residual search (coarse quantizer
@@ -20,17 +21,6 @@ import graft.ext.{Similarity, TextHash}
   * total order, DuckDB oracle twin derived from first principles.
   */
 object Round8Queries {
-
-  /** DuckDB fragment: sequential double dot product of float lists a,b. */
-  private def duckDot(a: String, b: String): String =
-    s"list_sum([CAST($a[i] AS DOUBLE) * CAST($b[i] AS DOUBLE) FOR i IN generate_series(1, len($a))])"
-
-  /** Sequential-order squared L2 between a BIGINT micro-residual list and a
-    * DOUBLE codeword list, both length 16 (DuckDB side).
-    */
-  private def duckD2(r: String, c: String): String =
-    s"""list_sum([(CAST($r[i] AS DOUBLE) - $c[i]) * (CAST($r[i] AS DOUBLE) - $c[i])
-                 FOR i IN generate_series(1, 16)])"""
 
   /** The IVF-PQ search context shared by q495 (search) and q496 (recall
     * audit): `probes` = the fixed 50 hash-ordered query vectors
@@ -72,9 +62,7 @@ object Round8Queries {
   private[queries] val IvfPqCte: String = s"""
         WITH ${Round9Queries.pqCte("", "TRUE")}, probes AS (
           SELECT vec_id AS query_id, embedding AS qv FROM embeddings
-          ORDER BY ${TextHash.duckHash60("'ivfpq#' || CAST(vec_id AS VARCHAR)")},
-                   vec_id
-          LIMIT 50
+          ${Similarity.duckHashOrderedProbes("vec_id", "ivfpq", 50)}
         ), qc AS (
           SELECT query_id, qv, cell, centroid FROM (
             SELECT p.query_id, p.qv, c.cell, c.centroid,
@@ -92,7 +80,7 @@ object Round8Queries {
           FROM qc CROSS JOIN range(0, 4) t(m)
         ), dt AS (
           SELECT q.query_id, q.cell, q.m, c.g,
-                 ${duckD2("q.rq", "c.cwvec")} AS dd
+                 ${duckD2("q.rq", "c.cwvec", "16")} AS dd
           FROM qparts q JOIN cw c ON c.m = q.m
         ), adc AS (
           SELECT d.query_id, s.vec_id AS neighbor_id,
@@ -161,9 +149,7 @@ object Round8Queries {
       beam: Int, pairCtes: String, pairRel: String): String =
     beamWalkCteOverEntries(probeN, hops, beam, pairCtes, pairRel,
       s"""SELECT vec_id AS node FROM embeddings
-          ORDER BY ${TextHash.duckHash60("'entry#' || CAST(vec_id AS VARCHAR)")},
-                   vec_id
-          LIMIT $entryN""")
+          ${Similarity.duckHashOrderedProbes("vec_id", "entry", entryN)}""")
 
   /** [[beamWalkCteOver]] generalized over the ENTRY SET (round 12):
     * `entriesBody` is a SELECT producing the walk's seed relation
@@ -191,9 +177,7 @@ object Round8Queries {
           SELECT vec_id AS query_id, embedding AS qv,
                  sqrt(${duckDot("embedding", "embedding")}) AS qn
           FROM $src
-          ORDER BY ${TextHash.duckHash60("'beam#' || CAST(vec_id AS VARCHAR)")},
-                   vec_id
-          LIMIT $probeN
+          ${Similarity.duckHashOrderedProbes("vec_id", "beam", probeN)}
         ), entries AS (
           $entriesBody
         ), f0 AS (
@@ -275,17 +259,7 @@ object Round8Queries {
             ix.probes.select(col("query_id").as("vec_id"), col("qv").as("embedding")),
             e, "vec_id", "embedding", k = 3)
           .select("query_id", "neighbor_id")
-        val hits = brute
-          .join(ix.short.select("query_id", "neighbor_id"),
-            Seq("query_id", "neighbor_id"), "left_semi")
-          .groupBy("query_id").agg(count(lit(1)).as("n_hits"))
-        brute.groupBy("query_id").agg(count(lit(1)).as("n_true"))
-          .join(hits, Seq("query_id"), "left")
-          .select(col("query_id"), col("n_true"),
-            coalesce(col("n_hits"), lit(0L)).as("n_hits"))
-          .withColumn("recall_micro",
-            expr("n_hits * 1000000 DIV n_true"))
-          .orderBy("query_id")
+        EvalStats.recallAudit(brute, ix.short.select("query_id", "neighbor_id"))
       },
       Some(s"""
         $IvfPqCte, brute AS (
@@ -298,19 +272,7 @@ object Round8Queries {
             JOIN en pq ON pq.vec_id = p.query_id
             JOIN en c ON c.vec_id <> p.query_id)
           WHERE rn <= 3
-        ), hits AS (
-          SELECT b.query_id, COUNT(*) AS n_hits
-          FROM brute b
-          JOIN short s ON s.query_id = b.query_id
-                      AND s.neighbor_id = b.neighbor_id
-          GROUP BY b.query_id
-        )
-        SELECT b.query_id, CAST(COUNT(*) AS BIGINT) AS n_true,
-               CAST(COALESCE(MAX(h.n_hits), 0) AS BIGINT) AS n_hits,
-               CAST(COALESCE(MAX(h.n_hits), 0) * 1000000 // COUNT(*) AS BIGINT)
-                 AS recall_micro
-        FROM brute b LEFT JOIN hits h ON h.query_id = b.query_id
-        GROUP BY b.query_id ORDER BY b.query_id
+        ), ${EvalStats.duckRecallAudit("brute", "short")}
       """.trim)),
 
     // Graph-walk ANN — the THIRD production ANN family (HNSW / DiskANN /

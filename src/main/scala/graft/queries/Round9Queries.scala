@@ -4,7 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
-import graft.ext.{IvfPq, Similarity, TextHash}
+import graft.ext.{EvalStats, IvfPq, Similarity, TextHash}
+import graft.ext.Similarity.{duckDot, duckD2}
 
 /** Round-9 additions — the ANN index LIFECYCLE (VERDICT_r08 "next round"
   * items 1 and 5): the IVF-PQ index is now a persisted artifact
@@ -35,17 +36,6 @@ import graft.ext.{IvfPq, Similarity, TextHash}
   */
 object Round9Queries {
 
-  /** DuckDB fragment: sequential double dot product of float lists a,b. */
-  private def duckDot(a: String, b: String): String =
-    s"list_sum([CAST($a[i] AS DOUBLE) * CAST($b[i] AS DOUBLE) FOR i IN generate_series(1, len($a))])"
-
-  /** Sequential-order squared L2 between a BIGINT micro-residual list and a
-    * DOUBLE codeword list, both length 16 (DuckDB side).
-    */
-  private def duckD2(r: String, c: String): String =
-    s"""list_sum([(CAST($r[i] AS DOUBLE) - $c[i]) * (CAST($r[i] AS DOUBLE) - $c[i])
-                 FOR i IN generate_series(1, 16)])"""
-
   /** DuckDB mirror of the DERIVED coarse quantizer (round 14 — the q524
     * rule across the index lifecycle, mirroring [[IvfPq.derivedPlanes]] +
     * [[IvfPq.withDerivedCells]]): `{p}pl(planes)` = the smallest p with
@@ -72,15 +62,7 @@ object Round9Queries {
       pl: String): String = s"""
         $rel AS MATERIALIZED (
           SELECT vec_id,
-                 CAST(list_sum([
-                   CASE WHEN list_sum([
-                     CAST(embedding[i] AS DOUBLE) *
-                     (CASE WHEN (${TextHash.duckHash60(
-                        "CAST(pp AS VARCHAR) || ':' || CAST(i - 1 AS VARCHAR)")} & 1) = 1
-                      THEN 1.0 ELSE -1.0 END)
-                     FOR i IN generate_series(1, len(embedding))]) >= 0
-                   THEN CAST(1 AS BIGINT) << pp ELSE CAST(0 AS BIGINT) END
-                   FOR pp IN generate_series(0, planes - 1)]) AS BIGINT) AS cell
+                 ${Similarity.duckHyperplaneBucket("embedding", "planes - 1")} AS cell
           FROM $src CROSS JOIN $pl
         )""".stripMargin.trim
 
@@ -96,17 +78,8 @@ object Round9Queries {
   private[queries] def pqCte(p: String, pred: String): String = s"""
         ${p}src AS (
           SELECT vec_id, embedding FROM embeddings WHERE $pred
-        ), ${derivedCellsCte(p)}, ${p}cm AS (
-          SELECT d.cell, CAST(u.i - 1 AS INTEGER) AS dim,
-                 CAST(SUM(CAST(CAST(u.v AS DOUBLE) * 281474976710656 AS DECIMAL(38,0))) AS DOUBLE)
-                   / 281474976710656 / COUNT(*) AS mean
-          FROM ${p}src e JOIN ${p}dc d ON d.vec_id = e.vec_id,
-               LATERAL (SELECT unnest(e.embedding) AS v,
-                               generate_subscripts(e.embedding, 1) AS i) u
-          GROUP BY d.cell, dim
-        ), ${p}cents AS (
-          SELECT cell, list(mean ORDER BY dim) AS centroid FROM ${p}cm GROUP BY cell
-        ), ${p}rv AS (
+        ), ${derivedCellsCte(p)}, ${Similarity.duckExactCentroids(s"${p}cm", s"${p}cents",
+          s"${p}src e JOIN ${p}dc d ON d.vec_id = e.vec_id", "d.cell")}, ${p}rv AS (
           SELECT e.vec_id, d.cell,
                  [CAST(round((CAST(e.embedding[i] AS DOUBLE) - c.centroid[i]) * 1000000.0) AS BIGINT)
                   FOR i IN generate_series(1, 64)] AS rmicro
@@ -136,7 +109,7 @@ object Round9Queries {
           SELECT vec_id, cell, m, g FROM (
             SELECT o.vec_id, o.cell, o.m, c.g,
                    row_number() OVER (PARTITION BY o.vec_id, o.m
-                     ORDER BY ${duckD2("o.r", "c.cwvec")}, c.g) AS rn
+                     ORDER BY ${duckD2("o.r", "c.cwvec", "16")}, c.g) AS rn
             FROM ${p}octs o JOIN ${p}cw c ON c.m = o.m)
           WHERE rn = 1
         )""".stripMargin.trim
@@ -183,7 +156,7 @@ object Round9Queries {
           SELECT vec_id, cell, m, g FROM (
             SELECT p.vec_id, p.cell, p.m, c.g,
                    row_number() OVER (PARTITION BY p.vec_id, p.m
-                     ORDER BY ${duckD2("p.r", "c.cwvec")}, c.g) AS rn
+                     ORDER BY ${duckD2("p.r", "c.cwvec", "16")}, c.g) AS rn
             FROM ${p}parts p JOIN $cw c ON c.m = p.m)
           WHERE rn = 1
         )""".stripMargin.trim
@@ -336,16 +309,7 @@ object Round9Queries {
           .select("query_id", "neighbor_id")
         val brute = Similarity.topKCosine(probes, e, "vec_id", "embedding", k = 3)
           .select("query_id", "neighbor_id")
-        val hits = brute
-          .join(walk, Seq("query_id", "neighbor_id"), "left_semi")
-          .groupBy("query_id").agg(count(lit(1)).as("n_hits"))
-        brute.groupBy("query_id").agg(count(lit(1)).as("n_true"))
-          .join(hits, Seq("query_id"), "left")
-          .select(col("query_id"), col("n_true"),
-            coalesce(col("n_hits"), lit(0L)).as("n_hits"))
-          .withColumn("recall_micro",
-            expr("n_hits * 1000000 DIV n_true"))
-          .orderBy("query_id")
+        EvalStats.recallAudit(brute, walk)
       },
       Some(s"""
         ${Round8Queries.beamWalkCte(20, 32, 4, 8)}, walk AS (
@@ -363,19 +327,7 @@ object Round9Queries {
                        DESC, c.vec_id) AS rn
             FROM bprobes p JOIN ben c ON c.vec_id <> p.query_id)
           WHERE rn <= 3
-        ), hits AS (
-          SELECT b.query_id, COUNT(*) AS n_hits
-          FROM brute b
-          JOIN walk w ON w.query_id = b.query_id
-                     AND w.neighbor_id = b.neighbor_id
-          GROUP BY b.query_id
-        )
-        SELECT b.query_id, CAST(COUNT(*) AS BIGINT) AS n_true,
-               CAST(COALESCE(MAX(h.n_hits), 0) AS BIGINT) AS n_hits,
-               CAST(COALESCE(MAX(h.n_hits), 0) * 1000000 // COUNT(*) AS BIGINT)
-                 AS recall_micro
-        FROM brute b LEFT JOIN hits h ON h.query_id = b.query_id
-        GROUP BY b.query_id ORDER BY b.query_id
+        ), ${EvalStats.duckRecallAudit("brute", "walk")}
       """.trim)),
 
     // Streaming ANN ingest THROUGH the gate — VERDICT_r08 #7, the index
